@@ -499,24 +499,32 @@ object StreamStore {
     */
   val DefaultKeysPerSegment: Long = 1L << 20
 
-  /** Scratch root for ephemeral stores: tmpfs when the host has it. The
+  /** Base directory for scratch: tmpfs when the host has it. The
     * reference's transport IS an in-memory store (Redis); a RAM-backed
     * filesystem is the apples-to-apples local substrate, and on a real
     * cluster this is the NVMe/DFS mount the store is deployed on.
-    * GRAFT_SCRATCH_DIR overrides (round-18, verdict #4): forcing real
+    * `GRAFT_SCRATCH_DIR` (passed in as `env`) overrides: forcing real
     * disk lets a bench recording separate plan-level wins from the
-    * RAM-disk environment win, as a paired pin.
+    * RAM-disk environment win, as a paired pin — so a set but missing
+    * or unwritable dir throws instead of silently falling back to the
+    * RAM disk.
     */
-  def scratchRoot(tag: String): Path = {
-    val base = sys.env.get("GRAFT_SCRATCH_DIR").map(Paths.get(_))
-      .filter(Files.isWritable)
-      .getOrElse {
-        val shm = Paths.get("/dev/shm")
-        if (Files.isWritable(shm)) shm
-        else Paths.get(System.getProperty("java.io.tmpdir"))
-      }
-    Files.createTempDirectory(base, tag)
+  def scratchBase(env: Option[String] = sys.env.get("GRAFT_SCRATCH_DIR"))
+      : Path = env match {
+    case Some(d) =>
+      val p = Paths.get(d)
+      require(Files.isDirectory(p) && Files.isWritable(p),
+        s"GRAFT_SCRATCH_DIR=$d is not a writable directory")
+      p
+    case None =>
+      val shm = Paths.get("/dev/shm")
+      if (Files.isWritable(shm)) shm
+      else Paths.get(System.getProperty("java.io.tmpdir"))
   }
+
+  /** A fresh scratch directory under [[scratchBase]]. */
+  def scratchRoot(tag: String): Path =
+    Files.createTempDirectory(scratchBase(), tag)
 }
 
 /** Single-writer append facade (reference StreamWriter,

@@ -408,21 +408,17 @@ final class Ingester(
     * (the reference's 4-thread pool, ingester.cpp:54-55) — each stream's
     * Spark jobs are independent, so cross-stream parallelism is the
     * orchestrator's scale axis (per-stream order stays sequential).
+    * A failing stream stops the sweep: queued streams never start, the
+    * running ones' jobs are cancelled, and the call rethrows only once
+    * every stream has stopped (each ingestOnce is replay-safe).
     */
   def sweep(parallelism: Int = 1): Map[String, Long] = {
     val streams = store.listStreams().filter(_.matches(settings.streamPattern))
     if (parallelism <= 1) streams.map(s => s -> ingestOnce(s)).toMap
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = streams.map(s =>
-          scala.concurrent.Future(s -> ingestOnce(s)))
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration(10, "min")).toMap
-      } finally pool.shutdown()
+    else Overlap(spark, parallelism, "ingest-sweep",
+        scala.concurrent.duration.Duration(10, "min")) { ov =>
+      streams.map(s => s -> ov.fork(ingestOnce(s)))
+        .map { case (s, f) => s -> f.join() }.toMap
     }
   }
 }

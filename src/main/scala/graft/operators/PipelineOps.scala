@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.functions.dot_i64
 import org.apache.spark.sql.types.DecimalType
+import graft.core.Overlap
 import graft.core.Pins.PinnedDataset
 
 /** Reusable training-data pipeline operators over ARBITRARY DataFrames.
@@ -188,50 +189,29 @@ object DedupOps {
     // was wasted. Superseded rounds' pins release as soon as their
     // successor is materialized (they were never released before —
     // a deep propagation leaked one cluster-sized pin per round).
-    // Fresh pool from this thread so job group/tags propagate.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val comp: DataFrame = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      import scala.concurrent.duration.Duration
-      var cur = edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")).pin()
-      var fSum = scala.concurrent.Future(labelSum(cur))
-      var fNext = scala.concurrent.Future(step(cur))
-      var sumPrev: java.math.BigDecimal = null
-      var result: DataFrame = null
-      while (result == null) {
-        // both awaited, failure or not, before anything is released —
-        // lifted to Try so the first failure rethrows only after the
-        // sibling finished (the sibling-block discipline)
-        val rSum = scala.concurrent.Await.ready(fSum, Duration.Inf)
-          .value.get
-        val rNext = scala.concurrent.Await.ready(fNext, Duration.Inf)
-          .value.get
-        if (rSum.isFailure || rNext.isFailure) {
-          rNext.foreach { n =>
-            try DedupOps.releaseLocalCheckpoint(n)
-            catch { case _: Throwable => () }
-          }
-          try DedupOps.releaseLocalCheckpoint(cur)
-          catch { case _: Throwable => () }
-          throw rSum.failed.toOption.orElse(rNext.failed.toOption).get
-        }
-        val sumCur = rSum.get
-        val next = rNext.get
-        if (sumPrev != null && sumCur.compareTo(sumPrev) >= 0) {
-          DedupOps.releaseLocalCheckpoint(next) // the speculative round
-          result = cur
-        } else {
-          DedupOps.releaseLocalCheckpoint(cur) // superseded labels
-          cur = next
-          sumPrev = sumCur
-          fSum = scala.concurrent.Future(labelSum(cur))
-          fNext = scala.concurrent.Future(step(cur))
-        }
+    var cur = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("comp")).pin()
+    var sumPrev: java.math.BigDecimal = null
+    var comp: DataFrame = null
+    try while (comp == null) {
+      val (sumCur, next) = Overlap(pairs.sparkSession, 2,
+          "components") { ov =>
+        val fSum = ov.fork(labelSum(cur))
+        val fNext = ov.fork(ov.own(step(cur)))
+        (fSum.join(), fNext.join())
       }
-      result
-    } finally pool.shutdown()
+      if (sumPrev != null && sumCur.compareTo(sumPrev) >= 0) {
+        DedupOps.releaseLocalCheckpoint(next) // the speculative round
+        comp = cur
+      } else {
+        DedupOps.releaseLocalCheckpoint(cur) // superseded labels
+        cur = next
+        sumPrev = sumCur
+      }
+    } catch { case e: Throwable =>
+      DedupOps.releaseLocalCheckpoint(cur)
+      throw e
+    }
     comp.select(col("id"), col("comp").as("cluster_id"),
       (col("id") === col("comp")).as("is_survivor"))
   }
@@ -2562,11 +2542,6 @@ object TextOps {
   */
 object AnnOps {
 
-  /** Monotone per-JVM build counter — uniquifies each
-    * [[buildIvfPqIndex]] job tag so concurrent builds never share one.
-    */
-  private val buildSeq = new java.util.concurrent.atomic.AtomicLong
-
   /** (id, c: array<long> scaled components, nrm: double) staged + pinned. */
   def scaled(df: DataFrame, idCol: String, vecCol: String,
       partitions: Int = 0): DataFrame =
@@ -3194,6 +3169,16 @@ object AnnOps {
           .select(col("id").as("qid"), col("key"))), Seq("qid"))
     }
 
+  /** Threads for the coarse chain + pqM codebook trainings of the
+    * IVF-PQ builders: min(1 + pqM, parallelism) — past that the
+    * chains contend for the same executor slots with no launch-latency
+    * win. `spark.graft.ivfpq.trainPool` pins it (parity testing: 1 IS
+    * the sequential spelling; results are width-invariant). */
+  private def trainWidth(s: SparkSession, pqM: Int): Int =
+    s.conf.getOption("spark.graft.ivfpq.trainPool").map(_.toInt)
+      .getOrElse(math.max(1,
+        math.min(1 + pqM, s.sparkContext.defaultParallelism)))
+
   /** IVF-PQ — the production memory-scale ANN composition: IVF cells
     * generate candidates (the [[filteredTopKIvf]] (cell, key)
     * equi-join, same `nprobe` dial through [[ivfProbeSide]]), an
@@ -3285,81 +3270,32 @@ object AnnOps {
     // impostors at ~0.7 approx-cosine displacing true ~1.0
     // neighbors before this fix). L2 separates by magnitude AND
     // direction — the standard PQ quantizer.
-    val (coarse, perMRaw) = {
-      val poolN = s.conf.getOption("spark.graft.ivfpq.trainPool")
-        .map(_.toInt).getOrElse(math.max(1,
-          math.min(1 + pqM, s.sparkContext.defaultParallelism)))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolN)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val fCoarse = scala.concurrent.Future {
-          val (members, cent, kmeansRelease) =
-            kmeansFromStagedWithCentReleasable(v, cells, iters,
-              maxCentroidBytes, dimHint = dim, seedHint = seedAll)
-          // self-cleaning on failure past the kmeans return (ADVICE):
-          // the Left-success sweep below only sees a future that
-          // SUCCEEDED — a probe-side or cand-pin throw must release
-          // the members pin and the kmeans resources itself, the
-          // fSubs discipline
-          try {
-            val keyed = members.join(keys, Seq("id"))
-            val qside = ivfProbeSide(v, keys, keyed, cent, isQuery, nprobe)
-            val cand = keyed.join(broadcast(qside), Seq("cell", "key"))
-              .filter(col("id") =!= col("qid"))
-              .select(col("qid"), col("id"))
-              .pin() // feeds the ADC join; pin so the coarse
-                     // k-means never re-runs per consumer
-            (members, kmeansRelease, cand)
-          } catch { case e: Throwable =>
-            try DedupOps.releaseLocalCheckpoint(members)
-            catch { case _: Throwable => () }
-            try kmeansRelease() catch { case _: Throwable => () }
-            throw e
-          }
-        }
-        val fSubs = (0 until pqM).map { m => scala.concurrent.Future {
-          val sub = v.select(col("id"),
-              slice(col("c"), m * dsub + 1, dsub).as("c"))
-            .pin()
-          // self-cleaning on failure: a chain that dies after pinning
-          // must not leak its staging (the build-pool discipline)
-          try {
-            val (codesP, means) = pqCodebookL2(sub, pqKs, pqIters,
-              seedHint = seedAll)
-            (m, codesP, means, sub)
-          } catch { case e: Throwable =>
-            try DedupOps.releaseLocalCheckpoint(sub)
-            catch { case _: Throwable => () }
-            throw e
-          }
-        }}
-        // every chain must be DONE before control leaves this block
-        // (a failure path unwinding while a sibling still runs would
-        // race its pins); lifted to Try, first failure rethrown after
-        // the survivors' pins are released
-        import scala.concurrent.duration.Duration
-        val rs = (fCoarse.map(Left(_)) +: fSubs.map(f => f.map(Right(_))))
-          .map(f => scala.concurrent.Await.ready(f, Duration.Inf).value.get)
-        if (rs.exists(_.isFailure)) {
-          rs.collect { case scala.util.Success(r) => r }.foreach {
-            case Left((members, kmeansRelease, cand)) =>
-              try DedupOps.releaseLocalCheckpoint(cand)
-              catch { case _: Throwable => () }
-              try kmeansRelease() catch { case _: Throwable => () }
-              try DedupOps.releaseLocalCheckpoint(members)
-              catch { case _: Throwable => () }
-            case Right((_, codesP, _, sub)) =>
-              try DedupOps.releaseLocalCheckpoint(codesP)
-              catch { case _: Throwable => () }
-              try DedupOps.releaseLocalCheckpoint(sub)
-              catch { case _: Throwable => () }
-          }
-          throw rs.collectFirst { case scala.util.Failure(e) => e }.get
-        }
-        (rs.head.get.swap.toOption.get,
-          rs.tail.map(_.get.toOption.get))
-      } finally pool.shutdown()
+    val (coarse, perMRaw) = Overlap(s, trainWidth(s, pqM),
+        "ivfpq-inline") { ov =>
+      val fCoarse = ov.fork {
+        val (members, cent, kmeansRelease) =
+          kmeansFromStagedWithCentReleasable(v, cells, iters,
+            maxCentroidBytes, dimHint = dim, seedHint = seedAll)
+        ov.own(members)
+        ov.onFailure(kmeansRelease())
+        val keyed = members.join(keys, Seq("id"))
+        val qside = ivfProbeSide(v, keys, keyed, cent, isQuery, nprobe)
+        val cand = ov.own(keyed.join(broadcast(qside), Seq("cell", "key"))
+          .filter(col("id") =!= col("qid"))
+          .select(col("qid"), col("id"))
+          .pin()) // feeds the ADC join; pin so the coarse
+                  // k-means never re-runs per consumer
+        (members, kmeansRelease, cand)
+      }
+      val fSubs = (0 until pqM).map { m => ov.fork {
+        val sub = ov.own(v.select(col("id"),
+            slice(col("c"), m * dsub + 1, dsub).as("c"))
+          .pin())
+        val (codesP, means) = pqCodebookL2(sub, pqKs, pqIters,
+          seedHint = seedAll)
+        (m, ov.own(codesP), means, sub)
+      }}
+      (fCoarse.join(), fSubs.map(_.join()))
     }
     val (members, kmeansRelease, cand) = coarse
     val perM = perMRaw.map { case (m, codesP, means, sub) =>
@@ -3767,8 +3703,12 @@ object AnnOps {
             "cast to long — a NULL tombstone matches nothing and the " +
             "takedown silently no-ops; fix the id column and re-run")))
         .cast("long").as("id"))
-    try gated.write.mode("overwrite")
-      .parquet(s"$indexDir/tombstones/batch=$batchId")
+    // through a temp dir: a REJECTED replay must leave the committed
+    // batch=<id> untouched (a direct overwrite clears it before the
+    // raise_error fires, resurrecting ids that were taken down)
+    try overwriteViaTemp(ids.sparkSession,
+      s"$indexDir/tombstones/batch=$batchId")(
+      gated.write.mode("overwrite").parquet(_))
     catch { case e: Throwable =>
       val hit = Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
         .takeWhile(_ != null).take(12)
@@ -3779,6 +3719,29 @@ object AnnOps {
         case None => throw e
       }
     }
+  }
+
+  /** Overwrite-commit the tree at `dir`: `write(tmp)` lands it in the
+    * dot-prefixed sibling `.<name>.tmp` — invisible to every reader
+    * (parquet listing skips dot names, and so does every `batch=*`
+    * listing) — then `dir` is dropped and the temp renamed into
+    * place. A failed write deletes the temp and leaves `dir` as it
+    * was. The only window where `dir` is absent is a REPLAY's own
+    * delete-then-rename, exactly what mode("overwrite") had. */
+  private def overwriteViaTemp(s: SparkSession, dir: String)(
+      write: String => Unit): Unit = {
+    val fs = indexFs(s, dir)
+    val cut = dir.lastIndexOf('/') + 1
+    val tmp = s"${dir.take(cut)}.${dir.drop(cut)}.tmp"
+    fs.delete(hpath(tmp), true) // a crashed run's debris
+    try write(tmp)
+    catch { case e: Throwable =>
+      fs.delete(hpath(tmp), true)
+      throw e
+    }
+    fs.delete(hpath(dir), true)
+    require(fs.rename(hpath(tmp), hpath(dir)),
+      s"overwriteViaTemp: rename $tmp -> $dir failed")
   }
 
   /** Repair a CRASHED maintenance run ([[compactIndex]] /
@@ -4043,30 +4006,9 @@ object AnnOps {
       // concurrently (guide §2.6: submit independent jobs from
       // threads so the second's tasks back-fill the first's tail);
       // the atomic flip below still publishes both or neither
-      locally {
-        // fresh per-call pool, NOT the global EC: its worker threads
-        // are created at first submit from THIS thread, so Spark's
-        // inheritable thread-locals (job group/tags/description — the
-        // caller's cancellation handle) propagate into the write jobs;
-        // global-EC threads would carry whatever thread first forced
-        // them into existence
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try {
-        val fb = scala.concurrent.Future(writeGen(prep("batches"), "batches"))
-        val fc = if (hasCodes)
-          scala.concurrent.Future(writeGen(prep("codes"), "codes"))
-          else scala.concurrent.Future.unit
-        // BOTH futures must be done before control can reach the
-        // catch's newRoot delete — a still-running sibling write would
-        // recreate dirs after the cleanup; lifted to Try so the first
-        // failure rethrows only after the other side finished
-        import scala.concurrent.duration.Duration
-        val rb = scala.concurrent.Await.ready(fb, Duration.Inf).value.get
-        val rc = scala.concurrent.Await.ready(fc, Duration.Inf).value.get
-        rb.get; rc.get
-        } finally pool.shutdown()
+      Overlap(s, 2, "maintain") { ov =>
+        ov.fork(writeGen(prep("batches"), "batches"))
+        if (hasCodes) ov.fork(writeGen(prep("codes"), "codes"))
       }
       // an all-rows tombstone set (or an expire-everything retention
       // cut) writes an EMPTY generation, and a later parquet read of
@@ -4326,31 +4268,21 @@ object AnnOps {
     // The SEED collect below is an independent job over the same
     // pinned v — overlap it with the dim aggregate (guide §2.6;
     // round-18 job-count cut: two sequential launch latencies became
-    // one per build). The future is awaited before any use and before
-    // any exit (the Await sits directly under the launch, ahead of
-    // every early `require` throw below it).
-    val seedPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    var dimHolder = 0
-    val seedAll: Array[Long] = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(seedPool)
-      val fSeed = scala.concurrent.Future {
+    // one per build).
+    val (dim, seedAll) = Overlap(s, 1, "ivfpq-seed") { ov =>
+      val fSeed = ov.fork {
         v.select(col("id")).orderBy(col("id"))
           .limit(math.max(cells, pqKs)).as[Long].collect().sorted
       }
       val dimStats = v.filter(col("c").isNotNull)
         .agg(min(size(col("c"))).as("lo"), max(size(col("c"))).as("hi"))
         .head()
-      val seeds = scala.concurrent.Await.result(fSeed,
-        scala.concurrent.duration.Duration.Inf)
       require(!dimStats.isNullAt(0) &&
         dimStats.getInt(0) == dimStats.getInt(1),
         s"buildIvfPqIndex: mixed vector dims [${dimStats.get(0)}, " +
           s"${dimStats.get(1)}] — the index space needs one width")
-      dimHolder = dimStats.getInt(0)
-      seeds
-    } finally seedPool.shutdown()
-    val dim = dimHolder
+      (dimStats.getInt(0), fSeed.join())
+    }
     require(dim >= pqM, s"buildIvfPqIndex: dim=$dim < pqM=$pqM")
     // REBUILD SAFETY (ADVICE): a rebuild into a dir holding append
     // batches would leave batch=1..N rows that were assigned against
@@ -4410,128 +4342,46 @@ object AnnOps {
     // table lands on disk inside the same window (readers gate on the
     // manifest, written last, so a crash state is unchanged). Each
     // chain trains byte-identically to the sequential spelling.
-    // pool sized min(1 + pqM, parallelism): at large pqM, the
-    // concurrent job chains would contend for the same executor slots
-    // past the point of any launch-latency win. The Await bound
+    // Width min(1 + pqM, parallelism) ([[trainWidth]]). The join bound
     // defaults to unbounded (a big corpus legitimately trains for
     // hours); deployers cap it via spark.graft.ivfpq.trainTimeoutSec.
-    // On any failure the siblings' in-flight Spark jobs are cancelled
-    // (per-build job tag — tags are additive, so a caller's
-    // jobGroup/tags are preserved) and the pins created by
-    // already-completed futures are released before the rethrow, so a
-    // failed build leaks neither jobs nor blocks.
-    val (members, cent, kmeansRelease, perM) = {
-      // spark.graft.ivfpq.trainPool pins the pool size (parity testing:
-      // pool=1 IS the sequential spelling; results are pool-invariant)
-      val poolN = s.conf.getOption("spark.graft.ivfpq.trainPool")
-        .map(_.toInt).getOrElse(math.max(1,
-          math.min(1 + pqM, s.sparkContext.defaultParallelism)))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolN)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val timeout = s.conf.getOption("spark.graft.ivfpq.trainTimeoutSec")
-        .map(sec => scala.concurrent.duration.Duration(sec.toLong, "sec"))
-        .getOrElse(scala.concurrent.duration.Duration.Inf)
-      // the tag must be UNIQUE PER BUILD, not per index dir: two
-      // concurrent builds (same dir — rebuild race — or 32-bit
-      // hashCode collision across dirs) sharing a tag would have a
-      // failing build cancel the healthy sibling's jobs (round-16
-      // "What's wrong #2"). A process-wide counter removes the class.
-      val buildTag = "graft-ivfpq-build-" +
-        s"${indexDir.hashCode.toHexString}-${buildSeq.incrementAndGet()}"
-      val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val done = new java.util.concurrent.ConcurrentLinkedQueue[
-        (DataFrame, DataFrame, DataFrame, DataFrame)]()
-      val doneKm = new java.util.concurrent.ConcurrentLinkedQueue[
-        (DataFrame, () => Unit)]()
-      // drain-by-poll is the ownership handoff on the failure path:
-      // the abort handler AND any straggler future that completes
-      // after awaitTermination(60s) timed out both drain here, and
-      // poll() hands each element to exactly one of them — so a
-      // straggler's pins can never land in `done` after the abort
-      // handler already swept it (round-16 ADVICE leak).
-      def drainDone(): Unit = {
-        var e = done.poll()
-        while (e != null) {
-          try {
-            DedupOps.releaseLocalCheckpoint(e._4)
-            DedupOps.releaseLocalCheckpoint(e._3)
-          } catch { case _: Throwable => () }
-          e = done.poll()
-        }
-        var km = doneKm.poll()
-        while (km != null) {
-          try DedupOps.releaseLocalCheckpoint(km._1)
-          catch { case _: Throwable => () }
-          try km._2() catch { case _: Throwable => () }
-          km = doneKm.poll()
-        }
+    val timeout = s.conf.getOption("spark.graft.ivfpq.trainTimeoutSec")
+      .map(sec => scala.concurrent.duration.Duration(sec.toLong, "sec"))
+      .getOrElse(scala.concurrent.duration.Duration.Inf)
+    val (members, cent, kmeansRelease, perM) = Overlap(s,
+        trainWidth(s, pqM), "ivfpq-build", timeout) { ov =>
+      val kmF = ov.fork {
+        val r = kmeansFromStagedWithCentReleasable(v, cells, iters,
+          maxCentroidBytes, dimHint = dim, seedHint = seedAll)
+        ov.own(r._1)
+        ov.onFailure(r._3())
+        // the centroid write only needs the coarse chain — run it
+        // inside the training window instead of after it
+        r._2.write.mode("overwrite").parquet(s"$indexDir/centroids")
+        r
       }
-      try {
-        val kmF = scala.concurrent.Future {
-          if (aborted.get) throw new InterruptedException(
-            "ivfpq build aborted before the coarse chain started")
-          s.sparkContext.addJobTag(buildTag)
-          val r = kmeansFromStagedWithCentReleasable(v, cells, iters,
-            maxCentroidBytes, dimHint = dim, seedHint = seedAll)
-          doneKm.add((r._1, r._3))
-          // the centroid write only needs the coarse chain — run it
-          // inside the training window instead of after it
-          r._2.write.mode("overwrite").parquet(s"$indexDir/centroids")
-          if (aborted.get) drainDone()
-          r
-        }
-        val futs = (0 until pqM).map { m => scala.concurrent.Future {
-          if (aborted.get) throw new InterruptedException(
-            "ivfpq build aborted before this subspace started")
-          s.sparkContext.addJobTag(buildTag)
-          val sub = v.select(col("id"),
-              slice(col("c"), m * dsub + 1, dsub).as("c"))
-            .pin()
-          // self-cleaning on any failure (incl. job cancellation): a
-          // future that dies after pinning must not leak its staging
-          try {
-            val (codesP, means) = pqCodebookL2(sub, pqKs, pqIters,
-              seedHint = seedAll)
-            val meansDf = s.createDataFrame(means.toSeq.map {
-              case (cell, mu) =>
-                (m, cell, mu.toSeq, mu.map(x => x * x).sum)
-            }).toDF("m", "code", "cmean", "cn2")
-            val r = (codesP.select(col("id"), col("cell").as("code"),
-              lit(m).as("m")), meansDf, sub, codesP)
-            done.add(r)
-            if (aborted.get) drainDone()
-            r
-          } catch { case e: Throwable =>
-            try DedupOps.releaseLocalCheckpoint(sub)
-            catch { case _: Throwable => () }
-            throw e
-          }
-        }}
-        val (km, pq) = scala.concurrent.Await.result(
-          kmF.zip(scala.concurrent.Future.sequence(futs)), timeout)
-        (km._1, km._2, km._3, pq)
-      } catch { case e: Throwable =>
-        // fail the WHOLE build without leaking the siblings: stop
-        // not-yet-started futures at the door, cancel the started
-        // ones' in-flight jobs, wait for them to finish self-cleanup,
-        // then release the pins of the futures that had completed
-        aborted.set(true)
-        try s.sparkContext.cancelJobsWithTag(buildTag)
-        catch { case _: Throwable => () }
-        pool.shutdown()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        drainDone()
-        throw e
-      } finally pool.shutdown()
+      val futs = (0 until pqM).map { m => ov.fork {
+        val sub = ov.own(v.select(col("id"),
+            slice(col("c"), m * dsub + 1, dsub).as("c"))
+          .pin())
+        val (codesP, means) = pqCodebookL2(sub, pqKs, pqIters,
+          seedHint = seedAll)
+        ov.own(codesP)
+        val meansDf = s.createDataFrame(means.toSeq.map {
+          case (cell, mu) =>
+            (m, cell, mu.toSeq, mu.map(x => x * x).sum)
+        }).toDF("m", "code", "cmean", "cn2")
+        (codesP.select(col("id"), col("cell").as("code"),
+          lit(m).as("m")), meansDf, sub, codesP)
+      }}
+      val (km, pq) = (kmF.join(), futs.map(_.join()))
+      (km._1, km._2, km._3, pq)
     }
     onFail += (() => DedupOps.releaseLocalCheckpoint(members))
     onFail += (() => kmeansRelease())
     onFail += (() => perM.foreach { case (_, _, sub, codesP) =>
-      try DedupOps.releaseLocalCheckpoint(codesP)
-      catch { case _: Throwable => () }
-      try DedupOps.releaseLocalCheckpoint(sub)
-      catch { case _: Throwable => () }
+      DedupOps.releaseLocalCheckpoint(codesP)
+      DedupOps.releaseLocalCheckpoint(sub)
     })
     // codes are per-batch subdirs like the rows, cell-partitioned like
     // the rows (the coarse cell rides each code row so the ADC scan
@@ -4544,38 +4394,23 @@ object AnnOps {
     // all or nothing; the build is crash-clean for readers at every
     // instant.)
     val buildRoot = genRoot(indexDir, 0L)
-    locally {
-      // fresh per-call pool (not the global EC) so Spark's inheritable
-      // job group/tags propagate into the write jobs — the
-      // maintainImpl discipline
-      val wpool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(wpool)
-      try {
-      val fBooks = scala.concurrent.Future {
+    Overlap(s, 3, "ivfpq-build-write") { ov =>
+      ov.fork {
         perM.map(_._2).reduce(_ unionByName _)
           .write.mode("overwrite").parquet(s"$indexDir/codebooks")
       }
-      val fCodes = scala.concurrent.Future {
+      ov.fork {
         perM.map(_._1).reduce(_ unionByName _)
           .join(members, Seq("id"))
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$buildRoot/codes/batch=0")
       }
-      val fRows = scala.concurrent.Future {
+      ov.fork {
         members.join(v, Seq("id")).join(keys, Seq("id"))
           .select(col("id"), col("cell"), col("c"), col("nrm"), col("key"))
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$buildRoot/batches/batch=0")
       }
-      // all three must be DONE before control can leave this block —
-      // a failure path that starts deleting trees while a sibling
-      // write still runs would race it (the maintainImpl discipline)
-      import scala.concurrent.duration.Duration
-      val rs = Seq(fBooks, fCodes, fRows)
-        .map(f => scala.concurrent.Await.ready(f, Duration.Inf).value.get)
-      rs.foreach(_.get)
-      } finally wpool.shutdown()
     }
     // declare what was built (readers/mutators validate at the door),
     // then flip the pointer: generation 0 becomes live atomically
@@ -4673,25 +4508,15 @@ object AnnOps {
     // even starts (round-18 job-count cut: the centroid collect used
     // to run serially between the staging and the overlapped
     // dim/codebook jobs — one whole launch latency per nightly batch);
-    // the dim-validation aggregate joins the pool as soon as the
-    // staging exists, and the assignment+pin chain runs on THIS thread
-    // under all three. The validation still gates every durable write
-    // below — a bad batch throws after some wasted assignment work
-    // (and releases its pin) instead of before it; the committed state
-    // is identical either way. Pool threads are created from this
-    // thread so Spark's inheritable job group/tags propagate (the
-    // maintainImpl discipline), and the catch/finally below awaits
-    // every launched future and shuts the pool down on EVERY exit path
-    // — a staging or assignment failure must not leave collect jobs
-    // running (or two pool threads alive) while the caller unwinds
-    // (round-17 ADVICE).
-    val vpool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val vec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(vpool)
+    // the dim-validation aggregate joins them as soon as the staging
+    // exists, and the assignment+pin chain runs on THIS thread under
+    // all three. The validation still gates every durable write below
+    // — a bad batch throws after some wasted assignment work (and
+    // releases its pin) instead of before it; the committed state is
+    // identical either way.
     val cent = s.read.parquet(s"$indexDir/centroids")
-    val fCent: scala.concurrent.Future[
-        (Long, Int, Option[Array[(Long, Array[Long], Double)]])] =
-      scala.concurrent.Future {
+    Overlap(s, 2, "ivfpq-append") { ov =>
+      val fCent = ov.fork {
         if (declaredFits.contains(true)) {
           val cents = collectCentroids(cent)
           val sd = if (cents.isEmpty) 0
@@ -4704,34 +4529,24 @@ object AnnOps {
           (centStats.getLong(0), centStats.getInt(1), None)
         }
       }
-    val fBooks = scala.concurrent.Future {
-      s.read.parquet(s"$indexDir/codebooks")
-        .select(col("m").cast("int"), col("code"), col("cmean"))
-        .as[(Int, Long, Seq[Double])].collect()
-    }
-    var fDim: scala.concurrent.Future[org.apache.spark.sql.Row] =
-      scala.concurrent.Future.successful(null)
-    var pinnedRows: DataFrame = null
-    var pinnedStaged: DataFrame = null
-    var pinnedV: DataFrame = null
-    try {
-      val staged = scaledImpl(batch, idCol, vecCol, Some(keyCol),
-        partitions)
-      pinnedStaged = staged
+      val fBooks = ov.fork {
+        s.read.parquet(s"$indexDir/codebooks")
+          .select(col("m").cast("int"), col("code"), col("cmean"))
+          .as[(Int, Long, Seq[Double])].collect()
+      }
+      val staged = ov.own(scaledImpl(batch, idCol, vecCol, Some(keyCol),
+        partitions))
       val keys = staged.select(col("id"), col("key"))
-      val v = withRawNorm(staged)
-      pinnedV = v
-      fDim = scala.concurrent.Future {
+      val v = ov.own(withRawNorm(staged))
+      val fDim = ov.fork {
         v.filter(col("c").isNotNull)
           .agg(min(size(col("c"))).as("lo"),
             max(size(col("c"))).as("hi"))
           .head()
       }
-      import scala.concurrent.duration.Duration
-      val (k, storedDim, preAssigned) =
-        scala.concurrent.Await.result(fCent, Duration.Inf)
+      val (k, storedDim, preAssigned) = fCent.join()
       // the assignment + pin runs on THIS thread while the dim and
-      // codebook futures are in flight
+      // codebook forks are in flight
       val (assigned, releaseAssign) = preAssigned match {
         case Some(cents) =>
           val (out, bc) = assignCellsFromArray(v, cents, "id")
@@ -4739,13 +4554,12 @@ object AnnOps {
         case None =>
           assignCellsAuto(v, cent, "id", k, storedDim, maxCentroidBytes)
       }
-      val rows = assigned.join(v, Seq("id")).join(keys, Seq("id"))
+      val rows = ov.own(assigned.join(v, Seq("id")).join(keys, Seq("id"))
         .select(col("id"), col("cell"), col("c"), col("nrm"), col("key"))
-        .pin()
-      pinnedRows = rows
+        .pin())
       releaseAssign()
-      val dimStats = scala.concurrent.Await.result(fDim, Duration.Inf)
-      val books = scala.concurrent.Await.result(fBooks, Duration.Inf)
+      val dimStats = fDim.join()
+      val books = fBooks.join()
       require(dimStats.isNullAt(0) ||
         (dimStats.getInt(0) == storedDim &&
           dimStats.getInt(1) == storedDim),
@@ -4761,12 +4575,10 @@ object AnnOps {
       // ceiling. Round-18 keeps that invariant while running the two
       // tree writes CONCURRENTLY (guide §2.6 — max(write) instead of
       // sum(write) wall per nightly batch): the rows land in a
-      // dot-prefixed temp dir — invisible to every reader (parquet
-      // listing skips dot/underscore names) and to maintenance's
-      // batch=* listing — and are RENAMED into place only after BOTH
-      // writes committed. A crash anywhere leaves at most committed
-      // codes plus an invisible temp dir; the idempotent replay
-      // overwrites both.
+      // temp dir ([[overwriteViaTemp]]) and are renamed into place
+      // only after BOTH writes committed. A crash anywhere leaves at
+      // most committed codes plus an invisible temp dir; the
+      // idempotent replay overwrites both.
       // subspace shape DECLARED by the manifest, not re-inferred from
       // the widest stored codebook entry (the round-12 inference this
       // replaces): the build wrote what it quantized with
@@ -4794,70 +4606,29 @@ object AnnOps {
           s"against gen $gen); re-run the batch — the append is " +
           "idempotent")
       val root = genRoot(indexDir, gen)
-      val fsIdx = indexFs(s, indexDir)
-      val rowsFinal = s"$root/batches/batch=$batchId"
-      val rowsTmp = s"$root/batches/.batch=$batchId.tmp"
-      fsIdx.delete(hpath(rowsTmp), true) // a crashed run's debris
-      locally {
-        // fresh per-call pool so Spark's inheritable job group/tags
-        // propagate into the write jobs (the maintainImpl discipline);
-        // both futures must be DONE before control leaves this block
-        val wpool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val wec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(wpool)
-        try {
+      overwriteViaTemp(s, s"$root/batches/batch=$batchId") { rowsTmp =>
+        Overlap(s, 2, "ivfpq-append-write") { wv =>
           // cell rides each code row (from the batch's own pinned
           // rows) so the serve's ADC scan partition-prunes
-          val fCodes = scala.concurrent.Future {
+          wv.fork {
             codesAll
               .join(rows.select(col("id"), col("cell")), Seq("id"))
               .write.mode("overwrite").partitionBy("cell")
               .parquet(s"$root/codes/batch=$batchId")
-          }(wec)
-          val fRows = scala.concurrent.Future {
+          }
+          wv.fork {
             rows.write.mode("overwrite").partitionBy("cell")
               .parquet(rowsTmp)
-          }(wec)
-          val rc = scala.concurrent.Await
-            .ready(fCodes, Duration.Inf).value.get
-          val rr = scala.concurrent.Await
-            .ready(fRows, Duration.Inf).value.get
-          rc.get; rr.get
-        } catch { case e: Throwable =>
-          try fsIdx.delete(hpath(rowsTmp), true)
-          catch { case _: Throwable => () }
-          throw e
-        } finally wpool.shutdown()
+          }
+        }
       }
       destroyCodes() // encode executed inside the codes write above
-      // the visibility flip: drop a replay's previous commit, then one
-      // rename — the only window where batch=N is absent is a REPLAY's
-      // own overwrite window, exactly what mode("overwrite") had
-      fsIdx.delete(hpath(rowsFinal), true)
-      require(fsIdx.rename(hpath(rowsTmp), hpath(rowsFinal)),
-        s"appendIvfPqIndex: rename $rowsTmp -> $rowsFinal failed")
       // the commit is on disk: free every per-call pin (this operator
       // is called per nightly batch in a long-lived session)
       DedupOps.releaseLocalCheckpoint(rows)
       DedupOps.releaseLocalCheckpoint(v)
       DedupOps.releaseLocalCheckpoint(staged)
-    } catch { case e: Throwable =>
-      // every in-flight future must be DONE before the rethrow (the
-      // sibling-block discipline): a caller unwinding while collect
-      // jobs still run would race whatever cleanup it does next
-      import scala.concurrent.duration.Duration
-      Seq(fCent.map(_ => ()), fBooks.map(_ => ()), fDim.map(_ => ()))
-        .foreach { f =>
-          try { scala.concurrent.Await.ready(f, Duration.Inf); () }
-          catch { case _: Throwable => () }
-        }
-      Seq(pinnedRows, pinnedV, pinnedStaged).filter(_ != null)
-        .foreach { p =>
-          try DedupOps.releaseLocalCheckpoint(p)
-          catch { case _: Throwable => () }
-        }
-      throw e
-    } finally vpool.shutdown()
+    }
   }
 
   /** Serve filtered top-k from a durable [[buildIvfPqIndex]] index:
@@ -6244,294 +6015,269 @@ object AnnOps {
           "incrementalSemanticDedupDurable", "semantic"))
       else None
     val genAtEntry = currentGenOpt(s, indexDir)
-    val stagedV = scaled(batch, idCol, vecCol, partitions)
-    val v = withRawNorm(stagedV)
     // Hadoop FS, not java.io.File: DFS paths in production (the
     // loadMinhashIndex lesson)
     val conf = s.sessionState.newHadoopConf()
     val centPath = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
     val fs = centPath.getFileSystem(conf)
-    // DIM VALIDATION against the manifest's declaration (the ANN
-    // append path's discipline): the assignment kernel tolerates
-    // ragged dims by truncation, so a wrong-width batch would commit
-    // silently-skewed cells. All-null batches carry no dim and commit
-    // (the family null contract). Bootstrap batches skip — they DEFINE
-    // the dim. Round-18 (guide §2.6, the appendIvfPqIndex layout): the
-    // aggregate runs CONCURRENTLY with the assignment+pin chain — it
-    // gates the durable write below, not the assignment math; a bad
-    // batch throws after some wasted assignment work (whose pins are
-    // released) and the committed state is identical either way. The
-    // future is awaited on every exit path before control leaves this
-    // operator.
-    val vPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val fDim = manOpt.map { man =>
-      implicit val vEc: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(vPool)
-      (man, scala.concurrent.Future {
-        v.filter(col("c").isNotNull)
-          .agg(min(size(col("c"))).as("lo"),
-            max(size(col("c"))).as("hi"))
-          .head()
-      })
-    }
-    def awaitAndValidateDims(): Unit = try {
+    // every per-call pin is owned by the scope until the commit: a
+    // failure anywhere releases them once the dim/write forks stopped
+    Overlap(s, 1, "semantic-dedup") { ov =>
+      val stagedV = ov.own(scaled(batch, idCol, vecCol, partitions))
+      val v = ov.own(withRawNorm(stagedV))
+      // DIM VALIDATION against the manifest's declaration (the ANN
+      // append path's discipline): the assignment kernel tolerates
+      // ragged dims by truncation, so a wrong-width batch would commit
+      // silently-skewed cells. All-null batches carry no dim and commit
+      // (the family null contract). Bootstrap batches skip — they DEFINE
+      // the dim. Round-18 (guide §2.6, the appendIvfPqIndex layout): the
+      // aggregate runs CONCURRENTLY with the assignment+pin chain — it
+      // gates the durable write below, not the assignment math; a bad
+      // batch throws after some wasted assignment work (whose pins are
+      // released) and the committed state is identical either way.
+      val fDim = manOpt.map { man =>
+        (man, ov.fork {
+          v.filter(col("c").isNotNull)
+            .agg(min(size(col("c"))).as("lo"),
+              max(size(col("c"))).as("hi"))
+            .head()
+        })
+      }
+      val (assignedRaw, release): (DataFrame, () => Unit) =
+        if (!fs.exists(centPath)) {
+          val (members, cent, kmeansRelease) =
+            kmeansFromStagedWithCentReleasable(v, cells, iters,
+              maxCentroidBytes)
+          // the centroid write is an action, so `cent` is fully
+          // consumed here — the thunk (freeing the intermediate Lloyd
+          // memberships) is safe to run at the shared release point
+          cent.write.mode("overwrite").parquet(centPath.toString)
+          (members, kmeansRelease)
+        } else {
+          val cent = s.read.parquet(centPath.toString)
+          // broadcast-budget gate from the manifest's DECLARED shape
+          // (zero jobs); when it fits, ONE collect serves the
+          // assignment — the count + dim-probe jobs the previous
+          // spelling paid per increment priced the same table twice
+          // (round-17 job-count cut). Sharded/legacy falls back.
+          val declaredFits = manOpt.flatMap(man => for {
+            dk <- man.params.get("cells"); dd <- man.params.get("dim")
+          } yield dk * (dd * 8 + 64) <= maxCentroidBytes)
+          if (declaredFits.contains(true)) {
+            val (out, bc) = assignCellsFromArray(v, collectCentroids(cent),
+              "id")
+            (out, () => bc.destroy())
+          } else {
+            val k = cent.count()
+            val dim = v.select(size(col("c")).as("d")).filter(col("d") > 0)
+              .limit(1).as[Int].collect().headOption.getOrElse(0)
+            assignCellsAuto(v, cent, "id", k, dim, maxCentroidBytes)
+          }
+        }
+      ov.own(assignedRaw)
+      val own = ov.own(assignedRaw.join(v, Seq("id"))
+        .select(col("id"), col("cell"), col("c"), col("nrm"))
+        .pin())
+      release()
+      // the validation gate, joined here — BEFORE the manifest
+      // bootstrap and the durable write
       fDim.foreach { case (man, f) =>
         val declared = man.param("dim", indexDir).toInt
-        val ds = scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf)
+        val ds = f.join()
         require(ds.isNullAt(0) ||
           (ds.getInt(0) == declared && ds.getInt(1) == declared),
           s"incrementalSemanticDedupDurable: batch dims " +
             s"[${ds.get(0)}, ${ds.get(1)}] != the index's declared " +
             s"dim=$declared ($indexDir/_index.json)")
       }
-    } finally vPool.shutdown()
-    val (assignedRaw, release): (DataFrame, () => Unit) = try {
-      if (!fs.exists(centPath)) {
-        val (members, cent, kmeansRelease) =
-          kmeansFromStagedWithCentReleasable(v, cells, iters,
-            maxCentroidBytes)
-        // the centroid write is an action, so `cent` is fully
-        // consumed here — the thunk (freeing the intermediate Lloyd
-        // memberships) is safe to run at the shared release point
-        cent.write.mode("overwrite").parquet(centPath.toString)
-        (members, kmeansRelease)
+      // bootstrap the manifest from the FROZEN artifacts (keyed on its
+      // own absence, not the train branch, so a crash between the
+      // centroid write and here self-heals on replay): the stored
+      // centroid table is the authority for dim and cell count
+      if (manOpt.isEmpty) {
+        // cells and dim in ONE aggregate over the stored table — the
+        // appendIvfPqIndex spelling (round-17 job-count cut: the
+        // limit(1) dim probe and the count were two jobs over the same
+        // KB-sized scan); min(size) == the width, centroids are uniform
+        // by construction
+        val centStats = s.read.parquet(centPath.toString)
+          .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0)))
+          .head()
+        writeIndexManifest(s, indexDir, "semantic", Map(
+          "dim" -> centStats.getInt(1).toLong,
+          "cells" -> centStats.getLong(0)))
+      }
+      // COMMIT GATE (the appendIvfPqIndex discipline): a maintenance run
+      // that started during staging holds the lock; one that committed
+      // moved the pointer — either way, fail loudly and re-run the
+      // idempotent batch instead of writing into a superseded generation
+      requireNoMaintenance(s, indexDir, "incrementalSemanticDedupDurable")
+      val gen = currentGenOpt(s, indexDir).getOrElse(0L)
+      require(genAtEntry.forall(_ == gen),
+        s"incrementalSemanticDedupDurable: a compaction committed " +
+          s"generation $gen during this batch (staged against gen " +
+          s"${genAtEntry.get}); re-run the batch — the commit is " +
+          "idempotent")
+      val root = genRoot(indexDir, gen)
+      // cell-partitioned commit (the ANN index's layout): the probe
+      // below — and every later batch's probe — reads only the cells a
+      // batch actually lands in, as a partition-pruned scan. When the
+      // probe will run, the write and its probed-cells collect are
+      // independent jobs over the pinned `own` — overlap them (guide
+      // §2.6; round-18); the write is awaited before the generation flip
+      // and before any stored-tree read, on every path.
+      val ownCellsPre: Seq[Long] = if (!probe) {
+        own.write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$root/batches/batch=$batchId")
+        Seq.empty
       } else {
-        val cent = s.read.parquet(centPath.toString)
-        // broadcast-budget gate from the manifest's DECLARED shape
-        // (zero jobs); when it fits, ONE collect serves the
-        // assignment — the count + dim-probe jobs the previous
-        // spelling paid per increment priced the same table twice
-        // (round-17 job-count cut). Sharded/legacy falls back.
-        val declaredFits = manOpt.flatMap(man => for {
-          dk <- man.params.get("cells"); dd <- man.params.get("dim")
-        } yield dk * (dd * 8 + 64) <= maxCentroidBytes)
-        if (declaredFits.contains(true)) {
-          val (out, bc) = assignCellsFromArray(v, collectCentroids(cent),
-            "id")
-          (out, () => bc.destroy())
-        } else {
-          val k = cent.count()
-          val dim = v.select(size(col("c")).as("d")).filter(col("d") > 0)
-            .limit(1).as[Int].collect().headOption.getOrElse(0)
-          assignCellsAuto(v, cent, "id", k, dim, maxCentroidBytes)
-        }
-      }
-    } catch { case e: Throwable =>
-      // the dim future must be DONE (and its pool dead) before the
-      // caller unwinds — its own failure must not mask the first one
-      try awaitAndValidateDims() catch { case _: Throwable => () }
-      throw e
-    }
-    val own = assignedRaw.join(v, Seq("id"))
-      .select(col("id"), col("cell"), col("c"), col("nrm"))
-      .pin()
-    release()
-    // the validation gate, awaited here — BEFORE the manifest
-    // bootstrap and the durable write; a failed batch releases its
-    // pins on the way out
-    try awaitAndValidateDims()
-    catch { case e: Throwable =>
-      Seq(own, assignedRaw, v, stagedV).foreach { p =>
-        try DedupOps.releaseLocalCheckpoint(p)
-        catch { case _: Throwable => () }
-      }
-      throw e
-    }
-    // bootstrap the manifest from the FROZEN artifacts (keyed on its
-    // own absence, not the train branch, so a crash between the
-    // centroid write and here self-heals on replay): the stored
-    // centroid table is the authority for dim and cell count
-    if (manOpt.isEmpty) {
-      // cells and dim in ONE aggregate over the stored table — the
-      // appendIvfPqIndex spelling (round-17 job-count cut: the
-      // limit(1) dim probe and the count were two jobs over the same
-      // KB-sized scan); min(size) == the width, centroids are uniform
-      // by construction
-      val centStats = s.read.parquet(centPath.toString)
-        .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0)))
-        .head()
-      writeIndexManifest(s, indexDir, "semantic", Map(
-        "dim" -> centStats.getInt(1).toLong,
-        "cells" -> centStats.getLong(0)))
-    }
-    // COMMIT GATE (the appendIvfPqIndex discipline): a maintenance run
-    // that started during staging holds the lock; one that committed
-    // moved the pointer — either way, fail loudly and re-run the
-    // idempotent batch instead of writing into a superseded generation
-    requireNoMaintenance(s, indexDir, "incrementalSemanticDedupDurable")
-    val gen = currentGenOpt(s, indexDir).getOrElse(0L)
-    require(genAtEntry.forall(_ == gen),
-      s"incrementalSemanticDedupDurable: a compaction committed " +
-        s"generation $gen during this batch (staged against gen " +
-        s"${genAtEntry.get}); re-run the batch — the commit is " +
-        "idempotent")
-    val root = genRoot(indexDir, gen)
-    // cell-partitioned commit (the ANN index's layout): the probe
-    // below — and every later batch's probe — reads only the cells a
-    // batch actually lands in, as a partition-pruned scan. When the
-    // probe will run, the write and its probed-cells collect are
-    // independent jobs over the pinned `own` — overlap them (guide
-    // §2.6; round-18); the write is awaited before the generation flip
-    // and before any stored-tree read, on every path.
-    val ownCellsPre: Seq[Long] = if (!probe) {
-      own.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$root/batches/batch=$batchId")
-      Seq.empty
-    } else {
-      val wPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      try {
-        implicit val wEc: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(wPool)
-        import scala.concurrent.duration.Duration
-        val fW = scala.concurrent.Future {
+        val fW = ov.fork {
           own.write.mode("overwrite").partitionBy("cell")
             .parquet(s"$root/batches/batch=$batchId")
         }
-        val cellsSeq =
-          try own.select(col("cell")).distinct()
-            .as[Long].collect().toSeq.sorted
-          finally { scala.concurrent.Await.ready(fW, Duration.Inf); () }
-        scala.concurrent.Await.result(fW, Duration.Inf)
+        val cellsSeq = own.select(col("cell")).distinct()
+          .as[Long].collect().toSeq.sorted
+        fW.join()
         cellsSeq
-      } finally wPool.shutdown()
-    }
-    // first-ever commit: flip generation 0 live (atomic marker create;
-    // idempotent on replay — the marker may already exist)
-    if (genAtEntry.isEmpty &&
-        !fs.exists(hpath(s"$indexDir/_commits/$gen")))
-      commitGen(s, indexDir, gen)
-    // per-call staging blocks die here either way: `own` (and the
-    // returned pairs, below) are pinned, the commit is on disk
-    def releaseStagings(): Unit = {
-      DedupOps.releaseLocalCheckpoint(assignedRaw)
-      DedupOps.releaseLocalCheckpoint(v)
-      DedupOps.releaseLocalCheckpoint(stagedV)
-    }
-    if (!probe) {
-      releaseStagings()
-      DedupOps.releaseLocalCheckpoint(own)
-      return emptyPairsFrame(s)
-    }
-    val batchesPath = new org.apache.hadoop.fs.Path(s"$root/batches")
-    val hasOther = fs.listStatus(batchesPath).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch=") &&
-        st.getPath.getName != s"batch=$batchId")
-    // the probe touches only the frozen cells THIS batch lands in —
-    // a bounded set (≤ the centroid count, own is pinned) — so the
-    // accumulated-index scan partition-prunes to those cells: probe
-    // cost is O(touched cells' occupancy), never O(index). Pairs in
-    // untouched cells cannot involve this batch by construction.
-    // Tombstoned ids ([[deleteFromIndex]]) are anti-joined out — a
-    // deleted doc must neither pair nor serve as a delegation root.
-    val ownCells = ownCellsPre
-    val oldRows: Option[DataFrame] = if (!hasOther) None
-      else Some(minusTombstones(
-          cellPrune(s.read.parquet(batchesPath.toString), ownCells),
-          loadTombstones(s, indexDir))
-        // exclude own (half-committed) batch on replay, probe the
-        // committed rest + this run's own pinned rows
-        .filter(col("batch") =!= lit(batchId))
-        .select(col("id"), col("cell").cast("long").as("cell"),
-          col("c"), col("nrm")))
-    val ownRows = own.select(col("id"), col("cell"), col("c"), col("nrm"))
-    val all = oldRows.map(_.unionByName(ownRows)).getOrElse(ownRows)
-    // cosine computed BEFORE the a/b canonicalization (it is exactly
-    // symmetric — same integer dot, same double expression — so the
-    // distinct collapses the own-own double orientation)
-    def exactPairs(ownSide: DataFrame, allSide: DataFrame): DataFrame = {
-      val xa = ownSide.select(col("cell"), col("id").as("na_id"),
-        col("c").as("ac"), col("nrm").as("anrm"))
-      val xb = allSide.select(col("cell"), col("id").as("nb_id"),
-        col("c").as("bc"), col("nrm").as("bnrm"))
-      xa.join(xb, Seq("cell"))
-        .filter(col("na_id") =!= col("nb_id"))
-        .select(least(col("na_id"), col("nb_id")).as("a"),
-          greatest(col("na_id"), col("nb_id")).as("b"),
-          ((dot_i64(col("ac"), col("bc")).cast("double") / lit(1.0e12)) /
-            (col("anrm") * col("bnrm"))).as("cosine"))
-        .filter(col("cosine") >= threshold)
-        .distinct()
-    }
-    val (rawPairs, releaseCap): (DataFrame, () => Unit) =
-      if (maxCellOccupancy == Int.MaxValue) (exactPairs(ownRows, all),
-        () => ())
-      else {
-        require(maxCellOccupancy >= 1,
-          s"maxCellOccupancy=$maxCellOccupancy must be >= 1")
-        // occupancy over the COMBINED corpus (accumulated + this batch)
-        // per frozen cell; saturated cells ≤ |all|/cap — broadcastable
-        val satCells = all.groupBy(col("cell"))
-          .agg(count(lit(1)).as("m")).filter(col("m") > maxCellOccupancy)
-          .select(col("cell")).pin()
-        if (satCells.head(1).isEmpty)
-          (exactPairs(ownRows, all),
-            () => DedupOps.releaseLocalCheckpoint(satCells))
-        else {
-          val allFlagged = oldRows
-            .map(_.withColumn("is_old", lit(true))
-              .unionByName(ownRows.withColumn("is_old", lit(false))))
-            .getOrElse(ownRows.withColumn("is_old", lit(false)))
-          val subOwn = ownRows.join(broadcast(satCells), Seq("cell"),
-            "left_anti")
-          val subAll = all.join(broadcast(satCells), Seq("cell"),
-            "left_anti")
-          // collapse faces exclude null/zero-norm rows (they never
-          // pair on the exact path, and a shared null signature would
-          // weld them — the pairsWithinCellsCapped contract)
-          val satAll = allFlagged.join(broadcast(satCells), Seq("cell"))
-            .filter(col("c").isNotNull && col("nrm") > 0)
-            .withColumn("fsig", fullVecSig(col("c")))
-          // one aggregation yields every group's root, OLD-preferring
-          // (the probeIndex old-root discipline)
-          val groups = satAll.groupBy(col("cell"), col("fsig"))
-            .agg(min(when(col("is_old"), col("id"))).as("old_root"),
-              min(col("id")).as("any_root"))
-            .select(col("cell"), col("fsig"),
-              coalesce(col("old_root"), col("any_root")).as("root"),
-              col("old_root").isNull.as("is_new"))
-            .pin()
-          val satOwn = satAll.filter(!col("is_old"))
-          val delegated = satOwn.join(groups, Seq("cell", "fsig"))
-            .filter(col("id") =!= col("root"))
-            .select(least(col("root"), col("id")).as("a"),
-              greatest(col("root"), col("id")).as("b"),
-              lit(null).cast("double").as("cosine"))
-            .distinct()
-          // only groups FORMED by this batch (no accumulated member)
-          // probe the cell's representatives — the group-level face of
-          // the incremental contract "a pair surfaces once, when its
-          // later endpoint arrives": a pre-existing group's root pairs
-          // were emitted the batch its group formed (rep-level if the
-          // cell was already saturated, member-level otherwise since
-          // occupancy only grows), so re-probing a merely-TOUCHED
-          // group would re-emit the same (rootX, rootY) rows every
-          // time the boilerplate class gains a member (REVIEW) —
-          // touched groups' new members are covered by their
-          // delegated edges above
-          val ownGroups = groups.filter(col("is_new"))
-            .select(col("cell"), col("root"))
-          val allVecs = all.select(col("id"), col("c"), col("nrm"))
-          val ownRepRows = ownGroups
-            .join(allVecs, ownGroups("root") === col("id"))
-            .select(col("cell"), col("id"), col("c"), col("nrm"))
-          val repRows = groups
-            .join(allVecs, groups("root") === col("id"))
-            .select(col("cell"), col("id"), col("c"), col("nrm"))
-          (exactPairs(subOwn, subAll)
-            .unionByName(delegated)
-            .unionByName(exactPairs(ownRepRows, repRows)),
-            () => {
-              DedupOps.releaseLocalCheckpoint(groups)
-              DedupOps.releaseLocalCheckpoint(satCells)
-            })
-        }
       }
-    val pairs = rawPairs.pin()
-    releaseCap()
-    releaseStagings()
-    DedupOps.releaseLocalCheckpoint(own)
-    pairs
+      // first-ever commit: flip generation 0 live (atomic marker create;
+      // idempotent on replay — the marker may already exist)
+      if (genAtEntry.isEmpty &&
+          !fs.exists(hpath(s"$indexDir/_commits/$gen")))
+        commitGen(s, indexDir, gen)
+      // per-call staging blocks die here either way: `own` (and the
+      // returned pairs, below) are pinned, the commit is on disk
+      def releaseStagings(): Unit = {
+        DedupOps.releaseLocalCheckpoint(assignedRaw)
+        DedupOps.releaseLocalCheckpoint(v)
+        DedupOps.releaseLocalCheckpoint(stagedV)
+      }
+      if (!probe) {
+        releaseStagings()
+        DedupOps.releaseLocalCheckpoint(own)
+        emptyPairsFrame(s)
+      } else {
+        val batchesPath = new org.apache.hadoop.fs.Path(s"$root/batches")
+        val hasOther = fs.listStatus(batchesPath).exists(st =>
+          st.isDirectory && st.getPath.getName.startsWith("batch=") &&
+            st.getPath.getName != s"batch=$batchId")
+        // the probe touches only the frozen cells THIS batch lands in —
+        // a bounded set (≤ the centroid count, own is pinned) — so the
+        // accumulated-index scan partition-prunes to those cells: probe
+        // cost is O(touched cells' occupancy), never O(index). Pairs in
+        // untouched cells cannot involve this batch by construction.
+        // Tombstoned ids ([[deleteFromIndex]]) are anti-joined out — a
+        // deleted doc must neither pair nor serve as a delegation root.
+        val ownCells = ownCellsPre
+        val oldRows: Option[DataFrame] = if (!hasOther) None
+          else Some(minusTombstones(
+              cellPrune(s.read.parquet(batchesPath.toString), ownCells),
+              loadTombstones(s, indexDir))
+            // exclude own (half-committed) batch on replay, probe the
+            // committed rest + this run's own pinned rows
+            .filter(col("batch") =!= lit(batchId))
+            .select(col("id"), col("cell").cast("long").as("cell"),
+              col("c"), col("nrm")))
+        val ownRows = own.select(col("id"), col("cell"), col("c"), col("nrm"))
+        val all = oldRows.map(_.unionByName(ownRows)).getOrElse(ownRows)
+        // cosine computed BEFORE the a/b canonicalization (it is exactly
+        // symmetric — same integer dot, same double expression — so the
+        // distinct collapses the own-own double orientation)
+        def exactPairs(ownSide: DataFrame, allSide: DataFrame): DataFrame = {
+          val xa = ownSide.select(col("cell"), col("id").as("na_id"),
+            col("c").as("ac"), col("nrm").as("anrm"))
+          val xb = allSide.select(col("cell"), col("id").as("nb_id"),
+            col("c").as("bc"), col("nrm").as("bnrm"))
+          xa.join(xb, Seq("cell"))
+            .filter(col("na_id") =!= col("nb_id"))
+            .select(least(col("na_id"), col("nb_id")).as("a"),
+              greatest(col("na_id"), col("nb_id")).as("b"),
+              ((dot_i64(col("ac"), col("bc")).cast("double") / lit(1.0e12)) /
+                (col("anrm") * col("bnrm"))).as("cosine"))
+            .filter(col("cosine") >= threshold)
+            .distinct()
+        }
+        val (rawPairs, releaseCap): (DataFrame, () => Unit) =
+          if (maxCellOccupancy == Int.MaxValue) (exactPairs(ownRows, all),
+            () => ())
+          else {
+            require(maxCellOccupancy >= 1,
+              s"maxCellOccupancy=$maxCellOccupancy must be >= 1")
+            // occupancy over the COMBINED corpus (accumulated + this batch)
+            // per frozen cell; saturated cells ≤ |all|/cap — broadcastable
+            val satCells = all.groupBy(col("cell"))
+              .agg(count(lit(1)).as("m")).filter(col("m") > maxCellOccupancy)
+              .select(col("cell")).pin()
+            if (satCells.head(1).isEmpty)
+              (exactPairs(ownRows, all),
+                () => DedupOps.releaseLocalCheckpoint(satCells))
+            else {
+              val allFlagged = oldRows
+                .map(_.withColumn("is_old", lit(true))
+                  .unionByName(ownRows.withColumn("is_old", lit(false))))
+                .getOrElse(ownRows.withColumn("is_old", lit(false)))
+              val subOwn = ownRows.join(broadcast(satCells), Seq("cell"),
+                "left_anti")
+              val subAll = all.join(broadcast(satCells), Seq("cell"),
+                "left_anti")
+              // collapse faces exclude null/zero-norm rows (they never
+              // pair on the exact path, and a shared null signature would
+              // weld them — the pairsWithinCellsCapped contract)
+              val satAll = allFlagged.join(broadcast(satCells), Seq("cell"))
+                .filter(col("c").isNotNull && col("nrm") > 0)
+                .withColumn("fsig", fullVecSig(col("c")))
+              // one aggregation yields every group's root, OLD-preferring
+              // (the probeIndex old-root discipline)
+              val groups = satAll.groupBy(col("cell"), col("fsig"))
+                .agg(min(when(col("is_old"), col("id"))).as("old_root"),
+                  min(col("id")).as("any_root"))
+                .select(col("cell"), col("fsig"),
+                  coalesce(col("old_root"), col("any_root")).as("root"),
+                  col("old_root").isNull.as("is_new"))
+                .pin()
+              val satOwn = satAll.filter(!col("is_old"))
+              val delegated = satOwn.join(groups, Seq("cell", "fsig"))
+                .filter(col("id") =!= col("root"))
+                .select(least(col("root"), col("id")).as("a"),
+                  greatest(col("root"), col("id")).as("b"),
+                  lit(null).cast("double").as("cosine"))
+                .distinct()
+              // only groups FORMED by this batch (no accumulated member)
+              // probe the cell's representatives — the group-level face of
+              // the incremental contract "a pair surfaces once, when its
+              // later endpoint arrives": a pre-existing group's root pairs
+              // were emitted the batch its group formed (rep-level if the
+              // cell was already saturated, member-level otherwise since
+              // occupancy only grows), so re-probing a merely-TOUCHED
+              // group would re-emit the same (rootX, rootY) rows every
+              // time the boilerplate class gains a member (REVIEW) —
+              // touched groups' new members are covered by their
+              // delegated edges above
+              val ownGroups = groups.filter(col("is_new"))
+                .select(col("cell"), col("root"))
+              val allVecs = all.select(col("id"), col("c"), col("nrm"))
+              val ownRepRows = ownGroups
+                .join(allVecs, ownGroups("root") === col("id"))
+                .select(col("cell"), col("id"), col("c"), col("nrm"))
+              val repRows = groups
+                .join(allVecs, groups("root") === col("id"))
+                .select(col("cell"), col("id"), col("c"), col("nrm"))
+              (exactPairs(subOwn, subAll)
+                .unionByName(delegated)
+                .unionByName(exactPairs(ownRepRows, repRows)),
+                () => {
+                  DedupOps.releaseLocalCheckpoint(groups)
+                  DedupOps.releaseLocalCheckpoint(satCells)
+                })
+            }
+          }
+        val pairs = rawPairs.pin()
+        releaseCap()
+        releaseStagings()
+        DedupOps.releaseLocalCheckpoint(own)
+        pairs
+      }
+    }
   }
 
   /** Drift OBSERVABILITY for a durable frozen-centroid index
@@ -7628,52 +7374,18 @@ object PrepOps {
     * stage on, while the body's gate/dedup/split stages run their own
     * eager jobs first. The table is pinned inside the future (counter
     * construction collects it; without the pin every construction
-    * would re-run the training). The future is awaited to completion
-    * before this returns on ANY path, so a failing body never leaks a
-    * running training. */
+    * would re-run the training). A failing body cancels the training
+    * instead of waiting a possibly hours-long run out. */
   private def withBpeCounter[T](bpeMergeTable: Option[DataFrame])(
       body: Option[() => Column => Column] => T): T =
     bpeMergeTable match {
       case None => body(None)
       case Some(mt) =>
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        // per-call job tag so a FAILED body can cancel the training's
-        // in-flight jobs instead of waiting a possibly hours-long
-        // training out whose result nobody will consume (ADVICE); tags
-        // are additive, the caller's group/tags are preserved. The
-        // future self-releases its pin when it dies cancelled.
-        val s = mt.sparkSession
-        val tag = "graft-bpe-train-" +
-          java.lang.Long.toHexString(bpeTrainSeq.incrementAndGet())
-        val f = scala.concurrent.Future {
-          s.sparkContext.addJobTag(tag)
-          val pinned = mt.pin()
-          try TextOps.bpeTokenCounter(pinned)
-          catch { case e: Throwable =>
-            try DedupOps.releaseLocalCheckpoint(pinned)
-            catch { case _: Throwable => () }
-            throw e
-          }
-        }
-        import scala.concurrent.duration.Duration
-        var ok = false
-        try {
-          val r = body(Some(() =>
-            scala.concurrent.Await.result(f, Duration.Inf)))
-          ok = true
-          r
-        } finally {
-          if (!ok)
-            try s.sparkContext.cancelJobsWithTag(tag)
-            catch { case _: Throwable => () }
-          scala.concurrent.Await.ready(f, Duration.Inf)
-          pool.shutdown()
+        Overlap(mt.sparkSession, 1, "bpe-train") { ov =>
+          val f = ov.fork(TextOps.bpeTokenCounter(ov.own(mt.pin())))
+          body(Some(() => f.join()))
         }
     }
-
-  private val bpeTrainSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The per-stage FUNNEL of [[corpusBuild]] — the observability every
     * production pipeline runs next to the build itself: one row per

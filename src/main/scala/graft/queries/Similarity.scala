@@ -2062,13 +2062,9 @@ object Similarity {
         // component resolution compute the losers from the raw
         // embeddings) — run them concurrently (optimization guide
         // §2.6); the delete-then-serve tail still waits for both, so
-        // results are unchanged (the oracle pins it). Fresh 1-thread
-        // pool from this thread so Spark's job group/tags propagate.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-        val losers = try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val fBuild = scala.concurrent.Future {
+        // results are unchanged (the oracle pins it).
+        val losers = graft.core.Overlap(s, 1, "s26") { ov =>
+          val fBuild = ov.fork {
             graft.operators.AnnOps.buildIvfPqIndex(
               emb, "vec_id", "embedding", "source", idxDir,
               cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
@@ -2081,27 +2077,17 @@ object Similarity {
           // 0.38 sits in a measured cosine gap at every SF (nearest
           // pairs 0.37996/0.38002 at sf0.1 — 3.5e-5 wide, ~11 orders
           // above double ulp), so >= is engine-stable.
-          val l = try {
-            val pairs = graft.operators.AnnOps.semanticNearDups(
-              Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
-              threshold = 0.38, cells = K, iters = 2)
-            graft.operators.DedupOps
-              .connectedComponents(pairs, "a", "b")
-              .filter(!$"is_survivor").select($"id".as("vec_id"))
-          } catch { case e: Throwable =>
-            // the build must be DONE before this frame unwinds — a
-            // failure racing a half-finished build would leave an
-            // un-awaited future running jobs into the caller's cleanup
-            scala.concurrent.Await.ready(fBuild,
-              scala.concurrent.duration.Duration.Inf)
-            throw e
-          }
-          // surface a build failure (and order the delete after the
-          // manifest commit it validates against)
-          scala.concurrent.Await.result(fBuild,
-            scala.concurrent.duration.Duration.Inf)
+          val pairs = graft.operators.AnnOps.semanticNearDups(
+            Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
+            threshold = 0.38, cells = K, iters = 2)
+          val l = graft.operators.DedupOps
+            .connectedComponents(pairs, "a", "b")
+            .filter(!$"is_survivor").select($"id".as("vec_id"))
+          // order the delete after the manifest commit it validates
+          // against
+          fBuild.join()
           l
-        } finally pool.shutdown()
+        }
         graft.operators.AnnOps.deleteFromIndex(
           losers, "vec_id", idxDir, batchId = 1L)
         val out = graft.operators.AnnOps.queryIvfPqIndex(
@@ -2329,33 +2315,13 @@ object Similarity {
       .scratchRoot(s"graft-$tag-new-").toString
     // the stream-source staging write (the 20% split into 3 files) and
     // the index build are INDEPENDENT job chains over the same pinned
-    // emb — overlap them (guide §2.6; round-18). Fresh 1-thread pool
-    // from this thread so job group/tags propagate; the future is
-    // awaited on EVERY exit path before the stream (its consumer)
-    // starts.
-    locally {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val fNew = scala.concurrent.Future {
-        newEmb.repartition(3).write.mode("overwrite").parquet(newDir)
-      }
-      var ok = false
-      try {
-        graft.operators.AnnOps.buildIvfPqIndex(
-          oldEmb, "vec_id", "embedding", "source", idxDir,
-          cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
-        ok = true
-      } finally {
-        import scala.concurrent.duration.Duration
-        try {
-          val r = scala.concurrent.Await.ready(fNew, Duration.Inf)
-            .value.get
-          // a staging-write failure propagates only when the build
-          // succeeded — it must not MASK the build's own exception
-          if (ok) r.get
-        } finally pool.shutdown()
-      }
+    // emb — overlap them (guide §2.6); both are done before the
+    // stream (the staging's consumer) starts.
+    graft.core.Overlap(s, 1, s"$tag-stage") { ov =>
+      ov.fork(newEmb.repartition(3).write.mode("overwrite").parquet(newDir))
+      graft.operators.AnnOps.buildIvfPqIndex(
+        oldEmb, "vec_id", "embedding", "source", idxDir,
+        cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
     }
     val stream = s.readStream.schema(newEmb.schema)
       .option("maxFilesPerTrigger", 1).parquet(newDir)

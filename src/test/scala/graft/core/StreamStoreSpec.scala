@@ -175,4 +175,29 @@ class StreamStoreSpec extends AnyFunSuite {
     assert(dropped == before.take(2))
     assert(st.segments("s") == before.drop(2))
   }
+
+  test("scratchBase: GRAFT_SCRATCH_DIR wins when writable and fails " +
+      "loudly, naming the variable, when missing or unwritable") {
+    val dir = Files.createTempDirectory("graft-scratch-spec-")
+    assert(StreamStore.scratchBase(Some(dir.toString)) == dir)
+    val missing = dir.resolve("absent")
+    val e = intercept[IllegalArgumentException](
+      StreamStore.scratchBase(Some(missing.toString)))
+    assert(e.getMessage.contains("GRAFT_SCRATCH_DIR"), e.getMessage)
+    val file = Files.createFile(dir.resolve("a-file"))
+    intercept[IllegalArgumentException](
+      StreamStore.scratchBase(Some(file.toString)))
+    val ro = Files.createDirectory(dir.resolve("read-only"))
+    assert(ro.toFile.setWritable(false))
+    try {
+      // root ignores permission bits; the check is meaningful only
+      // where the JVM itself sees the dir as unwritable
+      if (!Files.isWritable(ro))
+        intercept[IllegalArgumentException](
+          StreamStore.scratchBase(Some(ro.toString)))
+    } finally ro.toFile.setWritable(true)
+    // unset: tmpfs when present, else the JVM temp dir — never throws
+    val fallback = StreamStore.scratchBase(None)
+    assert(Files.isDirectory(fallback) && Files.isWritable(fallback))
+  }
 }

@@ -212,6 +212,48 @@ class CrashRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     assertRecovered(store, out2, "s", 30)
   }
 
+  test("a failing stream ends a parallel sweep only after the other " +
+      "streams' ingestOnce stopped; they replay cleanly") {
+    val (store, out, ing) = fixture()
+    // "bad" throws at its door: its out dir belongs to a previous
+    // incarnation of the name
+    val w0 = store.createStream("bad", schema)
+    w0.write(rows(0, 10)); w0.stop()
+    ing.ingestOnce("bad")
+    Thread.sleep(2) // initializedAtUs must differ
+    val w1 = store.createStream("bad", schema)
+    w1.write(rows(0, 10)); w1.stop()
+    Seq("good1", "good2").foreach { name =>
+      val w = store.createStream(name, schema)
+      w.write(rows(0, 20000)); w.stop()
+    }
+    def outState(): Map[String, Long] = {
+      val it = Files.walk(out).iterator()
+      val b = Map.newBuilder[String, Long]
+      while (it.hasNext) {
+        val p = it.next()
+        if (Files.isRegularFile(p))
+          b += out.relativize(p).toString -> Files.size(p)
+      }
+      b.result()
+    }
+    val e = intercept[IllegalArgumentException](ing.sweep(parallelism = 3))
+    assert(e.getMessage.contains("previous incarnation"), e.getMessage)
+    val atReturn = outState()
+    Thread.sleep(2000)
+    assert(outState() == atReturn,
+      "a sibling stream kept ingesting after the sweep returned")
+    assert(!Thread.getAllStackTraces.keySet.toArray
+      .exists(_.toString.contains("graft-ingest-sweep-")),
+      "a sweep thread outlived the call")
+    // a sibling either finished before the cancel reached it or stopped
+    // mid-ingest; a replay completes it exactly once either way
+    Seq("good1", "good2").foreach { name =>
+      if (store.listStreams().contains(name)) ing.ingestOnce(name)
+      assertRecovered(store, out, name, 20000)
+    }
+  }
+
   test("live kill-restart: ingest loop killed mid-flight under a " +
       "concurrent jittered writer; a fresh ingester resumes to exactly " +
       "the written data") {

@@ -2779,6 +2779,91 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"a tombstoned doc still pairs in the incremental probe: $pairs")
   }
 
+  test("deleteFromIndex: a rejected NULL-id replay leaves the committed " +
+      "tombstone batch byte-for-byte intact and still serving") {
+    val s = spark
+    import s.implicits._
+    val df = annRows(0 until 40).toDF("vid", "emb", "grp").pin()
+    val idx = tmpDir("delete-reject")
+    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", idx, cells = 4,
+      iters = 2, pqM = 4, pqKs = 4, pqIters = 2, partitions = 4)
+    val deleted = Set(1L, 5L, 9L)
+    AnnOps.deleteFromIndex(deleted.toSeq.toDF("vid"), "vid", idx, 1L)
+    val tsRoot = java.nio.file.Paths.get(s"$idx/tombstones")
+    def tree(): Map[String, String] = {
+      val it = java.nio.file.Files.walk(tsRoot).iterator()
+      val b = Map.newBuilder[String, String]
+      while (it.hasNext) {
+        val p = it.next()
+        if (java.nio.file.Files.isRegularFile(p))
+          b += tsRoot.relativize(p).toString ->
+            java.security.MessageDigest.getInstance("SHA-256")
+              .digest(java.nio.file.Files.readAllBytes(p))
+              .map("%02x".format(_)).mkString
+      }
+      b.result()
+    }
+    val committed = tree()
+    intercept[IllegalArgumentException] {
+      AnnOps.deleteFromIndex(Seq(Some(2L), None).toDF("vid"), "vid",
+        idx, 1L)
+    }
+    assert(tree() == committed,
+      "a rejected replay changed the committed tombstones")
+    val batchDirs = tsRoot.toFile.listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
+    assert(batchDirs.map(_.getName).toSeq == Seq("batch=1") &&
+      batchDirs.forall(_.listFiles().exists(_.getName.endsWith(".parquet"))),
+      "a rejected replay left an empty or extra batch dir")
+    val served = AnnOps.queryIvfPqIndex(df.filter($"vid" < 8), "vid",
+      "emb", "grp", idx, k = 3, nprobe = 4, rerankDepth = Int.MaxValue,
+      partitions = 4).collect()
+    assert(served.nonEmpty &&
+      !served.exists(r => deleted.contains(r.getLong(1))),
+      "a deleted id resurfaced after the rejected replay")
+    DedupOps.releaseLocalCheckpoint(df)
+  }
+
+  test("incrementalSemanticDedupDurable: a failure after the staging " +
+      "pin, with the dim fork in flight, leaks no pins and no helper " +
+      "threads") {
+    val s = spark
+    import s.implicits._
+    val idx = tmpDir("sem-leak")
+    val seed = (0 until 20).map(i =>
+      (i.toLong, Array.tabulate(8)(j => if (j == i % 2) 10f else 0f)))
+      .toDF("vid", "emb")
+    AnnOps.incrementalSemanticDedupDurable(seed, "vid", "emb", idx,
+      0L, threshold = 0.9, cells = 2, iters = 1, probe = false)
+    def helperThreads() = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread].getName)
+      .filter(n => n.startsWith("graft-") || n.matches("pool-\\d+-.*"))
+      .toSet
+    val threadsBefore = helperThreads()
+    val keep = s.sparkContext.getPersistentRDDs.keySet.toSet
+    // a corrupt stored centroid table fails the frozen-centroid
+    // assignment after the staging is pinned, while the dim fork is
+    // in flight
+    new java.io.File(s"$idx/centroids").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.write(f.toPath,
+        "not parquet".getBytes("UTF-8")))
+    intercept[Exception] {
+      AnnOps.incrementalSemanticDedupDurable(
+        Seq((100L, Array.fill(8)(1f))).toDF("vid", "emb"), "vid", "emb",
+        idx, 1L, threshold = 0.9, cells = 2, iters = 1)
+    }
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    var left = s.sparkContext.getPersistentRDDs.keySet.toSet -- keep
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      left = s.sparkContext.getPersistentRDDs.keySet.toSet -- keep
+    }
+    assert(left.isEmpty, s"the failed batch leaked pinned RDDs: $left")
+    assert(helperThreads() -- threadsBefore == Set.empty,
+      "a helper thread outlived the failed batch")
+  }
+
   test("minhash durable index: compactIndex consolidates the batch-" +
       "only layout, applied tombstones drop physically, and a later " +
       "increment probes identically to an uncompacted replica") {
