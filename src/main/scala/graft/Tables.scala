@@ -46,8 +46,4 @@ object Tables {
         df.withColumn("ts", unix_micros(col("ts")) * 1000L)
       case _ => df
     }
-
-  /** Register all tables as temp views so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -57,9 +57,8 @@ object Verify {
     def selected(name: String): Boolean =
       prefixes.forall(_.exists(name.startsWith))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val localDir =
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-spark-local"
-      else System.getProperty("java.io.tmpdir")
+    val localDir = graft.core.StreamStore.scratchBase()
+      .resolve("graft-spark-local").toString
     // SPARK_GRAFT_MASTER overrides the single-JVM default — the
     // multi-JVM execution gate runs the full query surface under
     // local-cluster[n,c,mem] (separate executor JVMs, real task

@@ -268,14 +268,9 @@ object Zfp {
     * `*LossyStd` compressors, produce — and `graftLossy` comes back
     * false. A [[LossyMarker]]-marked stream carries the graft-enhanced
     * payload (reversible transform + trailing-zero elision) and sets
-    * `graftLossy`. The one ambiguity: graft versions before the marker
-    * wrote the graft payload under a plain version byte,
-    * header-indistinguishable from libzfp; a caller who KNOWS a stream's
-    * provenance is that era opts in via `acceptUnmarkedLossy` and gets
-    * the graft decode ([[decompressLegacyLossy]]).
+    * `graftLossy`.
     */
-  def readHeader(r: BitReader,
-      acceptUnmarkedLossy: Boolean = false): ZfpHeader = {
+  def readHeader(r: BitReader): ZfpHeader = {
     val m0 = r.readBits(8); val m1 = r.readBits(8)
     val m2 = r.readBits(8); val ver = r.readBits(8)
     require(m0 == 'z'.toLong && m1 == 'f'.toLong && m2 == 'p'.toLong,
@@ -294,8 +289,7 @@ object Zfp {
     if (lossyMarked) require(mode < ModeReversible,
       s"zfp: lossy-marked stream carries non-accuracy mode $mode")
     ZfpHeader(tpe, nx, ny, mode,
-      graftLossy = mode < ModeReversible &&
-        (lossyMarked || acceptUnmarkedLossy))
+      graftLossy = mode < ModeReversible && lossyMarked)
   }
 
   // ----------------------------------------- block machinery (2D, 4x4)
@@ -1346,23 +1340,9 @@ object Zfp {
     * libzfp-written fixed-accuracy blob (the reference engine's
     * `zfp_stream_set_accuracy` output, `zfp_compressor.cpp:93-134`)
     * is read directly. */
-  def decompress(blob: Array[Byte]): Decoded =
-    decompress(blob, acceptUnmarkedLossy = false)
-
-  /** [[decompress]] for LEGACY graft fixed-accuracy streams written
-    * before the version-byte lossy marker. Such streams carry the graft
-    * payload under a plain version byte — header-indistinguishable from
-    * libzfp, so the default decode would read them as standard-layout
-    * garbage. Only call this when the stream's provenance is known to
-    * be a pre-marker graft writer (see [[readHeader]]).
-    */
-  def decompressLegacyLossy(blob: Array[Byte]): Decoded =
-    decompress(blob, acceptUnmarkedLossy = true)
-
-  private def decompress(blob: Array[Byte],
-      acceptUnmarkedLossy: Boolean): Decoded = {
+  def decompress(blob: Array[Byte]): Decoded = {
     val r = new BitReader(blob)
-    val h = readHeader(r, acceptUnmarkedLossy)
+    val h = readHeader(r)
     require(h.reversible || h.accuracy,
       s"zfp: unsupported mode ${h.mode} (reversible and fixed-accuracy " +
         "short modes only; expert mode is not supported)")

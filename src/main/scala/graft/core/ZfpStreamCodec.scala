@@ -165,12 +165,7 @@ object ZfpStreamCodec {
   /** Expand a framed blob into per-sample packed payloads. Self-contained:
     * the type byte + zfp header carry everything needed. Accuracy blobs
     * auto-dispatch on the graft lossy marker (marked = graft layout,
-    * unmarked = standard libzfp layout — see [[Zfp.decompress]]).
-    * CAVEAT: segments written by a pre-marker graft build (sandbox
-    * rounds <= 5 only; no such deployment exists) carry the graft
-    * payload under a plain version byte and would misdecode through the
-    * standard path — re-extract those with [[Zfp.decompressLegacyLossy]]
-    * directly. */
+    * unmarked = standard libzfp layout — see [[Zfp.decompress]]). */
   def expand(framed: Array[Byte]): Array[Array[Byte]] = {
     val typeCode = framed(0)
     val blob = java.util.Arrays.copyOfRange(framed, 1, framed.length)

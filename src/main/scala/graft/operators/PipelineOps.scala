@@ -801,10 +801,10 @@ object DedupOps {
     val fs = AnnOps.indexFs(spark, dir)
     // LOUD legacy guard (REVIEW): the pre-round-12 layout kept
     // batch=N directly under the root. Silently returning None (or
-    // loading only a half-migrated subset — the guard fires even when
-    // a newer tree exists next to stragglers, REVIEW 2) would re-admit
-    // cross-batch duplicates — the exact failure this function's DFS
-    // note warns about. Fail with the migration named instead. (The
+    // loading only a subset — the guard fires even when a newer tree
+    // exists next to stragglers, REVIEW 2) would re-admit cross-batch
+    // duplicates — the exact failure this function's DFS note warns
+    // about. Fail with the rebuild named instead. (The
     // round-12 batches/-at-the-root layout fails loudly one layer
     // down, in [[AnnOps.currentGenOpt]].)
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -813,8 +813,7 @@ object DedupOps {
           s.getPath.getName.startsWith("batch=")))
       throw new IllegalStateException(
         s"loadMinhashIndex: $dir holds (legacy) flat batch=N dirs at " +
-          "the root; run AnnOps.migrateIndexToGenerations (after " +
-          s"moving ALL batch dirs under $dir/batches/) to migrate")
+          "the root; rebuild the index")
     AnnOps.currentGenOpt(spark, dir).flatMap { g =>
       // the manifest and the first committed generation are co-created,
       // so a committed index always declares itself — gate the family
@@ -2195,7 +2194,8 @@ object TextOps {
     * thousands of sequential Spark jobs — hours of pure launch
     * overhead. Batching divides the job count by the mean batch size
     * (Zipfian counts are mostly distinct, so early rounds batch near
-    * the cap; tools/BpeBatchProbe measures jobs << merges at 1000).
+    * the cap; SCALE_r09.json `bpe_jobs_probe` recorded the job counts;
+    * BpePropertySpec gates the batched == sequential equivalence).
     *
     * Why the batch rule is exact (rank order = cnt desc, pair asc):
     *  - The batch is a RANK-PREFIX of pairwise symbol-DISJOINT pairs;
@@ -2274,8 +2274,8 @@ object TextOps {
     // batching ALONE cannot deliver jobs << merges on natural text —
     // character-pair counts are dominated by a few hot symbols, so the
     // first interacting pair appears at rank 2-3 and the mean exact
-    // batch is ~1.1 (tools/BpeBatchProbe) — while the collected table
-    // for real corpora is tens of MB (1M words x ~30 B).
+    // batch is ~1.1 (SCALE_r09.json `bpe_jobs_probe`) — while the
+    // collected table for real corpora is tens of MB (1M words x ~30 B).
     // the estimate depends only on w lengths and row count, which no
     // merge changes (sp only SHRINKS), so it is computed ONCE, never
     // per round: a run that starts over budget stays distributed, one
@@ -3474,8 +3474,7 @@ object AnnOps {
     val p = hpath(s"$indexDir/_index.json")
     if (!fs.exists(p)) throw new IllegalStateException(
       s"$indexDir has no _index.json manifest: not a durable graft " +
-        "index, or a pre-round-13 legacy layout (run " +
-        "AnnOps.migrateIndexToGenerations once to migrate)")
+        "index, or a pre-round-13 legacy layout (rebuild the index)")
     val in = fs.open(p)
     val json = try new String(in.readAllBytes(),
       java.nio.charset.StandardCharsets.UTF_8) finally in.close()
@@ -3490,7 +3489,7 @@ object AnnOps {
     require(man.layoutVersion == IndexLayoutVersion,
       s"$indexDir/_index.json declares layout_version " +
         s"${man.layoutVersion}; this build reads $IndexLayoutVersion " +
-        "— migrate or rebuild the index")
+        "— rebuild the index")
     man
   }
 
@@ -3530,7 +3529,7 @@ object AnnOps {
       throw new IllegalStateException(
         s"$indexDir uses the legacy pre-generation layout (root-level " +
           "batches/ or its half-swapped crash debris, no _commits/); " +
-          "run AnnOps.migrateIndexToGenerations once to migrate")
+          "rebuild the index")
     } else None
   }
 
@@ -3607,8 +3606,8 @@ object AnnOps {
     * IntegerType) and applied to the raw column, so it lands in the
     * scan's PartitionFilters verbatim — the whole point of the
     * cell-partitioned layout: a serve touches nprobe/cells of the
-    * index's files, not 100% of them (PlanInvariantsSpec gates it,
-    * tools/IndexPruneProbe measures it). */
+    * index's files, not 100% of them (PlanInvariantsSpec gates it;
+    * SCALE_r12.json `index_prune` recorded files read per nprobe). */
   private[graft] def cellPrune(df: DataFrame, cells: Seq[Long])
       : DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -3763,14 +3762,13 @@ object AnnOps {
   def recoverIndex(s: SparkSession, indexDir: String): Unit = {
     val fs = indexFs(s, indexDir)
     // legacy pre-generation crash debris cannot be repaired here — the
-    // old two-rename layout needs its migration, not this recovery
+    // old two-rename layout needs a rebuild, not this recovery
     if (fs.exists(hpath(s"$indexDir/batches-old")) ||
         fs.exists(hpath(s"$indexDir/codes-old")) ||
         fs.exists(hpath(s"$indexDir/.compact-new")))
       throw new IllegalStateException(
         s"recoverIndex: $indexDir holds legacy pre-round-13 swap " +
-          "debris (batches-old/.compact-new); run " +
-          "AnnOps.migrateIndexToGenerations to migrate")
+          "debris (batches-old/.compact-new); rebuild the index")
     val lp = lockPath(indexDir)
     if (!fs.exists(lp)) return
     // repair from on-disk state, not the lock's content: with the lock
@@ -3789,76 +3787,6 @@ object AnnOps {
           fs.exists(hpath(s"$indexDir/_commits/$n")) }
         .foreach { case (p, _) => fs.delete(p, true) }
     fs.delete(lp, false)
-  }
-
-  /** One-time migration of a legacy pre-round-13 index (trees at the
-    * dir root, two-rename compaction) to the generation-pointer
-    * layout: repair any half-swap crash debris the old way, move the
-    * trees under `gens/gen=0/`, commit marker 0, and write the
-    * `_index.json` manifest. The manifest params are INFERRED here —
-    * the one place inference legitimately remains, because the legacy
-    * layout carried no declaration; minhash banding params are not
-    * recoverable from stored signatures (bands = |bkeys| but shingleK
-    * is gone), so that family must pass them. */
-  def migrateIndexToGenerations(s: SparkSession, indexDir: String,
-      minhashParams: Option[(Int, Int, Int)] = None): Unit = {
-    val fs = indexFs(s, indexDir)
-    require(!fs.exists(hpath(s"$indexDir/_commits")),
-      s"migrateIndexToGenerations: $indexDir is already on the " +
-        "generation layout")
-    // the legacy recovery, inlined: restore a renamed-out tree, drop
-    // post-swap leftovers and a half-built .compact-new staging
-    Seq("batches", "codes").foreach { tree =>
-      val live = hpath(s"$indexDir/$tree")
-      val old = hpath(s"$indexDir/$tree-old")
-      if (fs.exists(old)) {
-        if (!fs.exists(live)) require(fs.rename(old, live),
-          s"migrateIndexToGenerations: could not restore $old")
-        else fs.delete(old, true)
-      }
-    }
-    fs.delete(hpath(s"$indexDir/.compact-new"), true)
-    require(fs.exists(hpath(s"$indexDir/batches")),
-      s"migrateIndexToGenerations: $indexDir has no batches/ tree — " +
-        "nothing to migrate")
-    // infer + VALIDATE the manifest before moving anything (the
-    // delete-first lesson: a missing minhashParams must fail with the
-    // legacy layout intact, never half-migrated)
-    import s.implicits._
-    val rows = s.read.parquet(s"$indexDir/batches")
-    val (family, params): (String, Map[String, Long]) =
-      if (rows.columns.contains("doc_id")) {
-        val (sk, bands, rws) = minhashParams.getOrElse(
-          throw new IllegalArgumentException(
-            "migrateIndexToGenerations: a minhash index's (shingleK, " +
-              "bands, rows) are not recoverable from stored " +
-              "signatures; pass minhashParams"))
-        ("minhash", Map("shingleK" -> sk.toLong, "bands" -> bands.toLong,
-          "rows" -> rws.toLong))
-      } else {
-        val cent = s.read.parquet(s"$indexDir/centroids")
-        val cells = cent.count()
-        val dim = cent.select(size(col("cc"))).limit(1).as[Int]
-          .collect().headOption.getOrElse(0).toLong
-        if (fs.exists(hpath(s"$indexDir/codebooks"))) {
-          val books = s.read.parquet(s"$indexDir/codebooks")
-          val pqM = books.select(col("m")).distinct().count()
-          val pqKs = books.select(col("code")).distinct().count()
-          val dsub = books.agg(max(size(col("cmean")))).head()
-            .getInt(0).toLong
-          ("ivfpq", Map("dim" -> dim, "cells" -> cells, "pqM" -> pqM,
-            "pqKs" -> pqKs, "dsub" -> dsub))
-        } else ("semantic", Map("dim" -> dim, "cells" -> cells))
-      }
-    val root = genRoot(indexDir, 0L)
-    fs.mkdirs(hpath(root))
-    Seq("batches", "codes").foreach { tree =>
-      val src = hpath(s"$indexDir/$tree")
-      if (fs.exists(src)) require(fs.rename(src, hpath(s"$root/$tree")),
-        s"migrateIndexToGenerations: rename $tree failed")
-    }
-    writeIndexManifest(s, indexDir, family, params)
-    commitGen(s, indexDir, 0L)
   }
 
   /** COMPACT a durable index (any of the three durable families —
@@ -4498,7 +4426,7 @@ object AnnOps {
     // broadcast-budget gate uses the manifest's DECLARED shape —
     // written by the build, zero jobs — and falls back to the
     // two-pass spelling when the table is too big to collect (the
-    // sharded path) or a migrated manifest predates the params.
+    // sharded path) or the manifest does not declare the params.
     val declaredFits = for {
       dk <- man.params.get("cells"); dd <- man.params.get("dim")
     } yield dk * (dd * 8 + 64) <= maxCentroidBytes
@@ -4652,8 +4580,8 @@ object AnnOps {
     * candidate scan, the ADC code scan, and the exact re-rank scan all
     * carry a partition filter on the probed cell set — a serve reads
     * O(nprobe/cells) of the index's files, never the whole index
-    * (PlanInvariantsSpec gates the PartitionFilters,
-    * tools/IndexPruneProbe measures files read); every lookup
+    * (PlanInvariantsSpec gates the PartitionFilters; SCALE_r12.json
+    * `index_prune` recorded files read); every lookup
     * table (query cells, LUTs, codebook norms, query vectors)
     * broadcasts; the candidate table gets NO broadcast hint (the
     * boilerplate-cell argument on [[filteredTopKIvfPq]]); tombstoned
@@ -4713,7 +4641,7 @@ object AnnOps {
     // stored-index scan below prunes to those cells' partitions. At
     // nprobe << cells a serve reads nprobe/cells of the index's files
     // — O(probed cells), never O(index) (PlanInvariantsSpec gates the
-    // PartitionFilters; tools/IndexPruneProbe measures files read).
+    // PartitionFilters; SCALE_r12.json `index_prune` recorded files read).
     val probed = qside.select(col("cell").cast("long")).distinct()
       .as[Long].collect().toSeq.sorted
     val ts = loadTombstones(s, indexDir)

@@ -5,11 +5,11 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Physical-plan traversal + capture helpers shared by the plan gates
-  * (PlanInvariantsSpec) and the measurement tools (IndexPruneProbe) —
+  * (PlanInvariantsSpec) and the durable-index specs (PipelineOpsSpec) —
   * ONE spelling of the AQE-descending walk and the async
   * QueryExecutionListener capture, so a Spark wrapper change cannot
-  * make the gate and the measurement disagree (REVIEW: three copies
-  * drifted apart within one round). */
+  * make two specs disagree (REVIEW: three copies drifted apart within
+  * one round). */
 object PlanWalk {
 
   /** Every node of a finalized plan, descending through AQE wrappers

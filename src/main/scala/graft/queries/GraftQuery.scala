@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** One named query of the engine's public surface.
@@ -35,11 +34,6 @@ object GraftQuery {
     * chained decimal products stay under precision 38 without rescaling. */
   def decS(c: Column): Column = c.cast(DecimalType(8, 6))
 
-  /** sum(decimal(x)) cast back to double — deterministic across engines. */
-  def sumd(c: Column): Column = sum(dec(c)).cast("double")
-
   /** Oracle-SQL spelling of [[dec]]. */
   def sqlDec(e: String): String = s"CAST($e AS DECIMAL(18,6))"
-  def sqlDecS(e: String): String = s"CAST($e AS DECIMAL(8,6))"
-  def sqlSumd(e: String): String = s"CAST(SUM(${sqlDec(e)}) AS DOUBLE)"
 }

@@ -22,9 +22,8 @@ object JobProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val prefixes = if (args.length > 1) args.drop(1).toSeq else Seq("")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val localDir =
-      if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-spark-local"
-      else System.getProperty("java.io.tmpdir")
+    val localDir = graft.core.StreamStore.scratchBase()
+      .resolve("graft-spark-local").toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

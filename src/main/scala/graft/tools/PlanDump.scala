@@ -3,8 +3,10 @@ package graft.tools
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 
-/** Dump `explain("formatted")` for declared queries into files — the
-  * optimization round's evidence trail (plans/r17/<query>_<tag>.txt).
+/** Dump `explain("formatted")` for declared queries into
+  * `<outDir>/<query>_<tag>.txt`, one file per query — dump once with
+  * tag `before` and once with tag `after` to diff a change's physical
+  * plans. The dumps are regenerated on demand, not kept in the repo.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> [sfDir] [prefix...]
   */

@@ -305,30 +305,6 @@ class ZfpSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Zfp.decompress(inconsistent))
   }
 
-  test("legacy pre-marker graft lossy streams decode via the explicit " +
-      "opt-in") {
-    // A graft stream written before the LossyMarker existed is the SAME
-    // bytes as a marker-stripped modern stream — header-identical to a
-    // libzfp blob, so the default decode reads it as standard layout
-    // (garbage for these bytes); the caller who knows the provenance
-    // opts in and gets the graft decode, bit-identical to the marked one
-    val data = Array.tabulate(64)(i => (math.cos(i / 5.0) * 50).toFloat)
-    val marked = Zfp.compressFloatLossy(data, 8, 8, 0.5)
-    val legacy = marked.clone()
-    legacy(3) = (legacy(3) & 0x7f).toByte // pre-marker version byte
-    val Zfp.DecodedFloat(_, _, viaOptIn) =
-      Zfp.decompressLegacyLossy(legacy): @unchecked
-    val Zfp.DecodedFloat(_, _, viaMarked) =
-      Zfp.decompress(marked): @unchecked
-    assert(java.util.Arrays.equals(viaOptIn, viaMarked),
-      "legacy opt-in decode diverged from the marked decode")
-    // the opt-in does NOT weaken the marked-stream consistency check
-    val inconsistent = Zfp.compressInt16(sines(), nCh, nSamp).clone()
-    inconsistent(3) = (inconsistent(3) | 0x80).toByte
-    intercept[IllegalArgumentException](
-      Zfp.decompressLegacyLossy(inconsistent))
-  }
-
   test("std layout: double sine within tolerance and smaller than " +
       "lossless") {
     val data = sines().map(_.toDouble)

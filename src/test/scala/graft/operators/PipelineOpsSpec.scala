@@ -2635,8 +2635,8 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("legacy pre-generation layout: reads fail loudly with the " +
-      "migration named; migrateIndexToGenerations restores identical " +
-      "serves and declares the inferred manifest") {
+      "rebuild named; a rebuild over the same dir clears the legacy " +
+      "trees and restores identical serves") {
     val s = spark
     import s.implicits._
     val df = annRows(0 until 40).toDF("vid", "emb", "grp")
@@ -2661,13 +2661,15 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       rm(new java.io.File(s"$idx/$f"))
     }
     val e = intercept[IllegalStateException] { serve() }
-    assert(e.getMessage.contains("migrate"), e.getMessage)
-    AnnOps.migrateIndexToGenerations(s, idx)
-    assert(serve() == good, "migration drifted the serve")
-    val man = AnnOps.readIndexManifest(s, idx)
-    assert(man.family == "ivfpq" && man.params("pqM") == 4L &&
-      man.params("dsub") == 4L, s"inferred manifest wrong: $man")
-    // appends keep working post-migration
+    assert(e.getMessage.contains("rebuild"), e.getMessage)
+    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", idx, cells = 4,
+      iters = 2, pqM = 4, pqKs = 4, pqIters = 2, partitions = 4)
+    Seq("batches", "codes").foreach { tree =>
+      assert(!new java.io.File(s"$idx/$tree").exists(),
+        s"the rebuild left the legacy root-level $tree/ behind")
+    }
+    assert(serve() == good, "the rebuild drifted the serve")
+    // appends keep working after the rebuild
     AnnOps.appendIvfPqIndex(
       df.filter($"vid" < 4).select(($"vid" + 1000L).as("vid"), $"emb",
         $"grp"), "vid", "emb", "grp", idx, 1L, partitions = 4)
@@ -2950,9 +2952,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalStateException] {
       DedupOps.loadMinhashIndex(s, legacy)
     }
-    // the round-12 layout (batches/ at the root, no pointer) is loud
-    // too, and migrates — minhash banding is NOT inferable from stored
-    // signatures, so the migration demands it and declares it
+    // the round-12 layout (batches/ at the root, no pointer) is loud too
     val legacy12 = tmpDir("mh-legacy12")
     DedupOps.minhashIndex(oldDocs, "doc_id", "text", 3, 4, 2,
         partitions = 2)
@@ -2961,16 +2961,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalStateException] {
       DedupOps.loadMinhashIndex(s, legacy12)
     }
-    intercept[IllegalArgumentException] {
-      AnnOps.migrateIndexToGenerations(s, legacy12) // params required
-    }
-    AnnOps.migrateIndexToGenerations(s, legacy12,
-      minhashParams = Some((3, 4, 2)))
-    val migrated = DedupOps.loadMinhashIndex(s, legacy12)
-    assert(migrated.nonEmpty && migrated.get.count() == 4,
-      "minhash migration lost rows")
-    assert(AnnOps.readIndexManifest(s, legacy12).params ==
-      Map("shingleK" -> 3L, "bands" -> 4L, "rows" -> 2L))
   }
 
   test("minhash commit door spans the caller's probe window (ADVICE " +
