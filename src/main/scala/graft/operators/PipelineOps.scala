@@ -837,13 +837,14 @@ object DedupOps {
     * [[incrementalMinhashDedupDurable]] and direct seeding (the d17
     * pay-once shape: a corpus-sized seed whose internal pairs are
     * [[minhashNearDups]]'s job commits without a probe). First commit
-    * bootstraps the `_index.json` manifest and flips generation 0 live
-    * (atomic marker create — see [[AnnOps]]' layout banner); every
-    * later commit validates the DECLARED banding params, because
-    * probing stored signatures under a different (shingleK, bands,
-    * rows) is silent garbage — band keys only collide meaningfully
-    * under the banding that produced them. Maintenance-gated like
-    * every append path: loud failure, idempotent re-run.
+    * bootstraps the `_index.json` manifest; every later commit
+    * validates the DECLARED banding params, because probing stored
+    * signatures under a different (shingleK, bands, rows) is silent
+    * garbage — band keys only collide meaningfully under the banding
+    * that produced them. The write itself goes through
+    * [[AnnOps.commitBatch]] (maintenance gate, generation re-check,
+    * temp-then-publish, first-commit flip): loud failure, idempotent
+    * re-run, and a failed replay leaves the committed batch intact.
     *
     * `expectedGen`: the generation the CALLER's probe actually read
     * (`Some(generationOptAtProbe)`), so the commit-door generation
@@ -861,13 +862,12 @@ object DedupOps {
       batchId: Long, shingleK: Int, bands: Int, rows: Int,
       expectedGen: Option[Option[Long]] = None): Unit = {
     val s = sigs.sparkSession
-    AnnOps.requireNoMaintenance(s, indexDir, "commitMinhashIndexBatch")
-    val fs = AnnOps.indexFs(s, indexDir)
     val genAtEntry =
       expectedGen.getOrElse(AnnOps.currentGenOpt(s, indexDir))
     val declared = Map("shingleK" -> shingleK.toLong,
       "bands" -> bands.toLong, "rows" -> rows.toLong)
-    if (fs.exists(AnnOps.hpath(s"$indexDir/_index.json"))) {
+    if (AnnOps.indexFs(s, indexDir)
+        .exists(AnnOps.hpath(s"$indexDir/_index.json"))) {
       val man = AnnOps.requireFamily(s, indexDir,
         "commitMinhashIndexBatch", "minhash")
       require(declared.forall { case (k, v) =>
@@ -878,20 +878,11 @@ object DedupOps {
             s"$k=$v" }.mkString(", ")}) — stored signatures are only " +
           "comparable under the banding that produced them")
     } else AnnOps.writeIndexManifest(s, indexDir, "minhash", declared)
-    // commit gate: the appendIvfPqIndex discipline (see its note)
-    AnnOps.requireNoMaintenance(s, indexDir, "commitMinhashIndexBatch")
-    val gen = AnnOps.currentGenOpt(s, indexDir).getOrElse(0L)
-    require(genAtEntry.forall(_ == gen),
-      s"commitMinhashIndexBatch: a maintenance run committed " +
-        s"generation $gen after this batch staged against gen " +
-        s"${genAtEntry.get}; re-run the batch — the commit is " +
-        "idempotent")
-    sigs.select(col("doc_id"), col("shs"), col("bkeys"))
-      .write.mode("overwrite")
-      .parquet(s"${AnnOps.genRoot(indexDir, gen)}/batches/batch=$batchId")
-    if (genAtEntry.isEmpty &&
-        !fs.exists(AnnOps.hpath(s"$indexDir/_commits/$gen")))
-      AnnOps.commitGen(s, indexDir, gen)
+    AnnOps.commitBatch(s, indexDir, "commitMinhashIndexBatch", batchId,
+      genAtEntry, Seq("batches")) { case Seq(tmp) =>
+      sigs.select(col("doc_id"), col("shs"), col("bkeys"))
+        .write.parquet(tmp)
+    }
   }
 
   /** Durable incremental MinHash dedup — the restart-safe form of the
@@ -3398,6 +3389,21 @@ object AnnOps {
   //     tombstones/batch=<t>/
   //     .maintenance-lock            held by compactIndex/expireBatches
   //
+  // ONE commit protocol for every durable write. [[overwriteViaTemp]]
+  // is the only publish step: each target is written to its invisible
+  // dot-prefixed sibling `.<name>.tmp`, and only after every write
+  // succeeded is each target dropped and its temp renamed into place; a
+  // failed write deletes the temps and leaves every target as it was.
+  // [[commitBatch]] is the only door for a batch: maintenance gate,
+  // generation re-check against what the caller staged on, publish of
+  // `gens/gen=<g>/<tree>/batch=<b>` (ANN: codes first, then the rows
+  // that make the batch visible), then the first-commit flip of
+  // generation 0. The minhash and semantic commits and the ANN append
+  // and build go through the door; tombstones and the manifest go
+  // through the primitive. CommitProtocolSpec's source test keeps it so.
+  // Maintenance (maintainImpl) instead builds a whole invisible
+  // generation and flips the pointer under the lock.
+  //
   // Why a pointer, not an in-place swap (round-12's two-rename design):
   // a production SERVING index has uncoordinated readers, and any
   // rename of the live tree has a window in which a racing serve sees
@@ -3452,6 +3458,9 @@ object AnnOps {
           "or was hand-edited; rebuild the index"))
   }
 
+  /** Published through [[overwriteViaTemp]]: a crash mid-write leaves
+    * an invisible temp, never a truncated `_index.json` that every
+    * reader would fail to parse. */
   private[graft] def writeIndexManifest(s: SparkSession,
       indexDir: String, family: String,
       params: Map[String, Long]): Unit = {
@@ -3459,10 +3468,11 @@ object AnnOps {
       .map { case (k, v) => s""""$k":$v""" }.mkString(",")
     val json = s"""{"family":"$family",""" +
       s""""layout_version":$IndexLayoutVersion,"params":{$pj}}"""
-    val out = indexFs(s, indexDir)
-      .create(hpath(s"$indexDir/_index.json"), true)
-    out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    overwriteViaTemp(s, Seq(s"$indexDir/_index.json")) { case Seq(tmp) =>
+      val out = indexFs(s, indexDir).create(hpath(tmp), false)
+      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
   }
 
   /** Read + validate the manifest. Loud on a missing file (a legacy
@@ -3706,8 +3716,8 @@ object AnnOps {
     // batch=<id> untouched (a direct overwrite clears it before the
     // raise_error fires, resurrecting ids that were taken down)
     try overwriteViaTemp(ids.sparkSession,
-      s"$indexDir/tombstones/batch=$batchId")(
-      gated.write.mode("overwrite").parquet(_))
+      Seq(s"$indexDir/tombstones/batch=$batchId")) { case Seq(tmp) =>
+      gated.write.parquet(tmp) }
     catch { case e: Throwable =>
       val hit = Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
         .takeWhile(_ != null).take(12)
@@ -3720,27 +3730,65 @@ object AnnOps {
     }
   }
 
-  /** Overwrite-commit the tree at `dir`: `write(tmp)` lands it in the
+  /** THE publish primitive for every durable-index write. `write`
+    * gets one temp path per target in `targets`, each the target's
     * dot-prefixed sibling `.<name>.tmp` — invisible to every reader
     * (parquet listing skips dot names, and so does every `batch=*`
-    * listing) — then `dir` is dropped and the temp renamed into
-    * place. A failed write deletes the temp and leaves `dir` as it
-    * was. The only window where `dir` is absent is a REPLAY's own
-    * delete-then-rename, exactly what mode("overwrite") had. */
-  private def overwriteViaTemp(s: SparkSession, dir: String)(
-      write: String => Unit): Unit = {
-    val fs = indexFs(s, dir)
-    val cut = dir.lastIndexOf('/') + 1
-    val tmp = s"${dir.take(cut)}.${dir.drop(cut)}.tmp"
-    fs.delete(hpath(tmp), true) // a crashed run's debris
-    try write(tmp)
-    catch { case e: Throwable =>
-      fs.delete(hpath(tmp), true)
-      throw e
+    * listing). Only after `write` has returned are the targets
+    * published, in list order: drop the target, rename its temp into
+    * place. A failed write deletes every temp and leaves every target
+    * as it was, so a rejected or cancelled replay never changes what
+    * an earlier run committed. The only window where a target is
+    * absent is a REPLAY's own delete-then-rename. */
+  private def overwriteViaTemp(s: SparkSession, targets: Seq[String])(
+      write: Seq[String] => Unit): Unit = {
+    val fs = indexFs(s, targets.head)
+    val tmps = targets.map { t =>
+      val cut = t.lastIndexOf('/') + 1
+      s"${t.take(cut)}.${t.drop(cut)}.tmp"
     }
-    fs.delete(hpath(dir), true)
-    require(fs.rename(hpath(tmp), hpath(dir)),
-      s"overwriteViaTemp: rename $tmp -> $dir failed")
+    def dropTmps(): Unit = tmps.foreach(t => fs.delete(hpath(t), true))
+    dropTmps() // a crashed run's debris
+    try write(tmps)
+    catch { case e: Throwable => dropTmps(); throw e }
+    targets.zip(tmps).foreach { case (t, tmp) =>
+      fs.delete(hpath(t), true)
+      require(fs.rename(hpath(tmp), hpath(t)),
+        s"overwriteViaTemp: rename $tmp -> $t failed")
+    }
+  }
+
+  /** THE commit door for one batch of a durable index: every batch
+    * writer (minhash and semantic commits, the ANN append and build)
+    * goes through it. In order: the maintenance gate; the live
+    * generation `gen` is resolved and must still be `genAtEntry`, the
+    * generation the caller staged against (a maintenance run that
+    * committed in between would otherwise have the batch land in a
+    * superseded generation and vanish from every future serve); the
+    * trees `gens/gen=<gen>/<tree>/batch=<batchId>` are published
+    * through [[overwriteViaTemp]] in `trees` order; and a first-ever
+    * commit (`genAtEntry` empty) flips generation 0 live. Returns
+    * `gen`. A caller that staged against a generation needs one still
+    * committed (loud IllegalState otherwise, like [[currentGen]]).
+    * Idempotent: a replay rewrites its own batch dirs and nothing
+    * else, and a failed replay leaves them as they were. */
+  private[operators] def commitBatch(s: SparkSession, indexDir: String,
+      who: String, batchId: Long, genAtEntry: Option[Long],
+      trees: Seq[String])(write: Seq[String] => Unit): Long = {
+    requireNoMaintenance(s, indexDir, who)
+    val gen =
+      if (genAtEntry.isEmpty) currentGenOpt(s, indexDir).getOrElse(0L)
+      else currentGen(s, indexDir)
+    require(genAtEntry.forall(_ == gen),
+      s"$who: a maintenance run committed generation $gen after this " +
+        s"batch staged against gen ${genAtEntry.get}; re-run the batch " +
+        "— the commit is idempotent")
+    overwriteViaTemp(s,
+      trees.map(t => s"${genRoot(indexDir, gen)}/$t/batch=$batchId"))(write)
+    if (genAtEntry.isEmpty &&
+        !indexFs(s, indexDir).exists(hpath(s"$indexDir/_commits/$gen")))
+      commitGen(s, indexDir, gen)
+    gen
   }
 
   /** Repair a CRASHED maintenance run ([[compactIndex]] /
@@ -4172,23 +4220,21 @@ object AnnOps {
         s"pqIters=$pqIters")
     val s = df.sparkSession
     import s.implicits._
+    // failure hygiene: every pin the build holds is owned by this outer
+    // scope and released (newest first) if the build throws at ANY
+    // later point — a failed or cancelled build must leak no
+    // corpus-sized blocks (the pool-hygiene spec asserts zero
+    // surviving pins after a forced training timeout). Its one fork
+    // slot runs the seed collect.
+    Overlap(s, 1, "ivfpq-seed") { bv =>
     // stage and VALIDATE the input before touching the stored index:
     // a bad input frame must fail here, with the old generation still
     // serving (REVIEW: a delete-first cleanup turned an input typo
     // into a destroyed index)
-    val staged = scaledImpl(df, idCol, vecCol, Some(keyCol), partitions)
-    // failure hygiene: every pin/releasable the build holds is
-    // registered here and released (reverse order, best-effort) if the
-    // build throws at ANY later point — a failed or cancelled build
-    // must leak no corpus-sized blocks (the pool-hygiene spec asserts
-    // zero surviving pins after a forced training timeout)
-    val onFail =
-      scala.collection.mutable.ArrayBuffer[() => Unit](
-        () => DedupOps.releaseLocalCheckpoint(staged))
-    try {
+    val staged = bv.own(scaledImpl(df, idCol, vecCol, Some(keyCol),
+      partitions))
     val keys = staged.select(col("id"), col("key"))
-    val v = withRawNorm(staged)
-    onFail += (() => DedupOps.releaseLocalCheckpoint(v))
+    val v = bv.own(withRawNorm(staged))
     // whole-corpus dim check (REVIEW 2: the append path's discipline
     // — one sampled row would let a mixed-dim corpus commit silently
     // truncated codebooks/codes); null-vector rows carry no dim and
@@ -4197,20 +4243,18 @@ object AnnOps {
     // pinned v — overlap it with the dim aggregate (guide §2.6;
     // round-18 job-count cut: two sequential launch latencies became
     // one per build).
-    val (dim, seedAll) = Overlap(s, 1, "ivfpq-seed") { ov =>
-      val fSeed = ov.fork {
-        v.select(col("id")).orderBy(col("id"))
-          .limit(math.max(cells, pqKs)).as[Long].collect().sorted
-      }
-      val dimStats = v.filter(col("c").isNotNull)
-        .agg(min(size(col("c"))).as("lo"), max(size(col("c"))).as("hi"))
-        .head()
-      require(!dimStats.isNullAt(0) &&
-        dimStats.getInt(0) == dimStats.getInt(1),
-        s"buildIvfPqIndex: mixed vector dims [${dimStats.get(0)}, " +
-          s"${dimStats.get(1)}] — the index space needs one width")
-      (dimStats.getInt(0), fSeed.join())
+    val fSeed = bv.fork {
+      v.select(col("id")).orderBy(col("id"))
+        .limit(math.max(cells, pqKs)).as[Long].collect().sorted
     }
+    val dimStats = v.filter(col("c").isNotNull)
+      .agg(min(size(col("c"))).as("lo"), max(size(col("c"))).as("hi"))
+      .head()
+    require(!dimStats.isNullAt(0) &&
+      dimStats.getInt(0) == dimStats.getInt(1),
+      s"buildIvfPqIndex: mixed vector dims [${dimStats.get(0)}, " +
+        s"${dimStats.get(1)}] — the index space needs one width")
+    val (dim, seedAll) = (dimStats.getInt(0), fSeed.join())
     require(dim >= pqM, s"buildIvfPqIndex: dim=$dim < pqM=$pqM")
     // REBUILD SAFETY (ADVICE): a rebuild into a dir holding append
     // batches would leave batch=1..N rows that were assigned against
@@ -4234,7 +4278,7 @@ object AnnOps {
     // operator runs recoverIndex first, the mutator discipline. The
     // lock releases after the wipe: from then until this build's
     // marker commit, any maintenance/append fails loudly one step in
-    // (no manifest, no committed generation). Wipe order is
+    // (no committed generation). Wipe order is
     // reader-friendly: manifest first (readers gate on it with the
     // cleanest error), pointer second, trees last.
     locally {
@@ -4267,8 +4311,8 @@ object AnnOps {
     // overhead cut; the coarse chain joined the pool in round 17 — it
     // used to run serially before the pool for no data reason, adding
     // its whole job chain to the build's critical path). The centroid
-    // table lands on disk inside the same window (readers gate on the
-    // manifest, written last, so a crash state is unchanged). Each
+    // table lands on disk inside the same window (nothing is committed
+    // until the flip, so a crash state is unchanged). Each
     // chain trains byte-identically to the sequential spelling.
     // Width min(1 + pqM, parallelism) ([[trainWidth]]). The join bound
     // defaults to unbounded (a big corpus legitimately trains for
@@ -4305,48 +4349,42 @@ object AnnOps {
       val (km, pq) = (kmF.join(), futs.map(_.join()))
       (km._1, km._2, km._3, pq)
     }
-    onFail += (() => DedupOps.releaseLocalCheckpoint(members))
-    onFail += (() => kmeansRelease())
-    onFail += (() => perM.foreach { case (_, _, sub, codesP) =>
-      DedupOps.releaseLocalCheckpoint(codesP)
-      DedupOps.releaseLocalCheckpoint(sub)
-    })
-    // codes are per-batch subdirs like the rows, cell-partitioned like
-    // the rows (the coarse cell rides each code row so the ADC scan
-    // partition-prunes to the probed cells); [[appendIvfPqIndex]]
-    // commits later batches next to the build's. (The append path's
-    // codes-before-rows COMMIT ORDER does not bind here: both trees
-    // land in generation 0, which stays INVISIBLE until the marker
-    // commit below, so the three artifact writes are order-free and
-    // run CONCURRENTLY — guide §2.6 — with the flip still publishing
-    // all or nothing; the build is crash-clean for readers at every
-    // instant.)
-    val buildRoot = genRoot(indexDir, 0L)
-    Overlap(s, 3, "ivfpq-build-write") { ov =>
-      ov.fork {
-        perM.map(_._2).reduce(_ unionByName _)
-          .write.mode("overwrite").parquet(s"$indexDir/codebooks")
-      }
-      ov.fork {
-        perM.map(_._1).reduce(_ unionByName _)
-          .join(members, Seq("id"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$buildRoot/codes/batch=0")
-      }
-      ov.fork {
-        members.join(v, Seq("id")).join(keys, Seq("id"))
-          .select(col("id"), col("cell"), col("c"), col("nrm"), col("key"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$buildRoot/batches/batch=0")
-      }
-    }
-    // declare what was built (readers/mutators validate at the door),
-    // then flip the pointer: generation 0 becomes live atomically
+    bv.own(members)
+    bv.onFailure(kmeansRelease())
+    perM.foreach { case (_, _, sub, codesP) => bv.own(sub); bv.own(codesP) }
+    // declare what is being built (readers/mutators validate at the
+    // door; until the flip below they still find no committed
+    // generation and fail loudly), then commit generation 0 through the
+    // one commit door. Codes are per-batch subdirs like the rows,
+    // cell-partitioned like the rows (the coarse cell rides each code
+    // row so the ADC scan partition-prunes to the probed cells);
+    // [[appendIvfPqIndex]] commits later batches next to the build's.
+    // The three artifact writes run CONCURRENTLY (guide §2.6) inside
+    // the door's callback; the door publishes codes, then rows, then
+    // flips the pointer, so a crash leaves nothing a reader can see.
     writeIndexManifest(s, indexDir, "ivfpq", Map(
       "dim" -> dim.toLong, "cells" -> cells.toLong,
       "pqM" -> pqM.toLong, "pqKs" -> pqKs.toLong,
       "dsub" -> dsub.toLong))
-    commitGen(s, indexDir, 0L)
+    commitBatch(s, indexDir, "buildIvfPqIndex", 0L, None,
+        Seq("codes", "batches")) { case Seq(codesTmp, rowsTmp) =>
+      Overlap(s, 3, "ivfpq-build-write") { wv =>
+        wv.fork {
+          perM.map(_._2).reduce(_ unionByName _)
+            .write.mode("overwrite").parquet(s"$indexDir/codebooks")
+        }
+        wv.fork {
+          perM.map(_._1).reduce(_ unionByName _)
+            .join(members, Seq("id"))
+            .write.partitionBy("cell").parquet(codesTmp)
+        }
+        wv.fork {
+          members.join(v, Seq("id")).join(keys, Seq("id"))
+            .select(col("id"), col("cell"), col("c"), col("nrm"), col("key"))
+            .write.partitionBy("cell").parquet(rowsTmp)
+        }
+      }
+    }
     // everything is on disk: free the per-subspace stagings and code
     // tables too, not just the corpus staging — a session building
     // several indexes (the rebuild-when-drift-prices-it flow) would
@@ -4360,11 +4398,6 @@ object AnnOps {
     DedupOps.releaseLocalCheckpoint(members)
     DedupOps.releaseLocalCheckpoint(v)
     DedupOps.releaseLocalCheckpoint(staged)
-    } catch { case e: Throwable =>
-      onFail.reverseIterator.foreach { f =>
-        try f() catch { case _: Throwable => () }
-      }
-      throw e
     }
   }
 
@@ -4377,9 +4410,10 @@ object AnnOps {
     * encodes against the FROZEN codebooks (the SAME
     * [[l2AssignAgainst]] kernel the training loop ran, so append-time
     * codes cannot drift from build-time codes), and commits
-    * `batches/batch=<id>` + `codes/batch=<id>` idempotently
-    * (overwrite — a foreachBatch replay rewrites its own subdirs and
-    * nothing else). [[queryIvfPqIndex]] reads every committed batch;
+    * `batches/batch=<id>` + `codes/batch=<id>` idempotently through
+    * [[commitBatch]] (a foreachBatch replay rewrites its own subdirs
+    * and nothing else; a failed replay leaves them as they were).
+    * [[queryIvfPqIndex]] reads every committed batch;
     * [[semanticIndexDriftAudit]] prices the drift that frozen
     * artifacts accumulate — the number that tells a deployment when
     * to re-build deliberately. The construction-ceiling oracle (s22)
@@ -4494,19 +4528,18 @@ object AnnOps {
         s"appendIvfPqIndex: batch dims [${dimStats.get(0)}, " +
           s"${dimStats.get(1)}] != stored index dim=$storedDim " +
           s"($indexDir/centroids)")
-      // encode against the frozen codebooks. COMMIT ORDER STILL
-      // MATTERS (REVIEW): the rows table drives candidate generation
-      // AND the drift audit, so a crash must leave the batch INVISIBLE
-      // (codes without visible rows = no candidates, clean replay),
-      // never rows whose ids generate candidates that the inner codes
-      // join silently drops from the ADC scan even at the construction
-      // ceiling. Round-18 keeps that invariant while running the two
-      // tree writes CONCURRENTLY (guide §2.6 — max(write) instead of
-      // sum(write) wall per nightly batch): the rows land in a
-      // temp dir ([[overwriteViaTemp]]) and are renamed into place
-      // only after BOTH writes committed. A crash anywhere leaves at
-      // most committed codes plus an invisible temp dir; the
-      // idempotent replay overwrites both.
+      // encode against the frozen codebooks. COMMIT ORDER (REVIEW):
+      // the rows table drives candidate generation AND the drift
+      // audit, so rows are the visibility point — a crash must leave
+      // the batch INVISIBLE (codes without visible rows = no
+      // candidates, clean replay), never rows whose ids generate
+      // candidates that the inner codes join silently drops from the
+      // ADC scan even at the construction ceiling. The two tree writes
+      // run CONCURRENTLY into temps (guide §2.6 — max(write) instead
+      // of sum(write) wall per nightly batch); [[commitBatch]]
+      // publishes codes, then rows, only after BOTH writes succeeded.
+      // A crash leaves at most published codes plus invisible temps,
+      // and a failed replay leaves both committed trees untouched.
       // subspace shape DECLARED by the manifest, not re-inferred from
       // the widest stored codebook entry (the round-12 inference this
       // replaces): the build wrote what it quantized with
@@ -4520,34 +4553,17 @@ object AnnOps {
       // bit-identical to the per-subspace spelling (the bit-parity
       // spec re-pins it).
       val (codesAll, destroyCodes) = pqEncodeAll(v, books, pqM, dsub)
-      // COMMIT GATE: re-check immediately before the first durable
-      // write. A maintenance run that STARTED during this append's
-      // staging holds the lock (fail here, loudly); one that COMMITTED
-      // during it moved the pointer (the generation re-check catches
-      // it). Either way the batch is idempotent — re-run it; silently
-      // writing into a superseded generation would erase the batch
-      // from every future serve.
-      requireNoMaintenance(s, indexDir, "appendIvfPqIndex")
-      require(currentGen(s, indexDir) == gen,
-        s"appendIvfPqIndex: a compaction committed generation " +
-          s"${currentGen(s, indexDir)} during this append (staged " +
-          s"against gen $gen); re-run the batch — the append is " +
-          "idempotent")
-      val root = genRoot(indexDir, gen)
-      overwriteViaTemp(s, s"$root/batches/batch=$batchId") { rowsTmp =>
+      commitBatch(s, indexDir, "appendIvfPqIndex", batchId, Some(gen),
+          Seq("codes", "batches")) { case Seq(codesTmp, rowsTmp) =>
         Overlap(s, 2, "ivfpq-append-write") { wv =>
           // cell rides each code row (from the batch's own pinned
           // rows) so the serve's ADC scan partition-prunes
           wv.fork {
             codesAll
               .join(rows.select(col("id"), col("cell")), Seq("id"))
-              .write.mode("overwrite").partitionBy("cell")
-              .parquet(s"$root/codes/batch=$batchId")
+              .write.partitionBy("cell").parquet(codesTmp)
           }
-          wv.fork {
-            rows.write.mode("overwrite").partitionBy("cell")
-              .parquet(rowsTmp)
-          }
+          wv.fork(rows.write.partitionBy("cell").parquet(rowsTmp))
         }
       }
       destroyCodes() // encode executed inside the codes write above
@@ -6035,44 +6051,25 @@ object AnnOps {
           "dim" -> centStats.getInt(1).toLong,
           "cells" -> centStats.getLong(0)))
       }
-      // COMMIT GATE (the appendIvfPqIndex discipline): a maintenance run
-      // that started during staging holds the lock; one that committed
-      // moved the pointer — either way, fail loudly and re-run the
-      // idempotent batch instead of writing into a superseded generation
-      requireNoMaintenance(s, indexDir, "incrementalSemanticDedupDurable")
-      val gen = currentGenOpt(s, indexDir).getOrElse(0L)
-      require(genAtEntry.forall(_ == gen),
-        s"incrementalSemanticDedupDurable: a compaction committed " +
-          s"generation $gen during this batch (staged against gen " +
-          s"${genAtEntry.get}); re-run the batch — the commit is " +
-          "idempotent")
-      val root = genRoot(indexDir, gen)
-      // cell-partitioned commit (the ANN index's layout): the probe
-      // below — and every later batch's probe — reads only the cells a
-      // batch actually lands in, as a partition-pruned scan. When the
-      // probe will run, the write and its probed-cells collect are
-      // independent jobs over the pinned `own` — overlap them (guide
-      // §2.6; round-18); the write is awaited before the generation flip
-      // and before any stored-tree read, on every path.
-      val ownCellsPre: Seq[Long] = if (!probe) {
-        own.write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$root/batches/batch=$batchId")
-        Seq.empty
-      } else {
-        val fW = ov.fork {
-          own.write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$root/batches/batch=$batchId")
+      // cell-partitioned commit (the ANN index's layout) through the
+      // one commit door: the probe below — and every later batch's
+      // probe — reads only the cells a batch actually lands in, as a
+      // partition-pruned scan. When the probe will run, the write and
+      // its probed-cells collect are independent jobs over the pinned
+      // `own` — overlap them (guide §2.6; round-18); the write is
+      // awaited before the publish, the generation flip and any
+      // stored-tree read, on every path.
+      var ownCellsPre = Seq.empty[Long]
+      val gen = commitBatch(s, indexDir, "incrementalSemanticDedupDurable",
+          batchId, genAtEntry, Seq("batches")) { case Seq(tmp) =>
+        Overlap(s, 1, "semantic-dedup-write") { wv =>
+          val fW = wv.fork(own.write.partitionBy("cell").parquet(tmp))
+          if (probe) ownCellsPre = own.select(col("cell")).distinct()
+            .as[Long].collect().toSeq.sorted
+          fW.join()
         }
-        val cellsSeq = own.select(col("cell")).distinct()
-          .as[Long].collect().toSeq.sorted
-        fW.join()
-        cellsSeq
       }
-      // first-ever commit: flip generation 0 live (atomic marker create;
-      // idempotent on replay — the marker may already exist)
-      if (genAtEntry.isEmpty &&
-          !fs.exists(hpath(s"$indexDir/_commits/$gen")))
-        commitGen(s, indexDir, gen)
+      val root = genRoot(indexDir, gen)
       // per-call staging blocks die here either way: `own` (and the
       // returned pairs, below) are pinned, the commit is on disk
       def releaseStagings(): Unit = {

@@ -280,28 +280,6 @@ class ConnectorE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("compaction bin-packs small files and preserves data + partitions") {
-    val s = spark
-    import s.implicits._
-    val dir = newRoot().resolve("ds")
-    // 20 tiny files across 2 partitions
-    (0 until 20).foreach { i =>
-      Seq((i.toLong, i % 2)).toDF("v", "p")
-        .write.mode("append").partitionBy("p").parquet(dir.toString)
-    }
-    val before = spark.read.parquet(dir.toString)
-      .orderBy("v").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val (nBefore, nAfter) =
-      graft.ingest.Compaction.compactDir(spark, dir)
-    assert(nBefore >= 20 && nAfter < nBefore)
-    val after = spark.read.parquet(dir.toString)
-      .orderBy("v").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    assert(after == before)
-    // partition layout preserved (pruning still possible)
-    assert(Files.list(dir).anyMatch(p =>
-      p.getFileName.toString.startsWith("p=")))
-  }
-
   test("timestamp columns map to INT64 epoch nanos through the sink") {
     // RiverSchema.fromStructType maps TimestampType/TimestampNTZType to
     // Int64 (river has no timestamp type — the reference stores time as

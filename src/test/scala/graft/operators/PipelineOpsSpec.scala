@@ -2099,6 +2099,31 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tmpDir(tag: String) =
     java.nio.file.Files.createTempDirectory(s"graft-$tag-").toString
 
+  /** SHA-256 of every regular file under `dir`, keyed by relative path
+    * (empty when `dir` does not exist). */
+  private def sha256Tree(dir: String): Map[String, String] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) Map.empty
+    else {
+      val it = java.nio.file.Files.walk(root).iterator()
+      val b = Map.newBuilder[String, String]
+      while (it.hasNext) {
+        val p = it.next()
+        if (java.nio.file.Files.isRegularFile(p))
+          b += root.relativize(p).toString ->
+            java.security.MessageDigest.getInstance("SHA-256")
+              .digest(java.nio.file.Files.readAllBytes(p))
+              .map("%02x".format(_)).mkString
+      }
+      b.result()
+    }
+  }
+
+  /** True iff `e` or one of its causes carries `msg`. */
+  private def causedBy(e: Throwable, msg: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.getMessage != null && c.getMessage.contains(msg))
+
   private def parquetFiles(dir: String): Seq[String] =
     graft.plans.PlanWalk.parquetFiles(dir)
 
@@ -2792,19 +2817,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deleted = Set(1L, 5L, 9L)
     AnnOps.deleteFromIndex(deleted.toSeq.toDF("vid"), "vid", idx, 1L)
     val tsRoot = java.nio.file.Paths.get(s"$idx/tombstones")
-    def tree(): Map[String, String] = {
-      val it = java.nio.file.Files.walk(tsRoot).iterator()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) {
-        val p = it.next()
-        if (java.nio.file.Files.isRegularFile(p))
-          b += tsRoot.relativize(p).toString ->
-            java.security.MessageDigest.getInstance("SHA-256")
-              .digest(java.nio.file.Files.readAllBytes(p))
-              .map("%02x".format(_)).mkString
-      }
-      b.result()
-    }
+    def tree() = sha256Tree(tsRoot.toString)
     val committed = tree()
     intercept[IllegalArgumentException] {
       AnnOps.deleteFromIndex(Seq(Some(2L), None).toDF("vid"), "vid",
@@ -2823,6 +2836,97 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(served.nonEmpty &&
       !served.exists(r => deleted.contains(r.getLong(1))),
       "a deleted id resurfaced after the rejected replay")
+    DedupOps.releaseLocalCheckpoint(df)
+  }
+
+  test("commitMinhashIndexBatch: a replay rejected mid-write leaves the " +
+      "committed batch byte-for-byte intact and the loaded index " +
+      "unchanged") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{lit, raise_error, when}
+    val dir = tmpDir("mh-reject")
+    val sigs = DedupOps.minhashIndex(Seq(
+        (1L, "alpha beta gamma delta epsilon zeta eta"),
+        (2L, "unrelated words entirely here now forever more"))
+      .toDF("doc_id", "text"), "doc_id", "text", 3, 4, 2, partitions = 2)
+    DedupOps.commitMinhashIndexBatch(sigs, dir, 0L, 3, 4, 2)
+    val batchDir = s"${AnnOps.liveIndexRoot(s, dir)}/batches/batch=0"
+    def loaded() = DedupOps.loadMinhashIndex(s, dir).get.collect()
+      .map(_.toString).toSet
+    val committed = sha256Tree(batchDir)
+    val before = loaded()
+    val bad = sigs.withColumn("doc_id", when(col("doc_id") === 2L,
+      raise_error(lit("replay rejected"))).otherwise(col("doc_id")))
+    val e = intercept[Exception] {
+      DedupOps.commitMinhashIndexBatch(bad, dir, 0L, 3, 4, 2)
+    }
+    assert(causedBy(e, "replay rejected"), s"wrong failure: $e")
+    assert(committed.nonEmpty && sha256Tree(batchDir) == committed,
+      "a rejected replay changed the committed batch=0")
+    assert(loaded() == before && before.size == 2,
+      "a rejected replay changed the loaded index")
+  }
+
+  test("appendIvfPqIndex: a replay whose write jobs are cancelled leaves " +
+      "both committed batch trees byte-for-byte intact and the serve " +
+      "unchanged") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val df = annRows(0 until 48).toDF("vid", "emb", "grp").pin()
+    val idx = tmpDir("append-cancel")
+    AnnOps.buildIvfPqIndex(df.filter($"vid" < 40), "vid", "emb", "grp",
+      idx, cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
+      partitions = 4)
+    val batch = df.filter($"vid" >= 40)
+    AnnOps.appendIvfPqIndex(batch, "vid", "emb", "grp", idx, 1L,
+      partitions = 4)
+    val root = AnnOps.liveIndexRoot(s, idx)
+    def trees() = Seq("codes", "batches")
+      .map(t => t -> sha256Tree(s"$root/$t/batch=1")).toMap
+    def serve() = AnnOps.queryIvfPqIndex(df.filter($"vid" % 6 === 0),
+      "vid", "emb", "grp", idx, k = 3, nprobe = 4,
+      rerankDepth = Int.MaxValue, partitions = 4)
+      .collect().map(_.toString).toSet
+    val committed = trees()
+    val served = serve()
+    // the replay's write jobs are cancelled through their scope tag once
+    // BOTH file-write jobs (codes and rows) are running; the hold
+    // protocol keeps every write task from finishing before the cancel
+    // lands, so each tree's write is cut mid-flight
+    val writesStarted = new java.util.concurrent.atomic.AtomicInteger
+    val cancels = new java.util.concurrent.atomic.AtomicInteger
+    val canceller = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val tags = Option(js.properties).flatMap(p => Option(p.getProperty(
+            "spark.job.tags"))).toSeq.flatMap(_.split(","))
+          .filter(_.startsWith("graft-ivfpq-append-write-"))
+        val writesFiles = js.stageInfos.exists(_.rddInfos
+          .exists(_.scope.exists(_.name == "WriteFiles")))
+        if (writesFiles && tags.nonEmpty &&
+            writesStarted.incrementAndGet() == 2)
+          tags.foreach { t =>
+            cancels.incrementAndGet()
+            s.sparkContext.cancelJobsWithTag(t)
+          }
+      }
+    }
+    s.conf.set("spark.sql.sources.commitProtocolClass",
+      classOf[HoldUntilKilledCommitProtocol].getName)
+    s.sparkContext.addSparkListener(canceller)
+    try intercept[Exception] {
+      AnnOps.appendIvfPqIndex(batch, "vid", "emb", "grp", idx, 1L,
+        partitions = 4)
+    } finally {
+      s.sparkContext.removeSparkListener(canceller)
+      s.conf.unset("spark.sql.sources.commitProtocolClass")
+    }
+    assert(cancels.get > 0, "no append write job was cancelled (vacuous)")
+    assert(committed.values.forall(_.nonEmpty) && trees() == committed,
+      "a cancelled replay changed the committed codes/batches trees")
+    assert(served.nonEmpty && serve() == served,
+      "a cancelled replay changed the serve")
     DedupOps.releaseLocalCheckpoint(df)
   }
 
@@ -3199,5 +3303,26 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "surviving build's codes/codebooks drifted from the serial " +
         "reference — its jobs were disturbed")
     DedupOps.releaseLocalCheckpoint(df)
+  }
+}
+
+/** A parquet commit protocol whose write tasks do not commit until
+  * their task is killed (bounded at 60 s): a cancel aimed at the write
+  * job always lands mid-write. */
+class HoldUntilKilledCommitProtocol(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources
+      .SQLHadoopMapReduceCommitProtocol(jobId, path,
+        dynamicPartitionOverwrite) {
+  override def commitTask(
+      ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+      : org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage = {
+    val tc = org.apache.spark.TaskContext.get()
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!tc.isInterrupted() && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    if (tc.isInterrupted()) throw new org.apache.spark.TaskKilledException(
+      "write task killed")
+    super.commitTask(ctx)
   }
 }
