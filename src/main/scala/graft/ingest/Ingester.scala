@@ -4,9 +4,15 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import graft.core._
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Per-stream ingestion settings (reference ingester_settings.h:40-81):
   * regex stream matcher + column whitelist/blacklist (whitelist wins),
@@ -49,8 +55,9 @@ final case class IngestSettings(
   *    connector (I3),
   *  - regex column pruning happens as a `select`, so Catalyst prunes the
   *    packed-row decode too (P2),
-  *  - resume reads the persisted frontier back from the part files (I6:
-  *    crash-safe — a part is visible only after its atomic commit),
+  *  - resume reads the persisted frontier back from the part files'
+  *    parquet footers (I6: crash-safe — a part is visible only after its
+  *    atomic commit),
   *  - EOF triggers compaction of parts into one `data.parquet` (I5) and
   *    a COMPLETED sidecar (I9),
   *  - consumed whole segments older than `minAgeMsBeforeTrim` are
@@ -93,20 +100,51 @@ final class Ingester(
     * the whole stream into a duplicate part.
     */
   def persistedFrontier(stream: String): Long =
-    partFiles(stream).lastOption match {
-      case None =>
-        val merged = outDir(stream).resolve("data.parquet")
-        if (Files.exists(merged)) maxSampleIndex(merged.toString)
-        else -1L
-      case Some(last) => maxSampleIndex(last.getAbsolutePath)
-    }
+    footerStats(partFiles(stream).lastOption.map(_.toPath)
+      .getOrElse(outDir(stream).resolve("data.parquet")))._2
 
-  /** max(sample_index) of a parquet path; -1 for zero rows (max() is
-    * NULL there — a bare getLong would NPE on a truncated/empty file). */
-  private def maxSampleIndex(paths: String*): Long =
-    Option(spark.read.parquet(paths: _*)
-      .agg(max("sample_index")).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
+  // footer reads need no Spark session (a trim-only Ingester has none)
+  private lazy val hadoopConf = new Configuration()
+
+  /** (row count, max sample_index) of the parquet files under `roots`,
+    * read from their footers on the driver — no Spark job. Directories
+    * (a part, `data.parquet`, a `p_date=` tree) are walked, skipping
+    * `_`- and `.`-prefixed entries as Spark's file listing does
+    * (`_SUCCESS`, checksums, a crashed append's `_temporary`); a missing
+    * root holds nothing. The max is -1 for zero rows. A row group
+    * without `sample_index` min/max statistics fails loudly: read as
+    * "nothing persisted", it would re-ingest the whole stream into a
+    * duplicate part.
+    */
+  private def footerStats(roots: Path*): (Long, Long) = {
+    def files(f: File): Seq[File] =
+      if (f.isDirectory)
+        Option(f.listFiles()).getOrElse(Array.empty[File]).toSeq
+          .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+          .flatMap(files)
+      else if (f.isFile) Seq(f)
+      else Nil
+    roots.flatMap(r => files(r.toFile)).foldLeft((0L, -1L)) {
+      case ((rows, hi), f) =>
+        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toURI), hadoopConf))
+        try {
+          val maxes = rd.getFooter.getBlocks.asScala
+            .filter(_.getRowCount > 0).map { b =>
+              val st = b.getColumns.asScala
+                .find(_.getPath.toDotString == "sample_index")
+                .map(_.getStatistics).orNull
+              if (st == null || !st.hasNonNullValue)
+                throw new IllegalStateException(s"$f has no sample_index " +
+                  "min/max statistics: the persisted frontier cannot be " +
+                  "read from its footer (written with " +
+                  "parquet.column.statistics.enabled=false?)")
+              st.genericGetMax.asInstanceOf[java.lang.Long].longValue
+            }
+          (rows + rd.getRecordCount, maxes.foldLeft(hi)(math.max))
+        } finally rd.close()
+    }
+  }
 
   /** Date-partitioned variant of [[ingestOnce]]: appends into a
     * partitioned parquet dataset (no per-sweep part files, no EOF
@@ -120,9 +158,7 @@ final class Ingester(
     guardIncarnation(stream, meta)
     writeSidecar(stream, meta, "IN_PROGRESS")
     val dataDir = outDir(stream).resolve("data_parts")
-    val from =
-      if (!Files.exists(dataDir)) -1L
-      else maxSampleIndex(dataDir.toString)
+    val (before, from) = footerStats(dataDir)
 
     val keepUserCols = meta.schema.fields.map(_.name).filter(settings.keepColumn)
     val cols = Seq("sample_index", "key", "timestamp_ms") ++ keepUserCols
@@ -146,18 +182,17 @@ final class Ingester(
 
     parquetWriter(df).mode("append").partitionBy("p_date")
       .parquet(dataDir.toString)
-    val total = spark.read.parquet(dataDir.toString).count()
+    val (total, frontier) = footerStats(dataDir)
 
-    maybeTrim(stream, total - 1)
+    maybeTrim(stream, frontier)
     finalizeIfStale(stream)
-    // same live-writer completion gate as [[ingestOnce]] (gapless
-    // 0-based sample_index: the persisted frontier IS total - 1)
-    if (eofLastIndex(stream).exists(_ <= total - 1)) {
+    // same live-writer completion gate as [[ingestOnce]]
+    if (eofLastIndex(stream).exists(_ <= frontier)) {
       writeSidecar(stream, meta, "COMPLETED")
       store.deleteStream(stream)
       evictSegmentCache(stream)
     }
-    total - (from + 1)
+    total - before
   }
 
   /** Ingest all currently-available samples of one stream; returns the
@@ -179,18 +214,19 @@ final class Ingester(
       .filter(col("sample_index") > from) // pushed down → segment pruning
       .select(cols.map(col): _*)
 
-    // single pass: write to a temp part, then count from the parquet
-    // FOOTERS (metadata-only job) — a pre-count would scan the whole
-    // stream a second time
+    // one Spark job: write to a temp part, then read its row count and
+    // frontier from the part's footer on the driver
     val next = partFiles(stream).size
     val target = outDir(stream).resolve(f"data_$next%010d.parquet")
     val tmp = outDir(stream).resolve(f".tmp_data_$next%010d.parquet")
     // one part per sweep, ordered by sample_index (the stream IS
     // ordered; a single stream's row groups stay sequential like the
-    // reference's — cross-stream parallelism is the scale axis)
-    parquetWriter(df.orderBy("sample_index").coalesce(1))
+    // reference's — cross-stream parallelism is the scale axis). The
+    // sort runs inside the one coalesced task: a global orderBy would
+    // add a range-sampling re-scan of the stream and a shuffle
+    parquetWriter(df.coalesce(1).sortWithinPartitions("sample_index"))
       .mode("overwrite").parquet(tmp.toString)
-    val n = spark.read.parquet(tmp.toString).count()
+    val (n, written) = footerStats(tmp)
     if (n > 0) {
       // atomic publish (reference write-temp-then-rename,
       // ingester.cpp:808-829); refuses overwrite like the reference
@@ -200,7 +236,7 @@ final class Ingester(
       org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
     }
 
-    val frontier = persistedFrontier(stream)
+    val frontier = if (n > 0) written else from
     maybeTrim(stream, frontier)
     finalizeIfStale(stream)
 
@@ -208,7 +244,7 @@ final class Ingester(
     // scan above snapshots the stream, so rows (+ EOF) appended since
     // belong to the NEXT sweep, not to this completion
     if (eofLastIndex(stream).exists(_ <= frontier)) {
-      compact(stream)
+      compact(stream, df.schema)
       writeSidecar(stream, meta, "COMPLETED")
       store.deleteStream(stream) // reference deletes Redis metadata on EOF
       // a later stream REUSING the name restarts sample_index at 0: its
@@ -343,8 +379,10 @@ final class Ingester(
 
   /** Merge all parts into a single `data.parquet` (reference
     * combine_all_files, ingester.cpp:555-647) and drop the parts.
+    * `schema` is the sweep's own: the parts were written from it, and
+    * declaring it spares a schema-inference job.
     */
-  private def compact(stream: String): Unit = {
+  private def compact(stream: String, schema: StructType): Unit = {
     val parts = partFiles(stream)
     val merged = outDir(stream).resolve("data.parquet")
     if (parts.nonEmpty && Files.exists(merged)) {
@@ -354,9 +392,9 @@ final class Ingester(
       // of every part — recovery is dropping the parts, never re-merging
       // (the old refuse-to-overwrite here wedged the stream forever:
       // every rerun errored before reaching the COMPLETED sidecar).
-      // Guard the superset claim with footer-count metadata reads.
-      val mergedMax = maxSampleIndex(merged.toString)
-      val partsMax = maxSampleIndex(parts.map(_.getAbsolutePath): _*)
+      // Guard the superset claim with footer reads.
+      val mergedMax = footerStats(merged)._2
+      val partsMax = footerStats(parts.map(_.toPath): _*)._2
       require(mergedMax >= partsMax,
         s"compaction recovery: $merged frontier $mergedMax < parts " +
           s"frontier $partsMax — merged file is not a superset, refusing " +
@@ -365,8 +403,9 @@ final class Ingester(
         org.apache.commons.io.FileUtils.deleteDirectory(f))
     } else if (parts.nonEmpty) {
       val tmp = outDir(stream).resolve(".tmp_data.parquet")
-      parquetWriter(spark.read.parquet(parts.map(_.getAbsolutePath): _*)
-        .orderBy("sample_index").coalesce(1))
+      parquetWriter(spark.read.schema(schema)
+        .parquet(parts.map(_.getAbsolutePath): _*)
+        .coalesce(1).sortWithinPartitions("sample_index"))
         .mode("overwrite").parquet(tmp.toString)
       Files.move(tmp, merged, StandardCopyOption.ATOMIC_MOVE)
       parts.foreach(f =>
