@@ -3,15 +3,22 @@ package graft.ingest
 import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import graft.connector.{RiverScanBuilder, RiverTable}
 import graft.core._
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.OutputWriter
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.GreaterThan
 import org.apache.spark.sql.types.StructType
 
 /** Per-stream ingestion settings (reference ingester_settings.h:40-81):
@@ -53,20 +60,25 @@ final case class IngestSettings(
   *
   *  - derived columns `sample_index`/`key`/`timestamp_ms` come from the
   *    connector (I3),
-  *  - regex column pruning happens as a `select`, so Catalyst prunes the
-  *    packed-row decode too (P2),
+  *  - regex column pruning is pushed into the connector's reader, so
+  *    pruned fields are skipped in the packed-row decode (P2),
+  *  - each part is written in this process, like the reference's
+  *    (`ingester.cpp:58-94`): the connector's own split reader feeds
+  *    Spark's parquet writer on the driver, so a steady-state or idle
+  *    sweep launches no Spark job,
   *  - resume reads the persisted frontier back from the part files'
   *    parquet footers (I6: crash-safe — a part is visible only after its
   *    atomic commit),
-  *  - EOF triggers compaction of parts into one `data.parquet` (I5) and
-  *    a COMPLETED sidecar (I9),
+  *  - EOF triggers compaction of parts into one `data.parquet` (I5, the
+  *    one Spark job of a stream's life) and a COMPLETED sidecar (I9),
   *  - consumed whole segments older than `minAgeMsBeforeTrim` are
   *    deleted (delete-behind retention, I7).
   *
   * Each call ingests everything currently available (the daemon loop of
   * the reference maps to scheduling `ingestOnce` per sweep; Structured
   * Streaming with the river micro-batch source is the continuous
-  * deployment shape).
+  * deployment shape). The driver must see both the store and `outRoot`
+  * as local paths.
   */
 final class Ingester(
     spark: SparkSession,
@@ -195,6 +207,50 @@ final class Ingester(
     total - before
   }
 
+  /** Write the rows of `stream` past `from` as one parquet file under
+    * `tmp`, on the driver, with no Spark job. The connector plans the
+    * splits (the pushed bound prunes whole segments) and its own reader
+    * decodes them one split at a time in plan order, which is
+    * sample_index order: segments come in order and frames in file
+    * order. Spark's parquet writer keeps the codec, the type mapping and
+    * the row-group size (`parquet.block.size`) of a Spark write. The
+    * writer opens on the first row, so a sweep with nothing new leaves
+    * no file behind.
+    */
+  private def writePart(stream: String, rs: RiverSchema,
+      schema: StructType, from: Long, tmp: Path): Unit = {
+    val scan = new RiverScanBuilder(storeRoot.toString, stream, rs)
+    scan.pruneColumns(schema)
+    scan.pushFilters(Array(GreaterThan("sample_index", from)))
+    val batch = scan.build().toBatch
+    val readers = batch.createReaderFactory()
+    def open(): OutputWriter = {
+      val opts = settings.bytesPerRowGroup
+        .map(b => "parquet.block.size" -> b.toString).toMap
+      val job = Job.getInstance(
+        spark.sessionState.newHadoopConfWithOptions(opts))
+      val factory =
+        new ParquetFileFormat().prepareWrite(spark, job, opts, schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID())
+      val name = s"part-00000-${UUID.randomUUID}-c000" +
+        factory.getFileExtension(ctx)
+      factory.newInstance(tmp.resolve(name).toUri.toString, schema, ctx)
+    }
+    var w: OutputWriter = null
+    try batch.planInputPartitions().foreach { p =>
+      val r = readers.createReader(p)
+      try while (r.next()) {
+        // the pushed bound only prunes whole segments
+        val row = r.get()
+        if (row.getLong(0) > from) {
+          if (w == null) w = open()
+          w.write(row)
+        }
+      } finally r.close()
+    } finally if (w != null) w.close()
+  }
+
   /** Ingest all currently-available samples of one stream; returns the
     * number of rows persisted this sweep.
     */
@@ -204,36 +260,21 @@ final class Ingester(
     writeSidecar(stream, meta, "IN_PROGRESS")
     val from = persistedFrontier(stream)
 
-    val keepUserCols = meta.schema.fields.map(_.name).filter(settings.keepColumn)
-    val cols = Seq("sample_index", "key", "timestamp_ms") ++ keepUserCols
+    val schema = StructType(RiverTable.DerivedFields ++
+      meta.schema.toStructType.fields.filter(f => settings.keepColumn(f.name)))
 
-    val df = spark.read.format("river")
-      .option("root", storeRoot.toString)
-      .option("stream", stream)
-      .load()
-      .filter(col("sample_index") > from) // pushed down → segment pruning
-      .select(cols.map(col): _*)
-
-    // one Spark job: write to a temp part, then read its row count and
-    // frontier from the part's footer on the driver
     val next = partFiles(stream).size
     val target = outDir(stream).resolve(f"data_$next%010d.parquet")
     val tmp = outDir(stream).resolve(f".tmp_data_$next%010d.parquet")
-    // one part per sweep, ordered by sample_index (the stream IS
-    // ordered; a single stream's row groups stay sequential like the
-    // reference's — cross-stream parallelism is the scale axis). The
-    // sort runs inside the one coalesced task: a global orderBy would
-    // add a range-sampling re-scan of the stream and a shuffle
-    parquetWriter(df.coalesce(1).sortWithinPartitions("sample_index"))
-      .mode("overwrite").parquet(tmp.toString)
+    // a crashed sweep may have left this temp behind; nothing publishes it
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    writePart(stream, meta.schema, schema, from, tmp)
     val (n, written) = footerStats(tmp)
     if (n > 0) {
       // atomic publish (reference write-temp-then-rename,
       // ingester.cpp:808-829); refuses overwrite like the reference
       require(!Files.exists(target), s"refusing to overwrite $target")
       Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
     }
 
     val frontier = if (n > 0) written else from
@@ -244,7 +285,7 @@ final class Ingester(
     // scan above snapshots the stream, so rows (+ EOF) appended since
     // belong to the NEXT sweep, not to this completion
     if (eofLastIndex(stream).exists(_ <= frontier)) {
-      compact(stream, df.schema)
+      compact(stream, schema)
       writeSidecar(stream, meta, "COMPLETED")
       store.deleteStream(stream) // reference deletes Redis metadata on EOF
       // a later stream REUSING the name restarts sample_index at 0: its
@@ -445,11 +486,12 @@ final class Ingester(
     *
     * `parallelism` > 1 ingests streams concurrently from a fixed pool
     * (the reference's 4-thread pool, ingester.cpp:54-55) — each stream's
-    * Spark jobs are independent, so cross-stream parallelism is the
-    * orchestrator's scale axis (per-stream order stays sequential).
-    * A failing stream stops the sweep: queued streams never start, the
-    * running ones' jobs are cancelled, and the call rethrows only once
-    * every stream has stopped (each ingestOnce is replay-safe).
+    * part write runs on its own pool thread, so cross-stream parallelism
+    * is the orchestrator's scale axis (per-stream order stays
+    * sequential). A failing stream stops the sweep: queued streams never
+    * start, running compactions' jobs are cancelled, and the call
+    * rethrows only once every stream has stopped (each ingestOnce is
+    * replay-safe).
     */
   def sweep(parallelism: Int = 1): Map[String, Long] = {
     val streams = store.listStreams().filter(_.matches(settings.streamPattern))

@@ -15,6 +15,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *  - `GET /api/streams/{s}`                — one stream's metadata
   *  - `GET /api/streams/{s}/data.parquet`   — the compacted parquet,
   *    streamed in 16 MB chunks (reference chunk size, :89-147)
+  *  - `GET /api/stats`                      — the running daemon's
+  *    stats JSON ([[IngesterDaemon.statsJson]]), when `stats` is given
   *
   * The data endpoint additionally speaks single-range HTTP Range
   * requests (`Accept-Ranges: bytes`, 206/`Content-Range`, 416 on an
@@ -31,12 +33,17 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * JDK-built-in HttpServer: the façade is deliberately outside Spark's
   * scope (SURVEY §2 H1) — it serves whatever the ingester wrote.
   */
-final class IngesterHttpServer(outRoot: Path, port: Int = 7487) {
+final class IngesterHttpServer(outRoot: Path, port: Int = 7487,
+    stats: Option[() => String] = None) {
 
   private val ChunkBytes = 16 * 1024 * 1024
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/api/streams", (ex: HttpExchange) => handle(ex))
+  stats.foreach(json => server.createContext("/api/stats",
+    (ex: HttpExchange) =>
+      try respond(ex, 200, "application/json", json())
+      finally ex.close()))
 
   /** Bound port (use port=0 for ephemeral in tests). */
   def boundPort: Int = server.getAddress.getPort

@@ -161,6 +161,18 @@ final class IngesterDaemon(
       xs(math.min(xs.length - 1, (xs.length * 95) / 100)), xs.last)
   }
 
+  /** The daemon's stats as one JSON object: sweep count, ingestOnce
+    * wall percentiles over the retained window, JVM heap. `--stats-ms`
+    * prints it to stderr and `GET /api/stats` serves it. */
+  def statsJson: String = {
+    val (n, p50, p95, max) = ingestStats
+    val rt = Runtime.getRuntime
+    s"""{"sweeps":$sweeps,"ingests":$n,"ingest_ms_p50":$p50,""" +
+      s""""ingest_ms_p95":$p95,"ingest_ms_max":$max,""" +
+      s""""heap_used_mb":${(rt.totalMemory - rt.freeMemory) / 1048576},""" +
+      s""""heap_total_mb":${rt.totalMemory / 1048576}}"""
+  }
+
   /** One enqueue pass: dispatch every matched, not-in-progress stream
     * to the pool. Returns the streams dispatched this pass. */
   def sweepOnce(): Seq[String] = {
@@ -276,35 +288,27 @@ object IngesterMain {
 
     val outPath = Paths.get(out)
     Files.createDirectories(outPath)
+    val daemon = new IngesterDaemon(spark, Paths.get(store), outPath,
+      entries, parallelism, sweepMs)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => daemon.stop()))
+
     val server =
       if (httpPort > 0) {
-        val s = new IngesterHttpServer(outPath, httpPort)
+        val s = new IngesterHttpServer(outPath, httpPort,
+          Some(() => daemon.statsJson))
         s.start()
         System.err.println(
           s"[graft-ingester] HTTP server on port ${s.boundPort}")
         Some(s)
       } else None
 
-    val daemon = new IngesterDaemon(spark, Paths.get(store), outPath,
-      entries, parallelism, sweepMs)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => daemon.stop()))
-
     if (statsMs > 0) {
-      // one stderr JSON line per interval: sweep count, ingestOnce wall
-      // percentiles, JVM heap — the observability line a soak or a
-      // deploy dashboard tails
+      // one stderr JSON line per interval — the observability line a
+      // soak or a deploy dashboard tails
       val t = new Thread(() => {
-        val rt = Runtime.getRuntime
         while (true) {
           Thread.sleep(statsMs)
-          val (n, p50, p95, max) = daemon.ingestStats
-          System.err.println(
-            s"""{"graft_stats":{"sweeps":${daemon.sweepCount},""" +
-              s""""ingests":$n,"ingest_ms_p50":$p50,""" +
-              s""""ingest_ms_p95":$p95,"ingest_ms_max":$max,""" +
-              s""""heap_used_mb":${
-                (rt.totalMemory - rt.freeMemory) / 1048576},""" +
-              s""""heap_total_mb":${rt.totalMemory / 1048576}}}""")
+          System.err.println(s"""{"graft_stats":${daemon.statsJson}}""")
         }
       }, "graft-ingester-stats")
       t.setDaemon(true); t.start()

@@ -3564,7 +3564,28 @@ object AnnOps {
       g: Long): Unit = {
     val fs = indexFs(s, indexDir)
     fs.mkdirs(hpath(s"$indexDir/_commits"))
-    fs.create(hpath(s"$indexDir/_commits/$g"), false).close()
+    createExclusive(fs, hpath(s"$indexDir/_commits/$g"))
+  }
+
+  /** Create `path` holding `content`, failing with an IOException if it
+    * already exists — atomically, so of any number of racing creators
+    * exactly one wins. Hadoop's local `create(path, false)` checks and
+    * then creates (no O_EXCL), so `file:` paths are opened with
+    * `CREATE_NEW`, which is `Files.createFile`'s exclusive open; other
+    * schemes keep `create(false)`, which their namenode makes atomic. */
+  private def createExclusive(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path,
+      content: Array[Byte] = Array.emptyByteArray): Unit = {
+    val q = fs.makeQualified(path)
+    if (q.toUri.getScheme == "file") {
+      val p = java.nio.file.Paths.get(q.toUri)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, content,
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+    } else {
+      val out = fs.create(q, false)
+      try out.write(content) finally out.close()
+    }
   }
 
   private def lockPath(indexDir: String) =
@@ -3579,18 +3600,16 @@ object AnnOps {
     * this lock: a pre-lock resolution is a TOCTOU where two racing
     * compactions both target gen g+1 and the loser deletes the
     * winner's COMMITTED tree as debris (REVIEW). */
-  private def acquireMaintenanceLock(s: SparkSession, indexDir: String,
-      what: String): Unit = {
-    val out = try indexFs(s, indexDir).create(lockPath(indexDir), false)
+  private[operators] def acquireMaintenanceLock(s: SparkSession,
+      indexDir: String, what: String): Unit =
+    try createExclusive(indexFs(s, indexDir), lockPath(indexDir),
+      what.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch {
       case e: java.io.IOException => throw new IllegalStateException(
         s"$indexDir: .maintenance-lock is held — another maintenance " +
           "run is active, or a previous one crashed; run " +
           "AnnOps.recoverIndex to repair a crashed run", e)
     }
-    out.write(what.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-  }
 
   /** Append-path gate: a batch must not commit while maintenance owns
     * the tree set (a compaction snapshotting the batch listing would

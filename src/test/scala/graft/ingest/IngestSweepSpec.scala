@@ -11,13 +11,14 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The fixed cost of one ingest sweep: a steady-state `ingestOnce` is
-  * one Spark job (the part write) and the EOF sweep two (part write plus
-  * compaction). The frontier and row counts come from parquet footers on
-  * the driver, and each part is ordered by a sort inside its one write
-  * task, so these specs also pin what that must keep: file row order
-  * across a multi-split scan, and a loud failure when a footer cannot
-  * say where the persisted data ends.
+/** The fixed cost of one ingest sweep: a steady-state or idle
+  * `ingestOnce` launches no Spark job (the part is written on the
+  * driver) and the EOF sweep one (the compaction). The frontier and row
+  * counts come from parquet footers on the driver, and each part keeps
+  * the order the connector's splits are read in, so these specs also
+  * pin what that must keep: file row order across a multi-split scan,
+  * and a loud failure when a footer cannot say where the persisted data
+  * ends.
   */
 class IngestSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -82,8 +83,8 @@ class IngestSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.select("sample_index").collect().map(_.getLong(0)).toSeq
   }
 
-  test("a steady-state sweep of a live stream is one Spark job and the " +
-      "EOF sweep two") {
+  test("a steady-state or idle sweep of a live stream launches no Spark " +
+      "job and the EOF sweep one") {
     val (store, out, ing) = fixture()
     val w = store.createStream("s", schema)
     w.write(rows(0, 100))
@@ -91,14 +92,16 @@ class IngestSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
     w.write(rows(100, 200))
     val (n, steady) = jobsOf(ing.ingestOnce("s"))
     assert(n == 100)
-    assert(steady == 1, s"steady-state sweep started $steady Spark jobs")
+    assert(steady == 0, s"steady-state sweep started $steady Spark jobs")
     val (idle, idleJobs) = jobsOf(ing.ingestOnce("s")) // nothing new
     assert(idle == 0)
-    assert(idleJobs == 1, s"idle sweep started $idleJobs Spark jobs")
+    assert(idleJobs == 0, s"idle sweep started $idleJobs Spark jobs")
+    val temps = out.resolve("s").toFile.list().filter(_.startsWith(".tmp_data_"))
+    assert(temps.isEmpty, s"idle sweep left ${temps.mkString(", ")}")
     w.write(rows(200, 300)); w.stop()
     val (last, eofJobs) = jobsOf(ing.ingestOnce("s"))
     assert(last == 100)
-    assert(eofJobs == 2, s"EOF sweep started $eofJobs Spark jobs")
+    assert(eofJobs == 1, s"EOF sweep started $eofJobs Spark jobs")
     assert(!store.streamExists("s"), "stream not deleted after EOF")
     assert(fileOrder(out.resolve("s").resolve("data.parquet")) ==
       (0L until 300L))

@@ -189,4 +189,54 @@ class IngesterDaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!loop.isAlive, "daemon loop did not stop")
     }
   }
+
+  test("GET /api/stats serves the running daemon's stats JSON, the same " +
+      "object --stats-ms prints") {
+    val storeRoot = Files.createTempDirectory("graft-daemon-store-")
+    val outRoot = Files.createTempDirectory("graft-daemon-out-")
+    val store = new StreamStore(storeRoot)
+    val daemon = new IngesterDaemon(spark, storeRoot, outRoot,
+      parallelism = 2, sweepMs = 50L)
+    val loop = new Thread(() => daemon.run(), "daemon-loop")
+    loop.start()
+    val srv = new IngesterHttpServer(outRoot, port = 0,
+      Some(() => daemon.statsJson))
+    srv.start()
+    val client = HttpClient.newHttpClient()
+    def stats() = {
+      val r = client.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${srv.boundPort}/api/stats")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      assert(r.headers().firstValue("Content-Type").get == "application/json")
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(r.body())
+    }
+    try {
+      val w = store.createStream("s", schema)
+      w.write((0 until 100).map(i => Seq[Any](i.toDouble, i.toLong)))
+      w.stop()
+      await("stream completed")(!store.streamExists("s"))
+      await("ingests reported")(stats().get("ingests").asLong >= 1)
+      val j = stats()
+      val keys = Seq("sweeps", "ingests", "ingest_ms_p50", "ingest_ms_p95",
+        "ingest_ms_max", "heap_used_mb", "heap_total_mb")
+      keys.foreach(k => assert(j.has(k) && j.get(k).isNumber, s"$k in $j"))
+      assert(j.size == keys.size, s"unexpected keys in $j")
+      assert(j.get("sweeps").asLong >= 1)
+      assert(j.get("ingest_ms_p50").asLong <= j.get("ingest_ms_p95").asLong)
+      assert(j.get("ingest_ms_p95").asLong <= j.get("ingest_ms_max").asLong)
+    } finally {
+      srv.stop()
+      daemon.stop()
+      loop.join(70000)
+      assert(!loop.isAlive, "daemon loop did not stop")
+    }
+    // without a stats source the path is not served
+    val bare = new IngesterHttpServer(outRoot, port = 0)
+    bare.start()
+    try assert(client.send(HttpRequest.newBuilder(URI.create(
+      s"http://127.0.0.1:${bare.boundPort}/api/stats")).build(),
+      HttpResponse.BodyHandlers.ofString()).statusCode() == 404)
+    finally bare.stop()
+  }
 }

@@ -2178,6 +2178,74 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "double-compaction drifted")
   }
 
+  /** Run `body` on `n` pool threads released together; results in
+    * thread order. */
+  private def race[T](n: Int)(body: Int => T): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val gate = new java.util.concurrent.CyclicBarrier(n)
+      (0 until n).map { t =>
+        pool.submit(new java.util.concurrent.Callable[T] {
+          def call(): T = { gate.await(); body(t) }
+        })
+      }.map(_.get())
+    } finally pool.shutdown()
+  }
+
+  test("the maintenance lock is exclusive: of threads racing to take " +
+      "it, exactly one wins in every trial") {
+    val s = spark
+    val idx = tmpDir("lock-race")
+    val lock = java.nio.file.Paths.get(s"$idx/.maintenance-lock")
+    (1 to 300).foreach { trial =>
+      val wins = race(4) { t =>
+        try { AnnOps.acquireMaintenanceLock(s, idx, s"t$t"); true }
+        catch { case _: IllegalStateException => false }
+      }.count(identity)
+      assert(wins == 1, s"trial $trial: $wins threads took the lock")
+      java.nio.file.Files.delete(lock)
+    }
+  }
+
+  test("two racing compactIndex calls: one fails loudly on the lock, " +
+      "and the index serves the same rows afterwards") {
+    val s = spark
+    import s.implicits._
+    val df = annRows(0 until 60).toDF("vid", "emb", "grp").pin()
+    val idx = tmpDir("compact-race")
+    AnnOps.buildIvfPqIndex(df.filter($"vid" < 40), "vid", "emb", "grp",
+      idx, cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
+      partitions = 4)
+    AnnOps.appendIvfPqIndex(df.filter($"vid" >= 40), "vid", "emb", "grp",
+      idx, 1L, partitions = 4)
+    def serve() = rowsOf(AnnOps.queryIvfPqIndex(
+      df.filter($"vid" < 8), "vid", "emb", "grp", idx, k = 3,
+      nprobe = 2, rerankDepth = 12, partitions = 4))
+    val good = serve()
+    // the lock is taken right after a manifest read, while a compaction
+    // runs for many Spark jobs: two calls released together overlap,
+    // but a trial whose calls happened to run one after the other
+    // proves nothing, so retry a few times
+    var raced = 0
+    var trial = 0
+    while (raced == 0 && trial < 5) {
+      trial += 1
+      val failed = race(2) { _ =>
+        try { AnnOps.compactIndex(s, idx, partitions = 4); None }
+        catch { case e: IllegalStateException => Some(e) }
+      }.flatten
+      assert(failed.size <= 1, s"trial $trial: both compactions failed: " +
+        failed.map(_.getMessage).mkString(" | "))
+      failed.foreach(e => assert(
+        e.getMessage.contains(".maintenance-lock is held"), e.getMessage))
+      raced += failed.size
+      assert(!new java.io.File(s"$idx/.maintenance-lock").exists(),
+        s"trial $trial left the lock behind")
+      assert(serve() == good, s"trial $trial: the race changed the serve")
+    }
+    assert(raced == 1, s"no overlapping compactions in $trial trials")
+  }
+
   test("generation-pointer crash matrix: an uncommitted generation + " +
       "stranded lock are invisible to readers, block mutators loudly, " +
       "and recoverIndex repairs both; post-flip crash self-heals; the " +
