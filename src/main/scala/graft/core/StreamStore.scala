@@ -140,6 +140,63 @@ object SegmentCodec {
     } finally ch.close()
   }
 
+  /** Fold `f` over (kind, key, sampleIndex) of every complete frame of a
+    * segment, in file order, reading the 37-byte headers only: payloads
+    * are skipped, never copied, and Compressed batches are never
+    * expanded. The torn-tail rule is [[readFramesCh]]'s: a frame whose
+    * payload is incomplete ends the walk. Questions about a segment's
+    * frames rather than its rows (the newest key, the EOF marker) ask
+    * this instead of [[readAll]]. For Compressed frames the header's
+    * sampleIndex is the batch's FIRST sample. */
+  def foldHeaders[A](file: File, z: A)(f: (A, Byte, StreamKey, Long) => A): A = {
+    if (!file.exists()) return z
+    val ch = java.nio.channels.FileChannel.open(file.toPath)
+    try {
+      val size = ch.size()
+      val buf = ByteBuffer.allocate(HeaderWalkChunk).order(ByteOrder.LITTLE_ENDIAN)
+      buf.limit(0)
+      var bufStart = 0L // file offset of buf(0)
+      var pos = 0L // file offset of the next frame
+      var acc = z
+      var done = false
+      while (!done && pos + HeaderBytes <= size) {
+        if (pos + HeaderBytes > bufStart + buf.limit()) {
+          // refill from the next header on; a large payload is skipped
+          // by seeking past it, never read
+          buf.clear()
+          buf.limit(math.min(buf.capacity().toLong, size - pos).toInt)
+          var at = pos
+          var eof = false
+          while (buf.hasRemaining && !eof) {
+            val k = ch.read(buf, at)
+            if (k < 0) eof = true else at += k
+          }
+          buf.flip()
+          bufStart = pos
+        }
+        if (pos + HeaderBytes > bufStart + buf.limit()) done = true // truncated under us
+        else {
+          buf.position((pos - bufStart).toInt)
+          val kind = buf.get()
+          val key = StreamKey(buf.getLong, buf.getLong)
+          val idx = buf.getLong
+          val len = buf.getInt
+          require(len >= 0, s"$file: frame at $pos has length $len")
+          if (pos + HeaderBytes + len > size) done = true // torn tail
+          else {
+            acc = f(acc, kind, key, idx)
+            pos += HeaderBytes + len
+          }
+        }
+      }
+      acc
+    } finally ch.close()
+  }
+
+  // bytes per read of the header walk: many small frames per read, and
+  // a large payload costs one short read, not a copy of the payload
+  private val HeaderWalkChunk = 16 << 10
+
   /** [[readFrames]] over an already-open channel (lets a tail-following
     * reader keep ONE channel per segment instead of an open/close pair
     * per poll).
@@ -486,10 +543,28 @@ final class StreamStore(val root: Path) {
     }
   }
 
-  /** Epoch ms of the newest entry of the stream, or None if empty. */
+  /** Epoch ms of the newest entry of the stream, or None if empty. Read
+    * from the newest segment's frame headers, payloads skipped. */
   def newestEntryMs(name: String): Option[Long] =
     segments(name).lastOption.flatMap { last =>
-      SegmentCodec.readAll(segmentFile(name, last)).lastOption.map(_.key.ms)
+      SegmentCodec.foldHeaders(segmentFile(name, last), Option.empty[Long]) {
+        (_, _, key, _) => Some(key.ms)
+      }
+    }
+
+  /** The EOF entry's sample_index (the last one written: writer stop()
+    * and [[forceEof]] both stamp it), if the writer has stopped; read
+    * from the newest segment's frame headers, payloads skipped. The
+    * ingester's completion decisions compare it against the persisted
+    * frontier — EOF presence alone is a live-writer race: rows + EOF
+    * appended between a sweep's scan and its completion check would
+    * compact and DELETE the stream with the tail unpersisted. */
+  def eofLastIndex(name: String): Option[Long] =
+    segments(name).lastOption.flatMap { last =>
+      SegmentCodec.foldHeaders(segmentFile(name, last), Option.empty[Long]) {
+        (found, kind, _, idx) =>
+          found.orElse(if (kind == StreamEntry.Eof) Some(idx) else None)
+      }
     }
 }
 

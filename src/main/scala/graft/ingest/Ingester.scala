@@ -10,13 +10,15 @@ import scala.jdk.CollectionConverters._
 import graft.connector.{RiverScanBuilder, RiverTable}
 import graft.core._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat => POF, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.OutputWriter
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.GreaterThan
 import org.apache.spark.sql.types.StructType
@@ -64,13 +66,18 @@ final case class IngestSettings(
   *    pruned fields are skipped in the packed-row decode (P2),
   *  - each part is written in this process, like the reference's
   *    (`ingester.cpp:58-94`): the connector's own split reader feeds
-  *    Spark's parquet writer on the driver, so a steady-state or idle
-  *    sweep launches no Spark job,
+  *    Spark's parquet write support on the driver, so a steady-state or
+  *    idle sweep launches no Spark job,
   *  - resume reads the persisted frontier back from the part files'
   *    parquet footers (I6: crash-safe — a part is visible only after its
   *    atomic commit),
+  *  - a sweep's parquet I/O (footer reads, the part write) goes through
+  *    parquet's `java.nio` local files, not Hadoop's `FileSystem`: no
+  *    Hadoop `Configuration` is parsed per file, no `chmod` is forked
+  *    and no `.crc` sidecar is written,
   *  - EOF triggers compaction of parts into one `data.parquet` (I5, the
-  *    one Spark job of a stream's life) and a COMPLETED sidecar (I9),
+  *    one Spark job of a stream's life, written through Hadoop's
+  *    `FileSystem` like any Spark write) and a COMPLETED sidecar (I9),
   *  - consumed whole segments older than `minAgeMsBeforeTrim` are
   *    deleted (delete-behind retention, I7).
   *
@@ -115,18 +122,16 @@ final class Ingester(
     footerStats(partFiles(stream).lastOption.map(_.toPath)
       .getOrElse(outDir(stream).resolve("data.parquet")))._2
 
-  // footer reads need no Spark session (a trim-only Ingester has none)
-  private lazy val hadoopConf = new Configuration()
-
   /** (row count, max sample_index) of the parquet files under `roots`,
-    * read from their footers on the driver — no Spark job. Directories
-    * (a part, `data.parquet`, a `p_date=` tree) are walked, skipping
-    * `_`- and `.`-prefixed entries as Spark's file listing does
-    * (`_SUCCESS`, checksums, a crashed append's `_temporary`); a missing
-    * root holds nothing. The max is -1 for zero rows. A row group
-    * without `sample_index` min/max statistics fails loudly: read as
-    * "nothing persisted", it would re-ingest the whole stream into a
-    * duplicate part.
+    * read from their footers on the driver — no Spark job, and no Hadoop
+    * `Configuration` or `FileSystem` (a trim-only Ingester has no Spark
+    * session either). Directories (a part, `data.parquet`, a `p_date=`
+    * tree) are walked, skipping `_`- and `.`-prefixed entries as Spark's
+    * file listing does (`_SUCCESS`, checksums, a crashed append's
+    * `_temporary`); a missing root holds nothing. The max is -1 for zero
+    * rows. A row group without `sample_index` min/max statistics fails
+    * loudly: read as "nothing persisted", it would re-ingest the whole
+    * stream into a duplicate part.
     */
   private def footerStats(roots: Path*): (Long, Long) = {
     def files(f: File): Seq[File] =
@@ -138,8 +143,8 @@ final class Ingester(
       else Nil
     roots.flatMap(r => files(r.toFile)).foldLeft((0L, -1L)) {
       case ((rows, hi), f) =>
-        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toURI), hadoopConf))
+        val rd = ParquetFileReader.open(new LocalInputFile(f.toPath),
+          ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
         try {
           val maxes = rd.getFooter.getBlocks.asScala
             .filter(_.getRowCount > 0).map { b =>
@@ -199,7 +204,7 @@ final class Ingester(
     maybeTrim(stream, frontier)
     finalizeIfStale(stream)
     // same live-writer completion gate as [[ingestOnce]]
-    if (eofLastIndex(stream).exists(_ <= frontier)) {
+    if (store.eofLastIndex(stream).exists(_ <= frontier)) {
       writeSidecar(stream, meta, "COMPLETED")
       store.deleteStream(stream)
       evictSegmentCache(stream)
@@ -212,10 +217,14 @@ final class Ingester(
     * splits (the pushed bound prunes whole segments) and its own reader
     * decodes them one split at a time in plan order, which is
     * sample_index order: segments come in order and frames in file
-    * order. Spark's parquet writer keeps the codec, the type mapping and
-    * the row-group size (`parquet.block.size`) of a Spark write. The
-    * writer opens on the first row, so a sweep with nothing new leaves
-    * no file behind.
+    * order. The file is the one a Spark write would produce: Spark's
+    * `prepareWrite` fills the Hadoop conf (schema, SQL write flags,
+    * codec, `parquet.block.size`) and Spark's `ParquetWriteSupport`
+    * maps the rows. It is written through parquet's local output file,
+    * not Hadoop's `FileSystem`, so no `chmod` is forked and no `.crc`
+    * sidecar is written (the EOF compaction, a Spark write, still does
+    * both). The writer opens on the first row, so a sweep with nothing
+    * new leaves no file behind.
     */
   private def writePart(stream: String, rs: RiverSchema,
       schema: StructType, from: Long, tmp: Path): Unit = {
@@ -224,20 +233,30 @@ final class Ingester(
     scan.pushFilters(Array(GreaterThan("sample_index", from)))
     val batch = scan.build().toBatch
     val readers = batch.createReaderFactory()
-    def open(): OutputWriter = {
+    def open(): ParquetWriter[InternalRow] = {
       val opts = settings.bytesPerRowGroup
         .map(b => "parquet.block.size" -> b.toString).toMap
+      // prepareWrite only fills the job's conf; nothing runs as a job
       val job = Job.getInstance(
         spark.sessionState.newHadoopConfWithOptions(opts))
-      val factory =
-        new ParquetFileFormat().prepareWrite(spark, job, opts, schema)
-      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-        new TaskAttemptID())
-      val name = s"part-00000-${UUID.randomUUID}-c000" +
-        factory.getFileExtension(ctx)
-      factory.newInstance(tmp.resolve(name).toUri.toString, schema, ctx)
+      new ParquetFileFormat().prepareWrite(spark, job, opts, schema)
+      val conf = job.getConfiguration
+      val codec = POF.getCompression(conf)
+      Files.createDirectories(tmp)
+      new PartWriterBuilder(new LocalOutputFile(tmp.resolve(
+          s"part-00000-${UUID.randomUUID}-c000${codec.getExtension}.parquet")))
+        .withConf(conf)
+        .withCompressionCodec(codec)
+        .withRowGroupSize(POF.getLongBlockSize(conf))
+        .withPageSize(POF.getPageSize(conf))
+        .withDictionaryPageSize(POF.getDictionaryPageSize(conf))
+        .withDictionaryEncoding(POF.getEnableDictionary(conf))
+        .withWriterVersion(POF.getWriterVersion(conf))
+        .withValidation(POF.getValidation(conf))
+        .withStatisticsEnabled(POF.getStatisticsEnabled(conf))
+        .build()
     }
-    var w: OutputWriter = null
+    var w: ParquetWriter[InternalRow] = null
     try batch.planInputPartitions().foreach { p =>
       val r = readers.createReader(p)
       try while (r.next()) {
@@ -284,7 +303,7 @@ final class Ingester(
     // complete ONLY when everything before the EOF is persisted: the
     // scan above snapshots the stream, so rows (+ EOF) appended since
     // belong to the NEXT sweep, not to this completion
-    if (eofLastIndex(stream).exists(_ <= frontier)) {
+    if (store.eofLastIndex(stream).exists(_ <= frontier)) {
       compact(stream, schema)
       writeSidecar(stream, meta, "COMPLETED")
       store.deleteStream(stream) // reference deletes Redis metadata on EOF
@@ -334,22 +353,8 @@ final class Ingester(
     }
 
   /** EOF marker present in the newest segment? (writer has stopped) */
-  def eofReached(stream: String): Boolean = eofLastIndex(stream).isDefined
-
-  /** The EOF entry's LAST-WRITTEN sample_index (writer stop() and
-    * forceEof both stamp it), if the writer has stopped. Completion
-    * decisions compare it against the persisted frontier — EOF
-    * presence alone is a live-writer race: rows + EOF appended
-    * between this sweep's scan and its completion check would compact
-    * and DELETE the stream with the tail unpersisted (caught by
-    * IngesterDaemonSpec's live-writer loop). */
-  private def eofLastIndex(stream: String): Option[Long] = {
-    val segs = store.segments(stream)
-    segs.lastOption.flatMap { last =>
-      SegmentCodec.readAll(store.segmentFile(stream, last))
-        .find(_.kind == StreamEntry.Eof).map(_.sampleIndex)
-    }
-  }
+  def eofReached(stream: String): Boolean =
+    store.eofLastIndex(stream).isDefined
 
   // R6 consumption: segment-start indices arrive as ROLLOVER EVENTS
   // (reference reader.h:339-356 — the key-change callback) from any
@@ -502,4 +507,15 @@ final class Ingester(
         .map { case (s, f) => s -> f.join() }.toMap
     }
   }
+}
+
+/** A parquet writer of Spark rows over any parquet output file, with
+  * Spark's own write support (the conf handed to `withConf` must carry
+  * what `ParquetFileFormat.prepareWrite` sets). */
+private final class PartWriterBuilder(file: OutputFile)
+    extends ParquetWriter.Builder[InternalRow, PartWriterBuilder](file) {
+  override protected def self(): PartWriterBuilder = this
+  override protected def getWriteSupport(
+      conf: Configuration): WriteSupport[InternalRow] =
+    new ParquetWriteSupport()
 }

@@ -174,7 +174,13 @@ final class IngesterDaemon(
   }
 
   /** One enqueue pass: dispatch every matched, not-in-progress stream
-    * to the pool. Returns the streams dispatched this pass. */
+    * to the pool. Returns the streams dispatched this pass.
+    *
+    * A stream can complete and be deleted by a pool thread while this
+    * pass still walks its `listStreams()` snapshot, and then be
+    * dispatched again; the task treats a stream that no longer exists
+    * as done. The check is race-free: while `inProgress` holds the
+    * stream, nothing in this daemon deletes it. */
   def sweepOnce(): Seq[String] = {
     val dispatched = store.listStreams().flatMap { s =>
       ingesters.find { case (re, _) => s.matches(re) }.flatMap {
@@ -182,7 +188,7 @@ final class IngesterDaemon(
           if (inProgress.add(s)) {
             pool.execute(() => {
               val t0 = System.nanoTime()
-              try ing.ingestOnce(s)
+              try if (store.streamExists(s)) ing.ingestOnce(s)
               catch {
                 case NonFatal(e) =>
                   System.err.println(

@@ -200,4 +200,83 @@ class StreamStoreSpec extends AnyFunSuite {
     val fallback = StreamStore.scratchBase(None)
     assert(Files.isDirectory(fallback) && Files.isWritable(fallback))
   }
+
+  test("newestEntryMs and eofLastIndex read frame headers only and answer " +
+      "as a full readAll of the newest segment does") {
+    val st = newStore()
+    def viaReadAll(name: String): (Option[Long], Option[Long]) = {
+      val all = SegmentCodec.readAll(
+        st.segmentFile(name, st.segments(name).last))
+      (all.lastOption.map(_.key.ms),
+        all.find(_.kind == StreamEntry.Eof).map(_.sampleIndex))
+    }
+    def check(name: String, eof: Option[Long]): Unit = {
+      assert((st.newestEntryMs(name), st.eofLastIndex(name)) ==
+        viaReadAll(name), name)
+      assert(st.eofLastIndex(name) == eof, name)
+      assert(st.newestEntryMs(name).nonEmpty, name)
+    }
+    def frames(name: String) = {
+      val f = st.segmentFile(name, st.segments(name).last)
+      SegmentCodec.foldHeaders(f, Vector.empty[(Byte, StreamKey, Long)]) {
+        (acc, kind, key, idx) => acc :+ ((kind, key, idx))
+      }
+    }
+    // many writes, a few ms apart, so the newest key is not the first;
+    // 45-byte frames straddle the header walk's read chunks
+    def feed(w: StreamWriter, batches: Int, per: Int): Unit =
+      (0 until batches).foreach { b =>
+        w.write((0 until per).map(i => Seq[Any]((b * per + i).toDouble)))
+        Thread.sleep(2)
+      }
+    def truncateBy(name: String, bytes: Int): Unit = {
+      val f = st.segmentFile(name, st.segments(name).last)
+      val raf = new java.io.RandomAccessFile(f, "rw")
+      try raf.setLength(f.length() - bytes) finally raf.close()
+    }
+
+    // plain, live, over several segments: every header matches readAll's
+    val plain = st.createStream("plain", schema1, keysPerSegment = 3000)
+    feed(plain, 10, 700)
+    assert(st.segments("plain").size > 1)
+    check("plain", None)
+    assert(frames("plain") == SegmentCodec.readAll(
+      st.segmentFile("plain", st.segments("plain").last))
+      .map(e => (e.kind, e.key, e.sampleIndex)))
+    // the writer stopped: EOF carries the last written index
+    plain.stop()
+    check("plain", Some(6999L))
+
+    // ZFP: one Compressed frame per write (payloads larger than a read
+    // chunk), expanded by readAll, skipped by the header walk
+    val zfp = st.createStream("zfp", schema1, compressionParamsJson =
+      Some("""{"name":"ZFP_LOSSLESS","params":{"num_cols":"1",""" +
+        """"data_type":"double"}}"""))
+    feed(zfp, 6, 5000)
+    assert(frames("zfp").map(_._1).distinct == Vector(StreamEntry.Compressed))
+    check("zfp", None)
+    zfp.stop()
+    check("zfp", Some(29999L))
+
+    // torn tails: a partial payload, then a partial header
+    val torn = st.createStream("torn", schema1)
+    feed(torn, 5, 100)
+    val frameLen = st.segmentFile("torn", 0L).length() / 500
+    truncateBy("torn", 3)
+    check("torn", None)
+    assert(frames("torn").size == 499)
+    // 499 frames + (frameLen - 3) bytes -> 498 frames + 35 header bytes
+    truncateBy("torn", (frameLen - 3 + frameLen - 35).toInt)
+    check("torn", None)
+    assert(frames("torn").size == 498)
+    // forceEof truncates the torn tail and stamps the last complete index
+    assert(st.forceEof("torn"))
+    check("torn", Some(497L))
+
+    // an empty newest segment answers nothing either way
+    val empty = st.createStream("empty", schema1)
+    assert(st.newestEntryMs("empty").isEmpty && st.eofLastIndex("empty").isEmpty)
+    empty.stop()
+    check("empty", Some(-1L))
+  }
 }

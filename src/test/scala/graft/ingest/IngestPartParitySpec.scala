@@ -16,9 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A part that `ingestOnce` writes on the driver is the part a Spark
   * write job would have written: for every river field type, and for a
   * ZFP-compressed stream, the rows, the Spark schema, the parquet file
-  * schema, the compression codec and the footer's sample_index bounds
-  * match a reference written inside this spec through a
-  * `coalesce(1).sortWithinPartitions` Spark write of the same scan.
+  * schema, the compression codec, the footer's key-value metadata, each
+  * column chunk's encodings and the footer's sample_index bounds match a
+  * reference written inside this spec through a
+  * `coalesce(1).sortWithinPartitions` Spark write of the same scan. A
+  * session with a non-default codec pins where the codec is read from.
   */
 class IngestPartParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -102,6 +104,16 @@ class IngestPartParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     def codecs(m: org.apache.parquet.hadoop.metadata.ParquetMetadata) =
       m.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
     assert(codecs(fp) == codecs(fr), s"$name: compression codec")
+    val kv = fp.getFileMetaData.getKeyValueMetaData.asScala
+    assert(kv == fr.getFileMetaData.getKeyValueMetaData.asScala,
+      s"$name: footer key-value metadata")
+    assert(kv.contains("org.apache.spark.version") &&
+      kv.contains("org.apache.spark.sql.parquet.row.metadata"),
+      s"$name: Spark's footer keys missing from ${kv.keys}")
+    def encodings(m: org.apache.parquet.hadoop.metadata.ParquetMetadata) =
+      m.getBlocks.asScala.map(_.getColumns.asScala.map(c =>
+        c.getPath.toDotString -> c.getEncodings.asScala.toSet))
+    assert(encodings(fp) == encodings(fr), s"$name: column chunk encodings")
     def bounds(m: org.apache.parquet.hadoop.metadata.ParquetMetadata) = {
       val st = m.getBlocks.asScala.map(_.getColumns.asScala
         .find(_.getPath.toDotString == "sample_index").get.getStatistics)
@@ -133,6 +145,20 @@ class IngestPartParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       RiverField("debug_x", RiverType.Int64))), 300,
       IngestSettings(trimConsumedSegments = false,
         columnBlacklist = Some("debug_.*")))
+  }
+
+  test("a driver-written part takes its codec from the session: zstd") {
+    val key = "spark.sql.parquet.compression.codec"
+    spark.conf.set(key, "zstd")
+    try {
+      val (part, _) = compare("zstd",
+        RiverSchema(Seq(RiverField("v", RiverType.Double64))), 500)
+      assert(part.getFileName.toString.endsWith(".zstd.parquet"), part)
+      val codecs = footer(part).getBlocks.asScala
+        .flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+      assert(codecs == Set(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD))
+    } finally spark.conf.unset(key)
   }
 
   test("a small bytesPerRowGroup still splits a driver-written part into " +

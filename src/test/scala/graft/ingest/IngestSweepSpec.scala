@@ -107,6 +107,21 @@ class IngestSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0L until 300L))
   }
 
+  test("a steady-state sweep publishes a part dir holding exactly one " +
+      "file: no Hadoop FileSystem (and its .crc sidecars) on the path") {
+    val (store, out, ing) = fixture()
+    val w = store.createStream("s", schema)
+    w.write(rows(0, 100))
+    assert(ing.ingestOnce("s") == 100)
+    w.write(rows(100, 250))
+    assert(ing.ingestOnce("s") == 150)
+    Seq("data_0000000000.parquet", "data_0000000001.parquet").foreach { p =>
+      val files = out.resolve("s").resolve(p).toFile.list().toSeq
+      assert(files.size == 1 && files.head.startsWith("part-00000-") &&
+        files.head.endsWith(".parquet"), s"$p holds ${files.mkString(", ")}")
+    }
+  }
+
   test("a part written from a multi-split river scan holds from+1.." +
       "frontier gapless and ascending in file order; so does data.parquet") {
     val (store, out, ing) = fixture()

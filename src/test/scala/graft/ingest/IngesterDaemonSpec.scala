@@ -190,6 +190,36 @@ class IngesterDaemonSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a dispatched stream deleted before its turn is done, not a " +
+      "failed sweep") {
+    val storeRoot = Files.createTempDirectory("graft-daemon-store-")
+    val outRoot = Files.createTempDirectory("graft-daemon-out-")
+    val store = new StreamStore(storeRoot)
+    // one pool thread: `small` waits behind `big` (listing order)
+    val daemon = new IngesterDaemon(spark, storeRoot, outRoot,
+      parallelism = 1, sweepMs = 50L)
+    val big = store.createStream("a_big", schema)
+    big.write((0 until 200000).map(i => Seq[Any](i.toDouble, i.toLong)))
+    val small = store.createStream("b_small", schema)
+    small.write((0 until 10).map(i => Seq[Any](i.toDouble, i.toLong)))
+    small.stop()
+    val captured = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(captured, true))
+    try {
+      assert(daemon.sweepOnce() == Seq("a_big", "b_small"))
+      // what a pool thread completing `b_small` mid-pass leaves behind
+      store.deleteStream("b_small")
+      daemon.stop()
+      daemon.run() // drains the pool
+    } finally System.setErr(err)
+    val log = captured.toString("UTF-8")
+    assert(!log.contains("b_small sweep failed"), log)
+    assert(!log.contains("sweep failed"), log)
+    assert(Files.exists(outRoot.resolve("a_big")
+      .resolve("data_0000000000.parquet")), "a_big was not ingested")
+  }
+
   test("GET /api/stats serves the running daemon's stats JSON, the same " +
       "object --stats-ms prints") {
     val storeRoot = Files.createTempDirectory("graft-daemon-store-")
