@@ -217,14 +217,13 @@ final class Ingester(
     * splits (the pushed bound prunes whole segments) and its own reader
     * decodes them one split at a time in plan order, which is
     * sample_index order: segments come in order and frames in file
-    * order. The file is the one a Spark write would produce: Spark's
-    * `prepareWrite` fills the Hadoop conf (schema, SQL write flags,
-    * codec, `parquet.block.size`) and Spark's `ParquetWriteSupport`
-    * maps the rows. It is written through parquet's local output file,
-    * not Hadoop's `FileSystem`, so no `chmod` is forked and no `.crc`
-    * sidecar is written (the EOF compaction, a Spark write, still does
-    * both). The writer opens on the first row, so a sweep with nothing
-    * new leaves no file behind.
+    * order. The file is the one a Spark write would produce: it takes
+    * Spark's prepared write conf ([[writeConf]]) and Spark's
+    * `ParquetWriteSupport` maps the rows. It is written through
+    * parquet's local output file, not Hadoop's `FileSystem`, so no
+    * `chmod` is forked and no `.crc` sidecar is written (the EOF
+    * compaction, a Spark write, still does both). The writer opens on
+    * the first row, so a sweep with nothing new leaves no file behind.
     */
   private def writePart(stream: String, rs: RiverSchema,
       schema: StructType, from: Long, tmp: Path): Unit = {
@@ -234,13 +233,7 @@ final class Ingester(
     val batch = scan.build().toBatch
     val readers = batch.createReaderFactory()
     def open(): ParquetWriter[InternalRow] = {
-      val opts = settings.bytesPerRowGroup
-        .map(b => "parquet.block.size" -> b.toString).toMap
-      // prepareWrite only fills the job's conf; nothing runs as a job
-      val job = Job.getInstance(
-        spark.sessionState.newHadoopConfWithOptions(opts))
-      new ParquetFileFormat().prepareWrite(spark, job, opts, schema)
-      val conf = job.getConfiguration
+      val conf = writeConf(schema)
       val codec = POF.getCompression(conf)
       Files.createDirectories(tmp)
       new PartWriterBuilder(new LocalOutputFile(tmp.resolve(
@@ -269,6 +262,32 @@ final class Ingester(
       } finally r.close()
     } finally if (w != null) w.close()
   }
+
+  /** Spark's parquet write conf for parts of `schema` under the
+    * session's current SQL conf: `prepareWrite` fills it (schema, SQL
+    * write flags, codec, `parquet.block.size`) without running a job.
+    * Preparing one copies the session's whole Hadoop conf, so a prepared
+    * conf is reused, read-only, for every part of the same schema until
+    * any SQL conf entry changes; the SparkContext's own Hadoop conf is
+    * read when a conf is prepared. */
+  private def writeConf(schema: StructType): Configuration = {
+    val sql = spark.sessionState.conf.getAllConfs
+    val (at, confs) = writeConfs
+    val current = if (at == sql) confs else Map.empty[StructType, Configuration]
+    current.getOrElse(schema, {
+      val opts = settings.bytesPerRowGroup
+        .map(b => "parquet.block.size" -> b.toString).toMap
+      val job = Job.getInstance(
+        spark.sessionState.newHadoopConfWithOptions(opts))
+      new ParquetFileFormat().prepareWrite(spark, job, opts, schema)
+      val conf = job.getConfiguration
+      writeConfs = (sql, current + (schema -> conf))
+      conf
+    })
+  }
+
+  @volatile private var writeConfs =
+    (Map.empty[String, String], Map.empty[StructType, Configuration])
 
   /** Ingest all currently-available samples of one stream; returns the
     * number of rows persisted this sweep.

@@ -3160,15 +3160,51 @@ object AnnOps {
           .select(col("id").as("qid"), col("key"))), Seq("qid"))
     }
 
-  /** Threads for the coarse chain + pqM codebook trainings of the
-    * IVF-PQ builders: min(1 + pqM, parallelism) — past that the
-    * chains contend for the same executor slots with no launch-latency
-    * win. `spark.graft.ivfpq.trainPool` pins it (parity testing: 1 IS
-    * the sequential spelling; results are width-invariant). */
-  private def trainWidth(s: SparkSession, pqM: Int): Int =
-    s.conf.getOption("spark.graft.ivfpq.trainPool").map(_.toInt)
-      .getOrElse(math.max(1,
-        math.min(1 + pqM, s.sparkContext.defaultParallelism)))
+  /** The IVF cells and the pqM L2 codebooks of one IVF-PQ corpus, the
+    * training both IVF-PQ builders share: when the cell table fits the
+    * driver, every quantizer trains in the same [[lloydRounds]] passes;
+    * past the budget the cells take the sharded k-means and the
+    * codebooks (pqKs rows each, always small) train alone. Returns the
+    * (id, cell, codes) membership, the centroid table the final cell
+    * assignment scored, each subspace's (code, mean) table, and a thunk
+    * that frees every pin the training made — call it once the
+    * membership and the centroid table are consumed.
+    */
+  private def trainIvfPq(v: DataFrame, cells: Int, iters: Int,
+      pqM: Int, pqKs: Int, pqIters: Int, dim: Int,
+      maxCentroidBytes: Long)
+      : (DataFrame, DataFrame, Array[Array[(Long, Array[Double])]],
+        () => Unit) = {
+    require(cells >= 1 && iters >= 1, s"kmeans: k=$cells iters=$iters")
+    val dsub = (dim + pqM - 1) / pqM
+    if (centroidsFit(cells, dim, maxCentroidBytes)) {
+      val (members, cent, means) =
+        lloydRounds(v, cells, iters, pqM, pqKs, pqIters, dsub)
+      (members, centTable(v.sparkSession, cent), means,
+        () => DedupOps.releaseLocalCheckpoint(members))
+    } else {
+      val (cellsP, cent, stale) = kmeansFromStagedWithCentReleasable(v,
+        cells, iters, maxCentroidBytes, dimHint = dim)
+      val (codesP, _, means) =
+        try lloydRounds(v, 0, 0, pqM, pqKs, pqIters, dsub)
+        catch { case e: Throwable =>
+          stale(); DedupOps.releaseLocalCheckpoint(cellsP); throw e }
+      (cellsP.join(codesP, Seq("id")), cent, means, () => {
+        stale()
+        DedupOps.releaseLocalCheckpoint(cellsP)
+        DedupOps.releaseLocalCheckpoint(codesP)
+      })
+    }
+  }
+
+  /** The (m, code, cmean, cn2) codebook table of trained PQ means. */
+  private def codebookTable(s: SparkSession,
+      means: Array[Array[(Long, Array[Double])]]): DataFrame =
+    s.createDataFrame(means.toSeq.zipWithIndex.flatMap { case (book, m) =>
+      book.toSeq.map { case (code, mu) =>
+        (m, code, mu.toSeq, mu.map(x => x * x).sum)
+      }
+    }).toDF("m", "code", "cmean", "cn2")
 
   /** IVF-PQ — the production memory-scale ANN composition: IVF cells
     * generate candidates (the [[filteredTopKIvf]] (cell, key)
@@ -3184,9 +3220,9 @@ object AnnOps {
     * codebook-bounded, broadcast, never corpus-sized.
     *
     * Construction is fully deterministic (the s08 conventions):
-    * per-subspace codebooks from the SAME Lloyd kernel as the coarse
-    * cells (seeds = smallest ids' subvectors, exact integer-dot
-    * cosine routing, ties cell-ascending); per-(query, subspace,
+    * per-subspace L2 codebooks trained in the SAME [[lloydRounds]]
+    * passes as the coarse cells (seeds = the smallest ids'
+    * subvectors, exact L2 argmin, ties code-ascending); per-(query, subspace,
     * code) partial dots are exact scaled-long integers over the SUM
     * centroid, divided once by the code's member count (the mean —
     * what reconstruction needs; the sum's population factor would
@@ -3233,27 +3269,12 @@ object AnnOps {
     val staged = scaledImpl(df, idCol, vecCol, Some(keyCol), partitions)
     val keys = staged.select(col("id"), col("key"))
     val v = withRawNorm(staged)
-    // dim and the shared seed ids collect ONCE, before any chain
-    // (round-17 job-count cut: the coarse kmeans, every PQ subspace,
-    // and the dim gate all re-derived them from the same pinned rows)
     val dim = v.select(size(col("c")).as("d")).filter(col("d") > 0)
       .limit(1).as[Int].collect().headOption.getOrElse(0)
     require(dim >= pqM, s"filteredTopKIvfPq: dim=$dim < pqM=$pqM")
     val dsub = (dim + pqM - 1) / pqM
-    val seedAll = v.select(col("id")).orderBy(col("id"))
-      .limit(math.max(cells, pqKs)).as[Long].collect().sorted
-    // the coarse chain (kmeans → probe side → candidate pin) and the
-    // pqM codebook trainings are INDEPENDENT job chains over the same
-    // read-only pinned staging — run them CONCURRENTLY (guide §2.6,
-    // the buildIvfPqIndex discipline, applied to the inline operator
-    // in round 17: the 5 chains used to run strictly one after
-    // another, pure job-launch latency at any corpus size). Each
-    // chain's arithmetic is the sequential spelling verbatim, so
-    // results are bit-identical (same kernels, same seeds, no shared
-    // mutable state); spark.graft.ivfpq.trainPool=1 IS the sequential
-    // spelling for parity testing.
     // Codebooks train with L2 Lloyd, NOT the cosine kernel the
-    // coarse cells reuse: ADC reconstructs the vector, and cosine
+    // coarse cells use: ADC reconstructs the vector, and cosine
     // routing is magnitude-blind — a tiny noise subvector pointing
     // along a hot centroid's direction would join the hot code and
     // inherit a reconstruction norm it doesn't have, skewing every
@@ -3261,58 +3282,32 @@ object AnnOps {
     // impostors at ~0.7 approx-cosine displacing true ~1.0
     // neighbors before this fix). L2 separates by magnitude AND
     // direction — the standard PQ quantizer.
-    val (coarse, perMRaw) = Overlap(s, trainWidth(s, pqM),
-        "ivfpq-inline") { ov =>
-      val fCoarse = ov.fork {
-        val (members, cent, kmeansRelease) =
-          kmeansFromStagedWithCentReleasable(v, cells, iters,
-            maxCentroidBytes, dimHint = dim, seedHint = seedAll)
-        ov.own(members)
-        ov.onFailure(kmeansRelease())
-        val keyed = members.join(keys, Seq("id"))
-        val qside = ivfProbeSide(v, keys, keyed, cent, isQuery, nprobe)
-        val cand = ov.own(keyed.join(broadcast(qside), Seq("cell", "key"))
-          .filter(col("id") =!= col("qid"))
-          .select(col("qid"), col("id"))
-          .pin()) // feeds the ADC join; pin so the coarse
-                  // k-means never re-runs per consumer
-        (members, kmeansRelease, cand)
-      }
-      val fSubs = (0 until pqM).map { m => ov.fork {
-        val sub = ov.own(v.select(col("id"),
-            slice(col("c"), m * dsub + 1, dsub).as("c"))
-          .pin())
-        val (codesP, means) = pqCodebookL2(sub, pqKs, pqIters,
-          seedHint = seedAll)
-        (m, ov.own(codesP), means, sub)
-      }}
-      (fCoarse.join(), fSubs.map(_.join()))
-    }
-    val (members, kmeansRelease, cand) = coarse
-    val perM = perMRaw.map { case (m, codesP, means, sub) =>
-      val meansDf = s.createDataFrame(means.toSeq.map { case (cell, mu) =>
-        (cell, mu.toSeq, mu.map(x => x * x).sum)
-      }).toDF("code", "cmean", "cn2")
-      val qsub = sub.filter(isQuery(col("id")))
-        .select(col("id").as("qid"), col("c").as("qc"))
-      // this subspace's ADC lookup table: queries × codebook — the
-      // partial dot against the MEAN centroid as one sequential
-      // zip_with/aggregate fold (per-row deterministic; the M-way sum
-      // downstream is DECIMAL(38,6)-quantized, exact and order-free —
-      // see the adc aggregate below)
-      val lutM = meansDf.crossJoin(broadcast(qsub))
-        .select(col("qid"), col("code"),
-          aggregate(zip_with(col("qc"), col("cmean"),
+    val (members, cent, means, trainRelease) = trainIvfPq(v, cells, iters,
+      pqM, pqKs, pqIters, dim, maxCentroidBytes)
+    val keyed = members.select(col("id"), col("cell")).join(keys, Seq("id"))
+    val qside = ivfProbeSide(v, keys, keyed, cent, isQuery, nprobe)
+    // feeds the ADC join; pinned so the probe side never re-runs per
+    // consumer
+    val cand = keyed.join(broadcast(qside), Seq("cell", "key"))
+      .filter(col("id") =!= col("qid"))
+      .select(col("qid"), col("id"))
+      .pin()
+    val codes = members.select(col("id"),
+      posexplode(col("codes")).as(Seq("m", "code")))
+    val books = codebookTable(s, means)
+    // the ADC lookup table: queries × codebook — each subspace's
+    // partial dot against the MEAN centroid as one sequential
+    // zip_with/aggregate fold (per-row deterministic; the M-way sum
+    // downstream is DECIMAL(38,6)-quantized, exact and order-free —
+    // see the adc aggregate below). The [[queryIvfPqIndex]] spelling.
+    val luts = books.crossJoin(broadcast(v.filter(isQuery(col("id")))
+        .select(col("id").as("qid"), col("c").as("qc"))))
+      .select(col("qid"), col("m"), col("code"),
+        aggregate(zip_with(
+            expr(s"slice(qc, m * $dsub + 1, $dsub)"), col("cmean"),
             (a, b) => a.cast("double") * b), lit(0.0d),
-            (acc, x) => acc + x).as("pdot"),
-          lit(m).as("m"))
-      val cn2M = meansDf.select(col("code"), col("cn2"), lit(m).as("m"))
-      (codesP.select(col("id"), col("cell").as("code"), lit(m).as("m")),
-        lutM, cn2M, sub, codesP)
-    }
-    val codes = perM.map(_._1).reduce(_ unionByName _)
-    val luts = perM.map(_._2).reduce(_ unionByName _)
-    val cn2 = perM.map(_._3).reduce(_ unionByName _)
+          (acc, x) => acc + x).as("pdot"))
+    val cn2 = books.select(col("m"), col("code"), col("cn2"))
     // ADC scan of the IVF candidates only: M lookup rows per
     // candidate, summed map-side. The LUT/norm tables broadcast
     // (query- or codebook-bounded); the CANDIDATE table gets NO hint —
@@ -3361,12 +3356,7 @@ object AnnOps {
     // done with the result should releaseLocalCheckpoint it.
     val out = rerankCandidates(v, refine, isQuery, k).pin()
     DedupOps.releaseLocalCheckpoint(cand)
-    perM.foreach { case (_, _, _, sub, codesP) =>
-      DedupOps.releaseLocalCheckpoint(codesP)
-      DedupOps.releaseLocalCheckpoint(sub)
-    }
-    kmeansRelease()
-    DedupOps.releaseLocalCheckpoint(members)
+    trainRelease()
     DedupOps.releaseLocalCheckpoint(v)
     DedupOps.releaseLocalCheckpoint(staged)
     out
@@ -4221,9 +4211,8 @@ object AnnOps {
     * assignment, codes by their row's cell), so every serve-time scan
     * partition-prunes to the probed cells.
     *
-    * Determinism: every stage is the batch operator's own kernel
-    * (coarse cells via [[kmeansFromStagedWithCent]], codebooks via
-    * [[pqCodebookL2]]), and doubles round-trip parquet losslessly, so
+    * Determinism: training is the batch operator's own
+    * ([[trainIvfPq]]), and doubles round-trip parquet losslessly, so
     * a query against the stored index is bit-equal to the inline
     * operator — PipelineOpsSpec pins query == filteredTopKIvfPq at
     * matched (nprobe, rerankDepth) including NON-ceiling settings.
@@ -4238,14 +4227,12 @@ object AnnOps {
       s"buildIvfPqIndex: cells=$cells pqM=$pqM pqKs=$pqKs " +
         s"pqIters=$pqIters")
     val s = df.sparkSession
-    import s.implicits._
     // failure hygiene: every pin the build holds is owned by this outer
     // scope and released (newest first) if the build throws at ANY
     // later point — a failed or cancelled build must leak no
     // corpus-sized blocks (the pool-hygiene spec asserts zero
-    // surviving pins after a forced training timeout). Its one fork
-    // slot runs the seed collect.
-    Overlap(s, 1, "ivfpq-seed") { bv =>
+    // surviving pins after a forced training timeout).
+    Overlap(s, 1, "ivfpq-build") { bv =>
     // stage and VALIDATE the input before touching the stored index:
     // a bad input frame must fail here, with the old generation still
     // serving (REVIEW: a delete-first cleanup turned an input typo
@@ -4258,14 +4245,6 @@ object AnnOps {
     // — one sampled row would let a mixed-dim corpus commit silently
     // truncated codebooks/codes); null-vector rows carry no dim and
     // are tolerated here like every kmeans caller tolerates them.
-    // The SEED collect below is an independent job over the same
-    // pinned v — overlap it with the dim aggregate (guide §2.6;
-    // round-18 job-count cut: two sequential launch latencies became
-    // one per build).
-    val fSeed = bv.fork {
-      v.select(col("id")).orderBy(col("id"))
-        .limit(math.max(cells, pqKs)).as[Long].collect().sorted
-    }
     val dimStats = v.filter(col("c").isNotNull)
       .agg(min(size(col("c"))).as("lo"), max(size(col("c"))).as("hi"))
       .head()
@@ -4273,7 +4252,7 @@ object AnnOps {
       dimStats.getInt(0) == dimStats.getInt(1),
       s"buildIvfPqIndex: mixed vector dims [${dimStats.get(0)}, " +
         s"${dimStats.get(1)}] — the index space needs one width")
-    val (dim, seedAll) = (dimStats.getInt(0), fSeed.join())
+    val dim = dimStats.getInt(0)
     require(dim >= pqM, s"buildIvfPqIndex: dim=$dim < pqM=$pqM")
     // REBUILD SAFETY (ADVICE): a rebuild into a dir holding append
     // batches would leave batch=1..N rows that were assigned against
@@ -4313,64 +4292,25 @@ object AnnOps {
       } finally fs.delete(lockPath(indexDir), false)
     }
     val dsub = (dim + pqM - 1) / pqM
-    // ONE seed collect shared by the coarse kmeans AND every PQ
-    // subspace training (round-17 job-count cut): all of them seed on
-    // the smallest ids of the SAME pinned row set (a subspace frame is
-    // a projection of v, so the id set is identical); collecting
-    // max(cells, pqKs) ids once replaces 1 + pqM separate
-    // orderBy-limit jobs, byte-identically (the hint is sliced to each
-    // consumer's k). Round-18: the collect itself moved up, overlapped
-    // with the dim aggregate (seedAll above).
-    // the coarse kmeans chain and the pqM codebook trainings are
-    // INDEPENDENT job chains — each a sequence of small
-    // driver-blocking jobs over the same read-only pinned staging. Run
-    // ALL of them concurrently (Spark schedules jobs from multiple
-    // threads fine) so the build pays the per-job launch latency once
-    // per training ROUND, not once per chain x round (round-15
-    // overhead cut; the coarse chain joined the pool in round 17 — it
-    // used to run serially before the pool for no data reason, adding
-    // its whole job chain to the build's critical path). The centroid
-    // table lands on disk inside the same window (nothing is committed
-    // until the flip, so a crash state is unchanged). Each
-    // chain trains byte-identically to the sequential spelling.
-    // Width min(1 + pqM, parallelism) ([[trainWidth]]). The join bound
+    // the cells and every codebook train in shared passes
+    // ([[trainIvfPq]]), on one scope thread so the join is bounded: it
     // defaults to unbounded (a big corpus legitimately trains for
     // hours); deployers cap it via spark.graft.ivfpq.trainTimeoutSec.
+    // A timed-out training is cancelled through the scope's job tag and
+    // frees whatever it pinned.
     val timeout = s.conf.getOption("spark.graft.ivfpq.trainTimeoutSec")
       .map(sec => scala.concurrent.duration.Duration(sec.toLong, "sec"))
       .getOrElse(scala.concurrent.duration.Duration.Inf)
-    val (members, cent, kmeansRelease, perM) = Overlap(s,
-        trainWidth(s, pqM), "ivfpq-build", timeout) { ov =>
-      val kmF = ov.fork {
-        val r = kmeansFromStagedWithCentReleasable(v, cells, iters,
-          maxCentroidBytes, dimHint = dim, seedHint = seedAll)
-        ov.own(r._1)
-        ov.onFailure(r._3())
-        // the centroid write only needs the coarse chain — run it
-        // inside the training window instead of after it
-        r._2.write.mode("overwrite").parquet(s"$indexDir/centroids")
-        r
+    val (members, cent, means, trainRelease) =
+      Overlap(s, 1, "ivfpq-train", timeout) { ov =>
+        ov.fork {
+          val t = trainIvfPq(v, cells, iters, pqM, pqKs, pqIters, dim,
+            maxCentroidBytes)
+          ov.onFailure(t._4())
+          t
+        }.join()
       }
-      val futs = (0 until pqM).map { m => ov.fork {
-        val sub = ov.own(v.select(col("id"),
-            slice(col("c"), m * dsub + 1, dsub).as("c"))
-          .pin())
-        val (codesP, means) = pqCodebookL2(sub, pqKs, pqIters,
-          seedHint = seedAll)
-        ov.own(codesP)
-        val meansDf = s.createDataFrame(means.toSeq.map {
-          case (cell, mu) =>
-            (m, cell, mu.toSeq, mu.map(x => x * x).sum)
-        }).toDF("m", "code", "cmean", "cn2")
-        (codesP.select(col("id"), col("cell").as("code"),
-          lit(m).as("m")), meansDf, sub, codesP)
-      }}
-      val (km, pq) = (kmF.join(), futs.map(_.join()))
-      (km._1, km._2, km._3, pq)
-    }
-    bv.own(members)
-    bv.onFailure(kmeansRelease())
-    perM.foreach { case (_, _, sub, codesP) => bv.own(sub); bv.own(codesP) }
+    bv.onFailure(trainRelease())
     // declare what is being built (readers/mutators validate at the
     // door; until the flip below they still find no committed
     // generation and fail loudly), then commit generation 0 through the
@@ -4378,23 +4318,29 @@ object AnnOps {
     // cell-partitioned like the rows (the coarse cell rides each code
     // row so the ADC scan partition-prunes to the probed cells);
     // [[appendIvfPqIndex]] commits later batches next to the build's.
-    // The three artifact writes run CONCURRENTLY (guide §2.6) inside
-    // the door's callback; the door publishes codes, then rows, then
-    // flips the pointer, so a crash leaves nothing a reader can see.
+    // The four artifact writes run CONCURRENTLY (guide §2.6) inside
+    // the door's callback — the frozen centroids and codebooks are
+    // gen-independent and nothing is visible before the flip; the door
+    // publishes codes, then rows, then flips the pointer, so a crash
+    // leaves nothing a reader can see.
     writeIndexManifest(s, indexDir, "ivfpq", Map(
       "dim" -> dim.toLong, "cells" -> cells.toLong,
       "pqM" -> pqM.toLong, "pqKs" -> pqKs.toLong,
       "dsub" -> dsub.toLong))
     commitBatch(s, indexDir, "buildIvfPqIndex", 0L, None,
         Seq("codes", "batches")) { case Seq(codesTmp, rowsTmp) =>
-      Overlap(s, 3, "ivfpq-build-write") { wv =>
+      Overlap(s, 4, "ivfpq-build-write") { wv =>
         wv.fork {
-          perM.map(_._2).reduce(_ unionByName _)
+          cent.write.mode("overwrite").parquet(s"$indexDir/centroids")
+        }
+        wv.fork {
+          codebookTable(s, means)
             .write.mode("overwrite").parquet(s"$indexDir/codebooks")
         }
         wv.fork {
-          perM.map(_._1).reduce(_ unionByName _)
-            .join(members, Seq("id"))
+          members.select(col("id"),
+              posexplode(col("codes")).as(Seq("m", "code")), col("cell"))
+            .select(col("id"), col("code"), col("m"), col("cell"))
             .write.partitionBy("cell").parquet(codesTmp)
         }
         wv.fork {
@@ -4404,17 +4350,10 @@ object AnnOps {
         }
       }
     }
-    // everything is on disk: free the per-subspace stagings and code
-    // tables too, not just the corpus staging — a session building
-    // several indexes (the rebuild-when-drift-prices-it flow) would
-    // otherwise pin pqM corpus-sized blocks per build (REVIEW; the
-    // append path's discipline)
-    perM.foreach { case (_, _, sub, codesP) =>
-      DedupOps.releaseLocalCheckpoint(codesP)
-      DedupOps.releaseLocalCheckpoint(sub)
-    }
-    kmeansRelease()
-    DedupOps.releaseLocalCheckpoint(members)
+    // everything is on disk: free the training's pins too, not just
+    // the corpus staging — a session building several indexes (the
+    // rebuild-when-drift-prices-it flow) would otherwise keep them
+    trainRelease()
     DedupOps.releaseLocalCheckpoint(v)
     DedupOps.releaseLocalCheckpoint(staged)
     }
@@ -4427,7 +4366,7 @@ object AnnOps {
     * [[assignCellsAuto]] map pass — bit-identical to what the build
     * would have assigned, the kmeansFromStagedWithCent contract),
     * encodes against the FROZEN codebooks (the SAME
-    * [[l2AssignAgainst]] kernel the training loop ran, so append-time
+    * [[l2Nearest]] kernel the training loop ran, so append-time
     * codes cannot drift from build-time codes), and commits
     * `batches/batch=<id>` + `codes/batch=<id>` idempotently through
     * [[commitBatch]] (a foreachBatch replay rewrites its own subdirs
@@ -4482,7 +4421,7 @@ object AnnOps {
     // sharded path) or the manifest does not declare the params.
     val declaredFits = for {
       dk <- man.params.get("cells"); dd <- man.params.get("dim")
-    } yield dk * (dd * 8 + 64) <= maxCentroidBytes
+    } yield centroidsFit(dk, dd, maxCentroidBytes)
     // OVERLAP LAYOUT (guide §2.6). The centroid collect and the
     // codebook collect read only the FROZEN stored artifacts — they
     // are independent of the batch, so they launch before the staging
@@ -4568,7 +4507,7 @@ object AnnOps {
       // overhead cut: the previous per-subspace loop ran pqM separate
       // assign+pin jobs per append — pure fixed cost, since each pass
       // re-read the same pinned staging). Arithmetic per subspace is
-      // [[l2AssignAgainst]]'s verbatim — so stored codes are
+      // [[l2Nearest]], the training kernel — so stored codes are
       // bit-identical to the per-subspace spelling (the bit-parity
       // spec re-pins it).
       val (codesAll, destroyCodes) = pqEncodeAll(v, books, pqM, dsub)
@@ -4768,95 +4707,158 @@ object AnnOps {
     out
   }
 
-  /** L2 Lloyd over a staged (id, c) subvector frame — the PQ codebook
-    * quantizer ([[filteredTopKIvfPq]]): seeds = the ks smallest ids'
-    * subvectors (cell = rank, the shared seeding convention), each
-    * step collects the ks MEAN centroids (sums via [[centFromMembers]]
-    * + counts — codebook-bounded, never corpus-sized) and assigns in
-    * one broadcast map pass by exact argmin of |x−μ|² (expanded to
-    * |μ|² − 2x·μ; |x|² is constant per row). Double accumulation is a
-    * per-row SEQUENTIAL fold — deterministic for fixed inputs, unlike
-    * a parallel reduction. Ties break cell-ascending (strictly-less
-    * replacement over the ascending scan). Codes for empty codebook
-    * entries disappear (standard Lloyd). Returns the final membership
-    * (pinned) and the mean table that final assignment scored — the
-    * ADC contract mirror of [[kmeansFromStagedWithCent]].
+  /** The Lloyd loop of every k-means and PQ training whose centroid
+    * table fits the driver ([[centroidsFit]]): the cosine IVF cells
+    * (`cells` > 0, `iters` rounds) and the pqM L2 codebooks of the
+    * `dsub`-wide subspaces (`pqKs` codes, `pqIters` rounds) train
+    * TOGETHER, one Spark job per round — the MLlib Lloyd step: one
+    * seed collect, one job per round but the last, and the final pin.
+    *
+    *  - Seeds: the max(cells, pqKs) smallest-id rows of `v`; seed i is
+    *    cell (code) i of every quantizer unless its vector (slice) is
+    *    null or empty.
+    *  - Round: one map pass assigns every row under every quantizer
+    *    still training ([[cosineNearest]] for cells, [[l2Nearest]] over
+    *    `c[m*dsub, +dsub)` for codes) and emits per-(quantizer, cell)
+    *    exact Long component sums and member counts, reduced by key.
+    *    Long addition regroups exactly, so partitioning cannot change
+    *    the next tables: a centroid is its cell's sum with the exact
+    *    raw norm ([[centFromMembers]]'s arithmetic); a mean is its
+    *    code's sum over ALL members, null and empty slices counted. A
+    *    cell or code with no non-empty member vanishes.
+    *  - Final pass: each quantizer's last table assigns every row (a
+    *    frozen table reproduces its last assignment); that membership
+    *    (id, cell, codes: code per subspace) is the one pin.
+    *
+    * Returns the pinned membership — (id, cell) without codebooks,
+    * (id, codes) without cells — and the cell-ascending tables it was
+    * scored against: (cell, cc, cnrmr) centroids and, per subspace,
+    * (code, mean). A duplicated id trains as two rows.
     */
-  private def pqCodebookL2(sub: DataFrame, ks: Int, iters: Int,
-      seedHint: Array[Long] = null)
-      : (DataFrame, Array[(Long, Array[Double])]) = {
-    val s = sub.sparkSession
+  private[operators] def lloydRounds(v: DataFrame, cells: Int, iters: Int,
+      pqM: Int = 0, pqKs: Int = 0, pqIters: Int = 0, dsub: Int = 0)
+      : (DataFrame, Array[(Long, Array[Long], Double)],
+        Array[Array[(Long, Array[Double])]]) = {
+    val s = v.sparkSession
     import s.implicits._
-    // seedHint: the same ks-smallest-ids array, collected ONCE by the
-    // caller for all pqM subspaces (sub is a projection of the same
-    // rows, so the id set is identical — round-17 job-count cut)
-    val seedIds = if (seedHint != null) seedHint.sorted.take(ks)
-      else sub.select(col("id")).orderBy(col("id")).limit(ks)
-        .as[Long].collect().sorted
-    val seeds = s.createDataFrame(seedIds.toSeq.zipWithIndex
-      .map { case (id, i) => (id, i.toLong) }).toDF("id", "cell")
-    def meansFrom(members: DataFrame): Array[(Long, Array[Double])] = {
-      val sums = centFromMembers(sub, members, "id")
-      val cnts = members.groupBy(col("cell"))
-        .agg(count(lit(1)).as("cnt"))
-      sums.join(cnts, Seq("cell"))
-        .select(col("cell"), col("cc"), col("cnt"))
-        .as[(Long, Array[Long], Long)].collect().sortBy(_._1)
-        .map { case (cell, cc, n) => (cell, cc.map(_.toDouble / n)) }
+    def sliceLen(c: Array[Long], m: Int): Int =
+      if (c == null) 0 else math.max(0, math.min(dsub, c.length - m * dsub))
+    def books(means: Array[Array[(Long, Array[Double])]]) =
+      means.map(_.map { case (code, mu) => (code, mu, mu.map(x => x * x).sum) })
+    val seeds = v.select(col("id"), col("c")).orderBy(col("id"))
+      .limit(math.max(cells, pqKs)).as[(Long, Array[Long])].collect()
+      .sortBy(_._1).map(_._2)
+    var cent = seeds.take(cells).zipWithIndex.collect {
+      case (c, i) if c != null && c.nonEmpty => (i.toLong, c, rawNorm(c))
     }
-    var means = meansFrom(seeds)
-    var members: DataFrame = null
-    var prev: DataFrame = null
-    // self-cleaning on any mid-training failure (e.g. the concurrent
-    // build's cancel-siblings path): the live pins this loop holds are
-    // released before the rethrow, so a failed/cancelled training
-    // leaks no corpus-sized blocks
-    try {
-      for (it <- 1 to iters) {
-        prev = members
-        val (assigned, destroy) = l2AssignAgainst(sub, means)
-        members = assigned.pin()
-        destroy()
-        // each Lloyd round supersedes the previous round's pinned
-        // membership — release it or a pqIters-deep train leaks
-        // (iters − 1) corpus-sized pins per subspace (ADVICE). The new
-        // pin has no lineage to the old (assignment runs against the
-        // driver-held mean table), so the release is safe.
-        if (prev != null) {
-          DedupOps.releaseLocalCheckpoint(prev); prev = null
+    val means = Array.tabulate(pqM) { m =>
+      seeds.take(pqKs).zipWithIndex.collect {
+        case (c, i) if sliceLen(c, m) > 0 => (i.toLong,
+          Array.tabulate(sliceLen(c, m))(j => c(m * dsub + j).toDouble))
+      }
+    }
+    val rows = v.select(col("id"), col("c"),
+        coalesce(col("nrmr"), lit(Double.NaN)).as("nrmr"))
+      .as[(Long, Array[Long], Double)]
+    for (r <- 1 until math.max(iters, pqIters)) {
+      val trainCells = cells > 0 && r < iters
+      val trainBooks = if (r < pqIters) pqM else 0
+      val bc = s.sparkContext.broadcast(
+        (if (trainCells) cent else null, books(means.take(trainBooks))))
+      val sums = try rows.rdd.mapPartitions { it =>
+        val (cs, bs) = bc.value
+        // key (-1, cell) is a coarse cell, (m, code) a subspace code
+        val acc = scala.collection.mutable.HashMap
+          .empty[(Int, Long), (Array[Long], Long)]
+        def add(q: Int, cell: Long, c: Array[Long], off: Int, len: Int)
+            : Unit = {
+          val (a0, n) = acc.getOrElse((q, cell), (Array.emptyLongArray, 0L))
+          val a = if (a0.length < len) java.util.Arrays.copyOf(a0, len) else a0
+          var i = 0
+          while (i < len) { a(i) += c(off + i); i += 1 }
+          acc((q, cell)) = (a, n + 1)
         }
-        if (it < iters) means = meansFrom(members)
+        it.foreach { case (_, c, nrmr) =>
+          if (cs != null)
+            add(-1, cosineNearest(c, nrmr, cs), c, 0,
+              if (c == null) 0 else c.length)
+          var m = 0
+          while (m < bs.length) {
+            val len = sliceLen(c, m)
+            add(m, l2Nearest(c, m * dsub, len, bs(m)), c, m * dsub, len)
+            m += 1
+          }
+        }
+        acc.iterator
+      }.reduceByKey { (x: (Array[Long], Long), y: (Array[Long], Long)) =>
+        val (big, small) =
+          if (x._1.length >= y._1.length) (x._1, y._1) else (y._1, x._1)
+        val out = java.util.Arrays.copyOf(big, big.length)
+        var i = 0
+        while (i < small.length) { out(i) += small(i); i += 1 }
+        (out, x._2 + y._2)
+      }.collect() finally bc.destroy()
+      val byQ = sums.filter(_._2._1.nonEmpty).sortBy(_._1._2).groupBy(_._1._1)
+      def of(q: Int) = byQ.getOrElse(q, Array.empty[((Int, Long), (Array[Long], Long))])
+      if (trainCells)
+        cent = of(-1).map { case ((_, cell), (cc, _)) => (cell, cc, rawNorm(cc)) }
+      (0 until trainBooks).foreach { m =>
+        means(m) = of(m).map { case ((_, code), (cc, n)) =>
+          (code, cc.map(_.toDouble / n)) }
       }
-    } catch { case e: Throwable =>
-      Seq(prev, members).filter(_ != null).distinct.foreach { p =>
-        try DedupOps.releaseLocalCheckpoint(p)
-        catch { case _: Throwable => () }
-      }
-      throw e
     }
-    (members, means)
+    val bc = s.sparkContext.broadcast(
+      (if (cells > 0) cent else null, books(means)))
+    val members = try {
+      val out = rows.mapPartitions { it =>
+        val (cs, bs) = bc.value
+        it.map { case (id, c, nrmr) =>
+          (id, if (cs == null) -1L else cosineNearest(c, nrmr, cs),
+            Array.tabulate(bs.length) { m =>
+              l2Nearest(c, m * dsub, sliceLen(c, m), bs(m)) })
+        }
+      }.toDF("id", "cell", "codes")
+      (if (pqM == 0) out.select(col("id"), col("cell"))
+        else if (cells == 0) out.select(col("id"), col("codes"))
+        else out).pin()
+    } finally bc.destroy()
+    (members, cent, means)
   }
 
-  /** One L2 assignment map pass against a driver-held mean table —
-    * the kernel [[pqCodebookL2]] iterates and [[appendIvfPqIndex]]
-    * replays against FROZEN codebooks (one body, so training-time and
-    * append-time code assignment cannot drift): exact argmin of
-    * |μ|² − 2x·μ, sequential per-row fold, ties cell-ascending.
-    * Returns the (lazy) assignment plus a destroy thunk for the mean
-    * broadcast — call it after pinning the assignment (the
-    * assignCellsKeepBc discipline). */
-  /** ONE broadcast map pass encoding EVERY PQ subspace (round-15
-    * append-overhead cut: pqM separate [[l2AssignAgainst]] passes were
-    * pqM whole jobs re-reading the same pinned staging). Per subspace
-    * the arithmetic is [[l2AssignAgainst]] verbatim — the slice
-    * c[m*dsub, +dsub) bounded by both the vector and the mean widths
-    * (exactly what `slice(col("c"), m*dsub+1, dsub)` handed the
-    * kernel), |mu|^2 - 2 x.mu over a sequential fold, first-index init
-    * then strictly-less replacement over the code-ascending scan —
-    * so the stored codes are bit-identical to the per-subspace
-    * spelling (the build/serve bit-parity specs pin it). Returns the
-    * LAZY (id, code, m) frame plus a destroy thunk for the codebook
-    * broadcast — call it after the consuming write has executed.
+  /** The PQ code of one vector: exact argmin over the codebook `cs`
+    * (code, mean, |mean|²) of |μ|² − 2x·μ for the subvector
+    * x = c[off, off + len) — |x|² is constant per row. The dot is a
+    * sequential per-row fold over the first min(len, |μ|) components
+    * (deterministic for fixed inputs); ties break code-ascending
+    * (strictly-less replacement over the ascending scan); a null
+    * vector scores |μ|² alone; an empty codebook gives -1. The kernel
+    * of [[lloydRounds]] and [[pqEncodeAll]], so build-time and
+    * append-time codes cannot drift. */
+  private def l2Nearest(c: Array[Long], off: Int, len: Int,
+      cs: Array[(Long, Array[Double], Double)]): Long = {
+    var bestCode = if (cs.isEmpty) -1L else cs(0)._1
+    var best = Double.PositiveInfinity
+    var j = 0
+    while (j < cs.length) {
+      val (code, mu, mn2) = cs(j)
+      val n = math.min(len, mu.length)
+      var dot = 0.0
+      var i = 0
+      while (i < n) { dot += c(off + i) * mu(i); i += 1 }
+      val score = mn2 - 2.0 * dot
+      if (j == 0 || score < best) { best = score; bestCode = code }
+      j += 1
+    }
+    bestCode
+  }
+
+  /** ONE broadcast map pass encoding EVERY PQ subspace against frozen
+    * codebooks — the [[l2Nearest]] kernel the training ran, over the
+    * slice c[m*dsub, +dsub) bounded by the vector, so stored codes are
+    * bit-identical to build-time codes (the build/serve bit-parity
+    * specs pin it). Returns the LAZY (id, code, m) frame plus a destroy
+    * thunk for the codebook broadcast — call it after the consuming
+    * write has executed.
     */
   private def pqEncodeAll(v: DataFrame,
       books: Array[(Int, Long, Seq[Double])], pqM: Int, dsub: Int)
@@ -4877,59 +4879,13 @@ object AnnOps {
         val all = bc.value
         rows.flatMap { case (id, c) =>
           Iterator.tabulate(all.length) { m =>
-            val cs = all(m)
             val off = m * dsub
-            var bestCode = if (cs.isEmpty) -1L else cs(0)._1
-            var best = Double.PositiveInfinity
-            var j = 0
-            while (j < cs.length) {
-              val (code, mu, mn2) = cs(j)
-              val sliceLen = if (c == null) 0
-                else math.max(0, math.min(dsub, c.length - off))
-              val n = math.min(sliceLen, mu.length)
-              var dot = 0.0
-              var i = 0
-              while (i < n) { dot += c(off + i) * mu(i); i += 1 }
-              val score = mn2 - 2.0 * dot
-              if (j == 0 || score < best) { best = score; bestCode = code }
-              j += 1
-            }
-            (id, bestCode, m)
+            val len = if (c == null) 0
+              else math.max(0, math.min(dsub, c.length - off))
+            (id, l2Nearest(c, off, len, all(m)), m)
           }
         }
       }.toDF("id", "code", "m")
-    (out, () => bc.destroy())
-  }
-
-  private def l2AssignAgainst(sub: DataFrame,
-      means: Array[(Long, Array[Double])])
-      : (DataFrame, () => Unit) = {
-    val s = sub.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(
-      means.map { case (cell, mu) =>
-        (cell, mu, mu.map(x => x * x).sum) })
-    val out = sub.select(col("id"), col("c"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { rows =>
-        val cs = bc.value
-        rows.map { case (id, c) =>
-          var bestCell = if (cs.isEmpty) -1L else cs(0)._1
-          var best = Double.PositiveInfinity
-          var j = 0
-          while (j < cs.length) {
-            val (cell, mu, mn2) = cs(j)
-            var dot = 0.0
-            var i = 0
-            val n = if (c == null) 0 else math.min(c.length, mu.length)
-            while (i < n) { dot += c(i) * mu(i); i += 1 }
-            val score = mn2 - 2.0 * dot
-            if (j == 0 || score < best) { best = score; bestCell = cell }
-            j += 1
-          }
-          (id, bestCell)
-        }
-      }.toDF("id", "cell")
     (out, () => bc.destroy())
   }
 
@@ -5221,26 +5177,37 @@ object AnnOps {
       .as[(Long, Array[Long], Double)]
       .mapPartitions { it =>
         val cs = bc.value
-        it.map { case (id, c, nrmr) =>
-          var bestCell = if (cs.isEmpty) -1L else cs(0)._1
-          var best = Double.NaN
-          var j = 0
-          while (j < cs.length) {
-            val (cell, cc, cnrmr) = cs(j)
-            var dot = 0L
-            var i = 0
-            val n = if (c == null) 0 else math.min(c.length, cc.length)
-            while (i < n) { dot += c(i) * cc(i); i += 1 }
-            val score = dot.toDouble / (nrmr * cnrmr)
-            if (j == 0 || java.lang.Double.compare(score, best) > 0) {
-              best = score; bestCell = cell
-            }
-            j += 1
-          }
-          (id, bestCell)
-        }
+        it.map { case (id, c, nrmr) => (id, cosineNearest(c, nrmr, cs)) }
       }.toDF(idCol, "cell")
     (out, bc)
+  }
+
+  /** The cell of one vector: argmax over the ascending (cell, cc,
+    * cnrmr) table of the exact i64 dot (same wrap semantics as
+    * [[dot_i64]]) over dot.toDouble / (nrmr * cnrmr); only a STRICTLY
+    * greater java.lang.Double.compare replaces the incumbent, so ties
+    * break cell-ascending and NaN scores (a zero centroid; every score
+    * of a null vector, whose nrmr is NaN) order greatest. An empty
+    * table gives -1. The kernel of [[assignCellsFromArray]] and
+    * [[lloydRounds]]. */
+  private def cosineNearest(c: Array[Long], nrmr: Double,
+      cs: Array[(Long, Array[Long], Double)]): Long = {
+    var bestCell = if (cs.isEmpty) -1L else cs(0)._1
+    var best = Double.NaN
+    var j = 0
+    while (j < cs.length) {
+      val (cell, cc, cnrmr) = cs(j)
+      var dot = 0L
+      var i = 0
+      val n = if (c == null) 0 else math.min(c.length, cc.length)
+      while (i < n) { dot += c(i) * cc(i); i += 1 }
+      val score = dot.toDouble / (nrmr * cnrmr)
+      if (j == 0 || java.lang.Double.compare(score, best) > 0) {
+        best = score; bestCell = cell
+      }
+      j += 1
+    }
+    bestCell
   }
 
   /** [[assignCellsKeepBc]] when the k-row centroid table exceeds a
@@ -5264,11 +5231,8 @@ object AnnOps {
     * stays flat in k at fixed N×k×dim work (SCALE_r08 probe).
     *
     * Bit-identical to the unsharded kernel: shards are disjoint
-    * ascending ranges walked in order, so the concatenated scan IS the
-    * global ascending scan — same j==0 initialization (the first cell
-    * of the first non-empty shard), same strictly-greater
-    * java.lang.Double.compare replacement, same all-NaN null-embedding
-    * behavior (keeps the globally smallest cell). Plan shape gated by
+    * ascending ranges, so their concatenation IS the ascending table
+    * and [[cosineNearest]] scans it unchanged. Plan shape gated by
     * PlanInvariantsSpec; parity spec in PipelineOpsSpec.
     *
     * Executor-side, `bc.value` caches each deserialized shard in the
@@ -5378,32 +5342,9 @@ object AnnOps {
         coalesce(col("nrmr"), lit(Double.NaN)).as("nrmr"))
       .as[(Long, Array[Long], Double)]
       .mapPartitions { it =>
-        val shards = bcs.map(_.value)
-        it.map { case (id, c, nrmr) =>
-          var bestCell = -1L
-          var best = Double.NaN
-          var first = true
-          var sdx = 0
-          while (sdx < shards.length) {
-            val cs = shards(sdx)
-            var j = 0
-            while (j < cs.length) {
-              val (cell, cc, cnrmr) = cs(j)
-              var dot = 0L
-              var i = 0
-              val n = if (c == null) 0 else math.min(c.length, cc.length)
-              while (i < n) { dot += c(i) * cc(i); i += 1 }
-              val score = dot.toDouble / (nrmr * cnrmr)
-              if (first || java.lang.Double.compare(score, best) > 0) {
-                best = score; bestCell = cell
-              }
-              first = false
-              j += 1
-            }
-            sdx += 1
-          }
-          (id, bestCell)
-        }
+        // the shards in order ARE the ascending table
+        val cs = bcs.flatMap(_.value)
+        it.map { case (id, c, nrmr) => (id, cosineNearest(c, nrmr, cs)) }
       }.toDF(idCol, "cell")
     DedupOps.releaseLocalCheckpoint(centP)
     (out, () => bcs.foreach(_.destroy()))
@@ -5418,11 +5359,11 @@ object AnnOps {
   private[graft] def assignCellsAuto(v: DataFrame, cent: DataFrame,
       idCol: String, k: Long, dim: Int,
       maxCentroidBytes: Long): (DataFrame, () => Unit) = {
-    val dimBytes = dim.toLong * 8 + 64 // components + array/row overhead
-    if (k * dimBytes <= maxCentroidBytes) {
+    if (centroidsFit(k, dim, maxCentroidBytes)) {
       val (out, bc) = assignCellsKeepBc(v, cent, idCol)
       (out, () => bc.destroy())
-    } else assignCellsSharded(v, cent, idCol, k, maxCentroidBytes, dimBytes)
+    } else assignCellsSharded(v, cent, idCol, k, maxCentroidBytes,
+      dim.toLong * 8 + 64)
   }
 
   /** Per-cell component sums of the member vectors, pre-combined
@@ -5485,17 +5426,21 @@ object AnnOps {
         while (i < small.length) { out(i) += small(i); i += 1 }
         out
       }
-      .map { case (cell, cc) =>
-        var sq = java.math.BigInteger.ZERO
-        var i = 0
-        while (i < cc.length) {
-          val c = java.math.BigInteger.valueOf(cc(i))
-          sq = sq.add(c.multiply(c))
-          i += 1
-        }
-        (cell, cc, math.sqrt(sq.doubleValue()))
-      }
+      .map { case (cell, cc) => (cell, cc, rawNorm(cc)) }
       .toDF("cell", "cc", "cnrmr")
+  }
+
+  /** sqrt of the exact BigInteger self-dot of a component sum, with ONE
+    * correctly-rounded double conversion — a centroid's raw norm. */
+  private def rawNorm(cc: Array[Long]): Double = {
+    var sq = java.math.BigInteger.ZERO
+    var i = 0
+    while (i < cc.length) {
+      val c = java.math.BigInteger.valueOf(cc(i))
+      sq = sq.add(c.multiply(c))
+      i += 1
+    }
+    math.sqrt(sq.doubleValue())
   }
 
   private def kmeansFromStaged(v: DataFrame, k: Int, iters: Int,
@@ -5508,12 +5453,17 @@ object AnnOps {
     * assignment (same exact integer-dot argmax, ties cell-ascending),
     * so a top-P probe against it strictly widens the search
     * ([[filteredTopKIvf]]'s nprobe; PipelineOpsSpec pins the rank-1
-    * parity). The table is k rows over pinned inputs — cheap to
-    * re-evaluate; callers that score it more than once should pin it.
+    * parity). When the k-row table fits the driver ([[centroidsFit]])
+    * the loop is [[lloydRounds]] — one job per round, and `cent` is a
+    * driver-built table with no lineage. Past the budget every round
+    * assigns through the sharded kernel and updates the table with
+    * [[centFromMembers]]; there `cent` is lazy over the second-to-last
+    * round's pinned membership, and the returned thunk frees the
+    * superseded memberships once every `cent` consumer has run.
     */
   private def kmeansFromStagedWithCentReleasable(v: DataFrame, k: Int,
       iters: Int, maxCentroidBytes: Long = DefaultMaxCentroidBytes,
-      dimHint: Int = -1, seedHint: Array[Long] = null)
+      dimHint: Int = -1)
       : (DataFrame, DataFrame, () => Unit) = {
     require(k >= 1 && iters >= 1, s"kmeans: k=$k iters=$iters")
     val s = v.sparkSession
@@ -5521,31 +5471,24 @@ object AnnOps {
     // dim prices the centroid table (k is already known). A limit-1
     // probe of the first non-null vector — NOT a max over all rows:
     // that would be a full extra pass over the pinned staging on every
-    // call, including the small-k callers the gate exists to leave
-    // untouched. dim is constant by scaled()'s transform; a ragged
-    // corpus could under-price the gate and fall back to the unsharded
-    // kernel, which is correct (just driver-heavier) at any dim.
-    // dimHint lets a caller that already validated the corpus width
-    // (buildIvfPqIndex's whole-corpus min/max aggregate) skip the
-    // probe job (round-17 job-count cut) — hint-vs-probe parity is
-    // exact because dim is constant by that same validation.
+    // call. dim is constant by scaled()'s transform; a ragged corpus
+    // could under-price the gate and take the driver path, which is
+    // correct (just driver-heavier) at any dim. A caller that already
+    // validated the corpus width passes it as dimHint.
     val dim = if (dimHint >= 0) dimHint
       else v.select(size(col("c")).as("d")).filter(col("d") > 0)
         .limit(1).as[Int].collect().headOption.getOrElse(0)
+    if (centroidsFit(k, dim, maxCentroidBytes)) {
+      val (members, cent, _) = lloydRounds(v, k, iters)
+      return (members, centTable(s, cent), () => ())
+    }
     def centFrom(members: DataFrame): DataFrame =
       centFromMembers(v, members, "id")
     // seeds: the k smallest ids, cell = rank. TakeOrdered bounds the
-    // collect at k ids × 8 bytes — strictly smaller than the k×dim×8
-    // centroid table the SAME loop already gates on the driver — and
-    // the rank is assigned driver-side, so no single-partition window
-    // ever appears in the plan (production logs stay clean of the
-    // "No Partition Defined for Window" WARN the plan gates hunt).
-    // seedHint: the SAME k-smallest-ids array, collected once by a
-    // caller whose sibling trainings need it too (buildIvfPqIndex
-    // collects max(cells, pqKs) ids in one job and slices).
-    val seedIds = if (seedHint != null) seedHint.sorted.take(k)
-      else v.select(col("id")).orderBy(col("id")).limit(k)
-        .as[Long].collect().sorted
+    // collect at k ids × 8 bytes, and the rank is assigned driver-side,
+    // so no single-partition window ever appears in the plan.
+    val seedIds = v.select(col("id")).orderBy(col("id")).limit(k)
+      .as[Long].collect().sorted
     val seeds = s.createDataFrame(seedIds.toSeq.zipWithIndex
       .map { case (id, i) => (id, i.toLong) }).toDF("id", "cell")
     var cent = centFrom(seeds)
@@ -5553,9 +5496,8 @@ object AnnOps {
     val stale = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (it <- 1 to iters) {
       // pin each round: members feeds the next update and the caller.
-      // localCheckpoint is eager, so the centroid broadcast(s) are
-      // consumed by the time it returns — release them (ADVICE:
-      // broadcasts otherwise accumulate one k-row table per Lloyd step).
+      // localCheckpoint is eager, so the shard broadcasts are consumed
+      // by the time it returns — release them.
       val (assigned, release) =
         assignCellsAuto(v, cent, "id", k, dim, maxCentroidBytes)
       val prev = members
@@ -5567,15 +5509,21 @@ object AnnOps {
     (members, cent, () => stale.foreach(DedupOps.releaseLocalCheckpoint))
   }
 
-  /** [[kmeansFromStagedWithCentReleasable]] with the intermediate-pin
-    * thunk dropped — for the LAZY-result operators (filteredTopKIvf,
-    * semanticNearDups family), whose returned frames stay live over
-    * the whole Lloyd structure by contract. Pin-and-release operators
-    * must use the releasable variant or they strand one corpus-sized
-    * membership pin per call (the round-12 leak-spec find: the
-    * returned `cent` is lazy over the second-to-last round's pinned
-    * membership, so that pin cannot be freed until every `cent`
-    * consumer has materialized). */
+  /** Whether a k-row centroid table of width `dim` fits one broadcast
+    * (components + array/row overhead within `maxCentroidBytes`). */
+  private def centroidsFit(k: Long, dim: Long, maxCentroidBytes: Long)
+      : Boolean = k * (dim * 8 + 64) <= maxCentroidBytes
+
+  /** A driver-held (cell, cc, cnrmr) centroid table as a frame. */
+  private def centTable(s: SparkSession,
+      cent: Array[(Long, Array[Long], Double)]): DataFrame =
+    s.createDataFrame(cent.toSeq).toDF("cell", "cc", "cnrmr")
+
+  /** [[kmeansFromStagedWithCentReleasable]] with the thunk dropped —
+    * for the LAZY-result operators (filteredTopKIvf, semanticNearDups
+    * family), whose returned frames stay live over the Lloyd structure
+    * by contract; pin-and-release operators use the releasable
+    * variant. */
   private def kmeansFromStagedWithCent(v: DataFrame, k: Int, iters: Int,
       maxCentroidBytes: Long = DefaultMaxCentroidBytes)
       : (DataFrame, DataFrame) = {
@@ -6025,7 +5973,7 @@ object AnnOps {
           // (round-17 job-count cut). Sharded/legacy falls back.
           val declaredFits = manOpt.flatMap(man => for {
             dk <- man.params.get("cells"); dd <- man.params.get("dim")
-          } yield dk * (dd * 8 + 64) <= maxCentroidBytes)
+          } yield centroidsFit(dk, dd, maxCentroidBytes))
           if (declaredFits.contains(true)) {
             val (out, bc) = assignCellsFromArray(v, collectCentroids(cent),
               "id")

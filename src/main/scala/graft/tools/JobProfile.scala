@@ -1,8 +1,9 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.collection.mutable
 
@@ -15,9 +16,35 @@ import scala.collection.mutable
   * sequential driver-blocking jobs does one operator launch, and how
   * much wall sits BETWEEN them" — this prints both.
   *
+  * Each job is attributed to a graft call site: the first `graft.`
+  * frame (outside this tool, `Pins` and `Overlap`) of the SQL
+  * execution that submitted it, or of the job's own stages when it
+  * runs outside SQL; per query the tool prints jobs and job seconds
+  * per site.
+  *
   * Usage: runMain graft.tools.JobProfile [sfDir] [namePrefix...]
   */
 object JobProfile {
+  private val plumbing =
+    Seq("graft.tools.", "graft.core.Pins", "graft.core.Overlap")
+
+  /** `Class.method:line` of the first graft frame in a call-site
+    * stack, or "(spark)" if there is none. */
+  private[tools] def graftSite(stack: String): String =
+    stack.split("\n").iterator.map(_.trim.stripPrefix("at "))
+      .find(f => f.startsWith("graft.") && !plumbing.exists(f.startsWith))
+      .map { f =>
+        // graft.operators.AnnOps$.$anonfun$buildIvfPqIndex$15(F.scala:4350)
+        // reads AnnOps.buildIvfPqIndex:4350
+        val qualified = f.takeWhile(_ != '(')
+        val cls = qualified.take(qualified.lastIndexOf('.'))
+          .split('.').last.stripSuffix("$")
+        val method = qualified.drop(qualified.lastIndexOf('.') + 1)
+          .stripPrefix("$anonfun$").replaceAll("\\$.*", "")
+        val line = f.dropWhile(_ != ':').drop(1).takeWhile(_ != ')')
+        s"$cls.$method:$line"
+      }.getOrElse("(spark)")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val prefixes = if (args.length > 1) args.drop(1).toSeq else Seq("")
@@ -34,30 +61,40 @@ object JobProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // one record per job: (start, end, nTasks, description)
+    // one record per job: (start, end, tasks, call site)
     case class Job(var start: Long = 0L, var end: Long = 0L,
-        var tasks: Int = 0, var desc: String = "")
+        var tasks: Int = 0, var site: String = "")
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
+    val stageJob = mutable.HashMap.empty[Int, Int]
+    // SQL execution id -> graft call site: AQE runs each query stage as
+    // its own job from a Spark thread, so only the execution that
+    // submitted it knows which operator asked for it
+    val execSite = mutable.HashMap.empty[Long, String]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => jobs.synchronized {
+          execSite(x.executionId) = graftSite(x.details)
+        }
+        case _ => ()
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.synchronized {
           val j = jobs.getOrElseUpdate(e.jobId, Job())
           j.start = e.time
-          j.desc = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")
+          j.site = Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(id => execSite.get(id.toLong))
+            .getOrElse(graftSite(e.stageInfos.map(_.details).mkString("\n")))
+          e.stageIds.foreach(stageJob(_) = e.jobId)
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.synchronized {
           jobs.getOrElseUpdate(e.jobId, Job()).end = e.time
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        jobs.synchronized { /* tasks counted via stage info */
-          val sid = e.stageInfo.stageId
-          // attribute tasks to the job that owns the stage (best effort:
-          // jobs are sequential here, so the last open job owns it)
-          jobs.lastOption.foreach(_._2.tasks += e.stageInfo.numTasks)
-          val _ = sid
+        jobs.synchronized {
+          stageJob.get(e.stageInfo.stageId).flatMap(jobs.get)
+            .foreach(_.tasks += e.stageInfo.numTasks)
         }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -90,18 +127,19 @@ object JobProfile {
       val wall = (System.nanoTime() - t0) / 1e9
       val snap = jobs.synchronized(jobs.toSeq.sortBy(_._1))
       val done = snap.filter(j => j._2.end > 0 && j._2.start > 0)
-      val jobWall = done.map(j => (j._2.end - j._2.start) / 1e3).sum / 1e0
-      val jobSec = done.map(j => (j._2.end - j._2.start) / 1e3)
+      def secs(js: Seq[(Int, Job)]) =
+        js.map(j => (j._2.end - j._2.start) / 1e3).sum
+      val jobWall = secs(done)
       val totTasks = done.map(_._2.tasks).sum
       println(f"PROFILE $name%-28s wall=$wall%7.2fs njobs=${done.size}%4d " +
-        f"jobsum=${jobWall / 1000}%7.2fs gap=${wall - jobWall / 1000}%7.2fs " +
+        f"jobsum=$jobWall%7.2fs gap=${wall - jobWall}%7.2fs " +
         f"tasks=$totTasks%5d")
-      // top 12 jobs by duration, with description heads
-      done.sortBy(j => -(j._2.end - j._2.start)).take(12).foreach { case (id, j) =>
-        println(f"PROFILE   job=$id%4d ${(j.end - j.start) / 1e3}%8.3fs " +
-          f"tasks=${j.tasks}%4d ${j.desc.take(90)}")
-      }
-      val _ = jobSec
+      // jobs per graft call site, in order of each site's first job
+      done.groupBy(_._2.site).toSeq.sortBy(_._2.map(_._1).min)
+        .foreach { case (site, js) =>
+          println(f"PROFILE   site=$site%-60s jobs=${js.size}%4d " +
+            f"jobsum=${secs(js)}%7.3fs")
+        }
     }
     spark.stop()
   }

@@ -161,6 +161,33 @@ class IngestPartParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset(key)
   }
 
+  test("a session codec change between two sweeps of one Ingester " +
+      "changes the next part's codec") {
+    val key = "spark.sql.parquet.compression.codec"
+    val storeRoot = Files.createTempDirectory("graft-parity-store-")
+    val outRoot = Files.createTempDirectory("graft-parity-out-")
+    val rs = RiverSchema(Seq(RiverField("v", RiverType.Double64)))
+    val w = new StreamStore(storeRoot).createStream("codec", rs)
+    val ing = new Ingester(spark, storeRoot, outRoot,
+      IngestSettings(trimConsumedSegments = false))
+    def sweep(from: Int, codec: String): Path = {
+      w.write((from until from + 100).map(i =>
+        Seq[Any](value(RiverType.Double64, i))))
+      spark.conf.set(key, codec)
+      try assert(ing.ingestOnce("codec") == 100) finally spark.conf.unset(key)
+      file(outRoot.resolve("codec").resolve(f"data_${from / 100}%010d.parquet"))
+    }
+    def codecs(f: Path) = footer(f).getBlocks.asScala
+      .flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+    val (p0, p1) = (sweep(0, "gzip"), sweep(100, "zstd"))
+    assert(p0.getFileName.toString.endsWith(".gz.parquet"), p0)
+    assert(p1.getFileName.toString.endsWith(".zstd.parquet"), p1)
+    assert(codecs(p0) == Set(
+      org.apache.parquet.hadoop.metadata.CompressionCodecName.GZIP))
+    assert(codecs(p1) == Set(
+      org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD))
+  }
+
   test("a small bytesPerRowGroup still splits a driver-written part into " +
       "several row groups") {
     val (part, ref) = compare("rg",

@@ -3257,37 +3257,40 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"blocks survive after releasing the output: $leaked")
   }
 
-  test("IVF-PQ codebook training is pool-invariant: a capped pool " +
-      "(pool < pqM) and the default sizing build byte-identical codes " +
-      "and codebooks to the sequential spelling (pool=1), and the " +
-      "train-timeout conf is honored") {
+  test("IVF-PQ build stores the codes and codebooks of the driver-side " +
+      "reference Lloyd, and the train-timeout conf is honored") {
     val s = spark
     import s.implicits._
     val df = annRows(0 until 80).toDF("vid", "emb", "grp").pin()
-    def build(pool: Option[Int]): (Set[String], Set[String]) = {
-      pool.foreach(p =>
-        s.conf.set("spark.graft.ivfpq.trainPool", p.toString))
-      val idx = tmpDir("pool")
-      try AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", idx,
-        cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
-        partitions = 4)
-      finally pool.foreach(_ =>
-        s.conf.unset("spark.graft.ivfpq.trainPool"))
-      val codes = s.read.parquet(s"$idx/gens/gen=0/codes/batch=0")
-        .select("id", "code", "m", "cell")
-        .collect().map(_.toString).toSet
-      val books = s.read.parquet(s"$idx/codebooks")
-        .select("m", "code", "cmean", "cn2")
-        .collect().map(_.toString).toSet
-      (codes, books)
-    }
-    val (codesSeq, booksSeq) = build(Some(1)) // the sequential spelling
-    val (codesCap, booksCap) = build(Some(2)) // capped: 2 < pqM=4
-    val (codesDef, booksDef) = build(None)    // min(pqM, parallelism)
-    assert(codesCap == codesSeq && booksCap == booksSeq,
-      "capped pool drifted from the sequential codes/codebooks")
-    assert(codesDef == codesSeq && booksDef == booksSeq,
-      "default pool drifted from the sequential codes/codebooks")
+    val idx = tmpDir("train")
+    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", idx,
+      cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
+      partitions = 4)
+    // the reference trains on the staged vectors the build stored
+    val staged = s.read.parquet(s"$idx/gens/gen=0/batches/batch=0")
+      .select("id", "c").as[(Long, Array[Long])].collect().toSeq
+    val (members, _, means) = LloydReference.reference(staged, cells = 4,
+      iters = 2, pqM = 4, pqKs = 4, pqIters = 2, dsub = 4,
+      LloydReference.Seen())
+    val codes = s.read.parquet(s"$idx/gens/gen=0/codes/batch=0")
+      .select("id", "code", "m", "cell").as[(Long, Long, Int, Long)]
+      .collect().toSet
+    assert(codes == members.toSeq.flatMap { case (id, (cell, cs)) =>
+      cs.zipWithIndex.map { case (code, m) => (id, code, m, cell) }
+    }.toSet, "stored codes differ from the reference")
+    val books = s.read.parquet(s"$idx/codebooks")
+      .select("m", "code", "cmean", "cn2")
+      .as[(Int, Long, Seq[Double], Double)].collect()
+      .map { case (m, code, mu, cn2) =>
+        (m, code, mu.map(java.lang.Double.doubleToRawLongBits),
+          java.lang.Double.doubleToRawLongBits(cn2)) }.toSet
+    assert(books == means.zipWithIndex.flatMap { case (book, m) =>
+      book.map { case (code, bits) =>
+        val mu = bits.map(java.lang.Double.longBitsToDouble)
+        (m, code, bits,
+          java.lang.Double.doubleToRawLongBits(mu.map(x => x * x).sum))
+      }
+    }.toSet, "stored codebooks differ from the reference")
     // the Await bound is a conf, not a hard-coded hour: a zero bound
     // must fail the build loudly (and the catch path cancels/releases,
     // leaving no pinned blocks behind beyond the input)
@@ -3362,11 +3365,9 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select("m", "code", "cmean", "cn2")
         .collect().map(_.toString).toSet)
     val ref = tmpDir("ctag-ref")
-    s.conf.set("spark.graft.ivfpq.trainPool", "1")
-    try AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", ref,
+    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", ref,
       cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
       partitions = 4)
-    finally s.conf.unset("spark.graft.ivfpq.trainPool")
     assert(artifacts(dirOk) == artifacts(ref),
       "surviving build's codes/codebooks drifted from the serial " +
         "reference — its jobs were disturbed")
