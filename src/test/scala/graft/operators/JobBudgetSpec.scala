@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * 80-row ANN corpus). Job counts are deterministic where wall times
   * are not: a rise fails here, and a fall updates the pinned number.
   * Each k-means or PQ training round the caller asks for must cost
-  * exactly one more job — the rounds train every quantizer in one
-  * shared pass.
+  * exactly one more job when the centroid table fits one broadcast —
+  * the rounds train every quantizer in one shared pass — and a fixed
+  * number of jobs past that budget.
   */
 class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -105,7 +106,90 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(semantic(3) == base + 1, "one more k-means round")
   }
 
+  private def kmeans(iters: Int, budget: Long): Int = jobsOf {
+    val out = AnnOps.kmeansCells(df, "vid", "emb", k = 4, iters = iters,
+      partitions = 4, maxCentroidBytes = budget)
+    DedupOps.releaseLocalCheckpoint(out)
+  }
+
+  /** The jobs of `op` at 2 rounds, and what each round after that adds
+    * (the same for the third and the fourth). */
+  private def perRound(op: Int => Int): (Int, Int) = {
+    val Seq(two, three, four) = Seq(2, 3, 4).map(op)
+    assert(four - three == three - two,
+      s"rounds cost unequal jobs: $two, $three, $four")
+    (two, three - two)
+  }
+
+  test("kmeansCells: pinned job budget at the default budget; a fixed " +
+      "cost per round") {
+    val (base, round) = perRound(kmeans(_, AnnOps.DefaultMaxCentroidBytes))
+    assert(base == KmeansJobs, s"kmeansCells launched $base jobs")
+    assert(round == KmeansRoundJobs, s"one more round cost $round jobs")
+  }
+
+  test("kmeansCells: pinned job budget past the centroid budget (one " +
+      "cell per shard); a fixed cost per round") {
+    val (base, round) = perRound(kmeans(_, 1L))
+    assert(base == ShardedKmeansJobs, s"kmeansCells launched $base jobs")
+    assert(round == ShardedKmeansRoundJobs,
+      s"one more round cost $round jobs")
+  }
+
+  test("appendIvfPqIndex: pinned job budget for one batch") {
+    val s = spark
+    import s.implicits._
+    val idx = tmpDir("append")
+    AnnOps.buildIvfPqIndex(df.filter($"vid" < 64), "vid", "emb", "grp",
+      idx, cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
+      partitions = 4)
+    val n = jobsOf {
+      AnnOps.appendIvfPqIndex(df.filter($"vid" >= 64), "vid", "emb", "grp",
+        idx, 1L, partitions = 4)
+    }
+    assert(n == AppendJobs, s"appendIvfPqIndex launched $n jobs")
+  }
+
+  test("queryIvfPqIndex: pinned job budget") {
+    val s = spark
+    import s.implicits._
+    val idx = tmpDir("query")
+    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", idx, cells = 4,
+      iters = 2, pqM = 4, pqKs = 4, pqIters = 2, partitions = 4)
+    val n = jobsOf {
+      val out = AnnOps.queryIvfPqIndex(df.filter($"vid" < 8), "vid", "emb",
+        "grp", idx, k = 3, nprobe = 2, rerankDepth = 12, partitions = 4)
+      DedupOps.releaseLocalCheckpoint(out)
+    }
+    assert(n == QueryJobs, s"queryIvfPqIndex launched $n jobs")
+  }
+
+  test("incrementalSemanticDedupDurable: pinned job budget for the " +
+      "bootstrap batch plus one increment") {
+    val s = spark
+    import s.implicits._
+    val idx = tmpDir("semantic")
+    val n = jobsOf {
+      AnnOps.incrementalSemanticDedupDurable(df.filter($"vid" < 64),
+        "vid", "emb", idx, 0L, threshold = 0.99, cells = 4, iters = 2,
+        partitions = 4, probe = false)
+      val pairs = AnnOps.incrementalSemanticDedupDurable(
+        df.filter($"vid" >= 64), "vid", "emb", idx, 1L, threshold = 0.99,
+        cells = 4, iters = 2, partitions = 4)
+      DedupOps.releaseLocalCheckpoint(pairs)
+    }
+    assert(n == IncrementalSemanticJobs,
+      s"incrementalSemanticDedupDurable launched $n jobs")
+  }
+
   private val BuildJobs = 13
   private val InlineJobs = 25
   private val SemanticJobs = 10
+  private val KmeansJobs = 6
+  private val KmeansRoundJobs = 1
+  private val ShardedKmeansJobs = 14
+  private val ShardedKmeansRoundJobs = 5
+  private val AppendJobs = 14
+  private val QueryJobs = 26
+  private val IncrementalSemanticJobs = 28
 }
