@@ -8,6 +8,9 @@ import org.apache.spark.sql.graftnative.functions.dot_i64
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Overlap
 import graft.core.Pins.PinnedDataset
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import scala.util.control.NonFatal
 
 /** Reusable training-data pipeline operators over ARBITRARY DataFrames.
   *
@@ -46,18 +49,18 @@ import graft.core.Pins.PinnedDataset
   */
 private[graft] object Parts {
   /** Target bytes per staged partition when the caller lets the engine
-    * choose (`partitions = 0`). Deployment knob; the 64 MB default is
-    * the shuffle-partition sizing the optimization guide recommends
-    * (§2.2: partitions in the 100 MB–1 GB range beat KB-sized ones).
+    * choose (`partitions = 0`): the shuffle-partition sizing the
+    * optimization guide recommends (§2.2: partitions in the 100 MB–1 GB
+    * range beat KB-sized ones).
     */
-  final val TargetBytesConf = "spark.graft.parts.targetBytes"
+  private val TargetBytes = 64L << 20
 
-  /** Floor on the adaptive choice (conf override): a staging below it
-    * would serialize the per-task compute and the partitioned index
-    * writes that read it (measured: 1-partition stagings made the
-    * ivfpq appends SLOWER — 16 cell files written sequentially by one
-    * task — while 8 kept the win). Never raises above the cap. */
-  final val MinPartsConf = "spark.graft.parts.minParts"
+  /** Floor on the adaptive choice: a staging below it would serialize
+    * the per-task compute and the partitioned index writes that read it
+    * (measured: 1-partition stagings made the ivfpq appends SLOWER — 16
+    * cell files written sequentially by one task — while 8 kept the
+    * win). Never raises above the cap. */
+  private val MinParts = 8
 
   /** Estimates >= this are the optimizer saying "unknown" (its unknown
     * sentinel is `spark.sql.defaultSizeInBytes` = Long.MaxValue) —
@@ -99,19 +102,16 @@ private[graft] object Parts {
       // nothing here is tuned to the local core count).
       val sess = df.sparkSession
       val cap = sess.sessionState.conf.numShufflePartitions
-      val floor = math.min(cap,
-        sess.conf.getOption(MinPartsConf).map(_.toInt).getOrElse(8))
-      val target = sess.conf.getOption(TargetBytesConf)
-        .map(_.toLong).getOrElse(64L << 20)
+      val floor = math.min(cap, MinParts)
       val est =
         try {
           val leaves = df.queryExecution.analyzed.collectLeaves()
           leaves.map(_.stats.sizeInBytes).foldLeft(BigInt(0))(_ + _)
-        } catch { case _: Throwable => UnknownBytes }
+        } catch { case NonFatal(_) => UnknownBytes }
       if (est <= 0 || est >= UnknownBytes) cap
       // x3: scaled-long staging of a float corpus roughly triples the
       // bytes; erring high only adds partitions below the cap
-      else ((est * 3 + target - 1) / target)
+      else ((est * 3 + TargetBytes - 1) / TargetBytes)
         .min(BigInt(cap)).max(BigInt(floor)).toInt
     }
   }
@@ -2993,7 +2993,7 @@ object AnnOps {
     * `nprobe` is the standard IVF recall dial: search the query's
     * top-P cells BY CENTROID SCORE instead of only its own. Rank 1 is
     * the query's own assignment (same exact integer-dot argmax, ties
-    * cell-ascending — [[kmeansFromStagedWithCent]]'s contract, parity
+    * cell-ascending — [[kmeans]]'s contract, parity
     * pinned by PipelineOpsSpec), so nprobe = 1 is EXACTLY the
     * single-cell search and higher P strictly widens the candidate
     * set: cost grows ~linearly in P (P (cell, key) probes per query),
@@ -3040,8 +3040,7 @@ object AnnOps {
     val staged = scaledImpl(df, idCol, vecCol, Some(keyCol), partitions)
     val keys = staged.select(col("id"), col("key"))
     val v = withRawNorm(staged)
-    val (members, cent) =
-      kmeansFromStagedWithCent(v, cells, iters, maxCentroidBytes)
+    val (members, cent, _) = kmeans(v, cells, iters, maxCentroidBytes)
     val keyed = members.join(keys, Seq("id"))
     val qside = ivfProbeSide(v, keys, keyed, cent, isQuery, nprobe)
     // queries are few (the s01/s03 convention): broadcast the query
@@ -3161,14 +3160,12 @@ object AnnOps {
     }
 
   /** The IVF cells and the pqM L2 codebooks of one IVF-PQ corpus, the
-    * training both IVF-PQ builders share: when the cell table fits the
-    * driver, every quantizer trains in the same [[lloydRounds]] passes;
-    * past the budget the cells take the sharded k-means and the
-    * codebooks (pqKs rows each, always small) train alone. Returns the
+    * training both IVF-PQ builders share: every quantizer trains in the
+    * same [[lloydRounds]] passes at any cell-table size. Returns the
     * (id, cell, codes) membership, the centroid table the final cell
     * assignment scored, each subspace's (code, mean) table, and a thunk
-    * that frees every pin the training made — call it once the
-    * membership and the centroid table are consumed.
+    * that frees the membership and the centroid table — call it once
+    * both are consumed.
     */
   private def trainIvfPq(v: DataFrame, cells: Int, iters: Int,
       pqM: Int, pqKs: Int, pqIters: Int, dim: Int,
@@ -3176,25 +3173,12 @@ object AnnOps {
       : (DataFrame, DataFrame, Array[Array[(Long, Array[Double])]],
         () => Unit) = {
     require(cells >= 1 && iters >= 1, s"kmeans: k=$cells iters=$iters")
-    val dsub = (dim + pqM - 1) / pqM
-    if (centroidsFit(cells, dim, maxCentroidBytes)) {
-      val (members, cent, means) =
-        lloydRounds(v, cells, iters, pqM, pqKs, pqIters, dsub)
-      (members, centTable(v.sparkSession, cent), means,
-        () => DedupOps.releaseLocalCheckpoint(members))
-    } else {
-      val (cellsP, cent, stale) = kmeansFromStagedWithCentReleasable(v,
-        cells, iters, maxCentroidBytes, dimHint = dim)
-      val (codesP, _, means) =
-        try lloydRounds(v, 0, 0, pqM, pqKs, pqIters, dsub)
-        catch { case e: Throwable =>
-          stale(); DedupOps.releaseLocalCheckpoint(cellsP); throw e }
-      (cellsP.join(codesP, Seq("id")), cent, means, () => {
-        stale()
-        DedupOps.releaseLocalCheckpoint(cellsP)
-        DedupOps.releaseLocalCheckpoint(codesP)
-      })
-    }
+    val (members, cent, means, release) = lloydRounds(v, cells, iters,
+      pqM, pqKs, pqIters, (dim + pqM - 1) / pqM, dim, maxCentroidBytes)
+    (members, cent, means, () => {
+      release()
+      DedupOps.releaseLocalCheckpoint(members)
+    })
   }
 
   /** The (m, code, cmean, cn2) codebook table of trained PQ means. */
@@ -4363,8 +4347,8 @@ object AnnOps {
     * frozen-artifact discipline applied to serving: nightly embedding
     * batches must not re-cluster or re-quantize the world. The batch
     * assigns against the FROZEN coarse centroids (one
-    * [[assignCellsAuto]] map pass — bit-identical to what the build
-    * would have assigned, the kmeansFromStagedWithCent contract),
+    * [[assignCells]] map pass — bit-identical to what the build
+    * would have assigned, the [[lloydRounds]] contract),
     * encodes against the FROZEN codebooks (the SAME
     * [[l2Nearest]] kernel the training loop ran, so append-time
     * codes cannot drift from build-time codes), and commits
@@ -4411,18 +4395,14 @@ object AnnOps {
     // batch of ONLY null vectors carries no dim at all (dimStats comes
     // back null) and must commit, not throw — one all-null trigger
     // would otherwise crash a long-lived append stream (ADVICE).
-    // k and the stored dim come from the SAME collect the broadcast
-    // assignment needs anyway (round-17 job-count cut: the previous
-    // scalar aggregate was one extra job over the same KB-sized
-    // table, and assignCellsKeepBc then re-collected it). The
-    // broadcast-budget gate uses the manifest's DECLARED shape —
-    // written by the build, zero jobs — and falls back to the
-    // two-pass spelling when the table is too big to collect (the
-    // sharded path) or the manifest does not declare the params.
-    val declaredFits = for {
+    // k and the index dim are the manifest's DECLARED shape — written
+    // by the build, zero jobs (round-17 job-count cut); an index whose
+    // manifest does not declare them pays one aggregate over the
+    // stored table.
+    val declared = for {
       dk <- man.params.get("cells"); dd <- man.params.get("dim")
-    } yield centroidsFit(dk, dd, maxCentroidBytes)
-    // OVERLAP LAYOUT (guide §2.6). The centroid collect and the
+    } yield (dk, dd)
+    // OVERLAP LAYOUT (guide §2.6). The centroid shipping and the
     // codebook collect read only the FROZEN stored artifacts — they
     // are independent of the batch, so they launch before the staging
     // even starts (round-18 job-count cut: the centroid collect used
@@ -4437,17 +4417,15 @@ object AnnOps {
     val cent = s.read.parquet(s"$indexDir/centroids")
     Overlap(s, 2, "ivfpq-append") { ov =>
       val fCent = ov.fork {
-        if (declaredFits.contains(true)) {
-          val cents = collectCentroids(cent)
-          val sd = if (cents.isEmpty) 0
-            else cents.iterator.map(_._2.length).min
-          (cents.length.toLong, sd, Some(cents))
-        } else {
+        val (k, dim) = declared.getOrElse {
           val centStats = cent
             .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0)))
             .head()
-          (centStats.getLong(0), centStats.getInt(1), None)
+          (centStats.getLong(0), centStats.getInt(1).toLong)
         }
+        val shards = shipTable(cent, k, dim, maxCentroidBytes)
+        ov.onFailure(destroyShards(shards))
+        (dim, shards)
       }
       val fBooks = ov.fork {
         s.read.parquet(s"$indexDir/codebooks")
@@ -4464,20 +4442,14 @@ object AnnOps {
             max(size(col("c"))).as("hi"))
           .head()
       }
-      val (k, storedDim, preAssigned) = fCent.join()
+      val (storedDim, shards) = fCent.join()
       // the assignment + pin runs on THIS thread while the dim and
       // codebook forks are in flight
-      val (assigned, releaseAssign) = preAssigned match {
-        case Some(cents) =>
-          val (out, bc) = assignCellsFromArray(v, cents, "id")
-          (out, () => bc.destroy())
-        case None =>
-          assignCellsAuto(v, cent, "id", k, storedDim, maxCentroidBytes)
-      }
-      val rows = ov.own(assigned.join(v, Seq("id")).join(keys, Seq("id"))
+      val rows = ov.own(nearestCells(v, shards).join(v, Seq("id"))
+        .join(keys, Seq("id"))
         .select(col("id"), col("cell"), col("c"), col("nrm"), col("key"))
         .pin())
-      releaseAssign()
+      destroyShards(shards)
       val dimStats = fDim.join()
       val books = fBooks.join()
       require(dimStats.isNullAt(0) ||
@@ -4539,7 +4511,7 @@ object AnnOps {
     * quantization, probe their top-`nprobe` coarse cells by the same
     * exact scoring the build's assignment used (rank 1 of a member
     * vector reproduces its stored cell — the
-    * [[kmeansFromStagedWithCent]] contract, so nprobe = 1 equals the
+    * [[kmeans]] contract, so nprobe = 1 equals the
     * inline operator's member-cell search), generate (cell, key)
     * candidates against the STORED rows, rank them with the ADC scan
     * over the STORED codes/codebooks, and exact-rerank the top
@@ -4707,122 +4679,206 @@ object AnnOps {
     out
   }
 
-  /** The Lloyd loop of every k-means and PQ training whose centroid
-    * table fits the driver ([[centroidsFit]]): the cosine IVF cells
-    * (`cells` > 0, `iters` rounds) and the pqM L2 codebooks of the
-    * `dsub`-wide subspaces (`pqKs` codes, `pqIters` rounds) train
-    * TOGETHER, one Spark job per round — the MLlib Lloyd step: one
-    * seed collect, one job per round but the last, and the final pin.
+  /** The one Lloyd loop: every k-means and PQ training runs through it.
+    * The cosine IVF cells (`cells` > 0, `iters` rounds) and the pqM L2
+    * codebooks of the `dsub`-wide subspaces (`pqKs` codes, `pqIters`
+    * rounds) train TOGETHER, one Spark job per round — the MLlib Lloyd
+    * step. The cell table, priced at width `dim`, reaches the executors
+    * as [[Shards]] of at most `maxCentroidBytes`; the codebooks are
+    * always small and travel as one broadcast.
     *
     *  - Seeds: the max(cells, pqKs) smallest-id rows of `v`; seed i is
     *    cell (code) i of every quantizer unless its vector (slice) is
-    *    null or empty.
+    *    null or empty. When the cell table is one shard, one collect
+    *    brings the seed rows to the driver; past that the collect
+    *    brings only their ids, and a pass shaped like a round stages
+    *    the seed table shard by shard.
     *  - Round: one map pass assigns every row under every quantizer
     *    still training ([[cosineNearest]] for cells, [[l2Nearest]] over
     *    `c[m*dsub, +dsub)` for codes) and emits per-(quantizer, cell)
-    *    exact Long component sums and member counts, reduced by key.
-    *    Long addition regroups exactly, so partitioning cannot change
-    *    the next tables: a centroid is its cell's sum with the exact
-    *    raw norm ([[centFromMembers]]'s arithmetic); a mean is its
-    *    code's sum over ALL members, null and empty slices counted. A
-    *    cell or code with no non-empty member vanishes.
+    *    exact Long component sums and member counts, reduced by key
+    *    straight into the shard partitions ([[ShardPartitioner]]) and
+    *    staged as the next table's broadcasts ([[stageShards]]), so the
+    *    driver holds at most the shards in flight. Long addition
+    *    regroups exactly, so neither partitioning nor sharding can
+    *    change the next tables: a centroid is its cell's sum with the
+    *    exact raw norm; a mean is its code's sum over ALL members, null
+    *    and empty slices counted. A cell or code with no non-empty
+    *    member vanishes.
     *  - Final pass: each quantizer's last table assigns every row (a
     *    frozen table reproduces its last assignment); that membership
     *    (id, cell, codes: code per subspace) is the one pin.
     *
-    * Returns the pinned membership — (id, cell) without codebooks,
-    * (id, codes) without cells — and the cell-ascending tables it was
-    * scored against: (cell, cc, cnrmr) centroids and, per subspace,
-    * (code, mean). A duplicated id trains as two rows.
+    * With one shard that is one seed collect, one job per round but the
+    * last, and the final pin. Returns the pinned membership — (id, cell)
+    * without codebooks, (id, codes) without cells — the (cell, cc,
+    * cnrmr) centroid table it was scored against, each subspace's
+    * cell-ascending (code, mean) table, and a thunk freeing what the
+    * centroid table still reads: nothing with one shard (a driver-built
+    * frame), the shard broadcasts past that — call it once every
+    * consumer of the table has run. A duplicated id trains as two rows
+    * (past one shard, a duplicated seed id seeds one cell with both).
+    * A failure destroys every broadcast the loop made.
     */
   private[operators] def lloydRounds(v: DataFrame, cells: Int, iters: Int,
-      pqM: Int = 0, pqKs: Int = 0, pqIters: Int = 0, dsub: Int = 0)
-      : (DataFrame, Array[(Long, Array[Long], Double)],
-        Array[Array[(Long, Array[Double])]]) = {
+      pqM: Int = 0, pqKs: Int = 0, pqIters: Int = 0, dsub: Int = 0,
+      dim: Int = 0, maxCentroidBytes: Long = DefaultMaxCentroidBytes)
+      : (DataFrame, DataFrame, Array[Array[(Long, Array[Double])]],
+        () => Unit) = {
     val s = v.sparkSession
+    val sc = s.sparkContext
     import s.implicits._
     def sliceLen(c: Array[Long], m: Int): Int =
       if (c == null) 0 else math.max(0, math.min(dsub, c.length - m * dsub))
     def books(means: Array[Array[(Long, Array[Double])]]) =
       means.map(_.map { case (code, mu) => (code, mu, mu.map(x => x * x).sum) })
-    val seeds = v.select(col("id"), col("c")).orderBy(col("id"))
-      .limit(math.max(cells, pqKs)).as[(Long, Array[Long])].collect()
-      .sortBy(_._1).map(_._2)
-    var cent = seeds.take(cells).zipWithIndex.collect {
-      case (c, i) if c != null && c.nonEmpty => (i.toLong, c, rawNorm(c))
-    }
-    val means = Array.tabulate(pqM) { m =>
-      seeds.take(pqKs).zipWithIndex.collect {
-        case (c, i) if sliceLen(c, m) > 0 => (i.toLong,
-          Array.tabulate(sliceLen(c, m))(j => c(m * dsub + j).toDouble))
-      }
-    }
+    val perShard = shardCells(dim, maxCentroidBytes)
+    val nShards = shardCount(cells, perShard)
+    val byShard = new ShardPartitioner(nShards, perShard)
+    // one shard's result bytes; the codebook partition is far smaller
+    val partBytes =
+      math.min(perShard, math.max(1L, cells.toLong)) * centRowBytes(dim)
     val rows = v.select(col("id"), col("c"),
         coalesce(col("nrmr"), lit(Double.NaN)).as("nrmr"))
       .as[(Long, Array[Long], Double)]
-    for (r <- 1 until math.max(iters, pqIters)) {
-      val trainCells = cells > 0 && r < iters
-      val trainBooks = if (r < pqIters) pqM else 0
-      val bc = s.sparkContext.broadcast(
-        (if (trainCells) cent else null, books(means.take(trainBooks))))
-      val sums = try rows.rdd.mapPartitions { it =>
-        val (cs, bs) = bc.value
-        // key (-1, cell) is a coarse cell, (m, code) a subspace code
-        val acc = scala.collection.mutable.HashMap
-          .empty[(Int, Long), (Array[Long], Long)]
-        def add(q: Int, cell: Long, c: Array[Long], off: Int, len: Int)
-            : Unit = {
-          val (a0, n) = acc.getOrElse((q, cell), (Array.emptyLongArray, 0L))
-          val a = if (a0.length < len) java.util.Arrays.copyOf(a0, len) else a0
-          var i = 0
-          while (i < len) { a(i) += c(off + i); i += 1 }
-          acc((q, cell)) = (a, n + 1)
-        }
-        it.foreach { case (_, c, nrmr) =>
-          if (cs != null)
-            add(-1, cosineNearest(c, nrmr, cs), c, 0,
-              if (c == null) 0 else c.length)
-          var m = 0
-          while (m < bs.length) {
-            val len = sliceLen(c, m)
-            add(m, l2Nearest(c, m * dsub, len, bs(m)), c, m * dsub, len)
-            m += 1
-          }
-        }
-        acc.iterator
-      }.reduceByKey { (x: (Array[Long], Long), y: (Array[Long], Long)) =>
-        val (big, small) =
-          if (x._1.length >= y._1.length) (x._1, y._1) else (y._1, x._1)
-        val out = java.util.Arrays.copyOf(big, big.length)
-        var i = 0
-        while (i < small.length) { out(i) += small(i); i += 1 }
-        (out, x._2 + y._2)
-      }.collect() finally bc.destroy()
-      val byQ = sums.filter(_._2._1.nonEmpty).sortBy(_._1._2).groupBy(_._1._1)
-      def of(q: Int) = byQ.getOrElse(q, Array.empty[((Int, Long), (Array[Long], Long))])
-      if (trainCells)
-        cent = of(-1).map { case ((_, cell), (cc, _)) => (cell, cc, rawNorm(cc)) }
-      (0 until trainBooks).foreach { m =>
-        means(m) = of(m).map { case ((_, code), (cc, n)) =>
-          (code, cc.map(_.toDouble / n)) }
+    val seedN = math.max(cells, pqKs)
+    val means = Array.fill(pqM)(Array.empty[(Long, Array[Double])])
+    var cent: Shards = Array.empty
+    var bcBooks: Broadcast[Array[Array[(Long, Array[Double], Double)]]] = null
+    // one pass's partial sums, reduced into the shards of the next cell
+    // table (kept when `newCells`) and the first `newBooks` codebooks
+    def fold(partials: RDD[((Int, Long), (Array[Long], Long))],
+        newCells: Boolean, newBooks: Int): Unit = {
+      val (next, side) = stageShards(
+        partials.reduceByKey(byShard, LloydSums.merge _).mapPartitions(
+          _.collect { case ((q, k), (cc, n)) if cc.nonEmpty =>
+            (q, k, cc, n, if (q < 0) rawNorm(cc) else 0.0) }),
+        nShards, partBytes)
+      if (newCells) { destroyShards(cent); cent = next }
+      else destroyShards(next)
+      val byM = side.groupBy(_._1)
+      (0 until newBooks).foreach { m =>
+        means(m) = byM.getOrElse(m, Array.empty[ShardRow])
+          .map(r => (r._2, r._3.map(_.toDouble / r._4)))
       }
     }
-    val bc = s.sparkContext.broadcast(
-      (if (cells > 0) cent else null, books(means)))
-    val members = try {
+    try {
+      if (nShards == 1) {
+        val seeds = v.select(col("id"), col("c")).orderBy(col("id"))
+          .limit(seedN).as[(Long, Array[Long])].collect()
+          .sortBy(_._1).map(_._2)
+        cent = Array(sc.broadcast(seeds.take(cells).zipWithIndex.collect {
+          case (c, i) if c != null && c.nonEmpty => (i.toLong, c, rawNorm(c))
+        }))
+        (0 until pqM).foreach { m =>
+          means(m) = seeds.take(pqKs).zipWithIndex.collect {
+            case (c, i) if sliceLen(c, m) > 0 => (i.toLong,
+              Array.tabulate(sliceLen(c, m))(j => c(m * dsub + j).toDouble))
+          }
+        }
+      } else {
+        val ids = v.select(col("id")).orderBy(col("id")).limit(seedN)
+          .as[Long].collect().sorted
+        val rank = sc.broadcast(ids.zipWithIndex.toMap)
+        try fold(rows.rdd.mapPartitions { it =>
+          val rk = rank.value
+          val acc = new LloydSums
+          it.foreach { case (id, c, _) => rk.get(id).foreach { r =>
+            if (r < cells) acc.add(-1, r, c, 0, if (c == null) 0 else c.length)
+            if (r < pqKs) (0 until pqM).foreach { m =>
+              acc.add(m, r, c, m * dsub, sliceLen(c, m)) }
+          } }
+          acc.iterator
+        }, newCells = true, newBooks = pqM)
+        finally rank.destroy()
+      }
+      for (r <- 1 until math.max(iters, pqIters)) {
+        val trainCells = cells > 0 && r < iters
+        val trainBooks = if (r < pqIters) pqM else 0
+        val cs = if (trainCells) cent else Array.empty[CentShard]
+        bcBooks = sc.broadcast(books(means.take(trainBooks)))
+        val bb = bcBooks
+        fold(rows.rdd.mapPartitions { it =>
+          val table = if (trainCells) cs.flatMap(_.value) else null
+          val bs = bb.value
+          // key (-1, cell) is a coarse cell, (m, code) a subspace code
+          val acc = new LloydSums
+          it.foreach { case (_, c, nrmr) =>
+            if (table != null)
+              acc.add(-1, cosineNearest(c, nrmr, table), c, 0,
+                if (c == null) 0 else c.length)
+            var m = 0
+            while (m < bs.length) {
+              val len = sliceLen(c, m)
+              acc.add(m, l2Nearest(c, m * dsub, len, bs(m)), c, m * dsub, len)
+              m += 1
+            }
+          }
+          acc.iterator
+        }, trainCells, trainBooks)
+        bcBooks.destroy()
+        bcBooks = null
+      }
+      bcBooks = sc.broadcast(books(means))
+      val (cs, bb) = (cent, bcBooks)
       val out = rows.mapPartitions { it =>
-        val (cs, bs) = bc.value
+        val table = if (cells > 0) cs.flatMap(_.value) else null
+        val bs = bb.value
         it.map { case (id, c, nrmr) =>
-          (id, if (cs == null) -1L else cosineNearest(c, nrmr, cs),
+          (id, if (table == null) -1L else cosineNearest(c, nrmr, table),
             Array.tabulate(bs.length) { m =>
               l2Nearest(c, m * dsub, sliceLen(c, m), bs(m)) })
         }
       }.toDF("id", "cell", "codes")
-      (if (pqM == 0) out.select(col("id"), col("cell"))
+      val members = (if (pqM == 0) out.select(col("id"), col("cell"))
         else if (cells == 0) out.select(col("id"), col("codes"))
         else out).pin()
-    } finally bc.destroy()
-    (members, cent, means)
+      bcBooks.destroy()
+      bcBooks = null
+      if (nShards == 1) {
+        val table = centTable(s, cent.flatMap(_.value))
+        destroyShards(cent)
+        (members, table, means, () => ())
+      } else {
+        val live = cent
+        (members, shardTable(s, live), means, () => destroyShards(live))
+      }
+    } catch { case e: Throwable =>
+      destroyShards(cent)
+      if (bcBooks != null) bcBooks.destroy()
+      throw e
+    }
+  }
+
+  /** Per-partition exact Long component sums and member counts of one
+    * Lloyd pass, keyed (quantizer, cell): quantizer -1 is the coarse
+    * cells, m >= 0 subspace m's codes. A member adds `len` components
+    * from `off` and counts once, however short its slice. */
+  private final class LloydSums {
+    private val acc = scala.collection.mutable.HashMap
+      .empty[(Int, Long), (Array[Long], Long)]
+    def add(q: Int, cell: Long, c: Array[Long], off: Int, len: Int)
+        : Unit = {
+      val (a0, n) = acc.getOrElse((q, cell), (Array.emptyLongArray, 0L))
+      val a = if (a0.length < len) java.util.Arrays.copyOf(a0, len) else a0
+      var i = 0
+      while (i < len) { a(i) += c(off + i); i += 1 }
+      acc((q, cell)) = (a, n + 1)
+    }
+    def iterator: Iterator[((Int, Long), (Array[Long], Long))] = acc.iterator
+  }
+
+  private object LloydSums {
+    /** Two partial sums of one key, element-wise (the shorter padded). */
+    def merge(x: (Array[Long], Long), y: (Array[Long], Long))
+        : (Array[Long], Long) = {
+      val (big, small) =
+        if (x._1.length >= y._1.length) (x._1, y._1) else (y._1, x._1)
+      val out = java.util.Arrays.copyOf(big, big.length)
+      var i = 0
+      while (i < small.length) { out(i) += small(i); i += 1 }
+      (out, x._2 + y._2)
+    }
   }
 
   /** The PQ code of one vector: exact argmin over the codebook `cs`
@@ -5078,16 +5134,20 @@ object AnnOps {
     * per-cell component SUM (cosine routing is scale-invariant, so sum
     * == mean and nothing divides), assignment = argmax exact-integer
     * dot over raw norms with ties broken cell-ascending. Every Lloyd
-    * step is one broadcast of k centroid arrays + a map-side argmax +
-    * a partial-aggregated component sum — the canonical distributed
-    * k-means; no step touches pairs. Semantics pinned by the
-    * oracle-checked s02/s07 queries.
+    * step is one map pass over the staged vectors against the shipped
+    * centroid table plus a map-side pre-combined component sum
+    * ([[lloydRounds]]) — the canonical distributed k-means; no step
+    * touches pairs. Semantics pinned by the oracle-checked s02/s07
+    * queries. A failed call releases its staging.
     */
   def kmeansCells(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 2, partitions: Int = 0,
-      maxCentroidBytes: Long = DefaultMaxCentroidBytes): DataFrame =
-    kmeansFromStaged(withRawNorm(scaled(df, idCol, vecCol, partitions)),
-      k, iters, maxCentroidBytes)
+      maxCentroidBytes: Long = DefaultMaxCentroidBytes): DataFrame = {
+    val staged = scaled(df, idCol, vecCol, partitions)
+    try kmeans(withRawNorm(staged), k, iters, maxCentroidBytes)._1
+    catch { case e: Throwable =>
+      DedupOps.releaseLocalCheckpoint(staged); throw e }
+  }
 
   /** LAZY projection — deliberately NOT pinned (round-17 job-count
     * cut): the input is always the scaledImpl staging, already pinned,
@@ -5101,86 +5161,14 @@ object AnnOps {
     v.select(col("id"), col("c"), col("nrm"),
         sqrt(dot_i64(col("c"), col("c")).cast("double")).as("nrmr"))
 
-  /** Argmax-cosine assignment of every staged vector to a centroid, as a
-    * single map pass: the (cell, cc, cnrmr) centroid table — k rows,
-    * k × dim × 8 bytes, so ~5 MB at k=10k/dim=64 but ~0.6 GB at
-    * SemDeDup-realistic k=100k/dim=768 — is collected and broadcast ONCE
-    * per Lloyd step (the caller destroys each step's broadcast as soon
-    * as the assignment is pinned; past [[DefaultMaxCentroidBytes]] the
-    * Lloyd loop routes to [[assignCellsSharded]] instead, so the driver
-    * never holds the full table), and each partition scores its
-    * vectors against all k centroids in a tight primitive loop. No per-vector explode, no N×k
-    * intermediate rows, no window shuffle: the only rows that move are
-    * the (id, cell) output. (The previous spelling exploded k copies of
-    * every vector through a broadcast join and resolved the argmax with
-    * a row_number window — a full shuffle+sort of N×k scored rows, which
-    * at k ~ 100k cells for 100M docs is 10^13 rows.)
-    *
-    * Arithmetic is bit-identical to the declarative spelling the oracle
-    * pins: exact i64 dot (same wrap semantics as [[dot_i64]]), score =
-    * dot.toDouble / (nrmr * cnrmr) (the identical IEEE expression), ties
-    * broken cell-ascending (cells are scored in ascending order and only
-    * a STRICTLY greater score replaces the incumbent; NaN scores — a
-    * zero centroid — order greatest like Spark's descending sort, via
-    * java.lang.Double.compare). The driver-side collect is the measured
-    * k-row centroid table, never the corpus — the same contract as the
-    * [[knnGraphBroadcast]] kernel.
-    */
-  private[graft] def assignCells(v: DataFrame, cent: DataFrame,
-      idCol: String): DataFrame = assignCellsKeepBc(v, cent, idCol)._1
-
-  /** Broadcast-size budget for one centroid table: above it the Lloyd
-    * assignment shards the table instead of collecting all k rows on the
-    * driver at once ([[assignCellsSharded]]). 64 MiB holds k=100k at
-    * dim≈80 or k=10k at dim=768 — past that, SemDeDup-realistic tables
-    * reach ~0.6 GB and the single collect becomes the driver bound.
+  /** Broadcast-size budget for one shard of a centroid table
+    * ([[Shards]]): a table within it ships as one broadcast, a larger
+    * one as several, so the driver never holds it whole. 64 MiB holds
+    * k=100k at dim≈80 or k=10k at dim=768 — past that,
+    * SemDeDup-realistic tables reach ~0.6 GB and one collect becomes
+    * the driver bound.
     */
   val DefaultMaxCentroidBytes: Long = 64L << 20
-
-  /** [[assignCells]], also returning the iteration's centroid broadcast
-    * so the caller can destroy() it once the assignment is pinned
-    * (localCheckpoint) — otherwise every Lloyd step's k-row table
-    * accumulates on the executors for the job's lifetime.
-    */
-  private[graft] def assignCellsKeepBc(v: DataFrame, cent: DataFrame,
-      idCol: String): (DataFrame, org.apache.spark.broadcast
-        .Broadcast[Array[(Long, Array[Long], Double)]]) =
-    assignCellsFromArray(v, collectCentroids(cent), idCol)
-
-  /** The one centroid-table collect every broadcast-path consumer
-    * shares — callers that also need k / the stored dim derive them
-    * from the returned array instead of paying separate scalar-agg
-    * jobs over the same KB-sized table (round-17 job-count cut). */
-  private[graft] def collectCentroids(cent: DataFrame)
-      : Array[(Long, Array[Long], Double)] = {
-    val s = cent.sparkSession
-    import s.implicits._
-    cent.select(col("cell"), col("cc"), col("cnrmr"))
-      .as[(Long, Array[Long], Double)].collect().sortBy(_._1)
-  }
-
-  /** [[assignCellsKeepBc]] over an already-collected centroid table. */
-  private[graft] def assignCellsFromArray(v: DataFrame,
-      cents: Array[(Long, Array[Long], Double)], idCol: String)
-      : (DataFrame, org.apache.spark.broadcast
-        .Broadcast[Array[(Long, Array[Long], Double)]]) = {
-    val s = v.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    // A null embedding (null c ⇒ null nrmr) must not crash the primitive
-    // Double decode; coalesce null nrmr to NaN. Every per-cell score is
-    // then NaN, so the j==0 branch keeps the FIRST (smallest) cell —
-    // exactly where the declarative spelling's row_number (score desc
-    // nulls-last, cell asc tie-break) lands such a row.
-    val out = v.select(col(idCol), col("c"),
-        coalesce(col("nrmr"), lit(Double.NaN)).as("nrmr"))
-      .as[(Long, Array[Long], Double)]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, c, nrmr) => (id, cosineNearest(c, nrmr, cs)) }
-      }.toDF(idCol, "cell")
-    (out, bc)
-  }
 
   /** The cell of one vector: argmax over the ascending (cell, cc,
     * cnrmr) table of the exact i64 dot (same wrap semantics as
@@ -5188,8 +5176,9 @@ object AnnOps {
     * greater java.lang.Double.compare replaces the incumbent, so ties
     * break cell-ascending and NaN scores (a zero centroid; every score
     * of a null vector, whose nrmr is NaN) order greatest. An empty
-    * table gives -1. The kernel of [[assignCellsFromArray]] and
-    * [[lloydRounds]]. */
+    * table gives -1. The kernel of [[assignCells]] and
+    * [[lloydRounds]]; bit-identical to the declarative spelling the
+    * s02 oracle pins. */
   private def cosineNearest(c: Array[Long], nrmr: Double,
       cs: Array[(Long, Array[Long], Double)]): Long = {
     var bestCell = if (cs.isEmpty) -1L else cs(0)._1
@@ -5210,224 +5199,177 @@ object AnnOps {
     bestCell
   }
 
-  /** [[assignCellsKeepBc]] when the k-row centroid table exceeds a
-    * driver/broadcast byte budget: the table is split into contiguous
-    * ascending cell-range SHARDS ([i*perShard, (i+1)*perShard) over the
-    * seed range 0..k-1 — cells are ranks by construction), each
-    * broadcast separately, so the driver's working set is a handful of
-    * shards at a time (the staging resultHandler drops each shard's
-    * array right after its broadcast; in-flight deserialization is
-    * bounded by the task-result-getter pool; the block-manager copies
-    * are spillable), never the 0.6 GB table the SemDeDup operating
-    * point produces. Staging is one partitionBy shuffle of the k-row
-    * table plus maxResultSize-bounded wide runJob batches — NOT S
-    * sequential collect jobs, whose launch latency round 8 measured at
-    * 3.1x the assignment itself at S=72. The
-    * assignment itself stays ONE map pass over the staged vectors —
-    * each task walks the shard broadcasts in ascending cell order in
-    * the same tight primitive loop — so there is no extra scan, no
-    * union, and no reduce shuffle; the only rows that move are the
-    * (id, cell) output, exactly like the unsharded kernel, and cost
-    * stays flat in k at fixed N×k×dim work (SCALE_r08 probe).
-    *
-    * Bit-identical to the unsharded kernel: shards are disjoint
-    * ascending ranges, so their concatenation IS the ascending table
-    * and [[cosineNearest]] scans it unchanged. Plan shape gated by
-    * PlanInvariantsSpec; parity spec in PipelineOpsSpec.
-    *
-    * Executor-side, `bc.value` caches each deserialized shard in the
-    * block manager (memory-and-disk), so a long-lived executor
-    * eventually holds the full table — the acceptable side of the
-    * trade: executors are many and spill; the driver is one.
-    *
-    * Returns the assignment plus a release() thunk destroying every
-    * shard broadcast — call it only after the assignment is pinned.
-    */
-  private[graft] def assignCellsSharded(v: DataFrame, cent: DataFrame,
-      idCol: String, k: Long, maxCentroidBytes: Long,
-      dimBytes: Long): (DataFrame, () => Unit) = {
-    val s = v.sparkSession
-    import s.implicits._
-    // pin the k-row table once so the per-shard collects are cheap
-    // scans of pinned blocks, not re-runs of the centroid-update
-    // aggregation. NO coalesce: collapsing to one partition would also
-    // collapse the centroid-update's reduce into a single task and a
-    // single ~k×dim×8 B block on one executor — a funnel (and past 2 GB
-    // a hard failure) at exactly the scale that triggers sharding.
-    val centP = cent.pin()
-    val perShard = math.max(1L, maxCentroidBytes / math.max(1L, dimBytes))
-    val nShards = ((k + perShard - 1) / perShard).toInt
-    // Stage ALL shards through ONE partitionBy shuffle plus a few
-    // wide `runJob` batches instead of S sequential filter+collect
-    // jobs — round 8 measured the sequential spelling at 3.1x the
-    // unsharded time at S=72, pure per-job launch latency (~75 ms x
-    // S per Lloyd step). Each result task sorts its shard
-    // executor-side; the resultHandler broadcasts each shard as its
-    // task result lands and drops the reference, so the driver
-    // user-heap working set is bounded by the task-result-getter's
-    // deserialization pool (4 shards), never S. Batching exists
-    // because spark.driver.maxResultSize caps CUMULATIVE task-result
-    // bytes PER JOB (the per-shard jobs never hit it; one giant job
-    // would at ~16+ default-size shards): each batch stays under half
-    // the cap, so staging is ceil(tableBytes / (maxResultSize/2))
-    // jobs — 1 at probe scale, ~S/8 at 64 MiB shards — each batch
-    // overlapping all its shard scans in one scheduler round.
-    val sc = s.sparkContext
-    val shardOf = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = nShards
-      override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  /** One shard of a (cell, cc, cnrmr) centroid table, cell-ascending. */
+  private type CentShard = Broadcast[Array[(Long, Array[Long], Double)]]
+
+  /** A centroid table as the executors receive it: shard i holds the
+    * cells in [i*perShard, (i+1)*perShard) ([[shardCells]]), one
+    * broadcast of at most `maxCentroidBytes` each, so the shards in
+    * order ARE the ascending table [[cosineNearest]] scans. A table
+    * within the budget is one shard. Executor-side `bc.value` caches
+    * each shard in the block manager (memory-and-disk): executors are
+    * many and spill; the driver is one. */
+  private type Shards = Array[CentShard]
+
+  /** A staged table row: (quantizer, cell or code, component sum,
+    * members, raw norm of the sum — cells only). */
+  private type ShardRow = (Int, Long, Array[Long], Long, Double)
+
+  /** Bytes one centroid row of width `dim` costs: its components plus
+    * array and row overhead. */
+  private def centRowBytes(dim: Long): Long = dim * 8 + 64
+
+  /** Cells per shard: as many rows as the budget holds, at least one,
+    * so a budget below one row ships one cell per shard. */
+  private def shardCells(dim: Long, maxCentroidBytes: Long): Long =
+    math.max(1L, maxCentroidBytes / centRowBytes(dim))
+
+  /** Shards of a `k`-cell table (one for an empty table). */
+  private def shardCount(k: Long, perShard: Long): Int =
+    math.max(1L, (k + perShard - 1) / perShard).toInt
+
+  /** Routes a (quantizer, cell) key to its [[Shards]] partition: a
+    * coarse cell (quantizer -1) to cell / perShard (clamped to the last
+    * shard, whose sort keeps the table ascending), every codebook key
+    * to the one partition after the shards. */
+  private final class ShardPartitioner(nShards: Int, perShard: Long)
+      extends org.apache.spark.Partitioner {
+    override def numPartitions: Int = nShards + 1
+    override def getPartition(key: Any): Int = key match {
+      case (q: Int, cell: Long) if q < 0 =>
+        math.max(0L, math.min(nShards - 1L, cell / perShard)).toInt
+      case _ => nShards
     }
-    val shardRdd = centP
-      .select(col("cell"), col("cc"), col("cnrmr"))
-      .as[(Long, Array[Long], Double)]
-      .rdd
-      .map(r => ((r._1 / perShard).toInt, r))
-      .partitionBy(shardOf)
-      .values
-    val bcs = new Array[org.apache.spark.broadcast.Broadcast[
-      Array[(Long, Array[Long], Double)]]](nShards)
+  }
+
+  /** Ships a table whose partitions 0 until `nShards` hold one shard's
+    * rows each (any order; [[ShardPartitioner]]'s layout): each shard is
+    * sorted executor-side and broadcast on THIS thread as it lands.
+    * Returns the shards and the rows of any later partition (the
+    * codebook sums), sorted by (quantizer, code).
+    *
+    * Results come back through `submitJob`, in batches whose summed
+    * size (`partBytes` per partition) stays under half of
+    * spark.driver.maxResultSize, the cap Spark puts on one job's
+    * results: one job at every budget the operators use. The
+    * DAGScheduler's result handler only enqueues, so a broadcast never
+    * stalls the scheduler's event loop, and the driver holds only the
+    * shards that landed but are not yet broadcast. A failed or
+    * cancelled job, or an interrupt, cancels the batch, destroys every
+    * shard broadcast so far and rethrows. */
+  private def stageShards(parts: RDD[ShardRow], nShards: Int,
+      partBytes: Long): (Shards, Array[ShardRow]) = {
+    val sc = parts.sparkContext
+    val n = parts.getNumPartitions
+    val shards = new Array[CentShard](nShards)
+    var side = Array.empty[ShardRow]
     val maxResult =
       sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    // a shard's result bytes are perShard x dimBytes — NOT
-    // maxCentroidBytes, which UNDERcounts when the budget is below one
-    // row (perShard clamps to 1, e.g. the force-shard test pattern
-    // maxCentroidBytes = 1) and would then put the whole table in one
-    // job, tripping the per-job maxResultSize abort
-    val shardBytes = math.max(1L, perShard * dimBytes)
-    val shardsPerJob = if (maxResult <= 0L) nShards
-      else math.max(1L, (maxResult / 2) / shardBytes).toInt
-    // The resultHandler runs on the DAGScheduler event-loop thread
-    // (ADVICE): sc.broadcast there serializes up-to-64 MiB blocks while
-    // ALL job scheduling waits — harmless on an idle local probe, a
-    // scheduler stall on a shared cluster with concurrent jobs. So the
-    // handler only ENQUEUES (a non-blocking put — the event loop never
-    // waits on us), and THIS thread broadcasts each shard as it lands,
-    // concurrently with the still-running job (submitJob, not runJob,
-    // so the caller thread is free to drain). The one-shard-at-a-time
-    // broadcast order is preserved; driver heap is bounded by the
-    // queue's transient depth — at most the broadcaster's lag behind
-    // result arrival, itself capped by the batch's maxResultSize/2
-    // result bytes — and each array is dropped right after its
-    // broadcast, exactly as before.
-    var jlo = 0
-    while (jlo < nShards) {
-      val jhi = math.min(nShards, jlo + shardsPerJob)
-      val base = jlo
-      val queue = new java.util.concurrent.LinkedBlockingQueue[
-        (Int, Array[(Long, Array[Long], Double)])]()
-      val fut = sc.submitJob(
-        shardRdd,
-        (it: Iterator[(Long, Array[Long], Double)]) =>
-          it.toArray.sortBy(_._1),
-        base until jhi: Seq[Int],
-        (idx: Int, shard: Array[(Long, Array[Long], Double)]) =>
-          queue.put((base + idx, shard)),
-        ())
-      var received = 0
-      while (received < jhi - base) {
-        val item = queue.poll(100, java.util.concurrent.TimeUnit.MILLISECONDS)
-        if (item != null) {
-          bcs(item._1) = sc.broadcast(item._2)
-          received += 1
-        } else if (fut.isCompleted) {
-          // a failed job never delivers every result — surface its
-          // exception instead of polling forever (a successful early
-          // completion just means the queue already holds the rest)
-          fut.value.get.get
-        }
+    val perJob = if (maxResult <= 0L) n
+      else math.min(n.toLong,
+        math.max(1L, (maxResult / 2) / math.max(1L, partBytes))).toInt
+    try {
+      var lo = 0
+      while (lo < n) {
+        val hi = math.min(n, lo + perJob)
+        val base = lo
+        val landed = new java.util.concurrent.LinkedBlockingQueue[
+          (Int, Array[ShardRow])]()
+        val fut = sc.submitJob(parts,
+          (it: Iterator[ShardRow]) => it.toArray.sortBy(r => (r._1, r._2)),
+          base until hi,
+          (i: Int, rows: Array[ShardRow]) => landed.put((base + i, rows)),
+          ())
+        try {
+          var got = 0
+          while (got < hi - base) {
+            val item =
+              landed.poll(100, java.util.concurrent.TimeUnit.MILLISECONDS)
+            if (item != null) {
+              val (p, rows) = item
+              if (p < nShards)
+                shards(p) = sc.broadcast(rows.map(r => (r._2, r._3, r._5)))
+              else side = rows
+              got += 1
+            } else if (fut.isCompleted) {
+              // a failed job never delivers every result: surface its
+              // exception (a successful one already queued the rest)
+              fut.value.get.get
+            }
+          }
+        } finally if (!fut.isCompleted) fut.cancel()
+        lo = hi
       }
-      jlo = jhi
+    } catch { case e: Throwable => destroyShards(shards); throw e }
+    (shards, side)
+  }
+
+  /** Destroys every shard broadcast, once: a slot is cleared as its
+    * broadcast goes, so a second call is a no-op. */
+  private def destroyShards(shards: Shards): Unit =
+    shards.indices.foreach { i =>
+      val b = shards(i)
+      if (b != null) { shards(i) = null; b.destroy() }
     }
-    val out = v.select(col(idCol), col("c"),
+
+  /** Ships a stored (cell, cc, cnrmr) table of `k` cells of width `dim`
+    * as [[Shards]]: one collect when it is one shard, else one shuffle
+    * into the shard partitions plus [[stageShards]]. */
+  private def shipTable(cent: DataFrame, k: Long, dim: Long,
+      maxCentroidBytes: Long): Shards = {
+    val s = cent.sparkSession
+    import s.implicits._
+    val perShard = shardCells(dim, maxCentroidBytes)
+    val nShards = shardCount(k, perShard)
+    val table = cent.select(col("cell"), col("cc"), col("cnrmr"))
+      .as[(Long, Array[Long], Double)]
+    if (nShards == 1)
+      Array(s.sparkContext.broadcast(table.collect().sortBy(_._1)))
+    else stageShards(
+      table.rdd.map { case (cell, cc, cn) =>
+          ((-1, cell), (-1, cell, cc, 0L, cn): ShardRow) }
+        .partitionBy(new ShardPartitioner(nShards, perShard)).values,
+      nShards, perShard * centRowBytes(dim))._1
+  }
+
+  /** The (cell, cc, cnrmr) frame of shipped [[Shards]], read back from
+    * the broadcasts: lazy, valid until they are destroyed. */
+  private def shardTable(s: SparkSession, shards: Shards): DataFrame = {
+    import s.implicits._
+    s.sparkContext.parallelize(shards.indices, shards.length)
+      .flatMap(i => shards(i).value).toDF("cell", "cc", "cnrmr")
+  }
+
+  /** Argmax-cosine assignment of every staged (id, c, nrmr) vector to a
+    * FROZEN (cell, cc, cnrmr) table of `k` cells of width `dim` — the
+    * appends' path: the table ships as [[Shards]] of at most
+    * `maxCentroidBytes` ([[shipTable]]), and ONE map pass scores each
+    * vector against the shards in ascending cell order with
+    * [[cosineNearest]], the kernel the training ran, so a frozen table
+    * reproduces the build's assignment bit for bit. No per-vector
+    * explode, no N×k rows, no window, no shuffle: the only rows that
+    * move are the (id, cell) output. A null embedding (null nrmr, so
+    * NaN scores) keeps the smallest cell. Returns the lazy assignment
+    * and a thunk destroying the shards — call it once the assignment
+    * has been consumed. Plan shape gated by PlanInvariantsSpec.
+    */
+  private[graft] def assignCells(v: DataFrame, cent: DataFrame, k: Long,
+      dim: Long, maxCentroidBytes: Long): (DataFrame, () => Unit) = {
+    val shards = shipTable(cent, k, dim, maxCentroidBytes)
+    (nearestCells(v, shards), () => destroyShards(shards))
+  }
+
+  /** [[assignCells]]'s map pass over already-shipped shards. */
+  private def nearestCells(v: DataFrame, shards: Shards): DataFrame = {
+    val s = v.sparkSession
+    import s.implicits._
+    v.select(col("id"), col("c"),
         coalesce(col("nrmr"), lit(Double.NaN)).as("nrmr"))
       .as[(Long, Array[Long], Double)]
       .mapPartitions { it =>
-        // the shards in order ARE the ascending table
-        val cs = bcs.flatMap(_.value)
+        val cs = shards.flatMap(_.value)
         it.map { case (id, c, nrmr) => (id, cosineNearest(c, nrmr, cs)) }
-      }.toDF(idCol, "cell")
-    DedupOps.releaseLocalCheckpoint(centP)
-    (out, () => bcs.foreach(_.destroy()))
-  }
-
-  /** One Lloyd assignment step, routed by the centroid-table byte
-    * budget: under `maxCentroidBytes` the single-broadcast
-    * [[assignCellsKeepBc]] kernel (unchanged small-k path, zero extra
-    * jobs); over it the [[assignCellsSharded]] kernel. `k` and `dim`
-    * are known to the caller, so the gate costs no measurement job.
-    */
-  private[graft] def assignCellsAuto(v: DataFrame, cent: DataFrame,
-      idCol: String, k: Long, dim: Int,
-      maxCentroidBytes: Long): (DataFrame, () => Unit) = {
-    if (centroidsFit(k, dim, maxCentroidBytes)) {
-      val (out, bc) = assignCellsKeepBc(v, cent, idCol)
-      (out, () => bc.destroy())
-    } else assignCellsSharded(v, cent, idCol, k, maxCentroidBytes,
-      dim.toLong * 8 + 64)
-  }
-
-  /** Per-cell component sums of the member vectors, pre-combined
-    * map-side: each partition accumulates ONE array per cell it sees and
-    * emits (cell, partial-sum) rows, so the shuffle feeding the final
-    * per-(cell, i) aggregation carries ≤ |cells| × |partitions| rows
-    * instead of the N × dim posexplode of every member vector. Long
-    * addition is associative/commutative (identical wrap semantics
-    * regrouped), so the downstream sums are bit-identical to the
-    * exploded spelling.
-    */
-  private[graft] def cellPartialSums(joined: DataFrame): DataFrame = {
-    val s = joined.sparkSession
-    import s.implicits._
-    joined.select(col("cell"), col("c")).as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        val acc = scala.collection.mutable.HashMap.empty[Long, Array[Long]]
-        it.foreach { case (cell, c) =>
-          if (c != null && c.nonEmpty) {
-            var a = acc.getOrElse(cell, Array.emptyLongArray)
-            if (a.length < c.length) {
-              a = java.util.Arrays.copyOf(a, c.length)
-              acc(cell) = a
-            }
-            var i = 0
-            while (i < c.length) { a(i) += c(i); i += 1 }
-          }
-        }
-        acc.iterator
-      }.toDF("cell", "ps")
-  }
-
-  /** (cell, cc: array<long> component sums, cnrmr: raw norm) of the
-    * member vectors — the Lloyd centroid-update step, fed by the
-    * [[cellPartialSums]] kernel. Partials merge as WHOLE ARRAYS through
-    * a typed element-wise reduce, so the update shuffle carries at most
-    * |cells| × |partitions| array rows — the previous posexplode
-    * spelling shuffled |cells| × |partitions| × dim scalar rows plus a
-    * per-cell collect_list sort, a dim× row blowup (~10^10 rows at the
-    * SemDeDup operating point of k=100k, dim=768, 1000 map partitions)
-    * for the same bytes. Long addition is associative/commutative
-    * (identical wrap semantics regrouped) and the self-dot sums exact
-    * BigInteger squares with ONE correctly-rounded double conversion —
-    * the same exact value (hence bit-identical double) as the previous
-    * decimal(19,0)^2 aggregate, which the s02/s07/s11 oracles pin.
-    */
-  private[graft] def centFromMembers(v: DataFrame, members: DataFrame,
-      idCol: String): DataFrame = {
-    val s = v.sparkSession
-    import s.implicits._
-    cellPartialSums(v.join(members, Seq(idCol))
-        .select(col("cell"), col("c")))
-      .as[(Long, Array[Long])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .reduceGroups { (a: Array[Long], b: Array[Long]) =>
-        val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
-        val out = java.util.Arrays.copyOf(big, big.length)
-        var i = 0
-        while (i < small.length) { out(i) += small(i); i += 1 }
-        out
-      }
-      .map { case (cell, cc) => (cell, cc, rawNorm(cc)) }
-      .toDF("cell", "cc", "cnrmr")
+      }.toDF("id", "cell")
   }
 
   /** sqrt of the exact BigInteger self-dot of a component sum, with ONE
@@ -5443,94 +5385,41 @@ object AnnOps {
     math.sqrt(sq.doubleValue())
   }
 
-  private def kmeansFromStaged(v: DataFrame, k: Int, iters: Int,
-      maxCentroidBytes: Long = DefaultMaxCentroidBytes): DataFrame =
-    kmeansFromStagedWithCent(v, k, iters, maxCentroidBytes)._1
-
-  /** [[kmeansFromStaged]] also returning the centroid table the FINAL
-    * Lloyd assignment scored against — the multi-probe contract: the
-    * rank-1 cell of any member vector under this table IS its `members`
-    * assignment (same exact integer-dot argmax, ties cell-ascending),
-    * so a top-P probe against it strictly widens the search
-    * ([[filteredTopKIvf]]'s nprobe; PipelineOpsSpec pins the rank-1
-    * parity). When the k-row table fits the driver ([[centroidsFit]])
-    * the loop is [[lloydRounds]] — one job per round, and `cent` is a
-    * driver-built table with no lineage. Past the budget every round
-    * assigns through the sharded kernel and updates the table with
-    * [[centFromMembers]]; there `cent` is lazy over the second-to-last
-    * round's pinned membership, and the returned thunk frees the
-    * superseded memberships once every `cent` consumer has run.
+  /** k-means over a staged (id, c, nrmr) frame — the one entry of every
+    * cell-only training ([[lloydRounds]] without codebooks). Returns the
+    * pinned (id, cell) membership, the centroid table its final
+    * assignment scored against, and [[lloydRounds]]'s thunk for that
+    * table. The table is the multi-probe contract: the rank-1 cell of
+    * any member vector under it IS its membership (same exact
+    * integer-dot argmax, ties cell-ascending), so a top-P probe against
+    * it strictly widens the search ([[filteredTopKIvf]]'s nprobe;
+    * PipelineOpsSpec pins the rank-1 parity). `dim` prices the table;
+    * when the caller does not know it, a limit-1 probe of the first
+    * non-empty vector reads it — NOT a max over all rows, a full extra
+    * pass. dim is constant by scaled()'s transform; a ragged corpus
+    * could under-price the budget and ship fewer, larger shards, which
+    * is correct at any dim. Lazy-result callers (filteredTopKIvf, the
+    * semanticNearDups family) drop the thunk: their frames stay live
+    * over the table by contract.
     */
-  private def kmeansFromStagedWithCentReleasable(v: DataFrame, k: Int,
-      iters: Int, maxCentroidBytes: Long = DefaultMaxCentroidBytes,
-      dimHint: Int = -1)
+  private[graft] def kmeans(v: DataFrame, k: Int, iters: Int,
+      maxCentroidBytes: Long = DefaultMaxCentroidBytes, dim: Int = -1)
       : (DataFrame, DataFrame, () => Unit) = {
     require(k >= 1 && iters >= 1, s"kmeans: k=$k iters=$iters")
     val s = v.sparkSession
     import s.implicits._
-    // dim prices the centroid table (k is already known). A limit-1
-    // probe of the first non-null vector — NOT a max over all rows:
-    // that would be a full extra pass over the pinned staging on every
-    // call. dim is constant by scaled()'s transform; a ragged corpus
-    // could under-price the gate and take the driver path, which is
-    // correct (just driver-heavier) at any dim. A caller that already
-    // validated the corpus width passes it as dimHint.
-    val dim = if (dimHint >= 0) dimHint
+    val d = if (dim >= 0) dim
       else v.select(size(col("c")).as("d")).filter(col("d") > 0)
         .limit(1).as[Int].collect().headOption.getOrElse(0)
-    if (centroidsFit(k, dim, maxCentroidBytes)) {
-      val (members, cent, _) = lloydRounds(v, k, iters)
-      return (members, centTable(s, cent), () => ())
-    }
-    def centFrom(members: DataFrame): DataFrame =
-      centFromMembers(v, members, "id")
-    // seeds: the k smallest ids, cell = rank. TakeOrdered bounds the
-    // collect at k ids × 8 bytes, and the rank is assigned driver-side,
-    // so no single-partition window ever appears in the plan.
-    val seedIds = v.select(col("id")).orderBy(col("id")).limit(k)
-      .as[Long].collect().sorted
-    val seeds = s.createDataFrame(seedIds.toSeq.zipWithIndex
-      .map { case (id, i) => (id, i.toLong) }).toDF("id", "cell")
-    var cent = centFrom(seeds)
-    var members: DataFrame = null
-    val stale = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (it <- 1 to iters) {
-      // pin each round: members feeds the next update and the caller.
-      // localCheckpoint is eager, so the shard broadcasts are consumed
-      // by the time it returns — release them.
-      val (assigned, release) =
-        assignCellsAuto(v, cent, "id", k, dim, maxCentroidBytes)
-      val prev = members
-      members = assigned.pin()
-      release()
-      if (prev != null) stale += prev
-      if (it < iters) cent = centFrom(members)
-    }
-    (members, cent, () => stale.foreach(DedupOps.releaseLocalCheckpoint))
+    val (members, cent, _, release) =
+      lloydRounds(v, k, iters, dim = d, maxCentroidBytes = maxCentroidBytes)
+    (members, cent, release)
   }
-
-  /** Whether a k-row centroid table of width `dim` fits one broadcast
-    * (components + array/row overhead within `maxCentroidBytes`). */
-  private def centroidsFit(k: Long, dim: Long, maxCentroidBytes: Long)
-      : Boolean = k * (dim * 8 + 64) <= maxCentroidBytes
 
   /** A driver-held (cell, cc, cnrmr) centroid table as a frame. */
   private def centTable(s: SparkSession,
       cent: Array[(Long, Array[Long], Double)]): DataFrame =
     s.createDataFrame(cent.toSeq).toDF("cell", "cc", "cnrmr")
-
-  /** [[kmeansFromStagedWithCentReleasable]] with the thunk dropped —
-    * for the LAZY-result operators (filteredTopKIvf, semanticNearDups
-    * family), whose returned frames stay live over the Lloyd structure
-    * by contract; pin-and-release operators use the releasable
-    * variant. */
-  private def kmeansFromStagedWithCent(v: DataFrame, k: Int, iters: Int,
-      maxCentroidBytes: Long = DefaultMaxCentroidBytes)
-      : (DataFrame, DataFrame) = {
-    val (members, cent, _) =
-      kmeansFromStagedWithCentReleasable(v, k, iters, maxCentroidBytes)
-    (members, cent)
-  }
 
   /** Semantic dedup, SemDeDup-style (cluster-then-dedup): partition the
     * embedding space with [[kmeansCells]], then report near-duplicate
@@ -5548,7 +5437,7 @@ object AnnOps {
       partitions: Int = 0,
       maxCentroidBytes: Long = DefaultMaxCentroidBytes): DataFrame = {
     val v = withRawNorm(scaled(df, idCol, vecCol, partitions))
-    val members = kmeansFromStaged(v, cells, iters, maxCentroidBytes)
+    val (members, _, _) = kmeans(v, cells, iters, maxCentroidBytes)
     pairsWithinCells(v, members, threshold)
   }
 
@@ -5685,7 +5574,7 @@ object AnnOps {
       maxCellOccupancy: Int = 1000, partitions: Int = 0,
       maxCentroidBytes: Long = DefaultMaxCentroidBytes): DataFrame = {
     val v = withRawNorm(scaled(df, idCol, vecCol, partitions))
-    val members = kmeansFromStaged(v, cells, iters, maxCentroidBytes)
+    val (members, _, _) = kmeans(v, cells, iters, maxCentroidBytes)
     pairsWithinCellsCapped(v, members, threshold, maxCellOccupancy)
   }
 
@@ -5718,7 +5607,7 @@ object AnnOps {
     require(caps.nonEmpty, "need at least one occupancy-cap point")
     val staged0 = scaled(df, idCol, vecCol, partitions)
     val v = withRawNorm(staged0)
-    val members = kmeansFromStaged(v, cells, iters, maxCentroidBytes)
+    val (members, _, _) = kmeans(v, cells, iters, maxCentroidBytes)
     val x = members.join(v, Seq("id"))
       .select(col("cell"), col("id"), col("c"), col("nrm"))
       .pin()
@@ -5828,7 +5717,7 @@ object AnnOps {
     val n = v.count()
     val cells = math.max(1L,
       (n + targetCellSize - 1) / targetCellSize).min(Int.MaxValue).toInt
-    val members = kmeansFromStaged(v, cells, iters, maxCentroidBytes)
+    val (members, _, _) = kmeans(v, cells, iters, maxCentroidBytes)
     pairsWithinCells(v, members, threshold)
   }
 
@@ -5837,7 +5726,7 @@ object AnnOps {
     * embedding batches must NOT re-cluster the world. The FIRST batch
     * defines the space — k-means trains on it and the centroid table
     * FREEZES at `indexDir/centroids`; every later batch is one
-    * [[assignCellsAuto]] map pass against the frozen table (no Lloyd
+    * [[assignCells]] map pass against the frozen table (no Lloyd
     * iterations ever again), its (id, cell, vector) rows commit to
     * the live generation's `batches/batch=<id>`, and near-dup search
     * touches only
@@ -5852,7 +5741,7 @@ object AnnOps {
     * batching (each pair surfaces exactly once, when its later
     * endpoint arrives). The frozen-centroid contract is what makes
     * batch == incremental provable: every batch's cell is
-    * argmax-cosine against the SAME table ([[kmeansFromStagedWithCent]]
+    * argmax-cosine against the SAME table ([[kmeans]]
     * returns the members' own table, so a replay of the training batch
     * through the frozen path reassigns bit-identically). The
     * oracle-checked s15 query pins the two-batch composition; the
@@ -5957,34 +5846,28 @@ object AnnOps {
       val (assignedRaw, release): (DataFrame, () => Unit) =
         if (!fs.exists(centPath)) {
           val (members, cent, kmeansRelease) =
-            kmeansFromStagedWithCentReleasable(v, cells, iters,
-              maxCentroidBytes)
+            kmeans(v, cells, iters, maxCentroidBytes)
           // the centroid write is an action, so `cent` is fully
-          // consumed here — the thunk (freeing the intermediate Lloyd
-          // memberships) is safe to run at the shared release point
+          // consumed here — the thunk (freeing the table's shards past
+          // one) is safe to run at the shared release point
           cent.write.mode("overwrite").parquet(centPath.toString)
           (members, kmeansRelease)
         } else {
+          // k and dim from the manifest's DECLARED shape (zero jobs,
+          // round-17 job-count cut); an index whose manifest is not
+          // written yet pays one aggregate over the stored table
           val cent = s.read.parquet(centPath.toString)
-          // broadcast-budget gate from the manifest's DECLARED shape
-          // (zero jobs); when it fits, ONE collect serves the
-          // assignment — the count + dim-probe jobs the previous
-          // spelling paid per increment priced the same table twice
-          // (round-17 job-count cut). Sharded/legacy falls back.
-          val declaredFits = manOpt.flatMap(man => for {
+          val (k, dim) = manOpt.flatMap(man => for {
             dk <- man.params.get("cells"); dd <- man.params.get("dim")
-          } yield centroidsFit(dk, dd, maxCentroidBytes))
-          if (declaredFits.contains(true)) {
-            val (out, bc) = assignCellsFromArray(v, collectCentroids(cent),
-              "id")
-            (out, () => bc.destroy())
-          } else {
-            val k = cent.count()
-            val dim = v.select(size(col("c")).as("d")).filter(col("d") > 0)
-              .limit(1).as[Int].collect().headOption.getOrElse(0)
-            assignCellsAuto(v, cent, "id", k, dim, maxCentroidBytes)
+          } yield (dk, dd)).getOrElse {
+            val centStats = cent
+              .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0)))
+              .head()
+            (centStats.getLong(0), centStats.getInt(1).toLong)
           }
+          assignCells(v, cent, k, dim, maxCentroidBytes)
         }
+      ov.onFailure(release())
       ov.own(assignedRaw)
       val own = ov.own(assignedRaw.join(v, Seq("id"))
         .select(col("id"), col("cell"), col("c"), col("nrm"))

@@ -165,31 +165,17 @@ object Similarity {
         sqrt(dot_i64($"c", $"c").cast("double")).as("nrmr"))
       .pin()
 
-    // Lloyd steps run through the shared AnnOps kernels (the same code
-    // s07 uses): centroid update = map-side pre-combined partial sums
-    // (≤ cells × partitions shuffled rows, not the N × dim posexplode),
-    // assignment = one broadcast of the K-row centroid table + a
-    // map-pass argmax (no N×K explode, no row_number window shuffle).
-    // Arithmetic is bit-identical to the declarative spelling the s02
-    // oracle pins — see the kernels' scaladocs.
-    def centFrom(members: DataFrame): DataFrame =
-      graft.operators.AnnOps.centFromMembers(v, members, "vec_id")
-
-    var cent = centFrom(v.filter($"vec_id" < K)
-      .select($"vec_id", $"vec_id".as("cell")))
-    var members: DataFrame = null
-    for (it <- 1 to KMEANS_ITERS) {
-      // pin each round: members feeds both the next centroid update and
-      // the final cell search; unpinned, the lineage doubles per round.
-      // localCheckpoint is eager, so each step's centroid broadcast is
-      // spent once it returns — destroy it.
-      val (assigned, bc) =
-        graft.operators.AnnOps.assignCellsKeepBc(v, cent, "vec_id")
-      members = assigned.pin()
-      bc.destroy()
-      if (it < KMEANS_ITERS) cent = centFrom(members)
-    }
-    (v, members)
+    // the Lloyd rounds are AnnOps's one loop, the one s07 runs: each
+    // round is one map pass that assigns every vector against the
+    // broadcast K-row centroid table (no N×K explode, no row_number
+    // window shuffle) and pre-combines the per-cell component sums
+    // map-side. Its seeds, the K smallest ids, are the rows vec_id < K
+    // (vec_id is dense from 0), and its arithmetic is bit-identical to
+    // the declarative spelling the s02 oracle pins — see the kernels'
+    // scaladocs.
+    val (members, _, _) = graft.operators.AnnOps.kmeans(
+      v.withColumnRenamed("vec_id", "id"), K, KMEANS_ITERS)
+    (v, members.withColumnRenamed("id", "vec_id"))
   }
 
   private def ivfDf(s: SparkSession, dir: String): DataFrame = {
@@ -343,10 +329,11 @@ object Similarity {
     * dot product.
     *
     * Construction is fully deterministic and oracle-checked end-to-end:
-    *  - per-subspace codebooks come from the SAME Lloyd kernel the
-    *    s02/s07 k-means uses ([[graft.operators.AnnOps]]: broadcast
-    *    centroid table + map-pass argmax; seeds = first PQ_KS ids'
-    *    subvectors, cosine routing, ties cell-ascending);
+    *  - per-subspace codebooks come from the SAME Lloyd loop the
+    *    s02/s07 k-means runs (`AnnOps.kmeans`, one call per subspace
+    *    slice: broadcast centroid table + map-pass argmax; seeds = the
+    *    PQ_KS smallest ids' subvectors, cosine routing, ties
+    *    cell-ascending);
     *  - codes and per-(query, subspace, code) partial dots are exact
     *    scaled-long integer arithmetic; the ONLY floating-point step is
     *    the final sum/1e12 division, an identical IEEE expression in
@@ -374,25 +361,18 @@ object Similarity {
           slice($"c", m * PQ_DSUB + 1, PQ_DSUB).as("c"))
         .withColumn("nrmr", sqrt(dot_i64($"c", $"c").cast("double")))
         .pin()
-      def centFrom(members: DataFrame): DataFrame =
-        graft.operators.AnnOps.centFromMembers(sub, members, "vec_id")
-      var cent = centFrom(sub.filter($"vec_id" < PQ_KS)
-        .select($"vec_id", $"vec_id".as("cell")))
-      var members: DataFrame = null
-      for (it <- 1 to PQ_ITERS) {
-        val (assigned, bc) =
-          graft.operators.AnnOps.assignCellsKeepBc(sub, cent, "vec_id")
-        members = assigned.pin()
-        bc.destroy()
-        if (it < PQ_ITERS) cent = centFrom(members)
-      }
+      // one cosine-cells call per subspace slice: AnnOps's Lloyd loop,
+      // seeded by the PQ_KS smallest ids (the rows vec_id < PQ_KS)
+      val (members, cent, _) = graft.operators.AnnOps.kmeans(
+        sub.withColumnRenamed("vec_id", "id"), PQ_KS, PQ_ITERS)
       // this subspace's ADC lookup table: queries' subvectors x the
       // FINAL centroid table (the one the last assignment used)
       val qsub = sub.filter($"vec_id" < NQUERIES)
         .select($"vec_id".as("qid"), $"c".as("qc"))
       val lut = qsub.crossJoin(cent.select($"cell".as("code"), $"cc"))
         .select($"qid", $"code", dot_i64($"qc", $"cc").as("pdot"))
-      (members.select($"vec_id", $"cell".as("code"), lit(m).as("m")),
+      (members.select($"id".as("vec_id"), $"cell".as("code"),
+          lit(m).as("m")),
         lut.select($"qid", $"code", $"pdot", lit(m).as("m")))
     }
     val codes = perM.map(_._1).reduce(_ unionByName _)
@@ -1201,15 +1181,16 @@ object Similarity {
     GraftQuery(
       "s11_semantic_dedup_sharded",
       (s, dir) => {
-        // s07 through the SHARDED Lloyd assignment: maxCentroidBytes=1
-        // forces one cell per shard (3 shards at k=3), so every Lloyd
-        // step runs AnnOps.assignCellsSharded — the 100 TB path for
-        // centroid tables past driver memory. The kernel contract is
-        // BIT-IDENTICAL assignments, so the oracle is the SAME SQL as
-        // s07's unsharded spelling: the driver's hash compare is the
-        // end-to-end proof the sharded path changes nothing but the
+        // s07 with the centroid table SHARDED: maxCentroidBytes=1
+        // forces one cell per shard (3 shards at k=3), so the seeds and
+        // every Lloyd round stage the table shard by shard — the 100 TB
+        // path for centroid tables past driver memory. Shards are
+        // disjoint ascending cell ranges, so the assignments are
+        // BIT-IDENTICAL and the oracle is the SAME SQL as s07's
+        // one-shard spelling: the driver's hash compare is the
+        // end-to-end proof the sharding changes nothing but the
         // broadcast shape (plan gate: PlanInvariantsSpec's
-        // no-shuffle/one-map-pass assertions on the kernel).
+        // no-shuffle/one-map-pass assertions on the assignment).
         graft.operators.AnnOps.semanticNearDups(
           Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
           threshold = 0.45, cells = 3, iters = 2,

@@ -187,8 +187,8 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val SemanticJobs = 10
   private val KmeansJobs = 6
   private val KmeansRoundJobs = 1
-  private val ShardedKmeansJobs = 14
-  private val ShardedKmeansRoundJobs = 5
+  private val ShardedKmeansJobs = 7
+  private val ShardedKmeansRoundJobs = 1
   private val AppendJobs = 14
   private val QueryJobs = 26
   private val IncrementalSemanticJobs = 28

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[AnnOps.lloydRounds]] trains the IVF cells and every PQ codebook in
   * shared passes. This spec holds its members, codes, centroids and
   * means, bit for bit, to [[LloydReference]], which trains each
-  * quantizer in its own plain driver-side loop.
+  * quantizer in its own plain driver-side loop — with the centroid
+  * table in one shard, and past the byte budget in shards of one and
+  * of two cells.
   */
 class LloydRoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
   import LloydReference._
@@ -26,18 +28,30 @@ class LloydRoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** The widest vector of `rows` — what prices the centroid table. */
+  private def dimOf(rows: Seq[(Long, Array[Long])]): Int =
+    rows.collect { case (_, c) if c != null => c.length }.max
+
+  /** Byte budgets that ship the `rows` cell table in one shard, in
+    * shards of one cell (a budget below one row) and of two cells. */
+  private def budgets(rows: Seq[(Long, Array[Long])]): Seq[Long] =
+    Seq(AnnOps.DefaultMaxCentroidBytes, 1L, 2L * (dimOf(rows) * 8 + 64))
+
   /** The fused rounds over the same rows, staged like the operators
-    * stage them (id, c, raw norm), spread over several partitions. */
+    * stage them (id, c, raw norm), spread over several partitions. The
+    * centroid table is read back in its own order, which must be
+    * cell-ascending. */
   private def fused(rows: Seq[(Long, Array[Long])], cells: Int, iters: Int,
-      pqM: Int, pqKs: Int, pqIters: Int, dsub: Int)
+      pqM: Int, pqKs: Int, pqIters: Int, dsub: Int,
+      budget: Long = AnnOps.DefaultMaxCentroidBytes)
       : (Map[Long, (Long, Seq[Long])], Cent, Means) = {
     val s = spark
     import s.implicits._
     val v = rows.map { case (id, c) =>
       (id, c, Option(c).map(a => math.sqrt(a.map(x => x * x).sum.toDouble)))
     }.toDF("id", "c", "nrmr").repartition(3)
-    val (members, cent, means) =
-      AnnOps.lloydRounds(v, cells, iters, pqM, pqKs, pqIters, dsub)
+    val (members, cent, means, release) = AnnOps.lloydRounds(v, cells,
+      iters, pqM, pqKs, pqIters, dsub, dimOf(rows), budget)
     try {
       val got = members.collect().map { r =>
         r.getLong(0) -> ((
@@ -45,11 +59,15 @@ class LloydRoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
           if (pqM > 0) r.getSeq[Long](r.fieldIndex("codes")) else Seq.empty[Long]))
       }.toMap
       (got,
-        cent.toSeq.map { case (k, cc, n) =>
-          (k, cc.toSeq, java.lang.Double.doubleToRawLongBits(n)) },
+        cent.collect().toSeq.map { r =>
+          (r.getLong(0), r.getSeq[Long](1),
+            java.lang.Double.doubleToRawLongBits(r.getDouble(2))) },
         means.toSeq.map(_.toSeq.map { case (k, mu) =>
           (k, mu.toSeq.map(java.lang.Double.doubleToRawLongBits)) }))
-    } finally DedupOps.releaseLocalCheckpoint(members)
+    } finally {
+      release()
+      DedupOps.releaseLocalCheckpoint(members)
+    }
   }
 
   /** `n` rows of `dim` small integer components around four centers;
@@ -72,12 +90,15 @@ class LloydRoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val seen = Seen()
     val (rm, rc, rmeans) =
       reference(rows, cells, iters, pqM, pqKs, pqIters, dsub, seen)
-    val (fm, fc, fmeans) = fused(rows, cells, iters, pqM, pqKs, pqIters, dsub)
-    val what = s"cells=$cells iters=$iters pqM=$pqM pqKs=$pqKs " +
-      s"pqIters=$pqIters dsub=$dsub"
-    assert(fm == rm, s"members/codes differ ($what)")
-    if (cells > 0) assert(fc == rc, s"centroids differ ($what)")
-    assert(fmeans == rmeans, s"codebook means differ ($what)")
+    budgets(rows).foreach { budget =>
+      val (fm, fc, fmeans) =
+        fused(rows, cells, iters, pqM, pqKs, pqIters, dsub, budget)
+      val what = s"cells=$cells iters=$iters pqM=$pqM pqKs=$pqKs " +
+        s"pqIters=$pqIters dsub=$dsub budget=$budget"
+      assert(fm == rm, s"members/codes differ ($what)")
+      if (cells > 0) assert(fc == rc, s"centroids differ ($what)")
+      assert(fmeans == rmeans, s"codebook means differ ($what)")
+    }
     seen
   }
 
@@ -110,6 +131,25 @@ class LloydRoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
       dsub = 0)
     check(rows, cells = 0, iters = 0, pqM = 2, pqKs = 4, pqIters = 3,
       dsub = 4)
+  }
+
+  test("cross-shard ties and a null vector: two identical seed cells " +
+      "in different shards keep the smaller cell, past the budget too") {
+    // ids 0 and 1 seed cells 0 and 1 with the same vector, so every row
+    // near it ties across them for good; at one cell per shard the tie
+    // spans two broadcasts. Id 2 is a null vector (every score NaN).
+    val rows = Seq[(Long, Array[Long])](0L -> Array(5L, 1L, 0L),
+      1L -> Array(5L, 1L, 0L), 2L -> null, 3L -> Array(0L, 4L, 1L),
+      4L -> Array(1L, 0L, 6L)) ++
+      (5L until 30L).map(i => i -> Array(i % 5, i % 3, i % 7))
+    val seen = check(rows, cells = 4, iters = 3, pqM = 3, pqKs = 3,
+      pqIters = 2, dsub = 1)
+    assert(seen.ties > 0, seen)
+    budgets(rows).foreach { budget =>
+      val (members, _, _) = fused(rows, 4, 3, 3, 3, 2, 1, budget)
+      assert(members(1L)._1 == 0L && members(2L)._1 == 0L,
+        s"budget=$budget: ${members(1L)} ${members(2L)}")
+    }
   }
 
   test("a code whose members are all null vectors counts them in its " +

@@ -2077,6 +2077,77 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("kmeansCells sharded: a staging job cancelled after its first " +
+      "shard landed fails loudly and leaves no shard broadcast and no " +
+      "pinned checkpoint") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val sc = s.sparkContext
+    val bm = org.apache.spark.SparkEnv.get.blockManager
+    // a centroid shard is a broadcast Array of (cell, cc, cnrmr)
+    def shardBroadcasts(): Set[String] = bm.getMatchingBlockIds {
+        case b: org.apache.spark.storage.BroadcastBlockId => b.field.isEmpty
+        case _ => false
+      }.filter(id => bm.getLocalValues(id).exists(_.data.toList match {
+        case List(a: Array[_]) => a.headOption.exists {
+          case (_: Long, _: Array[Long], _: Double) => true
+          case _ => false
+        }
+        case _ => false
+      })).map(_.name).toSet
+    // 200 cells at one cell per shard: the staging job has 200 shard
+    // tasks, so the cancel lands while most are still to run
+    val df = (0L until 240L).map(i =>
+        (i, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11).toFloat)))
+      .toDF("vid", "emb")
+    val tag = "kmeans-staging-cancel"
+    val stagingStages =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    val cancels = new java.util.concurrent.atomic.AtomicInteger
+    val canceller = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val tagged = Option(js.properties).flatMap(p => Option(
+            p.getProperty("spark.job.tags"))).exists(_.split(",")
+          .contains(tag))
+        // a staging job's result stage is named for its submitJob call
+        js.stageInfos.filter(_.name.startsWith("submitJob"))
+          .foreach(st => if (tagged) stagingStages.add(st.stageId))
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (stagingStages.contains(te.stageId) &&
+            te.reason == org.apache.spark.Success &&
+            cancels.compareAndSet(0, 1))
+          sc.cancelJobsWithTag(tag)
+    }
+    val shardsBefore = shardBroadcasts()
+    val pinsBefore = sc.getPersistentRDDs.keySet.toSet
+    sc.addSparkListener(canceller)
+    sc.addJobTag(tag)
+    val e = try intercept[Exception] {
+      AnnOps.kmeansCells(df, "vid", "emb", k = 200, iters = 2,
+        partitions = 4, maxCentroidBytes = 1L)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(canceller)
+    }
+    assert(cancels.get == 1, "no staging job was cancelled (vacuous)")
+    assert(String.valueOf(e.getMessage).contains("cancel"),
+      s"failed for another reason: $e")
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    def leaks() = (shardBroadcasts() -- shardsBefore,
+      sc.getPersistentRDDs.keySet.toSet -- pinsBefore)
+    var left = leaks()
+    while (left != ((Set.empty, Set.empty)) &&
+        System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      left = leaks()
+    }
+    assert(left._1.isEmpty, s"shard broadcasts left: ${left._1}")
+    assert(left._2.isEmpty, s"pinned checkpoints left: ${left._2}")
+  }
+
   test("bruteTopK: broadcast queries, corpus never shuffles") {
     val top = AnnOps.bruteTopK(vectors(), "vid", "emb",
         id => id < 1L, k = 2, partitions = 2)
