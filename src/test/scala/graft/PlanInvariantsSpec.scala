@@ -283,16 +283,15 @@ class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "s02 lost its broadcast centroid/candidate joins")
   }
 
-  test("k-means assignment plans ONE map pass at one shard and at " +
-      "three: no exchange, no window, no explode, no pair join") {
-    // The frozen-table assignment (AnnOps.assignCells, the kernel the
-    // Lloyd rounds run too) must stay a single MapPartitions over the
-    // staged vectors at any shard count — each task walks the shard
-    // broadcasts in ascending cell order — never an extra scan per
-    // shard, a union/reduce shuffle, a window, a generate (the N×K
-    // explode + row_number spelling shuffled N×K scored rows, 10^13 at
-    // k=100k cells over 100M docs), or a pair join. The only rows that
-    // move are the (id, cell) output.
+  // The frozen-table assignment (AnnOps.assignCells, the kernel the
+  // Lloyd rounds run too) must stay a single MapPartitions over the
+  // staged vectors at any shard count — each task walks the shard
+  // broadcasts in ascending cell order — never an extra scan per
+  // shard, a union/reduce shuffle, a window, a generate (the N×K
+  // explode + row_number spelling shuffled N×K scored rows, 10^13 at
+  // k=100k cells over 100M docs), or a pair join. The only rows that
+  // move are the (id, cell) output.
+  private def assertAssignIsOneMapPass(budget: Long, shards: Int): Unit = {
     import org.apache.spark.sql.functions._
     val ss = spark
     import ss.implicits._
@@ -304,39 +303,46 @@ class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cent = Seq((0L, Array(1L, 0L)), (1L, Array(0L, 1L)),
       (2L, Array(1L, 1L))).toDF("cell", "cc")
       .withColumn("cnrmr", lit(1.0))
-    // the default budget holds all three cells; a budget below one row
-    // ships one cell per shard
-    for ((budget, shards) <- Seq(
-        (graft.operators.AnnOps.DefaultMaxCentroidBytes, 1), (1L, 3))) {
-      val (assigned, release) = graft.operators.AnnOps
-        .assignCells(df, cent, k = 3L, dim = 2L, maxCentroidBytes = budget)
-      val cells = assigned.as[(Long, Long)].collect().toMap
-      release()
-      assert(cells == Map(1L -> 0L, 2L -> 1L, 3L -> 2L),
-        s"$shards shard(s): $cells")
-      val p = assigned.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case q => q
-      }
-      val s = p.toString()
-      assert(s.contains("MapPartitions"),
-        s"$shards shard(s): assignment lost its map pass:\n$s")
-      val exchanges = p.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-      }
-      assert(exchanges.isEmpty,
-        s"$shards shard(s): assignment shuffles: ${exchanges.map(_.nodeName)}")
-      val windows = p.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w
-      }
-      assert(windows.isEmpty, s"$shards shard(s): assignment has a " +
-        s"window exchange: ${windows.map(_.nodeName)}")
-      assert(!s.contains("Generate"),
-        s"$shards shard(s): assignment explodes rows (N×K regression)")
-      assert(!s.contains("CartesianProduct") &&
-        !s.contains("BroadcastNestedLoopJoin"),
-        s"$shards shard(s): assignment pair-joins")
+    val (assigned, release) = graft.operators.AnnOps
+      .assignCells(df, cent, k = 3L, dim = 2L, maxCentroidBytes = budget)
+    val cells = assigned.as[(Long, Long)].collect().toMap
+    release()
+    assert(cells == Map(1L -> 0L, 2L -> 1L, 3L -> 2L),
+      s"$shards shard(s): $cells")
+    val p = assigned.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case q => q
     }
+    val s = p.toString()
+    assert(s.contains("MapPartitions"),
+      s"$shards shard(s): assignment lost its map pass:\n$s")
+    val exchanges = p.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+    }
+    assert(exchanges.isEmpty,
+      s"$shards shard(s): assignment shuffles: ${exchanges.map(_.nodeName)}")
+    val windows = p.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    assert(windows.isEmpty, s"$shards shard(s): assignment has a " +
+      s"window exchange: ${windows.map(_.nodeName)}")
+    assert(!s.contains("Generate"),
+      s"$shards shard(s): assignment explodes rows (N×K regression)")
+    assert(!s.contains("CartesianProduct") &&
+      !s.contains("BroadcastNestedLoopJoin"),
+      s"$shards shard(s): assignment pair-joins")
+  }
+
+  test("k-means assignment kernel plans a map pass: no window, no explode") {
+    // the default budget holds all three cells in one shard
+    assertAssignIsOneMapPass(
+      graft.operators.AnnOps.DefaultMaxCentroidBytes, shards = 1)
+  }
+
+  test("sharded k-means assignment stays ONE map pass: no shuffle, no " +
+      "window, no explode, no cartesian") {
+    // a budget below one row ships one cell per shard
+    assertAssignIsOneMapPass(1L, shards = 3)
   }
 
   test("s04 runs the broadcast kernel below the auto gate") {

@@ -161,8 +161,10 @@ class ConnectorE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val store = new StreamStore(root)
     val schema = RiverSchema(Seq(RiverField("v", RiverType.Int64)))
     val Total = 20000
+    // created before the reader resolves the source: a stream the
+    // writer thread had not made yet failed the schema lookup
+    val w = store.createStream("live", schema)
     val writer = new Thread(() => {
-      val w = store.createStream("live", schema)
       val rnd = new java.util.Random(7)
       var i = 0
       while (i < Total) {
