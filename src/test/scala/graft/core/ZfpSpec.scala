@@ -64,6 +64,47 @@ class ZfpSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(back, data))
   }
 
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map("%02x".format(_)).mkString
+
+  test("lossless sine fixture blobs are byte-pinned for all four types") {
+    val data = sines()
+    val got = Seq(
+      "int16" -> Zfp.compressInt16(data, nCh, nSamp),
+      "int32" -> Zfp.compressInt32(data.map(_.toInt), nCh, nSamp),
+      "float" -> Zfp.compressFloat(data.map(_.toFloat), nCh, nSamp),
+      "double" -> Zfp.compressDouble(data.map(_.toDouble), nCh, nSamp))
+      .map { case (t, b) => t -> sha256(b) }.toMap
+    assert(got == LosslessSinePins, s"lossless bytes drifted: $got")
+  }
+
+  /** True sines, every mantissa bit live (not int16-truncated). */
+  private def fullMantissaSines(): Array[Double] =
+    Array.tabulate(nSamp * nCh) { i =>
+      val (t, c) = (i / nCh, i % nCh)
+      math.sin((1.0 + 9.0 * c / (nCh - 1)) * t / 10.0 +
+        math.Pi * c / (nCh - 1)) * 16384.0
+    }
+
+  test("lossy float and double blobs are byte-pinned") {
+    val d = fullMantissaSines()
+    val got = Map(
+      "float" -> sha256(Zfp.compressFloatLossyStd(
+        d.map(_.toFloat), nCh, nSamp, 20.0)),
+      "double" -> sha256(Zfp.compressDoubleLossyStd(d, nCh, nSamp, 0.5)))
+    assert(got == LossySinePins, s"lossy bytes drifted: $got")
+  }
+
+  private val LosslessSinePins = Map(
+    "int16" -> "dc275bf4224b034738996f5db21000d9bd88515b46e00e758d91d5aefc166598",
+    "int32" -> "5cb33d6a5e5ade31b3aa706b8e290be8c3603501e1143e5115aadddb0bab3592",
+    "float" -> "5860fbe3c881f550a1a6a098774d3b427ec8ce0b88df804bd01e38da301132d7",
+    "double" -> "4549ac15b36ebe95f6a1d866237975ea60f8003de77f50949cea4d7d28d27e37")
+  private val LossySinePins = Map(
+    "float" -> "77bf13af97710a5d4a201d9279764797dbb2f282cf5040f0bf2043ff0e7b19e7",
+    "double" -> "47b454f8786b1525c7c522bc42a5b0ed8cc896d72404dc004dc99a93a972ccf4")
+
   test("int32 round trip across partial-block shapes") {
     val rng = new scala.util.Random(7)
     for ((nx, ny) <- Seq((1, 1), (1, 7), (3, 4), (5, 5), (4, 4), (17, 9))) {

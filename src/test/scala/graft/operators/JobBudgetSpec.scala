@@ -182,6 +182,71 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"incrementalSemanticDedupDurable launched $n jobs")
   }
 
+  /** An index of two committed batches (vid < 64, then vid >= 64) with
+    * vid < 8 deleted: the state the maintenance passes rewrite. */
+  private def twoBatchIndexWithDeletes(tag: String): String = {
+    val s = spark
+    import s.implicits._
+    val idx = tmpDir(tag)
+    AnnOps.buildIvfPqIndex(df.filter($"vid" < 64), "vid", "emb", "grp",
+      idx, cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
+      partitions = 4)
+    AnnOps.appendIvfPqIndex(df.filter($"vid" >= 64), "vid", "emb", "grp",
+      idx, 1L, partitions = 4)
+    AnnOps.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
+    idx
+  }
+
+  test("deleteFromIndex: pinned job budget for one tombstone batch") {
+    val s = spark
+    import s.implicits._
+    val idx = tmpDir("delete")
+    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", idx, cells = 4,
+      iters = 2, pqM = 4, pqKs = 4, pqIters = 2, partitions = 4)
+    val n = jobsOf {
+      AnnOps.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
+    }
+    assert(n == DeleteJobs, s"deleteFromIndex launched $n jobs")
+  }
+
+  test("compactIndex: pinned job budget over two batches and a delete") {
+    val idx = twoBatchIndexWithDeletes("compact")
+    val n = jobsOf(AnnOps.compactIndex(spark, idx, partitions = 4))
+    assert(n == CompactJobs, s"compactIndex launched $n jobs")
+  }
+
+  test("expireBatches: pinned job budget over two batches and a delete") {
+    val idx = twoBatchIndexWithDeletes("expire")
+    val n = jobsOf {
+      AnnOps.expireBatches(spark, idx, minKeepBatchId = 1L, partitions = 4)
+    }
+    assert(n == ExpireJobs, s"expireBatches launched $n jobs")
+  }
+
+  test("maintainIndex: pinned job budget over two batches and a delete") {
+    val idx = twoBatchIndexWithDeletes("maintain")
+    val n = jobsOf {
+      AnnOps.maintainIndex(spark, idx, AnnOps.IndexMaintenancePolicy(
+        minKeepBatchId = 1L, partitions = 4, vacuum = true))
+    }
+    assert(n == MaintainJobs, s"maintainIndex launched $n jobs")
+  }
+
+  test("commitMinhashIndexBatch: pinned job budget for one batch") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.format_string
+    val docs = df.select($"vid".as("doc_id"), format_string(
+      "doc %d of the %s group shares these words", $"vid" % 20, $"grp")
+      .as("text"))
+    val sigs = DedupOps.minhashIndex(docs, "doc_id", "text", 3, 4, 2,
+      partitions = 4).pin()
+    val dir = tmpDir("minhash")
+    val n = jobsOf(DedupOps.commitMinhashIndexBatch(sigs, dir, 0L, 3, 4, 2))
+    assert(n == MinhashCommitJobs,
+      s"commitMinhashIndexBatch launched $n jobs")
+  }
+
   private val BuildJobs = 13
   private val InlineJobs = 25
   private val SemanticJobs = 10
@@ -192,4 +257,9 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val AppendJobs = 14
   private val QueryJobs = 26
   private val IncrementalSemanticJobs = 28
+  private val DeleteJobs = 2
+  private val CompactJobs = 9
+  private val ExpireJobs = 9
+  private val MaintainJobs = 9
+  private val MinhashCommitJobs = 1
 }
