@@ -52,8 +52,8 @@ object Bench {
     // spark.local.dir, and RAM-backed scratch is the local stand-in for
     // a cluster's NVMe-backed local dirs; GRAFT_SCRATCH_DIR moves both
     // to real disk at once.
-    val localDir = graft.core.StreamStore.scratchBase()
-      .resolve("graft-spark-local").toString
+    val scratchRoot = graft.core.StreamStore.scratchBase()
+    val localDir = scratchRoot.resolve("graft-spark-local").toString
     // SPARK_GRAFT_MASTER: same override as Verify — pricing runs use
     // local-cluster[n,c,mem] so replication/fetch costs are real
     // (single-JVM local[N] has one BlockManager: a 2-replica storage
@@ -166,10 +166,12 @@ object Bench {
     // fit, under the contract key "queries" with FULL names; the full
     // map is one `cat BENCH_LAST_<cpus>.json` away.
     // pin-backend attribution: which backend ran and (reliable only)
-    // the checkpoint write traffic it cost — the durability bill
+    // the checkpoint write traffic it cost — the durability bill — plus
+    // the scratch root the run's stores and spark.local.dir used
     val pinInfo =
       s""""pin_backend":"${graft.core.Pins.backend(spark)}",""" +
-        s""""pin_ck_bytes":${graft.core.Pins.checkpointedBytes.get}"""
+        s""""pin_ck_bytes":${graft.core.Pins.checkpointedBytes.get},""" +
+        s""""scratch_root":"$scratchRoot""""
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","probe_pre":$probePre,"probe_post":$probePost,$pinInfo,"queries":${qmap(results)},"sf":"$sfDir"}"""
     Seq("BENCH_LAST.json", s"BENCH_LAST_$cpus.json").foreach { f =>

@@ -472,10 +472,10 @@ final class StreamStore(val root: Path) {
     // variable-width streams forbid compression (reference writer.cpp:131-134)
     require(compressionParamsJson.isEmpty || !schema.hasVariableWidth,
       "compression is not supported for variable-width streams")
-    // C1: ZFP_LOSSLESS is fully supported (validated against the schema
-    // here, applied per write batch by the writer); lossy/unknown
+    // C1: ZFP_LOSSLESS and ZFP_LOSSY params are validated against the
+    // schema here and applied per write batch by the writer; unknown
     // compression is rejected loudly at create time
-    val zfp = ZfpStreamCodec.validate(compressionParamsJson, schema)
+    val zfp = ZfpStreamCodec.validateNew(compressionParamsJson, schema)
     if (streamExists(name)) throw new StreamExistsException(name)
     Files.createDirectories(dir(name))
     // M4: `clockDeltaTrips` > 0 measures local−server via
@@ -500,9 +500,9 @@ final class StreamStore(val root: Path) {
       Thread.sleep(1)
     require(streamExists(name), s"stream not found within ${timeoutMs}ms: $name")
     val m = metadata(name)
-    // C1: ZFP_LOSSLESS streams decode transparently (blob entries expand
-    // at parse time in SegmentCodec); lossy/unknown compression is still
-    // rejected loudly rather than mis-decoded.
+    // C1: ZFP streams decode transparently (blob entries expand at parse
+    // time in SegmentCodec); unknown compression is rejected loudly
+    // rather than mis-decoded.
     ZfpStreamCodec.validate(m.compressionParamsJson, m.schema)
     new StreamReader(this, name, m.schema)
   }
@@ -657,6 +657,12 @@ final class StreamWriter private[core] (
       // batch granularity (writer.cpp:219-224): one entry, one key, n
       // samples. Rollover check runs per batch; a batch never splits
       // across segments (bounded by the caller's batch size).
+      // compress first: a rejected batch writes nothing, not even the
+      // rollover tombstone
+      val blob = try ZfpStreamCodec.compressBatch(zfp.get, samples)
+        catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(
+            s"stream $name: ${e.getMessage}", e) }
       if (inSegment >= keysPerSegment) {
         val tomb = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
           .putLong(segIdx + 1).array()
@@ -667,7 +673,6 @@ final class StreamWriter private[core] (
         out = open(segIdx)
         inSegment = 0
       }
-      val blob = ZfpStreamCodec.compressBatch(zfp.get, samples)
       SegmentCodec.write(out,
         StreamEntry(StreamEntry.Compressed, nextKey(), nextIndex, blob))
       nextIndex += samples.size

@@ -44,46 +44,37 @@ package graft.core
   * needed bit.
   *
   * Fixed-accuracy (lossy) mode — reference `zfp_compressor.cpp:93-134`,
-  * tolerance >= 0 via `zfp_stream_set_accuracy` — is implemented as
-  * zfp's accuracy semantics reconstructed on top of the same reversible
-  * machinery:
+  * tolerance >= 0 via `zfp_stream_set_accuracy` — writes libzfp's own
+  * accuracy layout for float and double fields:
   *  - tolerance -> minexp = floor(log2(tolerance)) (frexp - 1, exactly
   *    zfp_stream_set_accuracy), minexp = ZFP_MIN_EXP (-1074) for
   *    tolerance 0; the 12-bit short mode codes minexp - ZFP_MIN_EXP
   *    (reversible stays 4094, 4095 = expert mode, rejected);
-  *  - float/double blocks ALWAYS block-floating-point convert (no
-  *    raw-IEEE fallback bit): iblock = trunc(x * 2^(intprec-2 - emax)),
-  *    a single 0 bit for an all-zero (or all-below-tolerance) block;
-  *  - per-block precision = min(intprec, max(0, emax - minexp +
-  *    2*(dims+1))) — zfp's `precision()`, whose 2*(dims+1) slack absorbs
-  *    transform gain — and the bit-plane coder stops at
-  *    kmin = intprec - precision instead of coding every plane;
-  *  - integer fields ignore minexp (zfp codes them at full maxprec;
-  *    tolerance applies to floating-point fields only), so "lossy"
-  *    int16/int32 streams round-trip exactly here.
+  *  - every block is block-floating-point converted (no raw-IEEE
+  *    fallback): a (2*(emax+EBIAS)+1, EBITS+1)-bit header, iblock =
+  *    trunc(x * 2^(intprec-2 - emax)), a single 0 bit for an all-zero
+  *    (or all-below-tolerance) block;
+  *  - the non-orthogonal lifting transform, then the plain embedded
+  *    plane coder with no prefix field, stopping at kmin = intprec -
+  *    precision, where precision = min(intprec, max(0, emax - minexp +
+  *    2*(dims+1))) is zfp's `precision()`: the 2*(dims+1) slack absorbs
+  *    transform gain, so |error| <= tolerance for finite values;
+  *  - accuracy mode codes finite values only: a NaN or infinity is
+  *    rejected loudly instead of silently decoding as garbage together
+  *    with its block's 15 neighbours (lossless mode keeps them exactly).
   *
-  * TWO accuracy-mode payload layouts coexist, distinguished by the
-  * version-byte [[LossyMarker]]:
-  *  - GRAFT layout (marked): reuses the reversible Lorenzo lift and the
-  *    trailing-zero elision for the accuracy mode. Strictly tighter
-  *    reconstruction than libzfp (no transform rounding; integer fields
-  *    exact); graft's own transport writes this.
-  *  - STANDARD layout (unmarked): libzfp's actual accuracy-mode coding —
-  *    the non-orthogonal lifting transform, the (2*(emax+EBIAS)+1,
-  *    EBITS+1)-bit block-float header, and the plain embedded plane
-  *    coder with no prefix field. [[decompress]] reads any unmarked
-  *    accuracy stream through this path, so genuine libzfp-written
-  *    fixed-accuracy blobs (what the reference engine's
-  *    zfp_stream_set_accuracy path produces) decode directly; the
-  *    `*LossyStd` compressors write it for interop. Spec-derived: no
-  *    libzfp binary exists in this sandbox to cross-validate bytes
-  *    against, so the layout is pinned by round-trip + error-bound
-  *    specs AND by hand-derived golden bitstreams (ZfpGoldenSpec
-  *    re-assembles expected bytes from the published format with an
-  *    independent bit packer and asserts byte-exact encode + decode).
-  *
-  * [[ZfpHeader]] exposes the parsed mode; unknown/expert modes are
-  * rejected loudly by [[decompress]].
+  * Integer fields have no lossy stream: zfp's tolerance applies to
+  * floating point only, and libzfp's accuracy-mode integer coder
+  * (rounding transform, every plane coded) expands int16 data, so the
+  * transport writes int16/int32 "lossy" batches as the reversible
+  * stream (see [[ZfpStreamCodec]]). [[decompress]] therefore reads two
+  * payloads: reversible for any type, accuracy for float and double;
+  * an accuracy-mode int32 header, an unknown codec version and expert
+  * mode are rejected loudly. The accuracy layout is spec-derived — no
+  * libzfp binary exists here to cross-validate bytes against — and is
+  * pinned by round-trip and error-bound specs and by hand-derived
+  * golden bitstreams (ZfpGoldenSpec re-assembles expected bytes from
+  * the published format with an independent bit packer).
   */
 object Zfp {
 
@@ -198,13 +189,6 @@ object Zfp {
   private val CodecVersion = 5
   private val ModeReversible = 4094L // ZFP_MODE_SHORT_MAX; 12-bit write
   private val ModeExpert = 4095L     // 0xfff: 64-bit expert mode follows
-  /** Version-byte marker for the GRAFT-layout fixed-accuracy payload
-    * (reversible Lorenzo lift + trailing-zero-count field). Graft lossy
-    * streams set the high bit of the version byte — libzfp codec
-    * versions are small integers and never do — so [[readHeader]] can
-    * route marked streams to the graft decode and unmarked accuracy
-    * streams to the standard libzfp-layout decode. */
-  private val LossyMarker = 0x80
   val ZfpMinExp: Int = -1074         // ZFP_MIN_EXP
 
   /** Decode output ceiling in values (2^28 = 2 GiB of doubles): bounds
@@ -213,8 +197,7 @@ object Zfp {
     * executor-killing OutOfMemoryError. */
   val MaxDecodedValues: Long = 1L << 28
 
-  final case class ZfpHeader(tpe: Int, nx: Int, ny: Int, mode: Long,
-      graftLossy: Boolean = false) {
+  final case class ZfpHeader(tpe: Int, nx: Int, ny: Int, mode: Long) {
     def reversible: Boolean = mode == ModeReversible
     /** Fixed-accuracy short mode: codes minexp - ZFP_MIN_EXP. */
     def accuracy: Boolean = mode < ModeReversible
@@ -242,14 +225,11 @@ object Zfp {
   }
 
   private def writeHeader(w: BitWriter, tpe: Int, nx: Int, ny: Int,
-      mode: Long = ModeReversible, graftMarked: Boolean = true): Unit = {
+      mode: Long = ModeReversible): Unit = {
     w.writeBits('z'.toLong, 8)
     w.writeBits('f'.toLong, 8)
     w.writeBits('p'.toLong, 8)
-    w.writeBits(
-      if (mode < ModeReversible && graftMarked)
-        (CodecVersion | LossyMarker).toLong
-      else CodecVersion.toLong, 8)
+    w.writeBits(CodecVersion.toLong, 8)
     // meta, 52 bits: (((nx-1) << 24 | (ny-1)) << 2 | dims-1) << 2 | type
     var meta = (nx - 1).toLong
     meta = (meta << 24) | (ny - 1).toLong
@@ -260,23 +240,13 @@ object Zfp {
   }
 
   /** Parse a FULL header. Throws on bad magic/version/dims; lossy or
-    * expert modes parse fine (callers inspect `reversible`).
-    *
-    * Accuracy-mode provenance: an UNMARKED accuracy stream (plain
-    * version byte) is presumed to carry the standard libzfp payload
-    * layout — the shape a genuine libzfp writer, and this object's
-    * `*LossyStd` compressors, produce — and `graftLossy` comes back
-    * false. A [[LossyMarker]]-marked stream carries the graft-enhanced
-    * payload (reversible transform + trailing-zero elision) and sets
-    * `graftLossy`.
-    */
+    * expert modes parse fine (callers inspect `reversible`). */
   def readHeader(r: BitReader): ZfpHeader = {
     val m0 = r.readBits(8); val m1 = r.readBits(8)
     val m2 = r.readBits(8); val ver = r.readBits(8)
     require(m0 == 'z'.toLong && m1 == 'f'.toLong && m2 == 'p'.toLong,
       "zfp: bad magic")
-    val lossyMarked = ver == (CodecVersion | LossyMarker).toLong
-    require(ver == CodecVersion.toLong || lossyMarked,
+    require(ver == CodecVersion.toLong,
       s"zfp: unsupported codec version $ver")
     val meta = r.readBits(52)
     val tpe = (meta & 3L).toInt
@@ -286,10 +256,7 @@ object Zfp {
     val nx = ((meta >>> 28) & 0xffffffL).toInt + 1
     var mode = r.readBits(12)
     if (mode == 0xfffL) mode = 0xfffL | (r.readBits(52) << 12) // expert
-    if (lossyMarked) require(mode < ModeReversible,
-      s"zfp: lossy-marked stream carries non-accuracy mode $mode")
-    ZfpHeader(tpe, nx, ny, mode,
-      graftLossy = mode < ModeReversible && lossyMarked)
+    ZfpHeader(tpe, nx, ny, mode)
   }
 
   // ----------------------------------------- block machinery (2D, 4x4)
@@ -478,14 +445,9 @@ object Zfp {
     * the int16 sine fixture without elision, 11 with). The count is
     * written in ceil(log2(intprec+1)) bits; an all-zero block is just
     * the count == intprec. Reversible mode never exhausts its bit budget
-    * on a 2D block, so no truncation/padding paths are needed.
-    *
-    * `kmin` (fixed-accuracy mode) stops the coder above the lowest
-    * `kmin` planes — zfp's `intprec - precision()` cutoff; the truncated
-    * planes decode as zeros. Reversible callers pass 0 (code every
-    * plane), keeping the lossless bit layout unchanged. */
+    * on a 2D block, so no truncation/padding paths are needed. */
   private def encodeInts(w: BitWriter, ublock: Array[Long],
-      intprec: Int, kmin: Int = 0): Unit = {
+      intprec: Int): Unit = {
     var tz = intprec
     var i0 = 0
     while (i0 < 16 && tz > 0) {
@@ -500,14 +462,14 @@ object Zfp {
       while (j < 16) { ublock(j) = ublock(j) >>> tz; j += 1 }
     }
     // plane k of the shifted coefficients is plane k+tz of the original
-    codePlanes(w, ublock, intprec - tz, math.max(0, kmin - tz))
+    codePlanes(w, ublock, intprec - tz, 0)
   }
 
   /** zfp's embedded group-tested bit-plane coder (the encode_ints plane
     * loop), planes `kmax-1` down to `kmin`, MSB->LSB. Shared verbatim by
-    * the reversible coder (after its trailing-zero elision) and the
-    * standard-layout accuracy coder, which codes planes directly with no
-    * prefix field — libzfp's actual fixed-accuracy layout. */
+    * the reversible coder (after its trailing-zero elision, every plane)
+    * and the accuracy coder, which codes planes directly with no prefix
+    * field and stops at zfp's `intprec - precision()` cutoff. */
   private def codePlanes(w: BitWriter, ublock: Array[Long],
       kmax: Int, kmin: Int): Unit = {
     var k = kmax
@@ -544,12 +506,12 @@ object Zfp {
 
   /** Mirror of [[encodeInts]]. */
   private def decodeInts(r: BitReader, ublock: Array[Long],
-      intprec: Int, kmin: Int = 0): Unit = {
+      intprec: Int): Unit = {
     java.util.Arrays.fill(ublock, 0L)
     val tz = r.readBits(if (intprec > 32) 7 else 6).toInt
     require(tz <= intprec, s"zfp: corrupt trailing-zero count $tz")
     if (tz == intprec) return // all-zero block
-    decodePlanes(r, ublock, intprec - tz, math.max(0, kmin - tz))
+    decodePlanes(r, ublock, intprec - tz, 0)
     if (tz > 0) {
       var j = 0
       while (j < 16) { ublock(j) = ublock(j) << tz; j += 1 }
@@ -664,15 +626,15 @@ object Zfp {
     w.toBytes
   }
 
-  private def decodeInt32Payload(r: BitReader, nx: Int, ny: Int,
-      std: Boolean = false): Array[Int] = {
+  private def decodeInt32Payload(r: BitReader, nx: Int, ny: Int)
+      : Array[Int] = {
     val out = new Array[Int](nx * ny)
     val block = new Array[Int](16)
     var by = 0
     while (by < ny) {
       var bx = 0
       while (bx < nx) {
-        if (std) decodeBlockInt32Std(r, block) else decodeBlockInt32(r, block)
+        decodeBlockInt32(r, block)
         val mx = math.min(4, nx - bx)
         val my = math.min(4, ny - by)
         var j = 0
@@ -947,94 +909,6 @@ object Zfp {
     while (i < 16) { val a = math.abs(fblock(i)); if (a > fmax) fmax = a; i += 1 }
     val emax = exponentF(fmax)
     val maxprec = precisionFor(emax, 32, minexp)
-    if (fmax == 0f || maxprec == 0) { w.writeBit(0); return } // zero block
-    val e = (emax + 127).toLong
-    w.writeBits(2 * e + 1, 10) // nonzero flag (LSB) + 9-bit biased exponent
-    val s = java.lang.Math.scalb(1f, 30 - emax)
-    val iblock = new Array[Int](16)
-    i = 0
-    while (i < 16) { iblock(i) = (s * fblock(i)).toInt; i += 1 }
-    fwdRevXform32(iblock)
-    val ublock = new Array[Long](16)
-    i = 0
-    while (i < 16) { ublock(i) = int2uint32(iblock(Perm2(i))); i += 1 }
-    encodeInts(w, ublock, 32, 32 - maxprec)
-  }
-
-  private def decodeBlockFloatLossy(r: BitReader, fblock: Array[Float],
-      minexp: Int): Unit = {
-    if (r.readBit() == 0) { java.util.Arrays.fill(fblock, 0f); return }
-    val emax = (r.readBits(9) - 127).toInt
-    val maxprec = precisionFor(emax, 32, minexp)
-    val ublock = new Array[Long](16)
-    decodeInts(r, ublock, 32, 32 - maxprec)
-    val iblock = new Array[Int](16)
-    var i = 0
-    while (i < 16) { iblock(Perm2(i)) = uint2int32(ublock(i)); i += 1 }
-    invRevXform32(iblock)
-    val inv = java.lang.Math.scalb(1f, emax - 30)
-    i = 0
-    while (i < 16) { fblock(i) = inv * iblock(i); i += 1 }
-  }
-
-  private def encodeBlockDoubleLossy(w: BitWriter, fblock: Array[Double],
-      minexp: Int): Unit = {
-    var fmax = 0.0
-    var i = 0
-    while (i < 16) { val a = math.abs(fblock(i)); if (a > fmax) fmax = a; i += 1 }
-    val emax = exponentD(fmax)
-    val maxprec = precisionFor(emax, 64, minexp)
-    if (fmax == 0.0 || maxprec == 0) { w.writeBit(0); return } // zero block
-    val e = (emax + 1023).toLong
-    w.writeBits(2 * e + 1, 13) // nonzero flag (LSB) + 12-bit biased exponent
-    val s = java.lang.Math.scalb(1.0, 62 - emax)
-    val iblock = new Array[Long](16)
-    i = 0
-    while (i < 16) { iblock(i) = (s * fblock(i)).toLong; i += 1 }
-    fwdRevXform64(iblock)
-    val ublock = new Array[Long](16)
-    i = 0
-    while (i < 16) { ublock(i) = int2uint64(iblock(Perm2(i))); i += 1 }
-    encodeInts(w, ublock, 64, 64 - maxprec)
-  }
-
-  private def decodeBlockDoubleLossy(r: BitReader, fblock: Array[Double],
-      minexp: Int): Unit = {
-    if (r.readBit() == 0) { java.util.Arrays.fill(fblock, 0.0); return }
-    val emax = (r.readBits(12) - 1023).toInt
-    val maxprec = precisionFor(emax, 64, minexp)
-    val ublock = new Array[Long](16)
-    decodeInts(r, ublock, 64, 64 - maxprec)
-    val iblock = new Array[Long](16)
-    var i = 0
-    while (i < 16) { iblock(Perm2(i)) = uint2int64(ublock(i)); i += 1 }
-    invRevXform64(iblock)
-    val inv = java.lang.Math.scalb(1.0, emax - 62)
-    i = 0
-    while (i < 16) { fblock(i) = inv * iblock(i); i += 1 }
-  }
-
-  // ------------------- standard-layout (libzfp) fixed-accuracy coders
-  //
-  // The graft lossy coders above keep the reversible transform and the
-  // trailing-zero elision (strictly tighter reconstruction; integer
-  // fields round-trip exactly). The *Std coders below implement the
-  // STANDARD zfp accuracy layout instead — non-orthogonal lifting
-  // transform, block-floating-point header of (2*(emax+EBIAS)+1) in
-  // EBITS+1 bits (9 for float, 12 for double), and the plain embedded
-  // plane coder with no prefix field — the bit layout a genuine libzfp
-  // writer produces, reconstructed from the published format. No libzfp
-  // binary exists in this sandbox to cross-validate bytes against; the
-  // layout is spec-derived, pinned by round-trip + error-bound specs
-  // and by the hand-derived golden bitstreams in ZfpGoldenSpec.
-
-  private def encodeBlockFloatStd(w: BitWriter, fblock: Array[Float],
-      minexp: Int): Unit = {
-    var fmax = 0f
-    var i = 0
-    while (i < 16) { val a = math.abs(fblock(i)); if (a > fmax) fmax = a; i += 1 }
-    val emax = exponentF(fmax)
-    val maxprec = precisionFor(emax, 32, minexp)
     val e = if (maxprec > 0) (emax + 127).toLong else 0L
     if (e == 0L) { w.writeBit(0); return } // zero block (fmax == 0)
     w.writeBits(2 * e + 1, 9) // flag LSB + 8-bit biased exponent (EBITS+1)
@@ -1049,7 +923,7 @@ object Zfp {
     codePlanes(w, ublock, 32, 32 - maxprec)
   }
 
-  private def decodeBlockFloatStd(r: BitReader, fblock: Array[Float],
+  private def decodeBlockFloatLossy(r: BitReader, fblock: Array[Float],
       minexp: Int): Unit = {
     if (r.readBit() == 0) { java.util.Arrays.fill(fblock, 0f); return }
     val emax = (r.readBits(8) - 127).toInt
@@ -1065,7 +939,7 @@ object Zfp {
     while (i < 16) { fblock(i) = inv * iblock(i); i += 1 }
   }
 
-  private def encodeBlockDoubleStd(w: BitWriter, fblock: Array[Double],
+  private def encodeBlockDoubleLossy(w: BitWriter, fblock: Array[Double],
       minexp: Int): Unit = {
     var fmax = 0.0
     var i = 0
@@ -1086,7 +960,7 @@ object Zfp {
     codePlanes(w, ublock, 64, 64 - maxprec)
   }
 
-  private def decodeBlockDoubleStd(r: BitReader, fblock: Array[Double],
+  private def decodeBlockDoubleLossy(r: BitReader, fblock: Array[Double],
       minexp: Int): Unit = {
     if (r.readBit() == 0) { java.util.Arrays.fill(fblock, 0.0); return }
     val emax = (r.readBits(11) - 1023).toInt
@@ -1102,31 +976,20 @@ object Zfp {
     while (i < 16) { fblock(i) = inv * iblock(i); i += 1 }
   }
 
-  /** Standard accuracy-mode integer block: full-precision planes (zfp's
-    * tolerance knob applies to floating point only), but through the
-    * rounding non-orthogonal transform — so unlike the graft coder,
-    * integers reconstruct only to within the transform's few-unit
-    * rounding, exactly as libzfp behaves. */
-  private def encodeBlockInt32Std(w: BitWriter, block: Array[Int]): Unit = {
-    fwdStdXform32(block)
-    val ublock = new Array[Long](16)
-    var i = 0
-    while (i < 16) { ublock(i) = int2uint32(block(Perm2(i))); i += 1 }
-    codePlanes(w, ublock, 32, 0)
-  }
+  /** Accuracy mode codes finite values only; `bad` is the index of the
+    * first non-finite value, or -1. */
+  private def requireFinite(bad: Int, nx: Int, value: => Any): Unit =
+    require(bad < 0, s"zfp fixed-accuracy mode codes finite values only: " +
+      s"column ${bad % nx}, row ${bad / nx} holds $value (NaN and " +
+      "infinities round-trip through the lossless mode)")
 
-  private def decodeBlockInt32Std(r: BitReader, block: Array[Int]): Unit = {
-    val ublock = new Array[Long](16)
-    decodePlanes(r, ublock, 32, 0)
-    var i = 0
-    while (i < 16) { block(Perm2(i)) = uint2int32(ublock(i)); i += 1 }
-    invStdXform32(block)
-  }
-
-  /** Fixed-accuracy float compression: |error| <~ tolerance per value. */
+  /** Fixed-accuracy float compression in libzfp's accuracy layout:
+    * |error| <= tolerance per value. Rejects NaN and infinities. */
   def compressFloatLossy(data: Array[Float], nx: Int, ny: Int,
       tolerance: Double): Array[Byte] = {
     require(data.length == nx * ny, "zfp: data length != nx*ny")
+    val bad = data.indexWhere(v => !java.lang.Float.isFinite(v))
+    requireFinite(bad, nx, data(bad))
     val minexp = minexpForTolerance(tolerance)
     val w = new BitWriter
     writeHeader(w, TypeFloat, nx, ny, modeForMinexp(minexp))
@@ -1149,10 +1012,12 @@ object Zfp {
     w.toBytes
   }
 
-  /** Fixed-accuracy double compression: |error| <~ tolerance per value. */
+  /** [[compressFloatLossy]] for doubles. */
   def compressDoubleLossy(data: Array[Double], nx: Int, ny: Int,
       tolerance: Double): Array[Byte] = {
     require(data.length == nx * ny, "zfp: data length != nx*ny")
+    val bad = data.indexWhere(v => !java.lang.Double.isFinite(v))
+    requireFinite(bad, nx, data(bad))
     val minexp = minexpForTolerance(tolerance)
     val w = new BitWriter
     writeHeader(w, TypeDouble, nx, ny, modeForMinexp(minexp))
@@ -1175,154 +1040,6 @@ object Zfp {
     w.toBytes
   }
 
-  /** Fixed-accuracy int32: zfp ignores minexp for integer fields (the
-    * tolerance knob applies to floating point only), so the payload
-    * codes every plane and round-trips exactly — only the header mode
-    * differs from reversible. */
-  def compressInt32Lossy(data: Array[Int], nx: Int, ny: Int,
-      tolerance: Double): Array[Byte] = {
-    require(data.length == nx * ny, "zfp: data length != nx*ny")
-    val w = new BitWriter
-    writeHeader(w, TypeInt32, nx, ny,
-      modeForMinexp(minexpForTolerance(tolerance)))
-    val block = new Array[Int](16)
-    forEachBlock(nx, ny) { (bx, by, mx, my) =>
-      var j = 0
-      while (j < my) {
-        var i = 0
-        while (i < mx) {
-          block(4 * j + i) = data((by + j) * nx + (bx + i))
-          i += 1
-        }
-        padBlock32(block, 4 * j, mx, 1)
-        j += 1
-      }
-      var i = 0
-      while (i < 4) { padBlock32(block, i, my, 4); i += 1 }
-      encodeBlockInt32(w, block)
-    }
-    w.toBytes
-  }
-
-  /** Fixed-accuracy int16: promote `<<15`, compress as int32
-    * (`zfp_compressor.cpp:107-123` — same promotion as lossless). */
-  def compressInt16Lossy(data: Array[Short], nx: Int, ny: Int,
-      tolerance: Double): Array[Byte] = {
-    val promoted = new Array[Int](data.length)
-    var i = 0
-    while (i < data.length) { promoted(i) = data(i).toInt << 15; i += 1 }
-    compressInt32Lossy(promoted, nx, ny, tolerance)
-  }
-
-  /** Fixed-accuracy compression in the STANDARD libzfp bit layout (plain
-    * version byte, non-orthogonal transform, plain plane coder). Use
-    * when the stream must be readable by other zfp implementations;
-    * [[decompress]] reads it back through the same standard path any
-    * unmarked accuracy stream takes. |error| <= tolerance per value for
-    * finite inputs (zfp's accuracy guarantee); NaN/Inf are unsupported
-    * in this mode, as in libzfp. */
-  def compressFloatLossyStd(data: Array[Float], nx: Int, ny: Int,
-      tolerance: Double): Array[Byte] = {
-    require(data.length == nx * ny, "zfp: data length != nx*ny")
-    val minexp = minexpForTolerance(tolerance)
-    val w = new BitWriter
-    writeHeader(w, TypeFloat, nx, ny, modeForMinexp(minexp),
-      graftMarked = false)
-    val block = new Array[Float](16)
-    forEachBlock(nx, ny) { (bx, by, mx, my) =>
-      var j = 0
-      while (j < my) {
-        var i = 0
-        while (i < mx) {
-          block(4 * j + i) = data((by + j) * nx + (bx + i))
-          i += 1
-        }
-        padBlockF(block, 4 * j, mx, 1)
-        j += 1
-      }
-      var i = 0
-      while (i < 4) { padBlockF(block, i, my, 4); i += 1 }
-      encodeBlockFloatStd(w, block, minexp)
-    }
-    w.toBytes
-  }
-
-  /** [[compressFloatLossyStd]] for doubles. */
-  def compressDoubleLossyStd(data: Array[Double], nx: Int, ny: Int,
-      tolerance: Double): Array[Byte] = {
-    require(data.length == nx * ny, "zfp: data length != nx*ny")
-    val minexp = minexpForTolerance(tolerance)
-    val w = new BitWriter
-    writeHeader(w, TypeDouble, nx, ny, modeForMinexp(minexp),
-      graftMarked = false)
-    val block = new Array[Double](16)
-    forEachBlock(nx, ny) { (bx, by, mx, my) =>
-      var j = 0
-      while (j < my) {
-        var i = 0
-        while (i < mx) {
-          block(4 * j + i) = data((by + j) * nx + (bx + i))
-          i += 1
-        }
-        padBlockD(block, 4 * j, mx, 1)
-        j += 1
-      }
-      var i = 0
-      while (i < 4) { padBlockD(block, i, my, 4); i += 1 }
-      encodeBlockDoubleStd(w, block, minexp)
-    }
-    w.toBytes
-  }
-
-  /** Standard-layout fixed-accuracy int32: all planes coded (tolerance
-    * applies to floats only in zfp), values reconstruct to within the
-    * non-orthogonal transform's rounding — NOT exactly, matching libzfp.
-    * zfp's 2D int32 codec requires |value| < 2^30 to avoid transform
-    * overflow (zfp docs, "limitations"); enforced loudly here. */
-  def compressInt32LossyStd(data: Array[Int], nx: Int, ny: Int,
-      tolerance: Double): Array[Byte] = {
-    require(data.length == nx * ny, "zfp: data length != nx*ny")
-    var i = 0
-    while (i < data.length) {
-      require(data(i) >= -(1 << 30) && data(i) < (1 << 30),
-        s"zfp std accuracy int32: value must be in [-2^30, 2^30), got " +
-          s"${data(i)}") // -2^30 inclusive: Short.MinValue << 15
-      i += 1
-    }
-    val w = new BitWriter
-    writeHeader(w, TypeInt32, nx, ny,
-      modeForMinexp(minexpForTolerance(tolerance)), graftMarked = false)
-    val block = new Array[Int](16)
-    forEachBlock(nx, ny) { (bx, by, mx, my) =>
-      var j = 0
-      while (j < my) {
-        var k = 0
-        while (k < mx) {
-          block(4 * j + k) = data((by + j) * nx + (bx + k))
-          k += 1
-        }
-        padBlock32(block, 4 * j, mx, 1)
-        j += 1
-      }
-      var k = 0
-      while (k < 4) { padBlock32(block, k, my, 4); k += 1 }
-      encodeBlockInt32Std(w, block)
-    }
-    w.toBytes
-  }
-
-  /** Standard-layout fixed-accuracy int16: the reference's `<<15`
-    * promotion, then [[compressInt32LossyStd]] — magnitudes stay below
-    * 2^30 by construction. Reconstruction is within ±1 int16 unit (the
-    * transform's few-unit rounding at the promoted scale, >> 15). */
-  def compressInt16LossyStd(data: Array[Short], nx: Int, ny: Int,
-      tolerance: Double): Array[Byte] = {
-    val promoted = new Array[Int](data.length)
-    var i = 0
-    while (i < data.length) { promoted(i) = data(i).toInt << 15; i += 1 }
-    compressInt32LossyStd(promoted, nx, ny, tolerance)
-  }
-
   // ------------------------------------------------------ decompress
 
   sealed trait Decoded { def nx: Int; def ny: Int }
@@ -1330,16 +1047,12 @@ object Zfp {
   final case class DecodedFloat(nx: Int, ny: Int, data: Array[Float]) extends Decoded
   final case class DecodedDouble(nx: Int, ny: Int, data: Array[Double]) extends Decoded
 
-  /** Decompress a full-header 2D blob — reversible (lossless) or
-    * fixed-accuracy (lossy) mode; expert/long modes are rejected.
-    * Trailing bytes beyond the payload are ignored.
-    *
-    * Accuracy streams dispatch on provenance: the graft [[LossyMarker]]
-    * selects the graft-enhanced payload decode; an unmarked accuracy
-    * stream decodes through the STANDARD libzfp layout — so a genuine
-    * libzfp-written fixed-accuracy blob (the reference engine's
-    * `zfp_stream_set_accuracy` output, `zfp_compressor.cpp:93-134`)
-    * is read directly. */
+  /** Decompress a full-header 2D blob — reversible (lossless) for any
+    * type, or fixed-accuracy (lossy) in libzfp's layout for float and
+    * double, so a libzfp-written accuracy blob (the reference engine's
+    * `zfp_stream_set_accuracy` output, `zfp_compressor.cpp:93-134`) is
+    * read directly. Expert/long modes and accuracy-mode int32 fields are
+    * rejected. Trailing bytes beyond the payload are ignored. */
   def decompress(blob: Array[Byte]): Decoded = {
     val r = new BitReader(blob)
     val h = readHeader(r)
@@ -1364,16 +1077,16 @@ object Zfp {
     require(blocksL <= blob.length.toLong * 8,
       s"zfp: header claims $blocksL blocks, stream holds only " +
         s"${blob.length} bytes")
-    val std = h.accuracy && !h.graftLossy // standard libzfp payload layout
     h.tpe match {
       case TypeInt32 =>
-        DecodedInt32(h.nx, h.ny, decodeInt32Payload(r, h.nx, h.ny, std))
+        require(h.reversible, "zfp: fixed-accuracy int32 streams are not " +
+          "supported (integer fields are written as the reversible stream)")
+        DecodedInt32(h.nx, h.ny, decodeInt32Payload(r, h.nx, h.ny))
       case TypeFloat =>
         val out = new Array[Float](h.nx * h.ny)
         val block = new Array[Float](16)
         forEachBlock(h.nx, h.ny) { (bx, by, mx, my) =>
           if (h.reversible) decodeBlockFloat(r, block)
-          else if (std) decodeBlockFloatStd(r, block, h.minexp)
           else decodeBlockFloatLossy(r, block, h.minexp)
           var j = 0
           while (j < my) {
@@ -1391,7 +1104,6 @@ object Zfp {
         val block = new Array[Double](16)
         forEachBlock(h.nx, h.ny) { (bx, by, mx, my) =>
           if (h.reversible) decodeBlockDouble(r, block)
-          else if (std) decodeBlockDoubleStd(r, block, h.minexp)
           else decodeBlockDoubleLossy(r, block, h.minexp)
           var j = 0
           while (j < my) {

@@ -16,6 +16,13 @@ import java.nio.{ByteBuffer, ByteOrder}
   * requires an explicit tolerance; the reference maps tolerance < 0 to
   * reversible). Unrecognized codecs (DUMMY etc.) are rejected loudly.
   *
+  * Each `ZFP_LOSSY` stream writes one format, chosen by data type:
+  * float and double batches are libzfp's fixed-accuracy layout
+  * (|error| <= tolerance; a batch holding NaN or an infinity is
+  * rejected), int16 and int32 batches are the reversible stream, byte
+  * for byte the `ZFP_LOSSLESS` blob, because zfp's tolerance does not
+  * apply to integer fields.
+  *
   * Blob framing: 1 byte data_type code + the [[Zfp]] full-header stream
   * (nx = num_cols, ny = batch rows). The type byte exists because the
   * reference's int16 path compresses as a PROMOTED int32 field
@@ -25,12 +32,10 @@ import java.nio.{ByteBuffer, ByteOrder}
 object ZfpStreamCodec {
 
   /** `tolerance` None = reversible (lossless); Some(t >= 0) = zfp
-    * fixed-accuracy mode. `stdLayout` selects the standard libzfp
-    * accuracy bit layout (readable by other zfp implementations) over
-    * graft's enhanced layout (tighter reconstruction, exact integers)
-    * for lossy writes; reads auto-detect either. */
+    * fixed-accuracy mode for float and double (integer types ignore
+    * it). */
   final case class Params(dataType: String, numCols: Int,
-      tolerance: Option[Double] = None, stdLayout: Boolean = false) {
+      tolerance: Option[Double] = None) {
     val width: Int = dataType match {
       case "int16" => 2
       case "int32" | "float" => 4
@@ -49,7 +54,7 @@ object ZfpStreamCodec {
   private val NumColsRe = """"num_cols"\s*:\s*"?(\d+)"?""".r
   private val ToleranceRe =
     """"tolerance"\s*:\s*"?(-?[0-9]+(?:\.[0-9]+)?(?:[eE][-+]?[0-9]+)?)"?""".r
-  private val LayoutRe = """"layout"\s*:\s*"([A-Za-z_]+)"""".r
+  private val LayoutRe = """"layout"\s*:""".r
 
   /** Parse + validate params against the stream schema. Returns None for
     * absent params (uncompressed). Throws loudly for lossy/unknown
@@ -75,25 +80,8 @@ object ZfpStreamCodec {
       val dt = DataTypeRe.findFirstMatchIn(j).map(_.group(1)).getOrElse(
         throw new IllegalArgumentException(
           s"$name params missing data_type: $j"))
-      // optional extension over the reference's param shape: "layout":
-      // "std" writes lossy batches in the standard libzfp accuracy bit
-      // layout instead of the graft-enhanced one (see [[Zfp]]). An
-      // unknown layout name must not silently fall back — the caller
-      // asked for a specific wire format and would discover the wrong
-      // one only on the foreign reader.
-      val std = LayoutRe.findFirstMatchIn(j).map(_.group(1)) match {
-        case None => false
-        case Some("graft") => false
-        case Some("std") =>
-          require(tol.isDefined,
-            """"layout": "std" applies to ZFP_LOSSY only (the lossless """ +
-              "reversible layout is already the standard one)")
-          true
-        case Some(other) => throw new IllegalArgumentException(
-          s"""unknown zfp "layout": "$other" (expected "std" or "graft")""")
-      }
       val p = Params(dt, NumColsRe.findFirstMatchIn(j).map(_.group(1).toInt)
-        .getOrElse(schema.fields.size), tol, std)
+        .getOrElse(schema.fields.size), tol)
       val riverType = dt match {
         case "int16" => RiverType.Int16
         case "int32" => RiverType.Int32
@@ -112,6 +100,18 @@ object ZfpStreamCodec {
       p
     }
 
+  /** [[validate]] for a stream being created. Also rejects a "layout"
+    * key: the lossy layout is fixed, and a caller who asked for a wire
+    * format must not silently get another one. Readers ignore the key. */
+  def validateNew(json: Option[String], schema: RiverSchema)
+      : Option[Params] = {
+    json.foreach(j => require(LayoutRe.findFirstIn(j).isEmpty,
+      "the ZFP_LOSSY layout is fixed (libzfp's fixed-accuracy layout for " +
+        "float and double, the reversible stream for int16 and int32); " +
+        s"""drop "layout" from the params: $j"""))
+    validate(json, schema)
+  }
+
   /** Compress one write batch (packed fixed-width samples) to a framed
     * blob. */
   def compressBatch(p: Params, samples: Seq[Array[Byte]]): Array[Byte] = {
@@ -126,32 +126,26 @@ object ZfpStreamCodec {
       r += 1
     }
     val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    val blob = (p.dataType, p.tolerance) match {
-      case ("int16", tol) =>
+    val blob = p.dataType match {
+      case "int16" =>
         val a = new Array[Short](n * p.numCols)
         bb.asShortBuffer().get(a)
-        tol.fold(Zfp.compressInt16(a, p.numCols, n))(t =>
-          if (p.stdLayout) Zfp.compressInt16LossyStd(a, p.numCols, n, t)
-          else Zfp.compressInt16Lossy(a, p.numCols, n, t))
-      case ("int32", tol) =>
+        Zfp.compressInt16(a, p.numCols, n)
+      case "int32" =>
         val a = new Array[Int](n * p.numCols)
         bb.asIntBuffer().get(a)
-        tol.fold(Zfp.compressInt32(a, p.numCols, n))(t =>
-          if (p.stdLayout) Zfp.compressInt32LossyStd(a, p.numCols, n, t)
-          else Zfp.compressInt32Lossy(a, p.numCols, n, t))
-      case ("float", tol) =>
+        Zfp.compressInt32(a, p.numCols, n)
+      case "float" =>
         val a = new Array[Float](n * p.numCols)
         bb.asFloatBuffer().get(a)
-        tol.fold(Zfp.compressFloat(a, p.numCols, n))(t =>
-          if (p.stdLayout) Zfp.compressFloatLossyStd(a, p.numCols, n, t)
-          else Zfp.compressFloatLossy(a, p.numCols, n, t))
-      case ("double", tol) =>
+        p.tolerance.fold(Zfp.compressFloat(a, p.numCols, n))(
+          Zfp.compressFloatLossy(a, p.numCols, n, _))
+      case "double" =>
         val a = new Array[Double](n * p.numCols)
         bb.asDoubleBuffer().get(a)
-        tol.fold(Zfp.compressDouble(a, p.numCols, n))(t =>
-          if (p.stdLayout) Zfp.compressDoubleLossyStd(a, p.numCols, n, t)
-          else Zfp.compressDoubleLossy(a, p.numCols, n, t))
-      case (other, _) =>
+        p.tolerance.fold(Zfp.compressDouble(a, p.numCols, n))(
+          Zfp.compressDoubleLossy(a, p.numCols, n, _))
+      case other =>
         // ZfpParams validates dataType at construction; loud here too so
         // a future params change can't fall through to silent garbage
         sys.error(s"zfp codec: unsupported dataType $other")
@@ -163,9 +157,9 @@ object ZfpStreamCodec {
   }
 
   /** Expand a framed blob into per-sample packed payloads. Self-contained:
-    * the type byte + zfp header carry everything needed. Accuracy blobs
-    * auto-dispatch on the graft lossy marker (marked = graft layout,
-    * unmarked = standard libzfp layout — see [[Zfp.decompress]]). */
+    * the type byte + zfp header carry everything needed: the header's
+    * mode selects the reversible or the accuracy decode (see
+    * [[Zfp.decompress]]). */
   def expand(framed: Array[Byte]): Array[Array[Byte]] = {
     val typeCode = framed(0)
     val blob = java.util.Arrays.copyOfRange(framed, 1, framed.length)

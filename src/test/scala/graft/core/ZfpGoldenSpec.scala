@@ -14,8 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Derivation for the constant 4x4 double field, all values 1.0,
   * tolerance 2^-10 (each step is the published algorithm):
   *
-  *  1. HEADER (full): magic 'z','f','p', codec 5 (UNMARKED: std
-  *     layout); 52-bit meta = ((((nx-1)<<24 | (ny-1)) << 2) | dims-1)
+  *  1. HEADER (full): magic 'z','f','p', codec 5; 52-bit meta = ((((nx-1)<<24 | (ny-1)) << 2) | dims-1)
   *     << 2 | (type - int32) with nx=ny=4, dims=2, double=3;
   *     12-bit short mode = minexp - ZFP_MIN_EXP.
   *  2. zfp_stream_set_accuracy: tolerance 2^-10 -> minexp = -10
@@ -65,7 +64,7 @@ class ZfpGoldenSpec extends AnyFunSuite {
 
   private def stdHeader(p: Packer, tpe: Long, mode: Long): Unit = {
     p.put('z'.toLong, 8); p.put('f'.toLong, 8); p.put('p'.toLong, 8)
-    p.put(5L, 8) // plain codec version: std layout, no graft marker
+    p.put(5L, 8) // codec version 5
     val meta = ((((3L << 24) | 3L) << 2) | 1L) << 2 | tpe // 4x4, 2D
     p.put(meta, 52)
     p.put(mode, 12)
@@ -83,7 +82,7 @@ class ZfpGoldenSpec extends AnyFunSuite {
     val expected = p.bytes
     assert(expected.length == 24) // 142 bits -> 3 LE words
 
-    val got = Zfp.compressDoubleLossyStd(
+    val got = Zfp.compressDoubleLossy(
       Array.fill(16)(1.0), 4, 4, tolerance = 0.0009765625 /* 2^-10 */)
     assert(java.util.Arrays.equals(got, expected),
       s"encode drifted from the spec-derived stream:\n" +
@@ -109,7 +108,7 @@ class ZfpGoldenSpec extends AnyFunSuite {
     val expected = p.bytes
     assert(expected.length == 16)
 
-    val got = Zfp.compressDoubleLossyStd(
+    val got = Zfp.compressDoubleLossy(
       new Array[Double](16), 4, 4, tolerance = 0.0009765625)
     assert(java.util.Arrays.equals(got, expected))
     Zfp.decompress(expected) match {
@@ -137,7 +136,7 @@ class ZfpGoldenSpec extends AnyFunSuite {
     val expected = p.bytes
     assert(expected.length == 24) // 96+9+34 = 139 bits -> 3 LE words
 
-    val got = Zfp.compressFloatLossyStd(
+    val got = Zfp.compressFloatLossy(
       Array.fill(16)(1.0f), 4, 4, tolerance = 0.0009765625)
     assert(java.util.Arrays.equals(got, expected),
       s"encode drifted from the spec-derived stream:\n" +

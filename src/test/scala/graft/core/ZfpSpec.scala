@@ -90,9 +90,9 @@ class ZfpSpec extends AnyFunSuite {
   test("lossy float and double blobs are byte-pinned") {
     val d = fullMantissaSines()
     val got = Map(
-      "float" -> sha256(Zfp.compressFloatLossyStd(
+      "float" -> sha256(Zfp.compressFloatLossy(
         d.map(_.toFloat), nCh, nSamp, 20.0)),
-      "double" -> sha256(Zfp.compressDoubleLossyStd(d, nCh, nSamp, 0.5)))
+      "double" -> sha256(Zfp.compressDoubleLossy(d, nCh, nSamp, 0.5)))
     assert(got == LossySinePins, s"lossy bytes drifted: $got")
   }
 
@@ -222,11 +222,8 @@ class ZfpSpec extends AnyFunSuite {
 
   test("lossy float sine fixture, tolerance 20: the reference's bounds") {
     // TestZfpLossy_Float (compressor_test.cpp:147-167): tolerance 20,
-    // compressed to < 90% of raw, correlation >= 0.95. Plus this codec's
-    // own error bound: plane truncation <= 2^minexp per coefficient and
-    // the Lorenzo gain is covered by precision()'s 2*(dims+1) slack up
-    // to a factor of 4 (gain 8 per axis vs 2^6 slack) — so |err| <= 4*tol
-    // guaranteed, typically far below.
+    // compressed to < 90% of raw, correlation >= 0.95. Plus zfp's
+    // accuracy guarantee: |err| <= tol.
     val data = sines().map(_.toFloat)
     val blob = Zfp.compressFloatLossy(data, nCh, nSamp, 20.0)
     assert(blob.length <= (0.9 * data.length * 4).toInt,
@@ -234,33 +231,23 @@ class ZfpSpec extends AnyFunSuite {
     val Zfp.DecodedFloat(nx, ny, back) = Zfp.decompress(blob): @unchecked
     assert(nx == nCh && ny == nSamp)
     val maxErr = data.indices.map(i => math.abs(back(i) - data(i))).max
-    assert(maxErr <= 80.0f, s"max abs err $maxErr > 4 * tolerance")
+    assert(maxErr <= 20.0f, s"max abs err $maxErr > tolerance")
     val c = corr(data.map(_.toDouble), back.map(_.toDouble))
     assert(c >= 0.95, s"correlation $c < 0.95")
-    // NOTE: on this fixture lossy == lossless size — the fixture's floats
-    // are integer-valued (int16-derived, like the reference's), so the
-    // planes the tolerance would drop are already elided as trailing
-    // zeros in both modes. Full-mantissa floats below show the win.
   }
 
   test("lossy full-mantissa floats: truncation beats lossless size") {
     // true sines (not int16-truncated): every mantissa bit is live, so
     // reversible mode must code ~all planes while tolerance-20 truncation
     // drops the low half
-    val data = new Array[Float](nSamp * nCh)
-    for (t <- 0 until nSamp; c <- 0 until nCh) {
-      val phase = math.Pi * c / (nCh - 1)
-      val freq = 1.0 + 9.0 * c / (nCh - 1)
-      data(t * nCh + c) =
-        (math.sin(freq * t / 10.0 + phase) * 16384.0).toFloat
-    }
+    val data = fullMantissaSines().map(_.toFloat)
     val lossy = Zfp.compressFloatLossy(data, nCh, nSamp, 20.0)
     val lossless = Zfp.compressFloat(data, nCh, nSamp)
     assert(lossy.length < (0.6 * lossless.length).toInt,
       s"lossy ${lossy.length} not well under lossless ${lossless.length}")
     val Zfp.DecodedFloat(_, _, back) = Zfp.decompress(lossy): @unchecked
     val maxErr = data.indices.map(i => math.abs(back(i) - data(i))).max
-    assert(maxErr <= 80.0f, s"max abs err $maxErr > 4 * tolerance")
+    assert(maxErr <= 20.0f, s"max abs err $maxErr > tolerance")
     assert(corr(data.map(_.toDouble), back.map(_.toDouble)) >= 0.95)
   }
 
@@ -270,24 +257,37 @@ class ZfpSpec extends AnyFunSuite {
     assert(blob.length <= (0.9 * data.length * 8).toInt)
     val Zfp.DecodedDouble(_, _, back) = Zfp.decompress(blob): @unchecked
     val maxErr = data.indices.map(i => math.abs(back(i) - data(i))).max
-    assert(maxErr <= 4.0, s"max abs err $maxErr > 4 * tolerance")
+    assert(maxErr <= 1.0, s"max abs err $maxErr > tolerance")
     assert(corr(data, back) >= 0.95)
   }
 
   test("lossy int16/int32: integer fields ignore tolerance, exact trip") {
-    // zfp applies minexp to floating-point fields only; integer lossy
-    // streams code every plane and round-trip exactly (the reference's
-    // default-lossy ephys int16 case decodes bit-exact here)
+    // zfp applies its tolerance to floating-point fields only, so a
+    // ZFP_LOSSY integer batch is the reversible stream: byte for byte
+    // the ZFP_LOSSLESS blob (the reference's default-lossy ephys int16
+    // case decodes bit-exact)
     val data = sines()
-    val blob = Zfp.compressInt16Lossy(data, nCh, nSamp, 20.0)
-    val r = new Zfp.BitReader(blob)
-    assert(Zfp.readHeader(r).accuracy, "header must carry accuracy mode")
-    val (_, _, back) = Zfp.decompressInt16(blob)
-    assert(java.util.Arrays.equals(back, data))
-    val ints = data.map(_.toInt)
-    val blob32 = Zfp.compressInt32Lossy(ints, nCh, nSamp, 0.5)
-    val Zfp.DecodedInt32(_, _, back32) = Zfp.decompress(blob32): @unchecked
-    assert(java.util.Arrays.equals(back32, ints))
+    def rows(width: Int)(put: (java.nio.ByteBuffer, Int) => Unit) =
+      (0 until nSamp).map { t =>
+        val bb = java.nio.ByteBuffer.allocate(nCh * width)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        (0 until nCh).foreach(c => put(bb, t * nCh + c))
+        bb.array()
+      }
+    for ((dt, width, tol) <- Seq(("int16", 2, 20.0), ("int32", 4, 0.5))) {
+      val samples = rows(width) { (bb, i) =>
+        if (width == 2) bb.putShort(data(i)) else bb.putInt(data(i).toInt)
+      }
+      val lossy = ZfpStreamCodec.compressBatch(
+        ZfpStreamCodec.Params(dt, nCh, Some(tol)), samples)
+      val lossless = ZfpStreamCodec.compressBatch(
+        ZfpStreamCodec.Params(dt, nCh), samples)
+      assert(java.util.Arrays.equals(lossy, lossless),
+        s"lossy $dt blob differs from the lossless blob")
+      val back = ZfpStreamCodec.expand(lossy)
+      assert(back.indices.forall(t =>
+        java.util.Arrays.equals(back(t), samples(t))), s"$dt round trip")
+    }
   }
 
   test("lossy float: blocks entirely below tolerance decode to zeros") {
@@ -314,43 +314,48 @@ class ZfpSpec extends AnyFunSuite {
     assert(Zfp.minexpForTolerance(java.lang.Double.MIN_VALUE) == -1074)
   }
 
-  test("unmarked accuracy streams decode through the standard libzfp " +
-      "layout") {
-    // An accuracy stream WITHOUT the graft marker is what a genuine
-    // libzfp writer produces; decompress must read it via the standard
-    // non-orthogonal codec, not the graft payload decode. (No libzfp
-    // binary exists in this sandbox, so the writer side here is
-    // compressFloatLossyStd — the same published layout, spec-derived.)
+  test("lossy float and double reject NaN and infinities, naming the " +
+      "column and row") {
+    val f = Array.tabulate(32)(_.toFloat)
+    f(13) = Float.NaN
+    val ef = intercept[IllegalArgumentException](
+      Zfp.compressFloatLossy(f, 4, 8, 0.5))
+    assert(ef.getMessage.contains("column 1, row 3"), ef.getMessage)
+    val d = Array.tabulate(32)(_.toDouble)
+    d(30) = Double.NegativeInfinity
+    val ed = intercept[IllegalArgumentException](
+      Zfp.compressDoubleLossy(d, 4, 8, 0.5))
+    assert(ed.getMessage.contains("column 2, row 7"), ed.getMessage)
+  }
+
+  test("header: a codec version other than 5 is rejected loudly, the " +
+      "retired 0x85 lossy marker included") {
     val data = Array.tabulate(64)(i => (math.sin(i / 3.0) * 100).toFloat)
-    val std = Zfp.compressFloatLossyStd(data, 8, 8, 0.5)
-    assert((std(3) & 0x80) == 0,
-      "standard-layout streams carry a plain version byte")
-    val Zfp.DecodedFloat(_, _, back) = Zfp.decompress(std): @unchecked
-    assert(data.indices.forall(i => math.abs(back(i) - data(i)) <= 0.5),
-      "std accuracy decode exceeded tolerance")
-    // graft-marked streams still take the graft decode
-    val marked = Zfp.compressFloatLossy(data, 8, 8, 0.5)
-    assert((marked(3) & 0x80) != 0, "graft lossy streams carry the marker")
-    val Zfp.DecodedFloat(_, _, g) = Zfp.decompress(marked): @unchecked
-    assert(data.indices.forall(i => math.abs(g(i) - data(i)) <= 2.0))
-    // the two layouts genuinely differ on the wire (not just the header)
-    assert(!java.util.Arrays.equals(
-      java.util.Arrays.copyOfRange(std, 4, std.length),
-      java.util.Arrays.copyOfRange(marked, 4, marked.length)),
-      "std and graft lossy payloads should differ")
-    // a marked stream claiming a non-accuracy mode is inconsistent
-    val lossless = Zfp.compressInt16(sines(), nCh, nSamp)
-    assert((lossless(3) & 0x80) == 0, "reversible streams stay unmarked")
-    val inconsistent = lossless.clone()
-    inconsistent(3) = (inconsistent(3) | 0x80).toByte
-    intercept[IllegalArgumentException](Zfp.decompress(inconsistent))
+    val lossy = Zfp.compressFloatLossy(data, 8, 8, 0.5)
+    assert(lossy(3) == 5, "accuracy streams carry the plain version byte")
+    val marked = lossy.clone()
+    marked(3) = 0x85.toByte
+    val e = intercept[IllegalArgumentException](Zfp.decompress(marked))
+    assert(e.getMessage.contains("unsupported codec version 133"),
+      e.getMessage)
+  }
+
+  test("header: an accuracy-mode int32 stream is rejected loudly") {
+    val w = new Zfp.BitWriter
+    w.writeBits('z'.toLong, 8); w.writeBits('f'.toLong, 8)
+    w.writeBits('p'.toLong, 8); w.writeBits(5L, 8)
+    w.writeBits((((3L << 24) | 3L) << 4) | (1L << 2) | 0L, 52) // int32
+    w.writeBits(1074L, 12) // accuracy mode, minexp 0
+    w.writeBits(0L, 64)
+    val e = intercept[IllegalArgumentException](Zfp.decompress(w.toBytes))
+    assert(e.getMessage.contains("fixed-accuracy int32"), e.getMessage)
   }
 
   test("std layout: double sine within tolerance and smaller than " +
       "lossless") {
     val data = sines().map(_.toDouble)
     val tol = 1.0
-    val blob = Zfp.compressDoubleLossyStd(data, nCh, nSamp, tol)
+    val blob = Zfp.compressDoubleLossy(data, nCh, nSamp, tol)
     val Zfp.DecodedDouble(nx, ny, back) = Zfp.decompress(blob): @unchecked
     assert(nx == nCh && ny == nSamp)
     var maxErr = 0.0
@@ -364,40 +369,16 @@ class ZfpSpec extends AnyFunSuite {
     // tolerance-monotonicity are the meaningful bars.)
     assert(blob.length < data.length * 8 / 4,
       "std accuracy stream should be well below raw size")
-    val looser = Zfp.compressDoubleLossyStd(data, nCh, nSamp, 100.0)
+    val looser = Zfp.compressDoubleLossy(data, nCh, nSamp, 100.0)
     assert(looser.length < blob.length,
       "a looser tolerance must not enlarge the std stream")
-  }
-
-  test("std layout: int16 promote/demote reconstructs within 1 unit") {
-    // standard accuracy-mode integers go through the ROUNDING transform
-    // (unlike graft's exact integer path): after the reference's <<15
-    // promotion and >>15 demotion the transform's few-unit rounding at
-    // the promoted scale collapses to at most +-1 int16 unit
-    val data = sines()
-    val blob = Zfp.compressInt16LossyStd(data, nCh, nSamp, 20.0)
-    assert((blob(3) & 0x80) == 0)
-    val (_, _, back) = Zfp.decompressInt16(blob)
-    var maxErr = 0
-    data.indices.foreach { i =>
-      maxErr = math.max(maxErr, math.abs(back(i) - data(i)))
-    }
-    assert(maxErr <= 1, s"std int16 reconstruction off by $maxErr > 1")
-    // extremes of the int16 domain stay in range after the round trip
-    val extremes = Array.fill[Short](16)(Short.MinValue) ++
-      Array.fill[Short](16)(Short.MaxValue)
-    val (_, _, eback) =
-      Zfp.decompressInt16(Zfp.compressInt16LossyStd(extremes, 4, 8, 0.0))
-    extremes.indices.foreach { i =>
-      assert(math.abs(eback(i) - extremes(i)) <= 1)
-    }
   }
 
   test("std layout: partial-block shapes and all-below-tolerance zeros") {
     for ((nx, ny) <- Seq((1, 1), (3, 5), (4, 4), (5, 3), (7, 9), (13, 2))) {
       val data = Array.tabulate(nx * ny)(i => math.sin(i / 2.0) * 10.0)
       val Zfp.DecodedDouble(bx, by, back) =
-        Zfp.decompress(Zfp.compressDoubleLossyStd(data, nx, ny, 0.01)): @unchecked
+        Zfp.decompress(Zfp.compressDoubleLossy(data, nx, ny, 0.01)): @unchecked
       assert(bx == nx && by == ny)
       data.indices.foreach { i =>
         assert(math.abs(back(i) - data(i)) <= 0.01, s"shape ($nx,$ny) i=$i")
@@ -406,7 +387,7 @@ class ZfpSpec extends AnyFunSuite {
     // a block entirely below tolerance codes as the single-bit zero block
     val tiny = Array.fill(16)(1.0e-9)
     val Zfp.DecodedDouble(_, _, z) =
-      Zfp.decompress(Zfp.compressDoubleLossyStd(tiny, 4, 4, 1.0)): @unchecked
+      Zfp.decompress(Zfp.compressDoubleLossy(tiny, 4, 4, 1.0)): @unchecked
     assert(z.forall(_ == 0.0), "below-tolerance std block must decode to 0")
   }
 

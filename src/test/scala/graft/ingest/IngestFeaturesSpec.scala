@@ -55,9 +55,10 @@ class IngestFeaturesSpec extends AnyFunSuite {
 
   test("ZFP_LOSSY streams round-trip within tolerance (C1 lossy)") {
     // fixed-accuracy transport: tolerance 0.5 on a double stream; the
-    // read-back values must sit within this codec's documented bound
-    // (4 * tolerance; see Zfp scaladoc) and the segment must be smaller
-    // than raw. Missing tolerance and unknown codecs still reject loudly.
+    // read-back values must sit within zfp's accuracy bound |err| <=
+    // tolerance and the segment must be smaller than raw. Missing
+    // tolerance, the removed "layout" key and unknown codecs reject
+    // loudly.
     val store = newStore()
     val lossy =
       """{"name":"ZFP_LOSSY","params":{"num_cols":"1","data_type":"double","tolerance":"0.5"}}"""
@@ -72,8 +73,16 @@ class IngestFeaturesSpec extends AnyFunSuite {
     assert(rows.map(_._2) == (0L until 257L))
     val back = rows.map(_._3(0).asInstanceOf[Double])
     val maxErr = values.indices.map(i => math.abs(back(i) - values(i))).max
-    assert(maxErr <= 2.0, s"max err $maxErr > 4 * tolerance")
+    assert(maxErr <= 0.5, s"max err $maxErr > tolerance")
     assert(store.segmentFile("c", 0).length() < 257 * 8)
+
+    val el = intercept[IllegalArgumentException] {
+      store.createStream("c2", schema, compressionParamsJson = Some(
+        """{"name":"ZFP_LOSSY","params":{"num_cols":"1",""" +
+          """"data_type":"double","tolerance":"0.5","layout":"std"}}"""))
+    }
+    assert(el.getMessage.contains("layout is fixed"), el.getMessage)
+    assert(!store.streamExists("c2"))
 
     intercept[IllegalArgumentException] {
       store.createStream("c3", schema, compressionParamsJson = Some(
@@ -86,27 +95,44 @@ class IngestFeaturesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("DUMMY"))
   }
 
-  test("""ZFP_LOSSY "layout": "std" writes the standard libzfp accuracy """ +
-      "bit layout end-to-end") {
-    // the opt-in standard layout: segments carry unmarked accuracy
-    // blobs (what a genuine libzfp writer produces), read back through
-    // the auto-detecting decode within zfp's |err| <= tolerance bound
+  test("ZFP_LOSSY rejects a batch holding NaN or an infinity and writes " +
+      "nothing: no rollover tombstone, no new segment") {
+    // the accuracy coder cannot carry non-finite values (NaN would read
+    // back as ~0, and one +Inf zeroes its whole 4x4 block), so such a
+    // batch is rejected naming the stream and the column, and the next
+    // finite batch continues the gapless sample_index
     val store = newStore()
-    val params =
-      """{"name":"ZFP_LOSSY","params":{"num_cols":"1",""" +
-        """"data_type":"double","tolerance":"0.5","layout":"std"}}"""
-    val w = store.createStream("cs", schema,
-      compressionParamsJson = Some(params))
-    val values = (0 until 257).map(i => math.cos(i / 7.0) * 1000.0)
-    w.write(values.map(v => Seq[Any](v)))
+    val two = RiverSchema(Seq(RiverField("x", RiverType.Double64),
+      RiverField("y", RiverType.Double64)))
+    val w = store.createStream("nf", two, keysPerSegment = 8,
+      compressionParamsJson = Some(
+        """{"name":"ZFP_LOSSY","params":{"num_cols":"2",""" +
+          """"data_type":"double","tolerance":"0.5"}}"""))
+    def batch(from: Int) =
+      (from until from + 8).map(i => Seq[Any](i * 1.5, -i * 2.5))
+    w.write(batch(0)) // fills segment 0: the next batch rolls over
+    val seg0 = java.nio.file.Files.readAllBytes(
+      store.segmentFile("nf", 0).toPath)
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity)) {
+      val e = intercept[IllegalArgumentException] {
+        w.write(batch(8).updated(5, Seq[Any](1.0, bad)))
+      }
+      assert(e.getMessage.contains("stream nf") &&
+        e.getMessage.contains("column 1"), e.getMessage)
+      assert(store.segments("nf") == Seq(0L))
+      assert(java.util.Arrays.equals(seg0, java.nio.file.Files.readAllBytes(
+        store.segmentFile("nf", 0).toPath)), "a rejected batch wrote bytes")
+    }
+    w.write(batch(8))
     w.stop()
-    val r = store.openReader("cs")
-    val rows = r.read(1000, 0).get
-    assert(rows.size == 257)
-    val back = rows.map(_._3(0).asInstanceOf[Double])
-    val maxErr = values.indices.map(i => math.abs(back(i) - values(i))).max
-    assert(maxErr <= 0.5, s"std layout max err $maxErr > tolerance")
-    assert(store.segmentFile("cs", 0).length() < 257 * 8)
+    val r = store.openReader("nf")
+    val rows = Iterator.continually(r.read(100, 0)).takeWhile(_.isDefined)
+      .flatMap(_.get).toSeq
+    assert(rows.map(_._2) == (0L until 16L))
+    rows.foreach { case (_, i, v) =>
+      assert(math.abs(v(0).asInstanceOf[Double] - i * 1.5) <= 0.5)
+      assert(math.abs(v(1).asInstanceOf[Double] + i * 2.5) <= 0.5)
+    }
   }
 
   test("variable-width streams refuse compression (writer.cpp:131-134)") {
