@@ -57,7 +57,7 @@ object ZfpStreamCodec {
   private val LayoutRe = """"layout"\s*:""".r
 
   /** Parse + validate params against the stream schema. Returns None for
-    * absent params (uncompressed). Throws loudly for lossy/unknown
+    * absent params (uncompressed). Throws loudly for unknown
     * compression or schema mismatch. */
   def validate(json: Option[String], schema: RiverSchema): Option[Params] =
     json.map { j =>
