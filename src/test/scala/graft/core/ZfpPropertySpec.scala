@@ -83,6 +83,37 @@ class ZfpPropertySpec extends AnyFunSuite {
     })
   }
 
+  test("property: lossy float error is within 4 x tolerance") {
+    // a ZFP_LOSSY float stream's batch path (row packing, type byte,
+    // accuracy decode). 4 x tolerance was the bound of the deleted graft
+    // layout; the one layout left meets zfp's tighter |error| <=
+    // tolerance, and that is what is asserted
+    val tolGen = Gen.oneOf(0.5, 1.0, 20.0, 100.0)
+    check(Prop.forAll(shapeGen.flatMap { case (nx, ny) =>
+      for {
+        tol <- tolGen
+        d <- Gen.containerOfN[Array, Float](nx * ny,
+          Gen.chooseNum(-1.0e6f, 1.0e6f))
+      } yield (nx, ny, tol, d)
+    }) { case (nx, ny, tol, data) =>
+      val rows = data.grouped(nx).map { r =>
+        val bb = java.nio.ByteBuffer.allocate(4 * nx)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        r.foreach(bb.putFloat)
+        bb.array()
+      }.toSeq
+      val back = ZfpStreamCodec.expand(ZfpStreamCodec.compressBatch(
+          ZfpStreamCodec.Params("float", nx, Some(tol)), rows))
+        .flatMap { row =>
+          val fb = java.nio.ByteBuffer.wrap(row)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN).asFloatBuffer()
+          Array.fill(nx)(fb.get())
+        }
+      back.length == data.length &&
+        data.indices.forall(i => math.abs(back(i) - data(i)) <= tol)
+    })
+  }
+
   test("property: std-layout lossy double error is within tolerance") {
     // the standard libzfp accuracy layout (non-orthogonal transform,
     // plain plane coder): zfp's documented accuracy guarantee is

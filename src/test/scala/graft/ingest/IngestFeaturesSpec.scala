@@ -95,6 +95,35 @@ class IngestFeaturesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("DUMMY"))
   }
 
+  test("""ZFP_LOSSY "layout": "std" writes the standard libzfp accuracy """ +
+      "bit layout end-to-end") {
+    // what "layout": "std" used to opt into is the only lossy layout
+    // now, so a stream created without the key must write it: the
+    // segment holds the batch's plain libzfp accuracy blob byte for
+    // byte, and it reads back within zfp's |err| <= tolerance bound
+    val store = newStore()
+    val params =
+      """{"name":"ZFP_LOSSY","params":{"num_cols":"1",""" +
+        """"data_type":"double","tolerance":"0.5"}}"""
+    val w = store.createStream("cs", schema,
+      compressionParamsJson = Some(params))
+    val values = (0 until 257).map(i => math.cos(i / 7.0) * 1000.0)
+    w.write(values.map(v => Seq[Any](v)))
+    w.stop()
+    val framed =   // type byte 3 (double) + the accuracy blob
+      3.toByte +: Zfp.compressDoubleLossy(values.toArray, 1, 257, 0.5)
+    val seg = Files.readAllBytes(store.segmentFile("cs", 0).toPath)
+    assert(seg.indexOfSlice(framed) >= 0,
+      "segment does not hold the standard accuracy blob")
+    val r = store.openReader("cs")
+    val rows = r.read(1000, 0).get
+    assert(rows.size == 257)
+    val back = rows.map(_._3(0).asInstanceOf[Double])
+    val maxErr = values.indices.map(i => math.abs(back(i) - values(i))).max
+    assert(maxErr <= 0.5, s"std layout max err $maxErr > tolerance")
+    assert(store.segmentFile("cs", 0).length() < 257 * 8)
+  }
+
   test("ZFP_LOSSY rejects a batch holding NaN or an infinity and writes " +
       "nothing: no rollover tombstone, no new segment") {
     // the accuracy coder cannot carry non-finite values (NaN would read
