@@ -166,21 +166,6 @@ object Dedup {
         sig AS (SELECT doc_id, CAST($simhash AS BIGINT) AS simhash FROM sums)"""
   }
 
-  /** doc_id -> per-doc distinct shingle ARRAY, materialized once.
-    *
-    * Computed by the compiled [[graft.functions.TextKernels]] mapPartitions
-    * kernel, not the Catalyst higher-order-function expression: HOFs are
-    * interpreted (never codegen) and project-collapse duplicates them into
-    * every referencing subtree — at sf0.1 that was minutes of
-    * single-threaded interpreted evaluation. The kernel output is small
-    * DATA (5k rows of string arrays), checkpointed so the 2+ downstream
-    * references (candidate generation, pair verification) read it instead
-    * of recomputing.
-    */
-  private def shingleArr(s: SparkSession, dir: String, k: Int): DataFrame =
-    graft.functions.TextKernels.shingleArrays(s, docs(s, dir), k)
-      .pin()
-
   // MinHash parameters: BANDS bands x ROWS rows = 16 hash functions.
   // ROWS=8 keeps the candidate set tiny on corpora with high background
   // similarity (this synthetic corpus has a 31-word vocabulary, so
@@ -333,6 +318,34 @@ object Dedup {
         ),$perConfig
         $rows"""
   }
+
+  /** doc_id's md5 bucket mod 100: the p05 split of the incremental
+    * minhash queries. */
+  private def docPct: Column = md5Bucket(col("doc_id")) % 100
+
+  /** The (doc_id, shs, bkeys) MinHash signatures of `docs` at the
+    * minhash queries' banding. */
+  private def minhashSigs(docs: DataFrame): DataFrame =
+    graft.operators.DedupOps
+      .minhashIndex(docs, "doc_id", "text", 5, BANDS, ROWS)
+
+  /** Commits the signatures of `docs` as batch `id` of the durable
+    * minhash index at `idxDir`. */
+  private def seedMinhash(docs: DataFrame, idxDir: String, id: Long): Unit =
+    graft.operators.DedupOps.commitMinhashIndexBatch(
+      minhashSigs(docs), idxDir, id, 5, BANDS, ROWS)
+
+  /** Oracle tail of st10/d17/d18: the `pairs` rows touching a new
+    * (bucket >= 80) document. */
+  private def sqlPairsTouchingNew: String = s"""
+        nb AS (
+          SELECT doc_id FROM documents
+          WHERE ${sqlMd5Bucket("doc_id")}
+            % 100 >= 80
+        )
+        SELECT a, b, jaccard FROM pairs
+        WHERE a IN (SELECT doc_id FROM nb)
+           OR b IN (SELECT doc_id FROM nb)"""
 
   val all: Seq[GraftQuery] = Seq(
 
@@ -602,10 +615,7 @@ object Dedup {
         // signature gen O(batch) + a band-bucket probe of the index +
         // O(candidates) verification; the old corpus text is never read.
         val docsAll = Tables.load(s, dir, "documents")
-        val bucket = conv(
-          substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val oldDocs = docsAll.filter(bucket < 80).select($"doc_id", $"text")
+        val oldDocs = docsAll.filter(docPct < 80).select($"doc_id", $"text")
         // The existing-corpus index is PAY-ONCE by the operator's own
         // contract (build once, persist, probe per increment) — cache it
         // per (session, dir) like q31's pay-once bucketed layout, so
@@ -616,8 +626,7 @@ object Dedup {
         val basePath = st10BaseIndex.getOrElseUpdate((s, dir), {
           val p = graft.core.StreamStore
             .scratchRoot("graft-st10-base-").toString
-          graft.operators.DedupOps
-            .minhashIndex(oldDocs, "doc_id", "text", 5, BANDS, ROWS)
+          minhashSigs(oldDocs)
             .select($"doc_id", $"shs", $"bkeys")
             .write.mode("overwrite").parquet(p)
           p
@@ -646,7 +655,7 @@ object Dedup {
           "minhash", Map("shingleK" -> 5L, "bands" -> BANDS.toLong,
             "rows" -> ROWS.toLong))
         graft.operators.AnnOps.commitGen(s, idxDirS, 0L)
-        val newDocs = docsAll.filter(bucket >= 80)
+        val newDocs = docsAll.filter(docPct >= 80)
           .select($"doc_id", $"text")
         val newDir = graft.core.StreamStore
           .scratchRoot("graft-st10-").toString
@@ -679,15 +688,7 @@ object Dedup {
                 org.apache.spark.sql.types.DoubleType)))))
       },
       Some(s"""
-        WITH ${sqlMinhashCtes()},
-        nb AS (
-          SELECT doc_id FROM documents
-          WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
-            % 100 >= 80
-        )
-        SELECT a, b, jaccard FROM pairs
-        WHERE a IN (SELECT doc_id FROM nb)
-           OR b IN (SELECT doc_id FROM nb)""")),
+        WITH ${sqlMinhashCtes()},$sqlPairsTouchingNew""")),
 
     // --------------- minhash-index tombstone deletes (d17)
     GraftQuery(
@@ -709,41 +710,26 @@ object Dedup {
         // mismatch.
         val docsAll = Tables.load(s, dir, "documents")
           .select($"doc_id", $"text")
-        val bucket = conv(
-          substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val oldDocs = docsAll.filter(bucket < 80)
-        val newDocs = docsAll.filter(bucket >= 80)
+        val oldDocs = docsAll.filter(docPct < 80)
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-d17-").toString
-        graft.operators.DedupOps.commitMinhashIndexBatch(
-          graft.operators.DedupOps
-            .minhashIndex(oldDocs, "doc_id", "text", 5, BANDS, ROWS),
-          idxDir, batchId = 0L, 5, BANDS, ROWS)
+        seedMinhash(oldDocs, idxDir, 0L)
         graft.operators.AnnOps.deleteFromIndex(
           oldDocs.filter($"doc_id" % 10 === 0).select($"doc_id"),
           "doc_id", idxDir, batchId = 0L)
         graft.operators.DedupOps.incrementalMinhashDedupDurable(
-          newDocs, "doc_id", "text", idxDir, 1L,
+          docsAll.filter(docPct >= 80), "doc_id", "text", idxDir, 1L,
           5, BANDS, ROWS, JACCARD_T)
       },
       Some(s"""
         WITH corpus AS (
           SELECT doc_id, text FROM documents
           WHERE NOT (
-            ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
+            ${sqlMd5Bucket("doc_id")}
               % 100 < 80
             AND doc_id % 10 = 0)
         ),
-        ${sqlMinhashCtes("corpus")},
-        nb AS (
-          SELECT doc_id FROM documents
-          WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
-            % 100 >= 80
-        )
-        SELECT a, b, jaccard FROM pairs
-        WHERE a IN (SELECT doc_id FROM nb)
-           OR b IN (SELECT doc_id FROM nb)""")),
+        ${sqlMinhashCtes("corpus")},$sqlPairsTouchingNew""")),
 
     // --------------- minhash-index batch RETENTION (d18)
     GraftQuery(
@@ -764,40 +750,23 @@ object Dedup {
         // go red if the retention cut were dropped.
         val docsAll = Tables.load(s, dir, "documents")
           .select($"doc_id", $"text")
-        val bucket = conv(
-          substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-d18-").toString
-        def seedBatch(docs: org.apache.spark.sql.DataFrame,
-            id: Long): Unit =
-          graft.operators.DedupOps.commitMinhashIndexBatch(
-            graft.operators.DedupOps.minhashIndex(
-              docs, "doc_id", "text", 5, BANDS, ROWS),
-            idxDir, id, 5, BANDS, ROWS)
-        seedBatch(docsAll.filter(bucket < 50), 0L)
-        seedBatch(docsAll.filter(bucket >= 50 && bucket < 80), 1L)
+        seedMinhash(docsAll.filter(docPct < 50), idxDir, 0L)
+        seedMinhash(docsAll.filter(docPct >= 50 && docPct < 80), idxDir, 1L)
         graft.operators.AnnOps.expireBatches(s, idxDir,
           minKeepBatchId = 1L)
         graft.operators.DedupOps.incrementalMinhashDedupDurable(
-          docsAll.filter(bucket >= 80), "doc_id", "text", idxDir, 2L,
+          docsAll.filter(docPct >= 80), "doc_id", "text", idxDir, 2L,
           5, BANDS, ROWS, JACCARD_T)
       },
       Some(s"""
         WITH corpus AS (
           SELECT doc_id, text FROM documents
-          WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
+          WHERE ${sqlMd5Bucket("doc_id")}
             % 100 >= 50
         ),
-        ${sqlMinhashCtes("corpus")},
-        nb AS (
-          SELECT doc_id FROM documents
-          WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
-            % 100 >= 80
-        )
-        SELECT a, b, jaccard FROM pairs
-        WHERE a IN (SELECT doc_id FROM nb)
-           OR b IN (SELECT doc_id FROM nb)""")),
+        ${sqlMinhashCtes("corpus")},$sqlPairsTouchingNew""")),
 
     // ------------------------------------------------------------ SimHash
     GraftQuery(

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{conv, md5, substring}
 import org.apache.spark.sql.types.DecimalType
 
 /** One named query of the engine's public surface.
@@ -34,6 +35,13 @@ object GraftQuery {
     * chained decimal products stay under precision 38 without rescaling. */
   def decS(c: Column): Column = c.cast(DecimalType(8, 6))
 
-  /** Oracle-SQL spelling of [[dec]]. */
-  def sqlDec(e: String): String = s"CAST($e AS DECIMAL(18,6))"
+  /** The md5 bucket every deterministic split and sample keys on: the
+    * first four hex digits of md5(key as a string), read as a long in
+    * [0, 65536). */
+  private[queries] def md5Bucket(key: Column): Column =
+    conv(substring(md5(key.cast("string")), 1, 4), 16, 10).cast("long")
+
+  /** Oracle-SQL spelling of [[md5Bucket]] over the column `key`. */
+  private[queries] def sqlMd5Bucket(key: String): String =
+    s"('0x' || substring(md5(CAST($key AS VARCHAR)), 1, 4))::INT"
 }

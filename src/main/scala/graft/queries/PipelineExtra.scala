@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.queries.GraftQuery.dec
+import graft.queries.GraftQuery.{dec, md5Bucket, sqlMd5Bucket}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,6 +31,58 @@ object PipelineExtra {
     * optimization with zero effect on the rows, so both queries pin
     * against the identical oracle.
     */
+  /** The synthetic mixture weight of each source (suffix mod 4 + 1)
+    * as a (source, w) table over the sources of `docs`. */
+  private def sourceWeights(docs: DataFrame): DataFrame =
+    docs.select(col("source")).distinct()
+      .select(col("source"),
+        (expr("substring(source, 4)").cast("long") % 4 + 1).as("w"))
+
+  /** p07/p11's decontamination sides: the p05 train (bucket < 80) and
+    * test (bucket >= 90) splits, scanned by `scan` at shingle k = 7. */
+  private def decontam(s: SparkSession, dir: String)(
+      scan: (DataFrame, DataFrame, String, String, Int, Int) => DataFrame)
+      : DataFrame = {
+    import s.implicits._
+    val docsAll = Tables.load(s, dir, "documents")
+      .select($"doc_id", $"text", (md5Bucket($"doc_id") % 100).as("bucket"))
+    scan(docsAll.filter($"bucket" < 80), docsAll.filter($"bucket" >= 90),
+      "doc_id", "text", 7, DecontamDfCut)
+  }
+
+  /** Oracle CTEs `r1`/`r1a`/`r2`: the p08 two-round waterfill of the
+    * MixBudget over the (source, weight, avail_tokens) rows of `from`. */
+  private def sqlWaterfill(from: String): String = s"""
+        r1 AS (
+          SELECT source, weight, avail_tokens,
+            ($MixBudget * weight) // CAST(SUM(weight) OVER () AS BIGINT)
+              AS target_tokens
+          FROM $from
+        ),
+        r1a AS (
+          SELECT *, LEAST(avail_tokens, target_tokens) AS r1_alloc FROM r1
+        ),
+        r2 AS (
+          SELECT *,
+            CAST($MixBudget - SUM(r1_alloc) OVER () AS BIGINT) AS leftover,
+            avail_tokens - r1_alloc AS rem_cap,
+            CAST(SUM(CASE WHEN avail_tokens > r1_alloc THEN weight ELSE 0 END)
+              OVER () AS BIGINT) AS surplus_w
+          FROM r1a
+        )"""
+
+  /** [[sqlWaterfill]] over `avail`, then each source's final
+    * allocation `alloc`(source, avail_tokens, alloc_tokens). */
+  private def sqlWaterfillAlloc: String = sqlWaterfill("avail") + """,
+        alloc AS (
+          SELECT source, avail_tokens,
+            r1_alloc + LEAST(rem_cap,
+              CASE WHEN rem_cap > 0 AND surplus_w > 0
+                THEN (leftover * weight) // surplus_w ELSE 0 END)
+              AS alloc_tokens
+          FROM r2
+        )"""
+
   private def decontamOracleSql: String = s"""
         WITH ws AS (
           SELECT doc_id, string_split(text, ' ') ws FROM documents
@@ -41,7 +93,7 @@ object PipelineExtra {
               THEN list_distinct([array_to_string(ws[i+1:i+7], ' ')
                                   for i in range(len(ws) - 6)])
               ELSE [array_to_string(ws, ' ')] END) AS sh,
-            ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
+            ${sqlMd5Bucket("doc_id")}
               % 100 AS bucket
           FROM ws
         ),
@@ -127,10 +179,10 @@ object PipelineExtra {
             count(lit(1)).as("n_sampled"),
             sum($"n_chars").as("sampled_chars"))
       },
-      Some("""
+      Some(s"""
         WITH b AS (
           SELECT lang, n_chars,
-            ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
+            ${sqlMd5Bucket("doc_id")}
               % 10 AS bucket
           FROM documents
         )
@@ -236,10 +288,10 @@ object PipelineExtra {
             min($"doc_id").as("min_doc_id"),
             max($"doc_id").as("max_doc_id"))
       },
-      Some("""
+      Some(s"""
         WITH b AS (
           SELECT doc_id, n_chars,
-            ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
+            ${sqlMd5Bucket("doc_id")}
               % 100 AS bucket
           FROM documents
         )
@@ -334,15 +386,7 @@ object PipelineExtra {
         // since matching everyone is not evidence of leakage.
         // The scan IS the PrepOps.decontamScan facade call over the
         // p05-split sides, so the oracle pins the operator users run.
-        val bucket = conv(
-          substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val docsAll = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"text", bucket.as("bucket"))
-        graft.operators.PrepOps.decontamScan(
-          docsAll.filter($"bucket" < 80),
-          docsAll.filter($"bucket" >= 90),
-          "doc_id", "text", k = 7, dfCut = DecontamDfCut)
+        decontam(s, dir)(graft.operators.PrepOps.decontamScan)
       },
       Some(decontamOracleSql)),
 
@@ -358,15 +402,8 @@ object PipelineExtra {
         // die in the exact join, so the result — and therefore the
         // oracle — is IDENTICAL to p07's: the sketch changes the plan,
         // never the rows. Same p05 md5 split, same df-cut.
-        val bucket = conv(
-          substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val docsAll = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"text", bucket.as("bucket"))
-        graft.operators.PrepOps.decontamScanBloom(
-          docsAll.filter($"bucket" < 80),
-          docsAll.filter($"bucket" >= 90),
-          "doc_id", "text", k = 7, dfCut = DecontamDfCut)
+        decontam(s, dir)(
+          graft.operators.PrepOps.decontamScanBloom(_, _, _, _, _, _))
       },
       Some(decontamOracleSql)),
 
@@ -435,9 +472,7 @@ object PipelineExtra {
         // never fires and the oracle's unconditional division matches.
         val docsT = Tables.load(s, dir, "documents")
           .select($"source", expr("n_chars div 4").as("toks"))
-        val weights = docsT.select($"source").distinct()
-          .select($"source",
-            (expr("substring(source, 4)").cast("long") % 4 + 1).as("w"))
+        val weights = sourceWeights(docsT)
         graft.operators.PrepOps.domainMixture(
             docsT, "source", "toks", weights, "source", "w",
             MixBudget, defaultWeight = 1L)
@@ -450,24 +485,7 @@ object PipelineExtra {
             CAST(substring(source, 4) AS BIGINT) % 4 + 1 AS weight,
             CAST(SUM(n_chars // 4) AS BIGINT) AS avail_tokens
           FROM documents GROUP BY 1
-        ),
-        r1 AS (
-          SELECT source, weight, avail_tokens,
-            ($MixBudget * weight) // CAST(SUM(weight) OVER () AS BIGINT)
-              AS target_tokens
-          FROM avail
-        ),
-        r1a AS (
-          SELECT *, LEAST(avail_tokens, target_tokens) AS r1_alloc FROM r1
-        ),
-        r2 AS (
-          SELECT *,
-            CAST($MixBudget - SUM(r1_alloc) OVER () AS BIGINT) AS leftover,
-            avail_tokens - r1_alloc AS rem_cap,
-            CAST(SUM(CASE WHEN avail_tokens > r1_alloc THEN weight ELSE 0 END)
-              OVER () AS BIGINT) AS surplus_w
-          FROM r1a
-        )
+        ),${sqlWaterfill("avail")}
         SELECT source, weight, avail_tokens, target_tokens,
           r1_alloc + LEAST(rem_cap,
             CASE WHEN rem_cap > 0 AND surplus_w > 0
@@ -539,9 +557,7 @@ object PipelineExtra {
         // facade's own plan for alloc_tokens.
         val docsT = Tables.load(s, dir, "documents")
           .select($"doc_id", $"source", expr("n_chars div 4").as("toks"))
-        val weights = docsT.select($"source").distinct()
-          .select($"source",
-            (expr("substring(source, 4)").cast("long") % 4 + 1).as("w"))
+        val weights = sourceWeights(docsT)
         val plan = graft.operators.PrepOps.domainMixture(
             docsT, "source", "toks", weights, "source", "w",
             MixBudget, defaultWeight = 1L)
@@ -562,35 +578,10 @@ object PipelineExtra {
             CAST(substring(source, 4) AS BIGINT) % 4 + 1 AS weight,
             CAST(SUM(n_chars // 4) AS BIGINT) AS avail_tokens
           FROM documents GROUP BY 1
-        ),
-        r1 AS (
-          SELECT source, weight, avail_tokens,
-            ($MixBudget * weight) // CAST(SUM(weight) OVER () AS BIGINT)
-              AS target_tokens
-          FROM avail
-        ),
-        r1a AS (
-          SELECT *, LEAST(avail_tokens, target_tokens) AS r1_alloc FROM r1
-        ),
-        r2 AS (
-          SELECT *,
-            CAST($MixBudget - SUM(r1_alloc) OVER () AS BIGINT) AS leftover,
-            avail_tokens - r1_alloc AS rem_cap,
-            CAST(SUM(CASE WHEN avail_tokens > r1_alloc THEN weight ELSE 0 END)
-              OVER () AS BIGINT) AS surplus_w
-          FROM r1a
-        ),
-        alloc AS (
-          SELECT source, avail_tokens,
-            r1_alloc + LEAST(rem_cap,
-              CASE WHEN rem_cap > 0 AND surplus_w > 0
-                THEN (leftover * weight) // surplus_w ELSE 0 END)
-              AS alloc_tokens
-          FROM r2
-        ),
+        ),$sqlWaterfillAlloc,
         d AS (
           SELECT source, n_chars // 4 AS toks,
-            CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
+            CAST(${sqlMd5Bucket("doc_id")}
               AS BIGINT) AS bucket
           FROM documents
         )
@@ -656,9 +647,7 @@ object PipelineExtra {
         // oracle is the p14 CTE chain aggregated per stage — so the
         // funnel, the build, and both oracles can never drift apart.
         val d = Tables.load(s, dir, "documents")
-        val weights = d.select($"source").distinct()
-          .select($"source",
-            (expr("substring(source, 4)").cast("long") % 4 + 1).as("w"))
+        val weights = sourceWeights(d)
         graft.operators.PrepOps.corpusBuildFunnel(
           d, "doc_id", "text", "source", weights, "source", "w",
           tokenBudget = MixBudget, packBudget = PackBudget)
@@ -698,24 +687,7 @@ object PipelineExtra {
                 / MAX(sqrt(CAST(avail_tokens AS DOUBLE))) OVER ()
               AS DECIMAL(18,6)) * 1000000 AS BIGINT)) AS weight
           FROM avail
-        ),
-        r1 AS (
-          SELECT source, weight, avail_tokens,
-            ($MixBudget * weight) // CAST(SUM(weight) OVER () AS BIGINT)
-              AS target_tokens
-          FROM w
-        ),
-        r1a AS (
-          SELECT *, LEAST(avail_tokens, target_tokens) AS r1_alloc FROM r1
-        ),
-        r2 AS (
-          SELECT *,
-            CAST($MixBudget - SUM(r1_alloc) OVER () AS BIGINT) AS leftover,
-            avail_tokens - r1_alloc AS rem_cap,
-            CAST(SUM(CASE WHEN avail_tokens > r1_alloc THEN weight ELSE 0 END)
-              OVER () AS BIGINT) AS surplus_w
-          FROM r1a
-        )
+        ),${sqlWaterfill("w")}
         SELECT source, weight, avail_tokens, target_tokens,
           r1_alloc + LEAST(rem_cap,
             CASE WHEN rem_cap > 0 AND surplus_w > 0
@@ -744,9 +716,7 @@ object PipelineExtra {
         // IS the PrepOps.corpusBuild facade call; weights are the p08
         // construction (source-id suffix mod 4 + 1).
         val d = Tables.load(s, dir, "documents")
-        val weights = d.select($"source").distinct()
-          .select($"source",
-            (expr("substring(source, 4)").cast("long") % 4 + 1).as("w"))
+        val weights = sourceWeights(d)
         graft.operators.PrepOps.corpusBuild(
             d, "doc_id", "text", "source", weights, "source", "w",
             tokenBudget = MixBudget, packBudget = PackBudget)
@@ -768,9 +738,7 @@ object PipelineExtra {
         // windows move. The count attaches as a zero-shuffle
         // projection (TextOps.bpeTokenCounter), never a corpus self-join.
         val d = Tables.load(s, dir, "documents")
-        val weights = d.select($"source").distinct()
-          .select($"source",
-            (expr("substring(source, 4)").cast("long") % 4 + 1).as("w"))
+        val weights = sourceWeights(d)
         val mt = graft.operators.TextOps.bpeLearn(
           d.select($"text"), "text", merges = 3)
         graft.operators.PrepOps.corpusBuild(
@@ -792,9 +760,7 @@ object PipelineExtra {
         // switch mid-funnel would read as a phantom drop), from the
         // SAME stage frames the build materializes.
         val d = Tables.load(s, dir, "documents")
-        val weights = d.select($"source").distinct()
-          .select($"source",
-            (expr("substring(source, 4)").cast("long") % 4 + 1).as("w"))
+        val weights = sourceWeights(d)
         val mt = graft.operators.TextOps.bpeLearn(
           d.select($"text"), "text", merges = 3)
         graft.operators.PrepOps.corpusBuildFunnel(
@@ -1127,7 +1093,7 @@ object PipelineExtra {
         ),
         spl AS (
           SELECT *,
-            ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT
+            ${sqlMd5Bucket("doc_id")}
               % 100 AS bucket
           FROM dedup
         ),
@@ -1164,32 +1130,7 @@ object PipelineExtra {
             CAST(substring(source, 4) AS BIGINT) % 4 + 1 AS weight,
             CAST(SUM(toks) AS BIGINT) AS avail_tokens
           FROM tok GROUP BY 1
-        ),
-        r1 AS (
-          SELECT source, weight, avail_tokens,
-            ($MixBudget * weight) // CAST(SUM(weight) OVER () AS BIGINT)
-              AS target_tokens
-          FROM avail
-        ),
-        r1a AS (
-          SELECT *, LEAST(avail_tokens, target_tokens) AS r1_alloc FROM r1
-        ),
-        r2 AS (
-          SELECT *,
-            CAST($MixBudget - SUM(r1_alloc) OVER () AS BIGINT) AS leftover,
-            avail_tokens - r1_alloc AS rem_cap,
-            CAST(SUM(CASE WHEN avail_tokens > r1_alloc THEN weight ELSE 0 END)
-              OVER () AS BIGINT) AS surplus_w
-          FROM r1a
-        ),
-        alloc AS (
-          SELECT source, avail_tokens,
-            r1_alloc + LEAST(rem_cap,
-              CASE WHEN rem_cap > 0 AND surplus_w > 0
-                THEN (leftover * weight) // surplus_w ELSE 0 END)
-              AS alloc_tokens
-          FROM r2
-        ),
+        ),$sqlWaterfillAlloc,
         keep AS (
           SELECT t.source, t.doc_id, t.toks
           FROM (

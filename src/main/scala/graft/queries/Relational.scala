@@ -796,18 +796,17 @@ object Relational {
         // primitive (rng-based sample() is neither portable nor stable
         // across partitionings). Exactly reproducible in any engine.
         t(s, dir, "orders")
-          .filter(conv(substring(md5($"o_orderkey".cast("string")), 1, 4),
-            16, 10).cast("long") % 10 === 0)
+          .filter(md5Bucket($"o_orderkey") % 10 === 0)
           .agg(
             count(lit(1)).as("n_sampled"),
             sum(dec($"o_totalprice")).cast("double").as("sampled_total"))
       },
-      Some("""
+      Some(s"""
         SELECT COUNT(*) AS n_sampled,
           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
             AS sampled_total
         FROM orders
-        WHERE ('0x' || substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 4))::INT
+        WHERE ${sqlMd5Bucket("o_orderkey")}
             % 10 = 0""")),
 
     GraftQuery(
@@ -825,8 +824,7 @@ object Relational {
         val fact = t(s, dir, "events")
           .select(($"user_id" % 3).as("bucket"), $"value")
           .withColumn("salt",
-            pmod(conv(substring(md5($"value".cast("string")), 1, 4), 16, 10)
-              .cast("long"), lit(SALTS)))
+            pmod(md5Bucket($"value"), lit(SALTS)))
         val dim = s.createDataFrame(
           Seq((0L, "low"), (1L, "mid"), (2L, "high"))).toDF("bucket", "tier")
         val saltedDim = dim.withColumn("salt",

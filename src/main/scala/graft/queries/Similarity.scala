@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Pins.PinnedDataset
+import GraftQuery.{md5Bucket, sqlMd5Bucket}
 
 /** Approximate/exact nearest-neighbor search over the `embeddings` table.
   *
@@ -81,22 +82,27 @@ object Similarity {
       .filter($"rank" <= TOPK)
   }
 
-  /** Oracle SQL of [[bruteDf]] — the same scaled-long construction d05
-    * proved hash-identical across engines. */
-  private val sqlBrute = s"""
-        WITH comp AS (
+  /** Oracle CTE: each embedding's scaled-long components (vec_id, i, c). */
+  private val sqlComp = """comp AS (
           SELECT vec_id,
             unnest(range(len(embedding))) i,
             CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
               AS BIGINT) c
           FROM embeddings
-        ),
+        )"""
+
+  /** [[sqlComp]] and the 1e12-scaled norms `nrm`(vec_id, nrm). */
+  private val sqlCompNrm = sqlComp + """,
         nrm AS (
           SELECT vec_id,
             sqrt(CAST(CAST(SUM(c * c) AS BIGINT) AS DOUBLE)
               / 1000000000000.0) nrm
           FROM comp GROUP BY vec_id
-        ),
+        )"""
+
+  /** Oracle CTEs `dot`/`cos`: exact cosine of every query against every
+    * other vector (the s01 candidate set). */
+  private val sqlBruteCos = s"""
         dot AS (
           SELECT q.vec_id qid, c.vec_id neighbor_id,
             CAST(SUM(q.c * c.c) AS BIGINT) dot
@@ -111,12 +117,63 @@ object Similarity {
           FROM dot d
             JOIN nrm nq ON nq.vec_id = d.qid
             JOIN nrm nc ON nc.vec_id = d.neighbor_id
-        )
+        )"""
+
+  /** Oracle tail: the top `n` rows of `cos` per query, ties id-ascending. */
+  private def sqlTopRank(n: Int): String = s"""
         SELECT qid, neighbor_id, cosine, rank FROM (
           SELECT *, row_number() OVER
             (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank
           FROM cos) t
-        WHERE rank <= $TOPK"""
+        WHERE rank <= $n"""
+
+  /** Oracle CTEs `nrm`/`dot`/`cos`: exact-cosine re-rank of the
+    * (qid, vec_id) rows of an LSH candidate CTE `cand` (s03, s13). */
+  private val sqlLshRerank = """
+        nrm AS (
+          SELECT vec_id,
+            sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE) / 1000000000000.0) nrm
+          FROM comp GROUP BY vec_id
+        ),
+        dot AS (
+          SELECT ca.qid, ca.vec_id, CAST(SUM(qc.c * cc.c) AS BIGINT) AS dot
+          FROM cand ca
+            JOIN comp qc ON qc.vec_id = ca.qid
+            JOIN comp cc ON cc.vec_id = ca.vec_id AND cc.i = qc.i
+          GROUP BY 1, 2
+        ),
+        cos AS (
+          SELECT d.qid, d.vec_id AS neighbor_id,
+            (CAST(d.dot AS DOUBLE) / 1000000000000.0) / (nq.nrm * nn.nrm)
+              AS cosine
+          FROM dot d
+            JOIN nrm nq ON nq.vec_id = d.qid
+            JOIN nrm nn ON nn.vec_id = d.vec_id
+        )""" 
+
+  /** Oracle CTEs `dot`/`cos`: exact-cosine re-rank of the (qid, vec_id)
+    * rows of an IVF-cell candidate CTE `cand` (s14, s23). */
+  private val sqlCellRerank = """
+        dot AS (
+          SELECT ca.qid, ca.vec_id, CAST(SUM(qc.c * cc2.c) AS BIGINT) dot
+          FROM cand ca
+            JOIN comp qc ON qc.vec_id = ca.qid
+            JOIN comp cc2 ON cc2.vec_id = ca.vec_id AND cc2.i = qc.i
+          GROUP BY 1, 2
+        ),
+        cos AS (
+          SELECT d.qid, d.vec_id neighbor_id,
+            (CAST(d.dot AS DOUBLE) / 1000000000000.0) / (nq.nrm * nn.nrm)
+              AS cosine
+          FROM dot d
+            JOIN nrm nq ON nq.vec_id = d.qid
+            JOIN nrm nn ON nn.vec_id = d.vec_id
+        )"""
+
+  /** Oracle SQL of [[bruteDf]] — the same scaled-long construction d05
+    * proved hash-identical across engines. */
+  private val sqlBrute = s"""
+        WITH $sqlCompNrm,$sqlBruteCos${sqlTopRank(TOPK)}"""
 
   private val K = 3          // coarse cells
   private val KMEANS_ITERS = 2 // Lloyd steps (assign, update, assign)
@@ -222,18 +279,27 @@ object Similarity {
   private[queries] lazy val sqlKmeansCtes: String =
     sqlKmeansCtesOver("SELECT vec_id, embedding FROM embeddings")
 
-  // a def so sqlKmeansCtesOver is order-independent of object init
-  private def sqlKmeansTail: String = s"""
+  /** Oracle CTE `nrm`(vec_id, nrm, nrmr): the 1e12-scaled norm (final
+    * cosine) and the raw norm (routing score) of every `comp` vector. */
+  private def sqlNrmBoth: String = """
         nrm AS (
           SELECT vec_id,
             sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE)
               / 1000000000000.0) nrm,
             sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE)) nrmr
           FROM comp GROUP BY vec_id
-        ),
+        )"""
+
+  // a def so sqlKmeansCtesOver is order-independent of object init
+  private def sqlKmeansTail: String = sqlNrmBoth + s""",
         cent0 AS (
           SELECT vec_id AS cell, i, c AS s FROM comp WHERE vec_id < $K
-        ),
+        ),""" + sqlLloydCtes("comp")
+
+  /** The two unrolled Lloyd steps from the seed table `cent0`: rounds
+    * train on the `train` components, the final assignment `assign2`
+    * scores every `comp` vector against `cent1`. */
+  private def sqlLloydCtes(train: String): String = s"""
         cnrm0 AS (
           SELECT cell, sqrt(CAST(SUM(CAST(s AS HUGEINT) * s) AS DOUBLE))
             cnrmr
@@ -242,7 +308,7 @@ object Similarity {
         score1 AS (
           SELECT v.vec_id, ct.cell,
             CAST(CAST(SUM(v.c * ct.s) AS BIGINT) AS DOUBLE) AS dot
-          FROM comp v JOIN cent0 ct ON v.i = ct.i
+          FROM $train v JOIN cent0 ct ON v.i = ct.i
           GROUP BY 1, 2
         ),
         assign1 AS (
@@ -257,7 +323,7 @@ object Similarity {
         ),
         cent1 AS (
           SELECT a.cell, c.i, CAST(SUM(c.c) AS BIGINT) s
-          FROM assign1 a JOIN comp c ON c.vec_id = a.vec_id
+          FROM assign1 a JOIN $train c ON c.vec_id = a.vec_id
           GROUP BY 1, 2
         ),
         cnrm1 AS (
@@ -281,6 +347,23 @@ object Similarity {
               JOIN cnrm1 c1 ON c1.cell = s.cell) t
           WHERE rn = 1
         )"""
+
+  /** The s15 frozen-training CTEs over `comp`, `nrm` and the seed ids
+    * `oldid`: the K smallest old ids seed, the rounds train on the old
+    * rows only (`tcomp`), and `assign2` places every vector. */
+  private def sqlFrozenLloydCtes: String = s"""
+        tcomp AS (
+          SELECT c.vec_id, c.i, c.c FROM comp c
+          JOIN oldid o ON o.vec_id = c.vec_id
+        ),
+        seeds AS (
+          SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cell
+          FROM (SELECT vec_id FROM oldid ORDER BY vec_id LIMIT $K)
+        ),
+        cent0 AS (
+          SELECT s.cell, c.i, CAST(SUM(c.c) AS BIGINT) s
+          FROM seeds s JOIN comp c ON c.vec_id = s.vec_id GROUP BY 1, 2
+        ),""" + sqlLloydCtes("tcomp")
 
   /** Oracle SQL of [[ivfDf]]. */
   private val sqlIvf = s"""
@@ -472,13 +555,7 @@ object Similarity {
     val parts = (0 until PQ_M).map(m => s"SELECT * FROM part$m")
       .mkString("\n          UNION ALL ")
     s"""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-              AS BIGINT) c
-          FROM embeddings
-        ),
+        WITH $sqlComp,
         $subs,
         adc AS (
           SELECT qid, vec_id,
@@ -496,6 +573,29 @@ object Similarity {
           FROM adc) t
         WHERE rank <= 5"""
   }
+
+  /** Each document's embedding labelled with the document's source
+    * (vec_id, embedding, source): the filtered-ANN corpus. */
+  private def sourcedEmb(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val src = Tables.load(s, dir, "documents")
+      .select($"doc_id", $"source")
+    Tables.load(s, dir, "embeddings")
+      .join(src, $"vec_id" === $"doc_id")
+      .select($"vec_id", $"embedding", $"source")
+  }
+
+  /** One s15-family increment into the durable semantic-dedup index at
+    * `idxDir`: threshold 0.35, K cells frozen after 2 Lloyd rounds. */
+  private def semanticInc(batch: DataFrame, idxDir: String, id: Long,
+      probe: Boolean = true): DataFrame =
+    graft.operators.AnnOps.incrementalSemanticDedupDurable(
+      batch, "vec_id", "embedding", idxDir, id,
+      threshold = 0.35, cells = K, iters = 2, probe = probe)
+
+  /** vec_id's md5 bucket mod 100: the p05 split every incremental and
+    * lifecycle query batches by. */
+  private def vecPct: Column = md5Bucket(col("vec_id")) % 100
 
   // s16/s17 fixture: embeddings plus an identical-embedding family
   // (copies of vec 0's vector at offset ids) — the SemDeDup
@@ -790,13 +890,8 @@ object Similarity {
           .orderBy($"cosine".desc, $"neighbor_id".asc)
         cos.withColumn("rank", row_number().over(w)).filter($"rank" <= TOPK)
       },
-      Some("""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) c
-          FROM embeddings
-        ),
+      Some(s"""
+        WITH $sqlComp,
         planes AS (
           SELECT k, i,
             CAST(('0x'||substr(md5(k||':'||i),1,8)) AS BIGINT) - 2147483648 AS hp
@@ -827,31 +922,7 @@ object Similarity {
           FROM probes p JOIN sig s ON s.bucket = p.bucket
           WHERE s.vec_id <> p.qid
         ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE) / 1000000000000.0) nrm
-          FROM comp GROUP BY vec_id
-        ),
-        dot AS (
-          SELECT ca.qid, ca.vec_id, CAST(SUM(qc.c * cc.c) AS BIGINT) AS dot
-          FROM cand ca
-            JOIN comp qc ON qc.vec_id = ca.qid
-            JOIN comp cc ON cc.vec_id = ca.vec_id AND cc.i = qc.i
-          GROUP BY 1, 2
-        ),
-        cos AS (
-          SELECT d.qid, d.vec_id AS neighbor_id,
-            (CAST(d.dot AS DOUBLE) / 1000000000000.0) / (nq.nrm * nn.nrm)
-              AS cosine
-          FROM dot d
-            JOIN nrm nq ON nq.vec_id = d.qid
-            JOIN nrm nn ON nn.vec_id = d.vec_id
-        )
-        SELECT qid, neighbor_id, cosine, rank FROM (
-          SELECT *, row_number() OVER
-            (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank
-          FROM cos) t
-        WHERE rank <= 10""")),
+        $sqlLshRerank${sqlTopRank(10)}""")),
 
     // ------------------------------------------------- full kNN graph
     GraftQuery(
@@ -875,18 +946,8 @@ object Similarity {
         graft.operators.AnnOps.knnGraphBroadcast(
           Tables.load(s, dir, "embeddings"), "vec_id", "embedding", 3)
       },
-      Some("""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) c
-          FROM embeddings
-        ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c * c) AS BIGINT) AS DOUBLE) / 1000000000000.0) nrm
-          FROM comp GROUP BY vec_id
-        ),
+      Some(s"""
+        WITH $sqlCompNrm,
         dot AS (
           SELECT x.vec_id src, y.vec_id neighbor_id,
             CAST(SUM(x.c * y.c) AS BIGINT) dot
@@ -1061,19 +1122,7 @@ object Similarity {
               .as("recall_at_10"))
       },
       Some(s"""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-              AS BIGINT) c
-          FROM embeddings
-        ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c * c) AS BIGINT) AS DOUBLE)
-              / 1000000000000.0) nrm
-          FROM comp GROUP BY vec_id
-        ),
+        WITH $sqlCompNrm,
         mx AS (SELECT vec_id, MAX(ABS(c)) mx FROM comp GROUP BY 1),
         qv AS (
           SELECT comp.vec_id, comp.i,
@@ -1233,51 +1282,12 @@ object Similarity {
           .filter($"rank" <= 3)
           .select($"qid", $"neighbor_id", $"cosine", $"rank")
       },
-      Some(s"""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-              AS BIGINT) c
-          FROM embeddings
-        ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c * c) AS BIGINT) AS DOUBLE)
-              / 1000000000000.0) nrm
-          FROM comp GROUP BY vec_id
-        ),
-        src AS (SELECT doc_id, source FROM documents),
-        dot AS (
-          SELECT q.vec_id qid, c.vec_id neighbor_id,
-            CAST(SUM(q.c * c.c) AS BIGINT) dot
-          FROM comp q
-            JOIN comp c ON q.i = c.i AND q.vec_id <> c.vec_id
-            JOIN src sq ON sq.doc_id = q.vec_id
-            JOIN src sc ON sc.doc_id = c.vec_id AND sc.source = sq.source
-          WHERE q.vec_id < $NQUERIES
-          GROUP BY 1, 2
-        ),
-        cos AS (
-          SELECT d.qid, d.neighbor_id,
-            (CAST(d.dot AS DOUBLE) / 1000000000000.0)
-              / (nq.nrm * nc.nrm) AS cosine
-          FROM dot d
-            JOIN nrm nq ON nq.vec_id = d.qid
-            JOIN nrm nc ON nc.vec_id = d.neighbor_id
-        )
-        SELECT qid, neighbor_id, cosine, rank FROM (
-          SELECT *, row_number() OVER
-            (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC)
-            AS rank
-          FROM cos) t
-        WHERE rank <= 3""")),
+      Some(sqlFilteredBrute(s"q.vec_id < $NQUERIES"))),
 
     // ----------------------------- filtered ANN via scoped LSH (s13)
     GraftQuery(
       "s13_filtered_knn_lsh",
       (s, dir) => {
-        import s.implicits._
         // s12 composed with candidate generation: the filter key
         // (document source) is PART of the LSH band join key, so a
         // corpus row is a candidate only when it shares the query's
@@ -1289,23 +1299,12 @@ object Similarity {
         // re-rank is the exact scaled-long cosine. The query IS the
         // AnnOps.filteredTopKLsh facade call; recall vs the exact
         // filtered ground truth is measured in PipelineOpsSpec.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
         graft.operators.AnnOps.filteredTopKLsh(
-          emb, "vec_id", "embedding", "source",
+          sourcedEmb(s, dir), "vec_id", "embedding", "source",
           _ < NQUERIES, k = 3, rowsPerBand = 4, bands = 8)
       },
       Some(s"""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-              AS BIGINT) c
-          FROM embeddings
-        ),
+        WITH $sqlComp,
         planes AS (
           SELECT k, i,
             CAST(('0x'||substr(md5(k||':'||i),1,8)) AS BIGINT)
@@ -1333,39 +1332,12 @@ object Similarity {
             ON s.key = q.key AND s.band = q.band AND s.code = q.code
           WHERE q.vec_id < $NQUERIES AND s.vec_id <> q.vec_id
         ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE)
-              / 1000000000000.0) nrm
-          FROM comp GROUP BY vec_id
-        ),
-        dot AS (
-          SELECT ca.qid, ca.vec_id, CAST(SUM(qc.c * cc.c) AS BIGINT) AS dot
-          FROM cand ca
-            JOIN comp qc ON qc.vec_id = ca.qid
-            JOIN comp cc ON cc.vec_id = ca.vec_id AND cc.i = qc.i
-          GROUP BY 1, 2
-        ),
-        cos AS (
-          SELECT d.qid, d.vec_id AS neighbor_id,
-            (CAST(d.dot AS DOUBLE) / 1000000000000.0) / (nq.nrm * nn.nrm)
-              AS cosine
-          FROM dot d
-            JOIN nrm nq ON nq.vec_id = d.qid
-            JOIN nrm nn ON nn.vec_id = d.vec_id
-        )
-        SELECT qid, neighbor_id, cosine, rank FROM (
-          SELECT *, row_number() OVER
-            (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC)
-            AS rank
-          FROM cos) t
-        WHERE rank <= 3""")),
+        $sqlLshRerank${sqlTopRank(3)}""")),
 
     // ------------------------------ filtered ANN via IVF cells (s14)
     GraftQuery(
       "s14_filtered_knn_ivf",
       (s, dir) => {
-        import s.implicits._
         // The OTHER filtered-ANN composition (s13 scopes LSH bands by
         // the filter key; here the s02 IVF structure is scoped): a
         // corpus row is a candidate iff it shares the query's k-means
@@ -1382,13 +1354,8 @@ object Similarity {
         // the engine and oracle must cluster identical row sets; with
         // raw-embeddings CTEs the two sides would agree only while
         // the fixture happens to be 1:1.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
         graft.operators.AnnOps.filteredTopKIvf(
-          emb, "vec_id", "embedding", "source",
+          sourcedEmb(s, dir), "vec_id", "embedding", "source",
           _ < NQUERIES, k = 3, cells = K, iters = 2)
       },
       Some(s"""
@@ -1409,33 +1376,12 @@ object Similarity {
             ON a.cell = q.cell AND a.source = q.source
               AND a.vec_id <> q.qid
         ),
-        dot AS (
-          SELECT ca.qid, ca.vec_id, CAST(SUM(qc.c * cc2.c) AS BIGINT) dot
-          FROM cand ca
-            JOIN comp qc ON qc.vec_id = ca.qid
-            JOIN comp cc2 ON cc2.vec_id = ca.vec_id AND cc2.i = qc.i
-          GROUP BY 1, 2
-        ),
-        cos AS (
-          SELECT d.qid, d.vec_id neighbor_id,
-            (CAST(d.dot AS DOUBLE) / 1000000000000.0) / (nq.nrm * nn.nrm)
-              AS cosine
-          FROM dot d
-            JOIN nrm nq ON nq.vec_id = d.qid
-            JOIN nrm nn ON nn.vec_id = d.vec_id
-        )
-        SELECT qid, neighbor_id, cosine, rank FROM (
-          SELECT *, row_number() OVER
-            (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC)
-            AS rank
-          FROM cos) t
-        WHERE rank <= 3""")),
+        $sqlCellRerank${sqlTopRank(3)}""")),
 
     // ----------------- incremental semantic-dedup index (s15)
     GraftQuery(
       "s15_incremental_semantic_dedup",
       (s, dir) => {
-        import s.implicits._
         // The embedding-space st10: the 80% "existing" corpus (p05's
         // md5 bucket) is batch 0 — k-means trains on it ONCE and the
         // centroid table freezes in the durable index; the remaining
@@ -1450,25 +1396,15 @@ object Similarity {
         // AnnOps.incrementalSemanticDedupDurable facade composed over
         // three batches; replay/restart idempotence is pinned in
         // PipelineOpsSpec.
-        val emb = Tables.load(s, dir, "embeddings")
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val oldEmb = emb.filter(bucket < 80)
-        val newEmb = emb.filter(bucket >= 80)
+        val Seq(oldEmb, newEven, newOdd) =
+          oldThenNewByParity(Tables.load(s, dir, "embeddings"))
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-s15-").toString
-        def inc(batch: org.apache.spark.sql.DataFrame, id: Long,
-            probe: Boolean = true) =
-          graft.operators.AnnOps.incrementalSemanticDedupDurable(
-            batch, "vec_id", "embedding", idxDir, id,
-            threshold = 0.35, cells = K, iters = 2, probe = probe)
         // seed batch: train + commit only (probe = false — its
         // within-seed pairs are s07's job and would be discarded here)
-        inc(oldEmb, 0L, probe = false)
-        val out1 = inc(newEmb.filter($"vec_id" % 2 === 0), 1L)
-        val out2 = inc(newEmb.filter($"vec_id" % 2 === 1), 2L)
-        out1.unionByName(out2)
+        semanticInc(oldEmb, idxDir, 0L, probe = false)
+        semanticInc(newEven, idxDir, 1L)
+          .unionByName(semanticInc(newOdd, idxDir, 2L))
       },
       Some(sqlIncrementalSemantic)),
 
@@ -1488,16 +1424,10 @@ object Similarity {
         // how the stream was microbatched (a pair surfaces when its
         // later endpoint arrives), so the oracle is s15's verbatim.
         val emb = Tables.load(s, dir, "embeddings")
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val oldEmb = emb.filter(bucket < 80)
-        val newEmb = emb.filter(bucket >= 80)
+        val newEmb = emb.filter(vecPct >= 80)
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-st16-").toString
-        graft.operators.AnnOps.incrementalSemanticDedupDurable(
-          oldEmb, "vec_id", "embedding", idxDir, 0L,
-          threshold = 0.35, cells = K, iters = 2, probe = false)
+        semanticInc(emb.filter(vecPct < 80), idxDir, 0L, probe = false)
         val newDir = graft.core.StreamStore
           .scratchRoot("graft-st16-new-").toString
         newEmb.repartition(3).write.mode("overwrite").parquet(newDir)
@@ -1512,9 +1442,7 @@ object Similarity {
             // No pre-pin: the operator's own staging (scaled → pin) is
             // the batch frame's only consumer besides the isEmpty
             // probe (round-17 job-count cut)
-            acc += graft.operators.AnnOps.incrementalSemanticDedupDurable(
-              batch, "vec_id", "embedding", idxDir,
-              bid + 1L, threshold = 0.35, cells = K, iters = 2)
+            acc += semanticInc(batch, idxDir, bid + 1L)
           }
         }
         acc.reduceOption(_ unionByName _)
@@ -1574,7 +1502,6 @@ object Similarity {
     GraftQuery(
       "s18_filtered_knn_ivfpq",
       (s, dir) => {
-        import s.implicits._
         // The production memory-scale composition: IVF cells generate
         // candidates (s14's (cell, key) equi-join, same nprobe dial),
         // an ADC scan over product-quantized codes ranks them (M
@@ -1591,56 +1518,13 @@ object Similarity {
         // recall-vs-cost face at REAL nprobe/rerankDepth is measured
         // against plain IVF and LSH at matched candidate cost in
         // PipelineOpsSpec.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
         graft.operators.AnnOps.filteredTopKIvfPq(
-          emb, "vec_id", "embedding", "source",
+          sourcedEmb(s, dir), "vec_id", "embedding", "source",
           _ < NQUERIES, k = 3, cells = K, iters = 2, nprobe = K,
           pqM = 4, pqKs = 4, pqIters = 2,
           rerankDepth = Int.MaxValue)
       },
-      Some(s"""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-              AS BIGINT) c
-          FROM embeddings
-        ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c * c) AS BIGINT) AS DOUBLE)
-              / 1000000000000.0) nrm
-          FROM comp GROUP BY vec_id
-        ),
-        src AS (SELECT doc_id, source FROM documents),
-        dot AS (
-          SELECT q.vec_id qid, c.vec_id neighbor_id,
-            CAST(SUM(q.c * c.c) AS BIGINT) dot
-          FROM comp q
-            JOIN comp c ON q.i = c.i AND q.vec_id <> c.vec_id
-            JOIN src sq ON sq.doc_id = q.vec_id
-            JOIN src sc ON sc.doc_id = c.vec_id AND sc.source = sq.source
-          WHERE q.vec_id < $NQUERIES
-          GROUP BY 1, 2
-        ),
-        cos AS (
-          SELECT d.qid, d.neighbor_id,
-            (CAST(d.dot AS DOUBLE) / 1000000000000.0)
-              / (nq.nrm * nc.nrm) AS cosine
-          FROM dot d
-            JOIN nrm nq ON nq.vec_id = d.qid
-            JOIN nrm nc ON nc.vec_id = d.neighbor_id
-        )
-        SELECT qid, neighbor_id, cosine, rank FROM (
-          SELECT *, row_number() OVER
-            (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC)
-            AS rank
-          FROM cos) t
-        WHERE rank <= 3""")),
+      Some(sqlFilteredBrute(s"q.vec_id < $NQUERIES"))),
 
     // ------------------ durable-index drift audit (s19)
     GraftQuery(
@@ -1661,23 +1545,17 @@ object Similarity {
         // distance aggregation — so the hash gate pins the audit's
         // arithmetic, not just its shape.
         val emb = Tables.load(s, dir, "embeddings")
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val oldEmb = emb.filter(bucket < 80)
-        val drifted = emb.filter(bucket >= 80)
+        val drifted = emb.filter(vecPct >= 80)
           .select($"vec_id",
             transform($"embedding", x => x.cast("double") + lit(0.25d))
               .as("embedding"))
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-s19-").toString
-        def inc(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
-          graft.operators.AnnOps.incrementalSemanticDedupDurable(
-            batch, "vec_id", "embedding", idxDir, id,
-            threshold = 0.35, cells = K, iters = 2, probe = false)
-        inc(oldEmb, 0L)
-        inc(drifted.filter($"vec_id" % 2 === 0), 1L)
-        inc(drifted.filter($"vec_id" % 2 === 1), 2L)
+        semanticInc(emb.filter(vecPct < 80), idxDir, 0L, probe = false)
+        semanticInc(drifted.filter($"vec_id" % 2 === 0), idxDir, 1L,
+          probe = false)
+        semanticInc(drifted.filter($"vec_id" % 2 === 1), idxDir, 2L,
+          probe = false)
         graft.operators.AnnOps.semanticIndexDriftAudit(s, idxDir)
       },
       Some(sqlIndexDriftAudit)),
@@ -1686,7 +1564,6 @@ object Similarity {
     GraftQuery(
       "s20_filtered_knn_lsh_multiprobe",
       (s, dir) => {
-        import s.implicits._
         // s13's band-scoped LSH with the probeBits recall dial at its
         // construction ceiling: T = rowsPerBand probes every code
         // within each band, so each band matches every same-source
@@ -1696,13 +1573,8 @@ object Similarity {
         // XOR spelling, dedup across bands/probes); the recall curve
         // at real T is measured in PipelineOpsSpec against the same
         // exact truth as the IVF dial.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
         graft.operators.AnnOps.filteredTopKLsh(
-          emb, "vec_id", "embedding", "source",
+          sourcedEmb(s, dir), "vec_id", "embedding", "source",
           _ < NQUERIES, k = 3, rowsPerBand = 4, bands = 8,
           probeBits = 4)
       },
@@ -1712,7 +1584,6 @@ object Similarity {
     GraftQuery(
       "s21_ivfpq_index_serve",
       (s, dir) => {
-        import s.implicits._
         // The production serving shape: the corpus indexes ONCE
         // (coarse centroids + PQ codebooks/codes + stored rows, the
         // s15 index layout so the s19 drift audit runs on it
@@ -1722,25 +1593,7 @@ object Similarity {
         // rerankDepth >= candidates ⇒ filtered brute force); the
         // stronger bit-parity with the inline filteredTopKIvfPq at
         // NON-ceiling settings is pinned in PipelineOpsSpec.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
-          .pin()
-        val idxDir = graft.core.StreamStore
-          .scratchRoot("graft-s21-").toString
-        graft.operators.AnnOps.buildIvfPqIndex(
-          emb, "vec_id", "embedding", "source", idxDir,
-          cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
-        val out = graft.operators.AnnOps.queryIvfPqIndex(
-          emb.filter($"vec_id" < NQUERIES), "vec_id", "embedding",
-          "source", idxDir, k = 3, nprobe = K,
-          rerankDepth = Int.MaxValue)
-        // the serve's output is pinned and independent; free the
-        // corpus staging (the serve-many-batches discipline)
-        graft.operators.DedupOps.releaseLocalCheckpoint(emb)
-        out
+        ivfPqLifecycle(s, dir, "s21")(emb => Seq(emb))((_, _) => ())
       },
       Some(sqlFilteredBruteForceTop3)),
 
@@ -1748,7 +1601,6 @@ object Similarity {
     GraftQuery(
       "s22_ivfpq_index_lifecycle",
       (s, dir) => {
-        import s.implicits._
         // the s15 discipline applied to serving: the 80% corpus (p05's
         // md5 bucket) builds the index — coarse centroids and PQ
         // codebooks FREEZE — and the remaining 20% arrives as TWO
@@ -1759,34 +1611,7 @@ object Similarity {
         // lost, duplicated, or mis-stored anywhere in the append path
         // is a hash mismatch, independent of how good the frozen
         // artifacts are for the appended data.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
-          .pin()
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val oldEmb = emb.filter(bucket < 80)
-        val newEmb = emb.filter(bucket >= 80)
-        val idxDir = graft.core.StreamStore
-          .scratchRoot("graft-s22-").toString
-        graft.operators.AnnOps.buildIvfPqIndex(
-          oldEmb, "vec_id", "embedding", "source", idxDir,
-          cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          newEmb.filter($"vec_id" % 2 === 0), "vec_id", "embedding",
-          "source", idxDir, batchId = 1L)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          newEmb.filter($"vec_id" % 2 === 1), "vec_id", "embedding",
-          "source", idxDir, batchId = 2L)
-        val out = graft.operators.AnnOps.queryIvfPqIndex(
-          emb.filter($"vec_id" < NQUERIES), "vec_id", "embedding",
-          "source", idxDir, k = 3, nprobe = K,
-          rerankDepth = Int.MaxValue)
-        graft.operators.DedupOps.releaseLocalCheckpoint(emb)
-        out
+        ivfPqLifecycle(s, dir, "s22")(oldThenNewByParity)((_, _) => ())
       },
       Some(sqlFilteredBruteForceTop3)),
 
@@ -1850,33 +1675,12 @@ object Similarity {
             ON a.cell = q.cell AND a.grp = q.grp
               AND a.vec_id <> q.qid
         ),
-        dot AS (
-          SELECT ca.qid, ca.vec_id, CAST(SUM(qc.c * cc2.c) AS BIGINT) dot
-          FROM cand ca
-            JOIN comp qc ON qc.vec_id = ca.qid
-            JOIN comp cc2 ON cc2.vec_id = ca.vec_id AND cc2.i = qc.i
-          GROUP BY 1, 2
-        ),
-        cos AS (
-          SELECT d.qid, d.vec_id neighbor_id,
-            (CAST(d.dot AS DOUBLE) / 1000000000000.0) / (nq.nrm * nn.nrm)
-              AS cosine
-          FROM dot d
-            JOIN nrm nq ON nq.vec_id = d.qid
-            JOIN nrm nn ON nn.vec_id = d.vec_id
-        )
-        SELECT qid, neighbor_id, cosine, rank FROM (
-          SELECT *, row_number() OVER
-            (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC)
-            AS rank
-          FROM cos) t
-        WHERE rank <= 3""")),
+        $sqlCellRerank${sqlTopRank(3)}""")),
 
     // -------- durable-index COMPACTION, ANN family (s24)
     GraftQuery(
       "s24_ivfpq_index_compact",
       (s, dir) => {
-        import s.implicits._
         // s22's build + two appends, COMPACTED before the serve: the
         // nightly-append deployment's maintenance step merges
         // batches/codes into one consolidated cell-partitioned
@@ -1884,35 +1688,9 @@ object Similarity {
         // ceiling serve afterwards must equal the SAME filtered brute
         // force s22 pins — the equivalence-by-shared-oracle gate:
         // compaction is invisible to results or the hash moves.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
-          .pin()
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val oldEmb = emb.filter(bucket < 80)
-        val newEmb = emb.filter(bucket >= 80)
-        val idxDir = graft.core.StreamStore
-          .scratchRoot("graft-s24-").toString
-        graft.operators.AnnOps.buildIvfPqIndex(
-          oldEmb, "vec_id", "embedding", "source", idxDir,
-          cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          newEmb.filter($"vec_id" % 2 === 0), "vec_id", "embedding",
-          "source", idxDir, batchId = 1L)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          newEmb.filter($"vec_id" % 2 === 1), "vec_id", "embedding",
-          "source", idxDir, batchId = 2L)
-        graft.operators.AnnOps.compactIndex(s, idxDir)
-        val out = graft.operators.AnnOps.queryIvfPqIndex(
-          emb.filter($"vec_id" < NQUERIES), "vec_id", "embedding",
-          "source", idxDir, k = 3, nprobe = K,
-          rerankDepth = Int.MaxValue)
-        graft.operators.DedupOps.releaseLocalCheckpoint(emb)
-        out
+        ivfPqLifecycle(s, dir, "s24")(oldThenNewByParity) { (_, idxDir) =>
+          graft.operators.AnnOps.compactIndex(s, idxDir)
+        }
       },
       Some(sqlFilteredBruteForceTop3)),
 
@@ -1928,32 +1706,13 @@ object Similarity {
         // the oracle is the filtered brute force over the corpus
         // MINUS the deleted docs, so a tombstoned row that still
         // pairs (or an over-deleted survivor) is a hash mismatch.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
-          .pin()
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val idxDir = graft.core.StreamStore
-          .scratchRoot("graft-s25-").toString
-        graft.operators.AnnOps.buildIvfPqIndex(
-          emb.filter(bucket < 80), "vec_id", "embedding", "source",
-          idxDir, cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          emb.filter(bucket >= 80), "vec_id", "embedding",
-          "source", idxDir, batchId = 1L)
-        graft.operators.AnnOps.deleteFromIndex(
-          emb.filter($"vec_id" >= NQUERIES && $"vec_id" % 10 === 7)
-            .select($"vec_id"), "vec_id", idxDir, batchId = 1L)
-        val out = graft.operators.AnnOps.queryIvfPqIndex(
-          emb.filter($"vec_id" < NQUERIES), "vec_id", "embedding",
-          "source", idxDir, k = 3, nprobe = K,
-          rerankDepth = Int.MaxValue)
-        graft.operators.DedupOps.releaseLocalCheckpoint(emb)
-        out
+        ivfPqLifecycle(s, dir, "s25") { emb =>
+          Seq(emb.filter(vecPct < 80), emb.filter(vecPct >= 80))
+        } { (emb, idxDir) =>
+          graft.operators.AnnOps.deleteFromIndex(
+            emb.filter($"vec_id" >= NQUERIES && $"vec_id" % 10 === 7)
+              .select($"vec_id"), "vec_id", idxDir, batchId = 1L)
+        }
       },
       Some(sqlFilteredBruteForceTop3Excluding(
         s"c.vec_id >= $NQUERIES AND c.vec_id % 10 = 7"))),
@@ -1962,30 +1721,19 @@ object Similarity {
     GraftQuery(
       "d16_semantic_index_compact",
       (s, dir) => {
-        import s.implicits._
         // s15's incremental flow with a compactIndex BETWEEN the two
         // increments — the dedup-family face of the maintenance step:
         // batch 2's probe reads the compacted generation, and the
         // union of outputs must still hash-match s15's own oracle
         // (shared-oracle equivalence on the second index family).
-        val emb = Tables.load(s, dir, "embeddings")
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val oldEmb = emb.filter(bucket < 80)
-        val newEmb = emb.filter(bucket >= 80)
+        val Seq(oldEmb, newEven, newOdd) =
+          oldThenNewByParity(Tables.load(s, dir, "embeddings"))
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-d16-").toString
-        def inc(batch: org.apache.spark.sql.DataFrame, id: Long,
-            probe: Boolean = true) =
-          graft.operators.AnnOps.incrementalSemanticDedupDurable(
-            batch, "vec_id", "embedding", idxDir, id,
-            threshold = 0.35, cells = K, iters = 2, probe = probe)
-        inc(oldEmb, 0L, probe = false)
-        val out1 = inc(newEmb.filter($"vec_id" % 2 === 0), 1L)
+        semanticInc(oldEmb, idxDir, 0L, probe = false)
+        val out1 = semanticInc(newEven, idxDir, 1L)
         graft.operators.AnnOps.compactIndex(s, idxDir)
-        val out2 = inc(newEmb.filter($"vec_id" % 2 === 1), 2L)
-        out1.unionByName(out2)
+        out1.unionByName(semanticInc(newOdd, idxDir, 2L))
       },
       Some(sqlIncrementalSemantic)),
 
@@ -2030,12 +1778,7 @@ object Similarity {
         // semanticNearDups, connectedComponents, deleteFromIndex,
         // queryIvfPqIndex); composition is where id contracts break
         // silently, which is exactly what this gate watches.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
-          .pin()
+        val emb = sourcedEmb(s, dir).pin()
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-s26-").toString
         // the index build and the dedup-feedback chain are INDEPENDENT
@@ -2045,11 +1788,7 @@ object Similarity {
         // §2.6); the delete-then-serve tail still waits for both, so
         // results are unchanged (the oracle pins it).
         val losers = graft.core.Overlap(s, 1, "s26") { ov =>
-          val fBuild = ov.fork {
-            graft.operators.AnnOps.buildIvfPqIndex(
-              emb, "vec_id", "embedding", "source", idxDir,
-              cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
-          }
+          val fBuild = ov.fork(buildIvfPq(emb, idxDir))
           // threshold 0.38 CHOSEN WITH DATA (the thin-gate lesson): the
           // resulting losers change the top-3 serve at sf0.001, sf0.01
           // AND sf0.1 (8/6/6 result rows move), so the hash gate proves
@@ -2071,12 +1810,7 @@ object Similarity {
         }
         graft.operators.AnnOps.deleteFromIndex(
           losers, "vec_id", idxDir, batchId = 1L)
-        val out = graft.operators.AnnOps.queryIvfPqIndex(
-          emb.filter($"vec_id" < NQUERIES), "vec_id", "embedding",
-          "source", idxDir, k = 3, nprobe = K,
-          rerankDepth = Int.MaxValue)
-        graft.operators.DedupOps.releaseLocalCheckpoint(emb)
-        out
+        serveAtCeiling(emb, idxDir)
       },
       Some(s"""
         WITH RECURSIVE ${sqlKmeansCtesOver(
@@ -2145,7 +1879,6 @@ object Similarity {
     GraftQuery(
       "s27_ivfpq_index_expire",
       (s, dir) => {
-        import s.implicits._
         // the reference ingester's delete-behind (I7) applied to the
         // serving index: a rolling-window corpus drops its OLDEST
         // batches wholesale — here the 50% build batch itself expires
@@ -2157,44 +1890,18 @@ object Similarity {
         // quality (the construction-ceiling argument is
         // clustering-independent), so an under-expired straggler row
         // or an over-expired survivor is a hash mismatch.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
-          .pin()
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val idxDir = graft.core.StreamStore
-          .scratchRoot("graft-s27-").toString
-        graft.operators.AnnOps.buildIvfPqIndex(
-          emb.filter(bucket < 50), "vec_id", "embedding", "source",
-          idxDir, cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          emb.filter(bucket >= 50 && bucket < 80), "vec_id",
-          "embedding", "source", idxDir, batchId = 1L)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          emb.filter(bucket >= 80), "vec_id", "embedding",
-          "source", idxDir, batchId = 2L)
-        graft.operators.AnnOps.expireBatches(s, idxDir,
-          minKeepBatchId = 1L)
-        val out = graft.operators.AnnOps.queryIvfPqIndex(
-          emb.filter($"vec_id" < NQUERIES), "vec_id", "embedding",
-          "source", idxDir, k = 3, nprobe = K,
-          rerankDepth = Int.MaxValue)
-        graft.operators.DedupOps.releaseLocalCheckpoint(emb)
-        out
+        ivfPqLifecycle(s, dir, "s27")(retentionWindow) { (_, idxDir) =>
+          graft.operators.AnnOps.expireBatches(s, idxDir,
+            minKeepBatchId = 1L)
+        }
       },
       Some(sqlFilteredBruteForceTop3Excluding(
-        s"('0x' || substring(md5(CAST(c.vec_id AS VARCHAR)), 1, 4))" +
-          "::INT % 100 < 50"))),
+        s"${sqlMd5Bucket("c.vec_id")} % 100 < 50"))),
 
     // ------ UNIFIED one-pass maintenance == the sequential passes (s28)
     GraftQuery(
       "s28_ivfpq_index_maintain",
       (s, dir) => {
-        import s.implicits._
         // the deployment entrypoint: expire + compact + vacuum as ONE
         // lock cycle and ONE generation rewrite
         // (AnnOps.maintainIndex). The fixture is s27's exactly, and
@@ -2203,39 +1910,14 @@ object Similarity {
         // expireBatches spelling, or this hash mismatches. The vacuum
         // face runs too, so the serve below also proves the grace-
         // waived tree (only the fresh generation on disk) is complete.
-        val src = Tables.load(s, dir, "documents")
-          .select($"doc_id", $"source")
-        val emb = Tables.load(s, dir, "embeddings")
-          .join(src, $"vec_id" === $"doc_id")
-          .select($"vec_id", $"embedding", $"source")
-          .pin()
-        val bucket = conv(
-          substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-          .cast("long") % 100
-        val idxDir = graft.core.StreamStore
-          .scratchRoot("graft-s28-").toString
-        graft.operators.AnnOps.buildIvfPqIndex(
-          emb.filter(bucket < 50), "vec_id", "embedding", "source",
-          idxDir, cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          emb.filter(bucket >= 50 && bucket < 80), "vec_id",
-          "embedding", "source", idxDir, batchId = 1L)
-        graft.operators.AnnOps.appendIvfPqIndex(
-          emb.filter(bucket >= 80), "vec_id", "embedding",
-          "source", idxDir, batchId = 2L)
-        graft.operators.AnnOps.maintainIndex(s, idxDir,
-          graft.operators.AnnOps.IndexMaintenancePolicy(
-            minKeepBatchId = 1L, vacuum = true))
-        val out = graft.operators.AnnOps.queryIvfPqIndex(
-          emb.filter($"vec_id" < NQUERIES), "vec_id", "embedding",
-          "source", idxDir, k = 3, nprobe = K,
-          rerankDepth = Int.MaxValue)
-        graft.operators.DedupOps.releaseLocalCheckpoint(emb)
-        out
+        ivfPqLifecycle(s, dir, "s28")(retentionWindow) { (_, idxDir) =>
+          graft.operators.AnnOps.maintainIndex(s, idxDir,
+            graft.operators.AnnOps.IndexMaintenancePolicy(
+              minKeepBatchId = 1L, vacuum = true))
+        }
       },
       Some(sqlFilteredBruteForceTop3Excluding(
-        s"('0x' || substring(md5(CAST(c.vec_id AS VARCHAR)), 1, 4))" +
-          "::INT % 100 < 50"))),
+        s"${sqlMd5Bucket("c.vec_id")} % 100 < 50"))),
 
     // ---- retention interleaved with STREAMING appends (st19)
     GraftQuery(
@@ -2261,8 +1943,7 @@ object Similarity {
         }
       },
       Some(sqlFilteredBruteForceTop3Excluding(
-        s"('0x' || substring(md5(CAST(c.vec_id AS VARCHAR)), 1, 4))" +
-          "::INT % 100 < 80")))
+        s"${sqlMd5Bucket("c.vec_id")} % 100 < 80")))
   )
 
   /** Shared scaffolding of the st17/st18 streaming ANN lifecycle
@@ -2278,18 +1959,9 @@ object Similarity {
       dir: String, tag: String)(
       afterBatch: (org.apache.spark.sql.SparkSession, String, Long)
         => Unit): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val src = Tables.load(s, dir, "documents")
-      .select($"doc_id", $"source")
-    val emb = Tables.load(s, dir, "embeddings")
-      .join(src, $"vec_id" === $"doc_id")
-      .select($"vec_id", $"embedding", $"source")
-      .pin()
-    val bucket = conv(
-      substring(md5($"vec_id".cast("string")), 1, 4), 16, 10)
-      .cast("long") % 100
-    val oldEmb = emb.filter(bucket < 80)
-    val newEmb = emb.filter(bucket >= 80)
+    val emb = sourcedEmb(s, dir).pin()
+    val oldEmb = emb.filter(vecPct < 80)
+    val newEmb = emb.filter(vecPct >= 80)
     val idxDir = graft.core.StreamStore
       .scratchRoot(s"graft-$tag-").toString
     val newDir = graft.core.StreamStore
@@ -2300,9 +1972,7 @@ object Similarity {
     // stream (the staging's consumer) starts.
     graft.core.Overlap(s, 1, s"$tag-stage") { ov =>
       ov.fork(newEmb.repartition(3).write.mode("overwrite").parquet(newDir))
-      graft.operators.AnnOps.buildIvfPqIndex(
-        oldEmb, "vec_id", "embedding", "source", idxDir,
-        cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
+      buildIvfPq(oldEmb, idxDir)
     }
     val stream = s.readStream.schema(newEmb.schema)
       .option("maxFilesPerTrigger", 1).parquet(newDir)
@@ -2321,13 +1991,60 @@ object Similarity {
         }
         afterBatch(s, idxDir, bid)
     }
+    serveAtCeiling(emb, idxDir)
+  }
+
+  /** The s21-s28 durable IVF-PQ lifecycle: stage the sourced corpus once,
+    * build the index on the first frame of `batches(emb)`, append the
+    * rest as batches 1, 2, ..., run `maintain(emb, idxDir)`, then serve
+    * at the construction ceiling. */
+  private def ivfPqLifecycle(s: SparkSession, dir: String, tag: String)(
+      batches: DataFrame => Seq[DataFrame])(
+      maintain: (DataFrame, String) => Unit): DataFrame = {
+    val emb = sourcedEmb(s, dir).pin()
+    val idxDir = graft.core.StreamStore
+      .scratchRoot(s"graft-$tag-").toString
+    val build +: appends = batches(emb)
+    buildIvfPq(build, idxDir)
+    appends.zipWithIndex.foreach { case (batch, i) =>
+      graft.operators.AnnOps.appendIvfPqIndex(batch, "vec_id",
+        "embedding", "source", idxDir, batchId = i + 1L)
+    }
+    maintain(emb, idxDir)
+    serveAtCeiling(emb, idxDir)
+  }
+
+  /** Every lifecycle query's index: K cells and 4 x 4 PQ codes, each
+    * trained in 2 Lloyd rounds. */
+  private def buildIvfPq(emb: DataFrame, idxDir: String): Unit =
+    graft.operators.AnnOps.buildIvfPqIndex(
+      emb, "vec_id", "embedding", "source", idxDir,
+      cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
+
+  /** Serves the query rows of the staged `emb` from `idxDir` at the
+    * construction ceiling (nprobe = cells, full re-rank), then releases
+    * the staging: the serve's output is pinned and independent of it. */
+  private def serveAtCeiling(emb: DataFrame, idxDir: String): DataFrame = {
     val out = graft.operators.AnnOps.queryIvfPqIndex(
-      emb.filter($"vec_id" < NQUERIES), "vec_id", "embedding",
+      emb.filter(col("vec_id") < NQUERIES), "vec_id", "embedding",
       "source", idxDir, k = 3, nprobe = K,
       rerankDepth = Int.MaxValue)
     graft.operators.DedupOps.releaseLocalCheckpoint(emb)
     out
   }
+
+  /** The 80% md5 bucket (old) then the rest split by vec_id parity: the
+    * seed-plus-two-increments batching of s15, d16, s22 and s24. */
+  private def oldThenNewByParity(emb: DataFrame): Seq[DataFrame] = {
+    val newEmb = emb.filter(vecPct >= 80)
+    Seq(emb.filter(vecPct < 80), newEmb.filter(col("vec_id") % 2 === 0),
+      newEmb.filter(col("vec_id") % 2 === 1))
+  }
+
+  /** s27/s28's rolling window: buckets [0, 50), [50, 80), [80, 100). */
+  private def retentionWindow(emb: DataFrame): Seq[DataFrame] = Seq(
+    emb.filter(vecPct < 50), emb.filter(vecPct >= 50 && vecPct < 80),
+    emb.filter(vecPct >= 80))
 
   /** The filtered brute-force top-3 — the shared construction-ceiling
     * oracle (s12's spelling): all same-source pairs, exact scaled-long
@@ -2343,20 +2060,14 @@ object Similarity {
     * over the corpus minus the tombstoned docs (queries are untouched;
     * the delete predicate never covers them). */
   private def sqlFilteredBruteForceTop3Excluding(
-      excludePred: String): String = s"""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-              AS BIGINT) c
-          FROM embeddings
-        ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c * c) AS BIGINT) AS DOUBLE)
-              / 1000000000000.0) nrm
-          FROM comp GROUP BY vec_id
-        ),
+      excludePred: String): String =
+    sqlFilteredBrute(s"q.vec_id < $NQUERIES AND NOT ($excludePred)")
+
+  /** The filtered brute force over the query/corpus pairs `where`
+    * admits (s12's spelling): all same-source pairs, exact scaled-long
+    * cosine, top-3 per query. */
+  private def sqlFilteredBrute(where: String): String = s"""
+        WITH $sqlCompNrm,
         src AS (SELECT doc_id, source FROM documents),
         dot AS (
           SELECT q.vec_id qid, c.vec_id neighbor_id,
@@ -2365,7 +2076,7 @@ object Similarity {
             JOIN comp c ON q.i = c.i AND q.vec_id <> c.vec_id
             JOIN src sq ON sq.doc_id = q.vec_id
             JOIN src sc ON sc.doc_id = c.vec_id AND sc.source = sq.source
-          WHERE q.vec_id < $NQUERIES AND NOT ($excludePred)
+          WHERE $where
           GROUP BY 1, 2
         ),
         cos AS (
@@ -2375,13 +2086,7 @@ object Similarity {
           FROM dot d
             JOIN nrm nq ON nq.vec_id = d.qid
             JOIN nrm nc ON nc.vec_id = d.neighbor_id
-        )
-        SELECT qid, neighbor_id, cosine, rank FROM (
-          SELECT *, row_number() OVER
-            (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC)
-            AS rank
-          FROM cos) t
-        WHERE rank <= 3"""
+        )${sqlTopRank(3)}"""
 
   /** DuckDB spelling of s19: the s15 frozen-training prefix (seed
     * subset trains 2 Lloyd rounds; frozen table = the one the final
@@ -2392,7 +2097,7 @@ object Similarity {
   private def sqlIndexDriftAudit: String = s"""
         WITH raw AS (
           SELECT vec_id,
-            ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 4))::INT
+            ${sqlMd5Bucket("vec_id")}
               % 100 AS bucket
           FROM embeddings
         ),
@@ -2409,74 +2114,8 @@ object Similarity {
               CASE WHEN r.bucket < 80 THEN 0.0 ELSE 0.25 END)
               * 1000000.0) AS BIGINT) c
           FROM embeddings e JOIN raw r ON r.vec_id = e.vec_id
-        ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE)
-              / 1000000000000.0) nrm,
-            sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE)) nrmr
-          FROM comp GROUP BY vec_id
-        ),
-        oldid AS (SELECT vec_id FROM raw WHERE bucket < 80),
-        tcomp AS (
-          SELECT c.vec_id, c.i, c.c FROM comp c
-          JOIN oldid o ON o.vec_id = c.vec_id
-        ),
-        seeds AS (
-          SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id FROM oldid ORDER BY vec_id LIMIT $K)
-        ),
-        cent0 AS (
-          SELECT s.cell, c.i, CAST(SUM(c.c) AS BIGINT) s
-          FROM seeds s JOIN comp c ON c.vec_id = s.vec_id GROUP BY 1, 2
-        ),
-        cnrm0 AS (
-          SELECT cell, sqrt(CAST(SUM(CAST(s AS HUGEINT) * s) AS DOUBLE))
-            cnrmr
-          FROM cent0 GROUP BY cell
-        ),
-        score1 AS (
-          SELECT v.vec_id, ct.cell,
-            CAST(CAST(SUM(v.c * ct.s) AS BIGINT) AS DOUBLE) AS dot
-          FROM tcomp v JOIN cent0 ct ON v.i = ct.i
-          GROUP BY 1, 2
-        ),
-        assign1 AS (
-          SELECT vec_id, cell FROM (
-            SELECT s.vec_id, s.cell, row_number() OVER (
-              PARTITION BY s.vec_id
-              ORDER BY s.dot / (n.nrmr * c0.cnrmr) DESC, s.cell ASC) rn
-            FROM score1 s
-              JOIN nrm n ON n.vec_id = s.vec_id
-              JOIN cnrm0 c0 ON c0.cell = s.cell) t
-          WHERE rn = 1
-        ),
-        cent1 AS (
-          SELECT a.cell, c.i, CAST(SUM(c.c) AS BIGINT) s
-          FROM assign1 a JOIN tcomp c ON c.vec_id = a.vec_id
-          GROUP BY 1, 2
-        ),
-        cnrm1 AS (
-          SELECT cell, sqrt(CAST(SUM(CAST(s AS HUGEINT) * s) AS DOUBLE))
-            cnrmr
-          FROM cent1 GROUP BY cell
-        ),
-        score2 AS (
-          SELECT v.vec_id, ct.cell,
-            CAST(CAST(SUM(v.c * ct.s) AS BIGINT) AS DOUBLE) AS dot
-          FROM comp v JOIN cent1 ct ON v.i = ct.i
-          GROUP BY 1, 2
-        ),
-        assign2 AS (
-          SELECT vec_id, cell FROM (
-            SELECT s.vec_id, s.cell, row_number() OVER (
-              PARTITION BY s.vec_id
-              ORDER BY s.dot / (n.nrmr * c1.cnrmr) DESC, s.cell ASC) rn
-            FROM score2 s
-              JOIN nrm n ON n.vec_id = s.vec_id
-              JOIN cnrm1 c1 ON c1.cell = s.cell) t
-          WHERE rn = 1
-        ),
+        ),$sqlNrmBoth,
+        oldid AS (SELECT vec_id FROM raw WHERE bucket < 80),$sqlFrozenLloydCtes,
         dcell AS (
           SELECT a.vec_id, a.cell, b.batch,
             CAST(1.0 - s.dot / (n.nrm * 1000000.0 * c1.cnrmr)
@@ -2518,84 +2157,12 @@ object Similarity {
     * operator's union.
     */
   private def sqlIncrementalSemantic: String = s"""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-              AS BIGINT) c
-          FROM embeddings
-        ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE)
-              / 1000000000000.0) nrm,
-            sqrt(CAST(CAST(SUM(c*c) AS BIGINT) AS DOUBLE)) nrmr
-          FROM comp GROUP BY vec_id
-        ),
+        WITH $sqlComp,$sqlNrmBoth,
         oldid AS (
           SELECT vec_id FROM embeddings
-          WHERE ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 4))::INT
+          WHERE ${sqlMd5Bucket("vec_id")}
             % 100 < 80
-        ),
-        tcomp AS (
-          SELECT c.vec_id, c.i, c.c FROM comp c
-          JOIN oldid o ON o.vec_id = c.vec_id
-        ),
-        seeds AS (
-          SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id FROM oldid ORDER BY vec_id LIMIT $K)
-        ),
-        cent0 AS (
-          SELECT s.cell, c.i, CAST(SUM(c.c) AS BIGINT) s
-          FROM seeds s JOIN comp c ON c.vec_id = s.vec_id GROUP BY 1, 2
-        ),
-        cnrm0 AS (
-          SELECT cell, sqrt(CAST(SUM(CAST(s AS HUGEINT) * s) AS DOUBLE))
-            cnrmr
-          FROM cent0 GROUP BY cell
-        ),
-        score1 AS (
-          SELECT v.vec_id, ct.cell,
-            CAST(CAST(SUM(v.c * ct.s) AS BIGINT) AS DOUBLE) AS dot
-          FROM tcomp v JOIN cent0 ct ON v.i = ct.i
-          GROUP BY 1, 2
-        ),
-        assign1 AS (
-          SELECT vec_id, cell FROM (
-            SELECT s.vec_id, s.cell, row_number() OVER (
-              PARTITION BY s.vec_id
-              ORDER BY s.dot / (n.nrmr * c0.cnrmr) DESC, s.cell ASC) rn
-            FROM score1 s
-              JOIN nrm n ON n.vec_id = s.vec_id
-              JOIN cnrm0 c0 ON c0.cell = s.cell) t
-          WHERE rn = 1
-        ),
-        cent1 AS (
-          SELECT a.cell, c.i, CAST(SUM(c.c) AS BIGINT) s
-          FROM assign1 a JOIN tcomp c ON c.vec_id = a.vec_id
-          GROUP BY 1, 2
-        ),
-        cnrm1 AS (
-          SELECT cell, sqrt(CAST(SUM(CAST(s AS HUGEINT) * s) AS DOUBLE))
-            cnrmr
-          FROM cent1 GROUP BY cell
-        ),
-        score2 AS (
-          SELECT v.vec_id, ct.cell,
-            CAST(CAST(SUM(v.c * ct.s) AS BIGINT) AS DOUBLE) AS dot
-          FROM comp v JOIN cent1 ct ON v.i = ct.i
-          GROUP BY 1, 2
-        ),
-        assign2 AS (
-          SELECT vec_id, cell FROM (
-            SELECT s.vec_id, s.cell, row_number() OVER (
-              PARTITION BY s.vec_id
-              ORDER BY s.dot / (n.nrmr * c1.cnrmr) DESC, s.cell ASC) rn
-            FROM score2 s
-              JOIN nrm n ON n.vec_id = s.vec_id
-              JOIN cnrm1 c1 ON c1.cell = s.cell) t
-          WHERE rn = 1
-        ),
+        ),$sqlFrozenLloydCtes,
         cellpairs AS (
           SELECT x.vec_id a, y.vec_id b
           FROM assign2 x JOIN assign2 y
@@ -2610,7 +2177,7 @@ object Similarity {
         ),
         newid AS (
           SELECT vec_id FROM embeddings
-          WHERE ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 4))::INT
+          WHERE ${sqlMd5Bucket("vec_id")}
             % 100 >= 80
         )
         SELECT d.a, d.b,
@@ -2686,34 +2253,7 @@ object Similarity {
           FROM sel$i"""
     }.mkString("\n        UNION ALL ")
     s"""
-        WITH comp AS (
-          SELECT vec_id,
-            unnest(range(len(embedding))) i,
-            CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0)
-              AS BIGINT) c
-          FROM embeddings
-        ),
-        nrm AS (
-          SELECT vec_id,
-            sqrt(CAST(CAST(SUM(c * c) AS BIGINT) AS DOUBLE)
-              / 1000000000000.0) nrm
-          FROM comp GROUP BY vec_id
-        ),
-        dot AS (
-          SELECT q.vec_id qid, c.vec_id neighbor_id,
-            CAST(SUM(q.c * c.c) AS BIGINT) dot
-          FROM comp q JOIN comp c ON q.i = c.i AND q.vec_id <> c.vec_id
-          WHERE q.vec_id < $NQUERIES
-          GROUP BY 1, 2
-        ),
-        cos AS (
-          SELECT d.qid, d.neighbor_id,
-            (CAST(d.dot AS DOUBLE) / 1000000000000.0)
-              / (nq.nrm * nc.nrm) AS cosine
-          FROM dot d
-            JOIN nrm nq ON nq.vec_id = d.qid
-            JOIN nrm nc ON nc.vec_id = d.neighbor_id
-        ),
+        WITH $sqlCompNrm,$sqlBruteCos,
         cand AS (
           SELECT qid, neighbor_id, cosine FROM (
             SELECT *, row_number() OVER
