@@ -180,17 +180,14 @@ class RiverScanBuilder(root: String, stream: String, rs: RiverSchema)
     new RiverScan(root, stream, rs, required, idxLo, idxHi)
 }
 
-/** (segment idx, byte range) unit of parallel work. */
-case class RiverInputPartition(
-    root: String, stream: String, segIdx: Long,
-    fromPos: Long, toPos: Long) extends InputPartition
-
-/** Several SMALL consecutive segments packed into one unit of work
-  * (guide §6.1 file-packing applied to the segment chain): each entry
-  * is (segIdx, fromPos, toPos), read in order by one task. */
-case class RiverMultiSegPartition(
-    root: String, stream: String,
-    segs: Seq[(Long, Long, Long)]) extends InputPartition
+/** One unit of parallel work: the byte ranges (segIdx, fromPos, toPos)
+  * of consecutive segments, read in order by one task. A batch scan
+  * gives a production-sized segment a split of its own and packs SMALL
+  * consecutive segments into one (guide §6.1 file-packing applied to
+  * the segment chain); a microbatch gives each segment's new bytes
+  * their own. */
+case class RiverSplit(root: String, stream: String,
+    ranges: Seq[(Long, Long, Long)]) extends InputPartition
 
 class RiverScan(
     root: String, stream: String, rs: RiverSchema,
@@ -246,12 +243,8 @@ class RiverScan(
     }
     if (cur.nonEmpty) bins += cur
     bins.map { b =>
-      if (b.size == 1)
-        RiverInputPartition(root, stream, b.head._1, 0L,
-          b.head._2): InputPartition
-      else
-        RiverMultiSegPartition(root, stream,
-          b.map { case (i, len) => (i, 0L, len) }): InputPartition
+      RiverSplit(root, stream,
+        b.map { case (i, len) => (i, 0L, len) }): InputPartition
     }.toArray
   }
 
@@ -345,7 +338,7 @@ class RiverMicroBatchStream(
           if (i == e.segIdx) e.pos
           else st.segmentFile(stream, i).length() // closed segment: final
         if (to > from)
-          Some(RiverInputPartition(root, stream, i, from, to): InputPartition)
+          Some(RiverSplit(root, stream, Seq((i, from, to))): InputPartition)
         else None
       }.toArray
   }
@@ -365,53 +358,23 @@ class RiverMicroBatchStream(
 class RiverReaderFactory(rs: RiverSchema, required: StructType)
   extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case m: RiverMultiSegPartition =>
-        new RiverMultiSegReader(m, rs, required)
-      case sp: RiverInputPartition =>
-        new RiverPartitionReader(sp, rs, required)
-      case other => throw new IllegalArgumentException(
-        s"river: unexpected partition type ${other.getClass.getName}")
-    }
+    new RiverSplitReader(p.asInstanceOf[RiverSplit], rs, required)
 }
 
-/** Chains one [[RiverPartitionReader]] per packed segment, constructed
-  * LAZILY (a segment's frames are parsed only when its turn comes). */
-class RiverMultiSegReader(
-    m: RiverMultiSegPartition, rs: RiverSchema, required: StructType)
-  extends PartitionReader[InternalRow] {
-  private val parts = m.segs.iterator.map { case (i, from, to) =>
-    new RiverPartitionReader(
-      RiverInputPartition(m.root, m.stream, i, from, to), rs, required)
-  }
-  private var cur: PartitionReader[InternalRow] = null
-  override def next(): Boolean = {
-    while (cur != null || parts.hasNext) {
-      if (cur == null) cur = parts.next()
-      if (cur.next()) return true
-      cur.close(); cur = null
-    }
-    false
-  }
-  override def get(): InternalRow = cur.get()
-  override def close(): Unit = if (cur != null) cur.close()
-}
-
-/** Decodes one segment byte-range into pruned InternalRows. */
-class RiverPartitionReader(
-    p: RiverInputPartition, rs: RiverSchema, required: StructType)
+/** Decodes a split's byte ranges, in order, into pruned InternalRows. */
+class RiverSplitReader(
+    p: RiverSplit, rs: RiverSchema, required: StructType)
   extends PartitionReader[InternalRow] {
 
   private val codec = new RowCodec(rs)
   private val store = new StreamStore(java.nio.file.Paths.get(p.root))
-  // parse exactly the partition's frame-aligned byte range; a compressed
-  // batch frame expands to many logical rows, so bounding by BYTES READ
-  // (not entries returned) is what keeps partitions disjoint and exact
-  private val entries = SegmentCodec
-    .readFrames(store.segmentFile(p.stream, p.segIdx), p.fromPos, p.toPos)
-    ._1
-    .iterator
-    .filter(_.kind == StreamEntry.Data)
+  // parse exactly each range's frame-aligned bytes; a compressed batch
+  // frame expands to many logical rows, so bounding by BYTES READ (not
+  // entries returned) is what keeps splits disjoint and exact. Ranges
+  // are parsed LAZILY: a segment's frames only when its turn comes.
+  private val entries = p.ranges.iterator.flatMap { case (i, from, to) =>
+    SegmentCodec.readFrames(store.segmentFile(p.stream, i), from, to)._1
+  }.filter(_.kind == StreamEntry.Data)
   // column projection plan: for each required field, either a derived
   // column tag or the user-field position
   private val fieldPlan: Array[Either[Int, Int]] = required.fields.map { f =>
