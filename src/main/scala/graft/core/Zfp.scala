@@ -567,15 +567,6 @@ object Zfp {
       case _ =>
     }
 
-  private def padBlock64(b: Array[Long], o: Int, filled: Int, s: Int): Unit =
-    filled match {
-      case 0 => b(o) = 0; b(o + s) = b(o); b(o + 2 * s) = b(o + s); b(o + 3 * s) = b(o)
-      case 1 => b(o + s) = b(o); b(o + 2 * s) = b(o + s); b(o + 3 * s) = b(o)
-      case 2 => b(o + 2 * s) = b(o + s); b(o + 3 * s) = b(o)
-      case 3 => b(o + 3 * s) = b(o)
-      case _ =>
-    }
-
   // --------------------------------------------------- int32 payloads
 
   private def encodeBlockInt32(w: BitWriter, block: Array[Int]): Unit = {
