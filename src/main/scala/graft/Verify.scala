@@ -6,7 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
 
   /** Run every selected query, writing each result to `outDir/<name>` and
-    * the failure map to `outDir/errors.json`. Returns the failures.
+    * the failure map to `outDir/errors.json`, then delete the scratch
+    * dirs the queries made through `StreamStore.scratchRoot`. Returns the
+    * failures.
     *
     * A declared query that throws must be LOUD: round 6 shipped 12
     * silently-dead queries because this loop swallowed exceptions and the
@@ -20,6 +22,7 @@ object Verify {
       sfDir: String,
       outDir: String): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
+    val scratchBefore = graft.core.StreamStore.scratchRoots
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -33,6 +36,10 @@ object Verify {
       .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    // every result is written: drop the index and store dirs the queries
+    // made under the scratch base (a RAM disk by default), and only those
+    graft.core.StreamStore.deleteScratchRoots(
+      graft.core.StreamStore.scratchRoots -- scratchBefore)
     failed.toMap
   }
 

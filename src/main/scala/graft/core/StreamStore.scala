@@ -597,9 +597,30 @@ object StreamStore {
       else Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
+  /** Every directory this JVM made through [[scratchRoot]] and has not
+    * yet deleted through [[deleteScratchRoots]], oldest first. */
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
   /** A fresh scratch directory under [[scratchBase]]. */
-  def scratchRoot(tag: String): Path =
-    Files.createTempDirectory(scratchBase(), tag)
+  def scratchRoot(tag: String): Path = {
+    val p = Files.createTempDirectory(scratchBase(), tag)
+    made.add(p)
+    p
+  }
+
+  /** The scratch directories this JVM has made and not yet deleted. */
+  private[graft] def scratchRoots: Set[Path] =
+    made.toArray(Array.empty[Path]).toSet
+
+  /** Deletes `dirs` (each one a directory [[scratchRoot]] made in this
+    * JVM, with everything under it; symlinks inside are removed, never
+    * followed) and forgets them. */
+  private[graft] def deleteScratchRoots(dirs: Set[Path]): Unit =
+    dirs.foreach { d =>
+      require(made.contains(d), s"$d was not made by this JVM's scratchRoot")
+      org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+      made.remove(d)
+    }
 }
 
 /** Single-writer append facade (reference StreamWriter,

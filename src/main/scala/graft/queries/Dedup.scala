@@ -623,14 +623,20 @@ object Dedup {
         // a rebuild a real deployment never repeats. The cached frame is
         // the PRISTINE old-corpus index; the per-run durable index dir
         // below never mutates it.
-        val basePath = st10BaseIndex.getOrElseUpdate((s, dir), {
-          val p = graft.core.StreamStore
-            .scratchRoot("graft-st10-base-").toString
-          minhashSigs(oldDocs)
-            .select($"doc_id", $"shs", $"bkeys")
-            .write.mode("overwrite").parquet(p)
-          p
-        })
+        // (a cached base deleted since — Verify removes its run's scratch
+        // dirs — is rebuilt)
+        val basePath = st10BaseIndex.get((s, dir))
+          .filter(p => java.nio.file.Files.isDirectory(
+            java.nio.file.Paths.get(p)))
+          .getOrElse {
+            val p = graft.core.StreamStore
+              .scratchRoot("graft-st10-base-").toString
+            minhashSigs(oldDocs)
+              .select($"doc_id", $"shs", $"bkeys")
+              .write.mode("overwrite").parquet(p)
+            st10BaseIndex((s, dir)) = p
+            p
+          }
         // The accumulated index is DURABLE (one parquet subdir per
         // committed batch — DedupOps.incrementalMinhashDedupDurable):
         // a restart between microbatches reloads exactly the committed

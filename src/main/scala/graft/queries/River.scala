@@ -67,19 +67,22 @@ object River {
     * and queried many times — per-query rewrites were pure bench
     * overhead, not operator cost. Queries that mutate or reconfigure the
     * store (r03/r04 ingest+delete, r05/r06 facade, r08 tiny segments)
-    * keep private roots.
+    * keep private roots. A root deleted since (Verify removes its run's
+    * scratch dirs) is written afresh.
     */
   private val sharedRoots =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
   private def sharedEventsRoot(s: SparkSession, dir: String): java.nio.file.Path =
-    sharedRoots.computeIfAbsent(dir, _ => {
-      val root = tempRoot("shared")
-      orderedEvents(s, dir).coalesce(1)
-        .write.format("river")
-        .option("root", root.toString).option("stream", "ev")
-        .mode("append").save()
-      root
-    })
+    sharedRoots.compute(dir, (_, cached) =>
+      if (cached != null && java.nio.file.Files.isDirectory(cached)) cached
+      else {
+        val root = tempRoot("shared")
+        orderedEvents(s, dir).coalesce(1)
+          .write.format("river")
+          .option("root", root.toString).option("stream", "ev")
+          .mode("append").save()
+        root
+      })
 
   val all: Seq[GraftQuery] = Seq(
 

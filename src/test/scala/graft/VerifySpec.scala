@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
+import graft.core.StreamStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -72,5 +74,45 @@ class VerifySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(failed.isEmpty)
     assert(Files.readString(
       java.nio.file.Paths.get(s"$out/errors.json")) == "{}")
+  }
+
+  test("runAll deletes the scratch dirs its queries made, and only those") {
+    val sfDir = "/root/testdata/sf0.001"
+    assume(new java.io.File(sfDir).isDirectory, s"$sfDir is missing")
+    val base = StreamStore.scratchBase()
+    def graftDirs: Set[Path] = Files.list(base).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("graft-")).toSet
+    // another process's scratch dir, made before the run
+    val foreign = Files.createTempDirectory(base, "graft-foreign-")
+    try {
+      val before = graftDirs
+      val made = scala.collection.mutable.Set.empty[Path]
+      // r01 reads the shared events store, r03 writes private ones; the
+      // spy records every scratch dir each query left before the cleanup
+      def spied(name: String): (String, (SparkSession, String) => DataFrame) =
+        name -> { (s: SparkSession, d: String) =>
+          val df = SparkEntry.queries(name)(s, d)
+          made ++= StreamStore.scratchRoots
+          df
+        }
+      val out = Files.createTempDirectory("verify-spec-").toString
+      val failed = Verify.runAll(spark,
+        Seq(spied("r01_stream_write_read"), spied("r03_stream_ingest")),
+        sfDir, out)
+      assert(failed.isEmpty, s"queries failed: $failed")
+      assert(new java.io.File(s"$out/r03_stream_ingest").isDirectory)
+      val ran = made.toSet -- before
+      assert(ran.exists(_.getFileName.toString.startsWith("graft-river-")),
+        s"the queries made no scratch dir: $made")
+      assert(ran.forall(d => !Files.exists(d)),
+        s"left behind: ${ran.filter(d => Files.exists(d))}")
+      assert(graftDirs == before, s"new dirs: ${graftDirs -- before}")
+      assert(Files.isDirectory(foreign), "deleted a dir it did not make")
+      // a second run re-creates the shared store the first one deleted
+      val again = Verify.runAll(spark,
+        Seq(spied("r01_stream_write_read")), sfDir, out)
+      assert(again.isEmpty, s"r01 failed after the cleanup: $again")
+      assert(graftDirs == before)
+    } finally Files.deleteIfExists(foreign)
   }
 }
