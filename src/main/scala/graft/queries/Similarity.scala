@@ -149,7 +149,7 @@ object Similarity {
           FROM dot d
             JOIN nrm nq ON nq.vec_id = d.qid
             JOIN nrm nn ON nn.vec_id = d.vec_id
-        )""" 
+        )"""
 
   /** Oracle CTEs `dot`/`cos`: exact-cosine re-rank of the (qid, vec_id)
     * rows of an IVF-cell candidate CTE `cand` (s14, s23). */
