@@ -247,6 +247,79 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"commitMinhashIndexBatch launched $n jobs")
   }
 
+  /** `df`'s rows whose vid passes `keep` as (doc_id, text) documents. */
+  private def minhashDocs(keep: org.apache.spark.sql.Column): DataFrame = {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.format_string
+    df.filter(keep).select($"vid".as("doc_id"), format_string(
+      "doc %d of the %s group shares these words", $"vid" % 20, $"grp")
+      .as("text"))
+  }
+
+  test("incrementalMinhashDedupDurable: pinned job budget for one " +
+      "increment over a committed batch and a tombstone batch") {
+    val s = spark
+    import s.implicits._
+    val dir = tmpDir("minhash-inc")
+    DedupOps.commitMinhashIndexBatch(DedupOps.minhashIndex(
+      minhashDocs($"vid" < 64), "doc_id", "text", 3, 4, 2,
+      partitions = 4), dir, 0L, 3, 4, 2)
+    AnnOps.deleteFromIndex(df.filter($"vid" < 8), "vid", dir, 0L)
+    val n = jobsOf {
+      val pairs = DedupOps.incrementalMinhashDedupDurable(
+        minhashDocs($"vid" >= 64), "doc_id", "text", dir, 1L,
+        shingleK = 3, bands = 4, rows = 2, threshold = 0.5,
+        partitions = 4)
+      DedupOps.releaseLocalCheckpoint(pairs)
+    }
+    assert(n == IncrementalMinhashJobs,
+      s"incrementalMinhashDedupDurable launched $n jobs")
+  }
+
+  test("semanticIndexDriftAudit: pinned job budget over two batches and " +
+      "a delete") {
+    val s = spark
+    import s.implicits._
+    val idx = tmpDir("drift")
+    Seq(df.filter($"vid" < 64), df.filter($"vid" >= 64)).zipWithIndex
+      .foreach { case (b, i) =>
+        AnnOps.incrementalSemanticDedupDurable(b, "vid", "emb", idx,
+          i.toLong, threshold = 0.99, cells = 4, iters = 2,
+          partitions = 4, probe = false)
+      }
+    AnnOps.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
+    val n = jobsOf(AnnOps.semanticIndexDriftAudit(spark, idx).collect())
+    assert(n == DriftAuditJobs,
+      s"semanticIndexDriftAudit launched $n jobs")
+  }
+
+  test("s26 chain: pinned job budget for build with semanticNearDups " +
+      "and connectedComponents alongside, the delete, then the serve") {
+    val s = spark
+    import s.implicits._
+    val idx = tmpDir("s26")
+    val n = jobsOf {
+      val losers = graft.core.Overlap(s, 1, "s26") { ov =>
+        val fBuild = ov.fork(AnnOps.buildIvfPqIndex(df, "vid", "emb",
+          "grp", idx, cells = 4, iters = 2, pqM = 4, pqKs = 4,
+          pqIters = 2, partitions = 4))
+        val pairs = AnnOps.semanticNearDups(df, "vid", "emb", 0.99,
+          cells = 4, iters = 2, partitions = 4)
+        val l = DedupOps.connectedComponents(pairs, "a", "b")
+          .filter(!$"is_survivor").select($"id".as("vid"))
+        fBuild.join()
+        l
+      }
+      AnnOps.deleteFromIndex(losers, "vid", idx, 1L)
+      val out = AnnOps.queryIvfPqIndex(df.filter($"vid" < 8), "vid", "emb",
+        "grp", idx, k = 3, nprobe = 4, rerankDepth = Int.MaxValue,
+        partitions = 4)
+      DedupOps.releaseLocalCheckpoint(out)
+    }
+    assert(n == S26ChainJobs, s"the s26 chain launched $n jobs")
+  }
+
   private val BuildJobs = 13
   private val InlineJobs = 25
   private val SemanticJobs = 10
@@ -262,4 +335,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val ExpireJobs = 9
   private val MaintainJobs = 9
   private val MinhashCommitJobs = 1
+  private val IncrementalMinhashJobs = 13
+  private val DriftAuditJobs = 13
+  private val S26ChainJobs = 76
 }
