@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.functions.dot_i64
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 import graft.core.Overlap
 import graft.core.Pins.PinnedDataset
 import org.apache.spark.broadcast.Broadcast
@@ -807,10 +807,7 @@ object DedupOps {
     // about. Fail with the rebuild named instead. (The
     // round-12 batches/-at-the-root layout fails loudly one layer
     // down, in [[AnnOps.currentGenOpt]].)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(root) &&
-        fs.listStatus(root).exists(s => s.isDirectory &&
-          s.getPath.getName.startsWith("batch=")))
+    if (AnnOps.subdirs(fs, dir).nonEmpty)
       throw new IllegalStateException(
         s"loadMinhashIndex: $dir holds (legacy) flat batch=N dirs at " +
           "the root; rebuild the index")
@@ -820,15 +817,12 @@ object DedupOps {
       // (reading an ivfpq/semantic tree as signatures was a downstream
       // schema error before the manifest existed)
       AnnOps.requireFamily(spark, dir, "loadMinhashIndex", "minhash")
-      val hPath = AnnOps.hpath(s"${AnnOps.genRoot(dir, g)}/batches")
-      val hasBatch = fs.exists(hPath) && fs.listStatus(hPath).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch="))
-      if (!hasBatch) None
-      else Some(AnnOps.minusTombstones(
-        spark.read.parquet(hPath.toString)
-          .filter(col("batch") =!= lit(excludeBatch))
-          .select(col("doc_id"), col("shs"), col("bkeys")),
-        AnnOps.loadTombstones(spark, dir), idCol = "doc_id"))
+      val batches = s"${AnnOps.genRoot(dir, g)}/batches"
+      if (AnnOps.subdirs(fs, batches).isEmpty) None
+      else Some(AnnOps.readTree(spark, AnnOps.IndexTree.MinhashBatches,
+          Seq(batches), tombstones = AnnOps.loadTombstones(spark, dir))
+        .filter(col("batch") =!= lit(excludeBatch))
+        .select(col("doc_id"), col("shs"), col("bkeys")))
     }
   }
 
@@ -3407,6 +3401,20 @@ object AnnOps {
   private[operators] def hpath(p: String) =
     new org.apache.hadoop.fs.Path(p)
 
+  /** Names of `dir`'s subdirectories named `prefix*` (none when `dir`
+    * is absent): a tree's `batch=<id>` dirs, or the `gen=<n>` dirs. */
+  private[operators] def subdirs(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String, prefix: String = "batch="): Seq[String] =
+    if (!fs.exists(hpath(dir))) Nil
+    else fs.listStatus(hpath(dir)).toSeq.filter(st => st.isDirectory &&
+      st.getPath.getName.startsWith(prefix)).map(_.getPath.getName)
+
+  /** The numbers of the generation dirs on disk, committed or not. */
+  private def genDirs(fs: org.apache.hadoop.fs.FileSystem,
+      indexDir: String): Seq[String] =
+    subdirs(fs, s"$indexDir/gens", "gen=").map(_.stripPrefix("gen="))
+      .filter(n => n.nonEmpty && n.forall(_.isDigit))
+
   /** The on-disk layout revision this build reads and writes. Bumped
     * when the directory shape changes incompatibly; readers reject a
     * mismatched manifest at the door instead of failing somewhere
@@ -3485,6 +3493,79 @@ object AnnOps {
       s"$who: $indexDir is a '${man.family}' index; this operator " +
         s"serves ${expected.mkString("/")} indexes")
     man
+  }
+
+  /** One tree a durable index writes, declared once: its data columns
+    * with the types the writers produce and its partition columns,
+    * which read back as BIGINT. `idCol` is what tombstones delete by. */
+  private[operators] case class IndexTree(name: String, dataDdl: String,
+      partitions: Seq[String] = Nil, idCol: String = "id") {
+    val data: StructType = StructType.fromDDL(dataDdl)
+    val schema: StructType =
+      partitions.foldLeft(data)(_.add(_, LongType))
+  }
+
+  /** Every tree of the three durable families. A new tree adds its
+    * declaration here and is read only through [[readTree]]. */
+  private[operators] object IndexTree {
+    val Centroids = IndexTree("centroids",
+      "cell BIGINT, cc ARRAY<BIGINT>, cnrmr DOUBLE")
+    val Codebooks = IndexTree("codebooks",
+      "m INT, code BIGINT, cmean ARRAY<DOUBLE>, cn2 DOUBLE")
+    val AnnBatches = IndexTree("batches",
+      "id BIGINT, c ARRAY<BIGINT>, nrm DOUBLE, key STRING",
+      Seq("batch", "cell"))
+    val SemanticBatches = IndexTree("batches",
+      "id BIGINT, c ARRAY<BIGINT>, nrm DOUBLE", Seq("batch", "cell"))
+    val Codes = IndexTree("codes", "id BIGINT, code BIGINT, m INT",
+      Seq("batch", "cell"))
+    val MinhashBatches = IndexTree("batches", "doc_id BIGINT, " +
+      "shs ARRAY<STRING>, bkeys ARRAY<STRUCT<band: INT, bkey: STRING>>",
+      Seq("batch"), idCol = "doc_id")
+    /** Read batch dir by batch dir, so no partition column. */
+    val Tombstones = IndexTree("tombstones", "id BIGINT")
+
+    def batchesOf(family: String): IndexTree = family match {
+      case "ivfpq" => AnnBatches
+      case "semantic" => SemanticBatches
+      case "minhash" => MinhashBatches
+    }
+  }
+
+  /** THE reader of every durable-index tree: `paths` read under the
+    * tree's declared schema, so no schema-inference job runs and `batch`
+    * and `cell` come back as BIGINT. A declared read would return a
+    * missing column as NULLs, so the footer of one listed file is read
+    * on the driver (no job) and a missing or mistyped data column fails
+    * here. `cells` prunes to those `cell` partitions (a plain IN, which
+    * lands in the scan's PartitionFilters: a serve or probe reads only
+    * the cells it touches — PlanInvariantsSpec gates it); `tombstones`
+    * are anti-joined out on the tree's `idCol` with no broadcast hint
+    * (a takedown wave can be corpus-sized; AQE broadcasts the small
+    * case). */
+  private[operators] def readTree(s: SparkSession, tree: IndexTree,
+      paths: Seq[String], cells: Option[Seq[Long]] = None,
+      tombstones: Option[DataFrame] = None): DataFrame = {
+    val df = s.read.schema(tree.schema).parquet(paths: _*)
+    df.inputFiles.headOption.foreach { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath(f),
+          s.sessionState.newHadoopConf()))
+      val stored = try new org.apache.spark.sql.execution.datasources
+          .parquet.ParquetToSparkSchemaConverter()
+          .convert(rd.getFooter.getFileMetaData.getSchema)
+        finally rd.close()
+      val bad = tree.data.filterNot(d => stored.exists(c =>
+        c.name == d.name && c.dataType.catalogString ==
+          d.dataType.catalogString))
+      if (bad.nonEmpty) throw new IllegalStateException(
+        s"the ${tree.name} tree ($f) stores ${stored.catalogString}; " +
+          s"this build reads ${bad.map(_.toDDL).mkString(", ")} from " +
+          "it — rebuild the index")
+    }
+    val pruned = cells.fold(df)(c => df.filter(col("cell").isin(c: _*)))
+    tombstones.fold(pruned)(t => pruned.join(
+      t.select(col("id").as(tree.idCol)), Seq(tree.idCol), "left_anti"))
   }
 
   private[graft] def genRoot(indexDir: String, g: Long): String =
@@ -3602,41 +3683,20 @@ object AnnOps {
           "the batch after it finishes (if it crashed, run " +
           "AnnOps.recoverIndex first)")
 
-  /** Prune a stored-index scan to a bounded cell set. The predicate is
-    * built with literals in the DISCOVERED partition-column type
-    * (partition values round-trip through directory names, so the
-    * LongType `cell` the operators compute reads back as the inferred
-    * IntegerType) and applied to the raw column, so it lands in the
-    * scan's PartitionFilters verbatim — the whole point of the
-    * cell-partitioned layout: a serve touches nprobe/cells of the
-    * index's files, not 100% of them (PlanInvariantsSpec gates it;
-    * SCALE_r12.json `index_prune` recorded files read per nprobe). */
-  private[graft] def cellPrune(df: DataFrame, cells: Seq[Long])
-      : DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val vals: Seq[Any] = df.schema("cell").dataType match {
-      case LongType => cells
-      case IntegerType => cells.map(_.toInt)
-      case dt => cells.map(c => lit(c).cast(dt)) // defensive; unused
-    }
-    df.filter(col("cell").isin(vals: _*))
-  }
-
-  /** Committed tombstone ids (`indexDir/tombstones/batch=<id>`), if
-    * any batch of deletes has been committed. `private[operators]`:
-    * the minhash index family ([[DedupOps.loadMinhashIndex]]) shares
-    * the tombstone machinery. */
-  private[operators] def loadTombstones(s: SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val batches = listTombstoneBatches(s, indexDir).map(_._1)
+  /** Committed tombstone ids (`indexDir/tombstones/batch=<id>`) of
+    * `batches` (default: every committed batch), if there are any.
+    * `private[operators]`: the minhash index family
+    * ([[DedupOps.loadMinhashIndex]]) shares the tombstone machinery. */
+  private[operators] def loadTombstones(s: SparkSession, indexDir: String,
+      batches: Option[Seq[String]] = None): Option[DataFrame] = {
     // committed BATCHES, not a bare dir-exists: the tombstones/ parent
     // dir legitimately outlives its last batch (deleting an
     // emptied-out parent is a check-then-act race with an
-    // uncoordinated deleteFromIndex commit — REVIEW 3), and a parquet
-    // read of an empty dir throws instead of meaning "no deletes"
-    if (batches.isEmpty) None
-    else Some(s.read.parquet(batches.map(b =>
-      s"$indexDir/tombstones/$b"): _*).select(col("id")))
+    // uncoordinated deleteFromIndex commit — REVIEW 3)
+    val bs = batches.getOrElse(listTombstoneBatches(s, indexDir).map(_._1))
+    if (bs.isEmpty) None
+    else Some(readTree(s, IndexTree.Tombstones,
+      bs.map(b => s"$indexDir/tombstones/$b")))
   }
 
   /** Committed tombstone batch dirs as (name, content fingerprint).
@@ -3649,28 +3709,11 @@ object AnnOps {
   private def listTombstoneBatches(s: SparkSession,
       indexDir: String): Seq[(String, String)] = {
     val fs = indexFs(s, indexDir)
-    val p = hpath(s"$indexDir/tombstones")
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch="))
-      .map { st =>
-        val fp = fs.listStatus(st.getPath).toSeq
-          .map(f => s"${f.getPath.getName}:${f.getLen}")
-          .sorted.mkString(",")
-        (st.getPath.getName, fp)
-      }
+    subdirs(fs, s"$indexDir/tombstones").map { b =>
+      b -> fs.listStatus(hpath(s"$indexDir/tombstones/$b")).toSeq
+        .map(f => s"${f.getPath.getName}:${f.getLen}").sorted.mkString(",")
+    }
   }
-
-  /** Stored rows minus the tombstoned ids (joined on `idCol` — the
-    * semantic families store `id`, the minhash family `doc_id`). NO
-    * broadcast hint: the tombstone set is unbounded by contract (a
-    * takedown wave can be corpus-scale), so AQE broadcasts the common
-    * small case and shuffles past the limit — the
-    * occupancy-shaped-bound policy. */
-  private[operators] def minusTombstones(rows: DataFrame,
-      ts: Option[DataFrame], idCol: String = "id"): DataFrame =
-    ts.map(t => rows.join(t.select(col("id").as(idCol)), Seq(idCol),
-      "left_anti")).getOrElse(rows)
 
   /** DELETE documents from a durable index (any family): commits
     * `ids` as the tombstone batch `indexDir/tombstones/batch=<id>` —
@@ -3817,16 +3860,9 @@ object AnnOps {
     // marker is a crashed run's invisible staging — delete it; every
     // post-flip step (tombstone clearing, old-gen reclaim) is
     // idempotent and redone by the next maintenance run
-    val gp = hpath(s"$indexDir/gens")
-    if (fs.exists(gp))
-      fs.listStatus(gp).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("gen="))
-        .map(st => (st.getPath, st.getPath.getName.stripPrefix("gen=")))
-        .filter { case (_, n) => n.nonEmpty && n.forall(_.isDigit) }
-        .filterNot { case (_, n) =>
-          fs.exists(hpath(s"$indexDir/_commits/$n")) }
-        .foreach { case (p, _) => fs.delete(p, true) }
+    genDirs(fs, indexDir)
+      .filterNot(n => fs.exists(hpath(s"$indexDir/_commits/$n")))
+      .foreach(n => fs.delete(hpath(s"$indexDir/gens/gen=$n"), true))
     fs.delete(lp, false)
   }
 
@@ -3925,35 +3961,18 @@ object AnnOps {
       // mid-compaction is neither applied nor recorded and keeps
       // anti-joining until the next run (REVIEW 2).
       val tsApplied = listTombstoneBatches(s, indexDir)
-      val ts: Option[DataFrame] =
-        if (tsApplied.isEmpty) None
-        else Some(s.read.parquet(tsApplied.map(b =>
-          s"$indexDir/tombstones/${b._1}"): _*).select(col("id")))
-      def listTree(tree: String): Set[String] = {
-        val p = hpath(s"$root/$tree")
-        if (!fs.exists(p)) Set.empty
-        else fs.listStatus(p).toSeq.filter(st =>
-          st.isDirectory && st.getPath.getName.startsWith("batch="))
-          .map(_.getPath.getName).toSet
-      }
+      val ts = loadTombstones(s, indexDir, Some(tsApplied.map(_._1)))
+      def listTree(tree: String) = subdirs(fs, s"$root/$tree").toSet
       val atRead = (listTree("batches"), listTree("codes"))
-      // family shape DECLARED by the manifest (replacing the round-12
-      // schema sniffing): minhash rows key on doc_id and partition by
-      // batch only; the semantic/ANN families key on id and nest a
-      // cell level so serves/probes partition-prune
-      val idCol = if (man.family == "minhash") "doc_id" else "id"
-      val partCols =
-        if (man.family == "minhash") Seq("batch") else Seq("batch", "cell")
       // debris from a crashed run whose lock was hand-removed without
       // recoverIndex — an uncommitted dir at our target is garbage
       // (nobody can have committed `target` while we hold the lock)
       if (fs.exists(hpath(newRoot))) fs.delete(hpath(newRoot), true)
-      def prep(src: String): DataFrame =
-        minusTombstones(s.read.parquet(s"$root/$src"), ts, idCol)
-          // retention: a partition filter, so expired batches are
-          // pruned at the scan — the rewrite reads only the retained
-          // window
-          .filter(col("batch").cast("long") >= minKeepBatchId)
+      // retention: a partition filter, so expired batches are pruned at
+      // the scan — the rewrite reads only the retained window
+      def prep(tree: IndexTree): DataFrame =
+        readTree(s, tree, Seq(s"$root/${tree.name}"), tombstones = ts)
+          .filter(col("batch") >= minKeepBatchId)
       // SCALE-ADAPTIVE rewrite layout (round-17 optimization, guide
       // §2.2/§6.2): the generation rewrite used to shuffle into the
       // session shuffle-partition count regardless of how big the
@@ -3966,9 +3985,17 @@ object AnnOps {
       // small-file debris) goes. Content is partitioning-invariant:
       // repartition feeds partitionBy on the same columns, and every
       // reader of the tree is key-grouped/order-free by construction.
-      def writeGen(rows: DataFrame, src: String): Unit =
-        rows.repartition(Parts.of(rows, partitions), partCols.map(col): _*)
-          .write.partitionBy(partCols: _*).parquet(s"$newRoot/$src")
+      // The tree's declaration carries the family's shape: minhash rows
+      // key on doc_id and partition by batch only; the semantic/ANN
+      // families key on id and nest a cell level so serves/probes
+      // partition-prune.
+      def writeGen(tree: IndexTree): Unit = {
+        val rows = prep(tree)
+        rows.repartition(Parts.of(rows, partitions),
+            tree.partitions.map(col): _*)
+          .write.partitionBy(tree.partitions: _*)
+          .parquet(s"$newRoot/${tree.name}")
+      }
       val hasCodes = fs.exists(hpath(s"$root/codes"))
       // the batches and codes rewrites are INDEPENDENT jobs into the
       // same not-yet-committed (invisible) generation — run them
@@ -3976,21 +4003,17 @@ object AnnOps {
       // threads so the second's tasks back-fill the first's tail);
       // the atomic flip below still publishes both or neither
       Overlap(s, 2, "maintain") { ov =>
-        ov.fork(writeGen(prep("batches"), "batches"))
-        if (hasCodes) ov.fork(writeGen(prep("codes"), "codes"))
+        ov.fork(writeGen(IndexTree.batchesOf(man.family)))
+        if (hasCodes) ov.fork(writeGen(IndexTree.Codes))
       }
       // an all-rows tombstone set (or an expire-everything retention
-      // cut) writes an EMPTY generation, and a later parquet read of
-      // it cannot infer a schema — refuse loudly (an index with
+      // cut) writes an EMPTY generation — refuse loudly (an index with
       // nothing left should be dropped, not maintained empty). The
       // check reads the WRITTEN tree (an empty partitionBy write
       // leaves no partition dirs) instead of paying a separate
       // pre-write evaluation of the prep plan (round-17 job-count
       // cut); the catch below discards the new generation either way.
-      val wroteRows = fs.exists(hpath(s"$newRoot/batches")) &&
-        fs.listStatus(hpath(s"$newRoot/batches")).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("batch="))
-      require(wroteRows,
+      require(subdirs(fs, s"$newRoot/batches").nonEmpty,
         "compactIndex: tombstones/retention cover every stored row " +
           s"(minKeepBatchId=$minKeepBatchId); drop the index instead " +
           "of compacting it empty")
@@ -4084,17 +4107,10 @@ object AnnOps {
   private def cleanupGens(s: SparkSession, indexDir: String,
       keepFrom: Long): Unit = {
     val fs = indexFs(s, indexDir)
-    val gp = hpath(s"$indexDir/gens")
-    if (!fs.exists(gp)) return
-    fs.listStatus(gp).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-      .map(st => (st.getPath, st.getPath.getName.stripPrefix("gen=")))
-      .filter { case (_, n) => n.nonEmpty && n.forall(_.isDigit) }
-      .filter(_._2.toLong < keepFrom)
-      .foreach { case (p, n) =>
-        fs.delete(p, true)
-        fs.delete(hpath(s"$indexDir/_commits/$n"), false)
-      }
+    genDirs(fs, indexDir).filter(_.toLong < keepFrom).foreach { n =>
+      fs.delete(hpath(s"$indexDir/gens/gen=$n"), true)
+      fs.delete(hpath(s"$indexDir/_commits/$n"), false)
+    }
   }
 
   /** Explicitly reclaim every non-live generation — for a deployment
@@ -4396,12 +4412,9 @@ object AnnOps {
     // back null) and must commit, not throw — one all-null trigger
     // would otherwise crash a long-lived append stream (ADVICE).
     // k and the index dim are the manifest's DECLARED shape — written
-    // by the build, zero jobs (round-17 job-count cut); an index whose
-    // manifest does not declare them pays one aggregate over the
-    // stored table.
-    val declared = for {
-      dk <- man.params.get("cells"); dd <- man.params.get("dim")
-    } yield (dk, dd)
+    // by the build, zero jobs (round-17 job-count cut).
+    val k = man.param("cells", indexDir)
+    val storedDim = man.param("dim", indexDir)
     // OVERLAP LAYOUT (guide §2.6). The centroid shipping and the
     // codebook collect read only the FROZEN stored artifacts — they
     // are independent of the batch, so they launch before the staging
@@ -4414,22 +4427,17 @@ object AnnOps {
     // — a bad batch throws after some wasted assignment work (and
     // releases its pin) instead of before it; the committed state is
     // identical either way.
-    val cent = s.read.parquet(s"$indexDir/centroids")
+    val cent = readTree(s, IndexTree.Centroids, Seq(s"$indexDir/centroids"))
+    val storedBooks =
+      readTree(s, IndexTree.Codebooks, Seq(s"$indexDir/codebooks"))
     Overlap(s, 2, "ivfpq-append") { ov =>
       val fCent = ov.fork {
-        val (k, dim) = declared.getOrElse {
-          val centStats = cent
-            .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0)))
-            .head()
-          (centStats.getLong(0), centStats.getInt(1).toLong)
-        }
-        val shards = shipTable(cent, k, dim, maxCentroidBytes)
+        val shards = shipTable(cent, k, storedDim, maxCentroidBytes)
         ov.onFailure(destroyShards(shards))
-        (dim, shards)
+        shards
       }
       val fBooks = ov.fork {
-        s.read.parquet(s"$indexDir/codebooks")
-          .select(col("m").cast("int"), col("code"), col("cmean"))
+        storedBooks.select(col("m"), col("code"), col("cmean"))
           .as[(Int, Long, Seq[Double])].collect()
       }
       val staged = ov.own(scaledImpl(batch, idCol, vecCol, Some(keyCol),
@@ -4442,7 +4450,7 @@ object AnnOps {
             max(size(col("c"))).as("hi"))
           .head()
       }
-      val (storedDim, shards) = fCent.join()
+      val shards = fCent.join()
       // the assignment + pin runs on THIS thread while the dim and
       // codebook forks are in flight
       val rows = ov.own(nearestCells(v, shards).join(v, Seq("id"))
@@ -4524,10 +4532,11 @@ object AnnOps {
     * Scale shape: the stored trees are CELL-PARTITIONED
     * (`batches/batch=<b>/cell=<c>/`, same nesting for codes), so the
     * candidate scan, the ADC code scan, and the exact re-rank scan all
-    * carry a partition filter on the probed cell set — a serve reads
-    * O(nprobe/cells) of the index's files, never the whole index
-    * (PlanInvariantsSpec gates the PartitionFilters; SCALE_r12.json
-    * `index_prune` recorded files read); every lookup
+    * carry a partition filter on the probed cell set ([[readTree]]'s
+    * `cells`) — a serve reads O(nprobe/cells) of the index's files,
+    * never the whole index (PlanInvariantsSpec gates the
+    * PartitionFilters; SCALE_r12.json `index_prune` recorded files
+    * read); every lookup
     * table (query cells, LUTs, codebook norms, query vectors)
     * broadcasts; the candidate table gets NO broadcast hint (the
     * boilerplate-cell argument on [[filteredTopKIvfPq]]); tombstoned
@@ -4554,6 +4563,8 @@ object AnnOps {
     // half-state)
     val man = requireFamily(s, indexDir, "queryIvfPqIndex", "ivfpq")
     val root = genRoot(indexDir, currentGen(s, indexDir))
+    val cent = readTree(s, IndexTree.Centroids, Seq(s"$indexDir/centroids"))
+      .select(col("cell"), col("cc"), col("cnrmr"))
     // every staging released before return: this operator is the
     // serve-many-batches face — un-released per-call pins would
     // accumulate for the session lifetime (the ADVICE leak class)
@@ -4561,8 +4572,6 @@ object AnnOps {
       partitions)
     val qv = withRawNorm(stagedQ) // drops key; take it from the staging
     val qkeys = stagedQ.select(col("id").as("qid"), col("key"))
-    val cent = s.read.parquet(s"$indexDir/centroids")
-      .select(col("cell"), col("cc"), col("cnrmr"))
     // top-P cells per query: the ivfProbeSide scoring verbatim,
     // including its ANSI zero-norm guard (null score, never a crash)
     val qvec = qv.select(col("id").as("qid"), col("c").as("qc"),
@@ -4584,18 +4593,17 @@ object AnnOps {
     // THE SCALE POINT of the layout: the union of probed cells is
     // bounded by the centroid count (a driver-safe collect at any
     // query-batch size — cells, not queries × nprobe), and every
-    // stored-index scan below prunes to those cells' partitions. At
-    // nprobe << cells a serve reads nprobe/cells of the index's files
-    // — O(probed cells), never O(index) (PlanInvariantsSpec gates the
-    // PartitionFilters; SCALE_r12.json `index_prune` recorded files read).
-    val probed = qside.select(col("cell").cast("long")).distinct()
+    // stored-index scan below prunes to those cells' partitions through
+    // [[readTree]]. At nprobe << cells a serve reads nprobe/cells of the
+    // index's files — O(probed cells), never O(index)
+    // (PlanInvariantsSpec gates the PartitionFilters; SCALE_r12.json
+    // `index_prune` recorded files read).
+    val probed = qside.select(col("cell")).distinct()
       .as[Long].collect().toSeq.sorted
-    val ts = loadTombstones(s, indexDir)
     // candidate + re-rank scans: probed cells only, deletes excluded
-    val rows = minusTombstones(
-      cellPrune(s.read.parquet(s"$root/batches"), probed), ts)
-      .select(col("id"), col("cell").cast("long").as("cell"), col("c"),
-        col("nrm"), col("key"))
+    val rows = readTree(s, IndexTree.AnnBatches, Seq(s"$root/batches"),
+        Some(probed), loadTombstones(s, indexDir))
+      .select(col("id"), col("cell"), col("c"), col("nrm"), col("key"))
     // single consumer (the ADC join): no pin — a pin here costs one
     // whole job per serve for zero reuse (round-15 overhead cut; the
     // serve job count is the fixed cost every lifecycle query pays)
@@ -4605,7 +4613,7 @@ object AnnOps {
     // ADC over stored codes/codebooks. Read twice below, but bounded
     // (pqM x pqKs rows): two embedded scans of a KB-sized parquet are
     // cheaper than one materialization job (round-15 overhead cut)
-    val books = s.read.parquet(s"$indexDir/codebooks")
+    val books = readTree(s, IndexTree.Codebooks, Seq(s"$indexDir/codebooks"))
       .select(col("m"), col("code"), col("cmean"), col("cn2"))
     // dsub DECLARED by the manifest (replacing the round-12 widest-
     // codebook-entry inference — with dim % pqM != 0 the LAST
@@ -4616,7 +4624,8 @@ object AnnOps {
     // code row since the layout change); no tombstone anti-join needed
     // — the ADC join is driven by cand, which already excludes deleted
     // ids, so deleted codes are simply never requested
-    val codes = cellPrune(s.read.parquet(s"$root/codes"), probed)
+    val codes = readTree(s, IndexTree.Codes, Seq(s"$root/codes"),
+        Some(probed))
       .select(col("id"), col("m"), col("code"))
     val luts = books.crossJoin(broadcast(qv.select(col("id").as("qid"),
         col("c").as("qc"))))
@@ -5817,9 +5826,17 @@ object AnnOps {
     val genAtEntry = currentGenOpt(s, indexDir)
     // Hadoop FS, not java.io.File: DFS paths in production (the
     // loadMinhashIndex lesson)
-    val conf = s.sessionState.newHadoopConf()
-    val centPath = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
-    val fs = centPath.getFileSystem(conf)
+    val fs = indexFs(s, indexDir)
+    val centPath = s"$indexDir/centroids"
+    // (cells, dim) in ONE aggregate over the stored table (round-17
+    // job-count cut: the limit(1) dim probe and the count were two jobs
+    // over the same KB-sized scan); min(size) == the width, centroids
+    // are uniform by construction
+    def storedShape(): (Long, Long) = {
+      val cs = readTree(s, IndexTree.Centroids, Seq(centPath))
+        .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0))).head()
+      (cs.getLong(0), cs.getInt(1).toLong)
+    }
     // every per-call pin is owned by the scope until the commit: a
     // failure anywhere releases them once the dim/write forks stopped
     Overlap(s, 1, "semantic-dedup") { ov =>
@@ -5844,27 +5861,21 @@ object AnnOps {
         })
       }
       val (assignedRaw, release): (DataFrame, () => Unit) =
-        if (!fs.exists(centPath)) {
+        if (!fs.exists(hpath(centPath))) {
           val (members, cent, kmeansRelease) =
             kmeans(v, cells, iters, maxCentroidBytes)
           // the centroid write is an action, so `cent` is fully
           // consumed here — the thunk (freeing the table's shards past
           // one) is safe to run at the shared release point
-          cent.write.mode("overwrite").parquet(centPath.toString)
+          cent.write.mode("overwrite").parquet(centPath)
           (members, kmeansRelease)
         } else {
           // k and dim from the manifest's DECLARED shape (zero jobs,
           // round-17 job-count cut); an index whose manifest is not
           // written yet pays one aggregate over the stored table
-          val cent = s.read.parquet(centPath.toString)
-          val (k, dim) = manOpt.flatMap(man => for {
-            dk <- man.params.get("cells"); dd <- man.params.get("dim")
-          } yield (dk, dd)).getOrElse {
-            val centStats = cent
-              .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0)))
-              .head()
-            (centStats.getLong(0), centStats.getInt(1).toLong)
-          }
+          val cent = readTree(s, IndexTree.Centroids, Seq(centPath))
+          val (k, dim) = manOpt.fold(storedShape())(man =>
+            (man.param("cells", indexDir), man.param("dim", indexDir)))
           assignCells(v, cent, k, dim, maxCentroidBytes)
         }
       ov.onFailure(release())
@@ -5889,17 +5900,9 @@ object AnnOps {
       // centroid write and here self-heals on replay): the stored
       // centroid table is the authority for dim and cell count
       if (manOpt.isEmpty) {
-        // cells and dim in ONE aggregate over the stored table — the
-        // appendIvfPqIndex spelling (round-17 job-count cut: the
-        // limit(1) dim probe and the count were two jobs over the same
-        // KB-sized scan); min(size) == the width, centroids are uniform
-        // by construction
-        val centStats = s.read.parquet(centPath.toString)
-          .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0)))
-          .head()
-        writeIndexManifest(s, indexDir, "semantic", Map(
-          "dim" -> centStats.getInt(1).toLong,
-          "cells" -> centStats.getLong(0)))
+        val (k, dim) = storedShape()
+        writeIndexManifest(s, indexDir, "semantic",
+          Map("dim" -> dim, "cells" -> k))
       }
       // cell-partitioned commit (the ANN index's layout) through the
       // one commit door: the probe below — and every later batch's
@@ -5932,10 +5935,8 @@ object AnnOps {
         DedupOps.releaseLocalCheckpoint(own)
         emptyPairsFrame(s)
       } else {
-        val batchesPath = new org.apache.hadoop.fs.Path(s"$root/batches")
-        val hasOther = fs.listStatus(batchesPath).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("batch=") &&
-            st.getPath.getName != s"batch=$batchId")
+        val batches = s"$root/batches"
+        val hasOther = subdirs(fs, batches).exists(_ != s"batch=$batchId")
         // the probe touches only the frozen cells THIS batch lands in —
         // a bounded set (≤ the centroid count, own is pinned) — so the
         // accumulated-index scan partition-prunes to those cells: probe
@@ -5945,14 +5946,13 @@ object AnnOps {
         // deleted doc must neither pair nor serve as a delegation root.
         val ownCells = ownCellsPre
         val oldRows: Option[DataFrame] = if (!hasOther) None
-          else Some(minusTombstones(
-              cellPrune(s.read.parquet(batchesPath.toString), ownCells),
+          else Some(readTree(s, IndexTree.SemanticBatches,
+              Seq(batches), Some(ownCells),
               loadTombstones(s, indexDir))
             // exclude own (half-committed) batch on replay, probe the
             // committed rest + this run's own pinned rows
             .filter(col("batch") =!= lit(batchId))
-            .select(col("id"), col("cell").cast("long").as("cell"),
-              col("c"), col("nrm")))
+            .select(col("id"), col("cell"), col("c"), col("nrm")))
         val ownRows = own.select(col("id"), col("cell"), col("c"), col("nrm"))
         val all = oldRows.map(_.unionByName(ownRows)).getOrElse(ownRows)
         // cosine computed BEFORE the a/b canonicalization (it is exactly
@@ -6093,19 +6093,18 @@ object AnnOps {
     // one observability tool, BOTH frozen-centroid families (the s19
     // contract) — but still manifest-gated: a minhash dir or a plain
     // parquet dir fails at the door, not in a scan
-    requireFamily(s, indexDir, "semanticIndexDriftAudit",
+    val man = requireFamily(s, indexDir, "semanticIndexDriftAudit",
       "semantic", "ivfpq")
     val root = genRoot(indexDir, currentGen(s, indexDir))
-    val cent = s.read.parquet(s"$indexDir/centroids")
+    val cent = readTree(s, IndexTree.Centroids, Seq(s"$indexDir/centroids"))
       .select(col("cell"), col("cc"), col("cnrmr"))
     // tombstoned ids excluded: the audit must price the index the
     // probes/serves actually read ([[deleteFromIndex]]'s contract —
     // the audit cannot disagree with the index it audits); a batch
     // whose every row is deleted disappears from the report
-    val rows = minusTombstones(s.read.parquet(s"$root/batches"),
-        loadTombstones(s, indexDir))
-      .select(col("batch").cast("long").as("batch"), col("id"),
-        col("cell"), col("c"), col("nrm"))
+    val rows = readTree(s, IndexTree.batchesOf(man.family),
+        Seq(s"$root/batches"), tombstones = loadTombstones(s, indexDir))
+      .select(col("batch"), col("id"), col("cell"), col("c"), col("nrm"))
     // zero-norm / null vectors have no direction, hence no angular
     // distance — their 0/0 would become NaN → NULL under the decimal
     // cast, silently deflating the mean (sum skips, count doesn't —

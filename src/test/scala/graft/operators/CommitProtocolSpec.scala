@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `batches/batch=`, `codes/batch=` or `tombstones/batch=` path, or a
   * direct create of `_index.json`, bypasses the temp-then-publish step:
   * a failed replay would then clear what an earlier run committed.
+  * Every index tree is read back through `AnnOps.readTree`, under the
+  * schema declared for it.
   */
 class CommitProtocolSpec extends AnyFunSuite {
 
@@ -53,5 +55,26 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "durable-index writes that bypass AnnOps.commitBatch / " +
         s"overwriteViaTemp: ${offenders.mkString(", ")}")
+  }
+
+  /** `.read` followed by builder calls (`.schema(..)`, `.format(..)`,
+    * ...) and a `.parquet(` / `.load(` source. */
+  private val ReadSource = ("""\.read\b(?:\s*\.\s*\w+\s*\(""" +
+    """(?:[^()]|\([^()]*\))*\))*\s*\.\s*(?:parquet|load)\s*\(""").r
+
+  test("every parquet read in graft.operators goes through " +
+      "AnnOps.readTree, the one declared-schema index-tree reader") {
+    val reads = sources
+      .filter(_._1.contains("graft/operators/"))
+      .flatMap { case (path, src) =>
+        ReadSource.findAllMatchIn(src).map(m =>
+          (s"$path:${lineOf(src, m.start)}", m.matched))
+      }
+    val (reader, others) =
+      reads.partition(_._2.contains(".schema(tree.schema)"))
+    assert(others.isEmpty,
+      "parquet reads outside AnnOps.readTree (each infers its schema " +
+        s"with a Spark job): ${others.map(_._1).mkString(", ")}")
+    assert(reader.size == 1, s"readTree's own read not found once: $reader")
   }
 }

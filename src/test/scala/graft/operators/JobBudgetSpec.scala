@@ -327,15 +327,15 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val KmeansRoundJobs = 1
   private val ShardedKmeansJobs = 7
   private val ShardedKmeansRoundJobs = 1
-  private val AppendJobs = 14
-  private val QueryJobs = 26
-  private val IncrementalSemanticJobs = 28
+  private val AppendJobs = 12
+  private val QueryJobs = 22
+  private val IncrementalSemanticJobs = 25
   private val DeleteJobs = 2
-  private val CompactJobs = 9
-  private val ExpireJobs = 9
-  private val MaintainJobs = 9
+  private val CompactJobs = 6
+  private val ExpireJobs = 6
+  private val MaintainJobs = 6
   private val MinhashCommitJobs = 1
-  private val IncrementalMinhashJobs = 13
-  private val DriftAuditJobs = 13
-  private val S26ChainJobs = 76
+  private val IncrementalMinhashJobs = 11
+  private val DriftAuditJobs = 10
+  private val S26ChainJobs = 71
 }
