@@ -1,11 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.StreamStore
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured-Streaming plumbing for the engine's event-time operators.
   *
@@ -48,30 +49,13 @@ object StreamingOps {
     val streamDir =
       if (Files.isDirectory(src)) src
       else {
-        val dir = Files.createTempDirectory("graft-events-stream-")
+        val dir = StreamStore.scratchRoot("graft-events-stream-")
         Files.createSymbolicLink(dir.resolve("events.parquet"), src)
         dir
       }
     Tables.normalizeTs(
         spark.readStream.schema(raw.schema).parquet(streamDir.toString))
       .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
-  }
-
-  /** Drain a streaming DataFrame into an in-memory table and return it.
-    * `AvailableNow` processes everything currently available — including
-    * the final empty batch that advances the watermark and flushes closed
-    * windows — then stops.
-    */
-  /** Checkpoint root: tmpfs when the host has it (state-store deltas,
-    * offset/commit WALs and their fsyncs are the per-batch fixed cost of
-    * every stateful query; on a cluster this is the DFS checkpoint dir,
-    * locally RAM-backed is the honest equivalent of a fast DFS).
-    */
-  private val cpRoot: Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = if (Files.isWritable(shm)) shm
-               else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    Files.createDirectories(base.resolve("graft-cp"))
   }
 
   private val rocksDbLock = new Object
@@ -103,35 +87,19 @@ object StreamingOps {
       }
     }
 
+  /** Drain a streaming DataFrame into an in-memory table and return it.
+    * `AvailableNow` processes everything currently available — including
+    * the final empty batch that advances the watermark and flushes closed
+    * windows — then stops.
+    */
   def drain(
       spark: SparkSession,
       stream: DataFrame,
       name: String,
       outputMode: String): DataFrame = {
     spark.catalog.dropTempView(name) // re-runs in the same session
-    // Stateful plans can't use AQE, so every microbatch runs the full
-    // spark.sql.shuffle.partitions as state-store tasks across every
-    // stage — at local bench scale that is pure per-task scheduling +
-    // store-commit overhead (32 partitions x ~6 stages x 3 batches).
-    // Size state partitioning to the streaming workload instead; on a
-    // cluster this is exactly the knob you set per-job (state partition
-    // count is fixed at first checkpoint, so it is ALWAYS an explicit
-    // deployment decision, never left to a batch-oriented default).
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation",
-          Files.createTempDirectory(cpRoot, name).toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set(key, prev)
+    runToEnd(spark, name, stream.writeStream.format("memory")
+      .queryName(name).outputMode(outputMode))
     spark.table(name)
   }
 
@@ -143,19 +111,36 @@ object StreamingOps {
   def drainForeachBatch(
       spark: SparkSession,
       stream: DataFrame,
-      name: String)(f: (DataFrame, Long) => Unit): Unit = {
+      name: String)(f: (DataFrame, Long) => Unit): Unit =
+    runToEnd(spark, name, stream.writeStream.foreachBatch(f))
+
+  /** Runs `writer` under `AvailableNow` until it stops.
+    *
+    * Stateful plans can't use AQE, so every microbatch runs the full
+    * spark.sql.shuffle.partitions as state-store tasks across every
+    * stage — at local bench scale that is pure per-task scheduling +
+    * store-commit overhead (32 partitions x ~6 stages x 3 batches).
+    * Size state partitioning to the streaming workload instead; on a
+    * cluster this is exactly the knob you set per-job (state partition
+    * count is fixed at first checkpoint, so it is ALWAYS an explicit
+    * deployment decision, never left to a batch-oriented default).
+    *
+    * The checkpoint is a fresh scratch root (tmpfs unless
+    * `GRAFT_SCRATCH_DIR` says otherwise: state-store deltas, offset/commit
+    * WALs and their fsyncs are the per-batch fixed cost of every stateful
+    * query; on a cluster this is the DFS checkpoint dir, locally
+    * RAM-backed is the honest equivalent of a fast DFS), so
+    * `Verify.runAll` deletes it with the rest of its scratch.
+    */
+  private def runToEnd(spark: SparkSession, name: String,
+      writer: DataStreamWriter[Row]): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key,
       sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
-      val q = stream.writeStream
-        .foreachBatch(f)
-        .option("checkpointLocation",
-          Files.createTempDirectory(cpRoot, name).toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set(key, prev)
+    try writer.option("checkpointLocation",
+        StreamStore.scratchRoot(s"graft-cp-$name-").toString)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally spark.conf.set(key, prev)
   }
 }

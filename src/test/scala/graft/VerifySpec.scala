@@ -76,6 +76,16 @@ class VerifySpec extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.Paths.get(s"$out/errors.json")) == "{}")
   }
 
+  /** `name`'s query, recording into `made` every scratch dir it left
+    * before `Verify.runAll`'s cleanup. */
+  private def spied(made: scala.collection.mutable.Set[Path])(name: String)
+      : (String, (SparkSession, String) => DataFrame) =
+    name -> { (s: SparkSession, d: String) =>
+      val df = SparkEntry.queries(name)(s, d)
+      made ++= StreamStore.scratchRoots
+      df
+    }
+
   test("runAll deletes the scratch dirs its queries made, and only those") {
     val sfDir = "/root/testdata/sf0.001"
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir is missing")
@@ -89,15 +99,10 @@ class VerifySpec extends AnyFunSuite with BeforeAndAfterAll {
       val made = scala.collection.mutable.Set.empty[Path]
       // r01 reads the shared events store, r03 writes private ones; the
       // spy records every scratch dir each query left before the cleanup
-      def spied(name: String): (String, (SparkSession, String) => DataFrame) =
-        name -> { (s: SparkSession, d: String) =>
-          val df = SparkEntry.queries(name)(s, d)
-          made ++= StreamStore.scratchRoots
-          df
-        }
+      val spy = spied(made) _
       val out = Files.createTempDirectory("verify-spec-").toString
       val failed = Verify.runAll(spark,
-        Seq(spied("r01_stream_write_read"), spied("r03_stream_ingest")),
+        Seq(spy("r01_stream_write_read"), spy("r03_stream_ingest")),
         sfDir, out)
       assert(failed.isEmpty, s"queries failed: $failed")
       assert(new java.io.File(s"$out/r03_stream_ingest").isDirectory)
@@ -110,9 +115,34 @@ class VerifySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Files.isDirectory(foreign), "deleted a dir it did not make")
       // a second run re-creates the shared store the first one deleted
       val again = Verify.runAll(spark,
-        Seq(spied("r01_stream_write_read")), sfDir, out)
+        Seq(spy("r01_stream_write_read")), sfDir, out)
       assert(again.isEmpty, s"r01 failed after the cleanup: $again")
       assert(graftDirs == before)
     } finally Files.deleteIfExists(foreign)
+  }
+
+  test("runAll deletes a streaming query's checkpoint and source dirs") {
+    val sfDir = "/root/testdata/sf0.001"
+    assume(new java.io.File(sfDir).isDirectory, s"$sfDir is missing")
+    val shmCp = java.nio.file.Paths.get("/dev/shm/graft-cp")
+    def cpEntries: Set[Path] =
+      if (!Files.isDirectory(shmCp)) Set.empty
+      else Files.list(shmCp).iterator().asScala.toSet
+    val cpBefore = cpEntries
+    val rootsBefore = StreamStore.scratchRoots
+    val made = scala.collection.mutable.Set.empty[Path]
+    val out = Files.createTempDirectory("verify-spec-").toString
+    val failed = Verify.runAll(spark,
+      Seq(spied(made)("st01_tumbling_window")), sfDir, out)
+    assert(failed.isEmpty, s"st01 failed: $failed")
+    val ran = made.toSet -- rootsBefore
+    Seq("graft-cp-st01", "graft-events-stream-").foreach { tag =>
+      assert(ran.exists(_.getFileName.toString.startsWith(tag)),
+        s"st01 made no $tag* scratch dir: $ran")
+    }
+    assert(ran.forall(d => !Files.exists(d)),
+      s"left behind: ${ran.filter(d => Files.exists(d))}")
+    assert(cpEntries == cpBefore,
+      s"new /dev/shm/graft-cp entries: ${cpEntries -- cpBefore}")
   }
 }
