@@ -20,7 +20,11 @@ import scala.collection.mutable
   * frame (outside this tool, `Pins` and `Overlap`) of the SQL
   * execution that submitted it, or of the job's own stages when it
   * runs outside SQL; per query the tool prints jobs and job seconds
-  * per site.
+  * per site. After each query a marker job runs in its own job group,
+  * and the query's jobs are read only once the listener has seen the
+  * marker start: the listener bus delivers events in order, so every
+  * event of the query's jobs has arrived by then and none is booked on
+  * the next query.
   *
   * Usage: runMain graft.tools.JobProfile [sfDir] [namePrefix...]
   */
@@ -70,6 +74,8 @@ object JobProfile {
     // its own job from a Spark thread, so only the execution that
     // submitted it knows which operator asked for it
     val execSite = mutable.HashMap.empty[Long, String]
+    val markerGroup = "graft-profile-marker"
+    var markerSeen = false
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart => jobs.synchronized {
@@ -79,13 +85,18 @@ object JobProfile {
       }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.synchronized {
-          val j = jobs.getOrElseUpdate(e.jobId, Job())
-          j.start = e.time
-          j.site = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-            .flatMap(id => execSite.get(id.toLong))
-            .getOrElse(graftSite(e.stageInfos.map(_.details).mkString("\n")))
-          e.stageIds.foreach(stageJob(_) = e.jobId)
+          if (Option(e.properties).exists(p =>
+              p.getProperty("spark.jobGroup.id") == markerGroup))
+            markerSeen = true
+          else {
+            val j = jobs.getOrElseUpdate(e.jobId, Job())
+            j.start = e.time
+            j.site = Option(e.properties)
+              .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+              .flatMap(id => execSite.get(id.toLong))
+              .getOrElse(graftSite(e.stageInfos.map(_.details).mkString("\n")))
+            e.stageIds.foreach(stageJob(_) = e.jobId)
+          }
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.synchronized {
@@ -98,6 +109,17 @@ object JobProfile {
         }
     }
     spark.sparkContext.addSparkListener(listener)
+    // runs the marker job and waits until the listener has seen it
+    def drainListener(): Unit = {
+      val sc = spark.sparkContext
+      jobs.synchronized { markerSeen = false }
+      sc.setJobGroup(markerGroup, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.synchronized(markerSeen) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      require(jobs.synchronized(markerSeen), "marker job never arrived")
+    }
 
     // warm-up identical to Bench so the first measured query doesn't
     // carry JVM/codegen startup
@@ -113,6 +135,7 @@ object JobProfile {
           .groupBy(col("event_type")).agg(count(lit(1)).as("n")),
         "warmup_stream", "complete").count()
     } catch { case _: Throwable => }
+    drainListener()
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => prefixes.exists(kv._1.startsWith))
@@ -125,6 +148,7 @@ object JobProfile {
         println(s"PROFILE $name FAILED: ${e.getMessage.take(200)}")
       }
       val wall = (System.nanoTime() - t0) / 1e9
+      drainListener()
       val snap = jobs.synchronized(jobs.toSeq.sortBy(_._1))
       val done = snap.filter(j => j._2.end > 0 && j._2.start > 0)
       def secs(js: Seq[(Int, Job)]) =
