@@ -3968,11 +3968,6 @@ object AnnOps {
       // recoverIndex — an uncommitted dir at our target is garbage
       // (nobody can have committed `target` while we hold the lock)
       if (fs.exists(hpath(newRoot))) fs.delete(hpath(newRoot), true)
-      // retention: a partition filter, so expired batches are pruned at
-      // the scan — the rewrite reads only the retained window
-      def prep(tree: IndexTree): DataFrame =
-        readTree(s, tree, Seq(s"$root/${tree.name}"), tombstones = ts)
-          .filter(col("batch") >= minKeepBatchId)
       // SCALE-ADAPTIVE rewrite layout (round-17 optimization, guide
       // §2.2/§6.2): the generation rewrite used to shuffle into the
       // session shuffle-partition count regardless of how big the
@@ -3990,7 +3985,12 @@ object AnnOps {
       // families key on id and nest a cell level so serves/probes
       // partition-prune.
       def writeGen(tree: IndexTree): Unit = {
-        val rows = prep(tree)
+        val rows =
+          readTree(s, tree, Seq(s"$root/${tree.name}"), tombstones = ts)
+            // retention: a partition filter, so expired batches are
+            // pruned at the scan — the rewrite reads only the retained
+            // window
+            .filter(col("batch") >= minKeepBatchId)
         rows.repartition(Parts.of(rows, partitions),
             tree.partitions.map(col): _*)
           .write.partitionBy(tree.partitions: _*)
@@ -4011,7 +4011,7 @@ object AnnOps {
       // nothing left should be dropped, not maintained empty). The
       // check reads the WRITTEN tree (an empty partitionBy write
       // leaves no partition dirs) instead of paying a separate
-      // pre-write evaluation of the prep plan (round-17 job-count
+      // pre-write evaluation of the rewrite plan (round-17 job-count
       // cut); the catch below discards the new generation either way.
       require(subdirs(fs, s"$newRoot/batches").nonEmpty,
         "compactIndex: tombstones/retention cover every stored row " +
