@@ -148,14 +148,14 @@ object PyBridge {
   def buildIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
       keyCol: String, indexDir: String, cells: Int, iters: Int,
       pqM: Int, pqKs: Int, pqIters: Int): Unit =
-    graft.operators.AnnOps.buildIvfPqIndex(df, idCol, vecCol, keyCol,
+    graft.index.IvfPqIndex.buildIvfPqIndex(df, idCol, vecCol, keyCol,
       indexDir, cells, iters, pqM, pqKs, pqIters)
 
   /** Append a committed batch to a built index (s22). `batchId` must
     * be fresh and nonzero (0 is the build's). */
   def appendIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
       keyCol: String, indexDir: String, batchId: Long): Unit =
-    graft.operators.AnnOps.appendIvfPqIndex(batch, idCol, vecCol,
+    graft.index.IvfPqIndex.appendIvfPqIndex(batch, idCol, vecCol,
       keyCol, indexDir, batchId)
 
   /** Serve a query batch against the stored index (filtered ANN
@@ -165,22 +165,22 @@ object PyBridge {
   def queryIvfPqIndex(queries: DataFrame, idCol: String, vecCol: String,
       keyCol: String, indexDir: String, k: Int, nprobe: Int,
       rerankDepth: Int): DataFrame =
-    graft.operators.AnnOps.queryIvfPqIndex(queries, idCol, vecCol,
+    graft.index.IvfPqIndex.queryIvfPqIndex(queries, idCol, vecCol,
       keyCol, indexDir, k, nprobe, rerankDepth)
 
   /** Idempotent tombstone batch (s25): drop rows by id from every
     * later serve; physically reclaimed by the next maintenance pass. */
   def deleteFromIndex(ids: DataFrame, idCol: String, indexDir: String,
       batchId: Long): Unit =
-    graft.operators.AnnOps.deleteFromIndex(ids, idCol, indexDir, batchId)
+    graft.index.IndexStore.deleteFromIndex(ids, idCol, indexDir, batchId)
 
   /** One-pass maintenance (s28): expire batches below
     * `minKeepBatchId` (Long.MinValue = keep all) + compact + optional
     * vacuum, in ONE lock cycle and ONE generation rewrite. */
   def maintainIndex(spark: SparkSession, indexDir: String,
       minKeepBatchId: Long, vacuum: Boolean): Unit =
-    graft.operators.AnnOps.maintainIndex(spark, indexDir,
-      graft.operators.AnnOps.IndexMaintenancePolicy(
+    graft.index.IndexStore.maintainIndex(spark, indexDir,
+      graft.index.IndexStore.IndexMaintenancePolicy(
         minKeepBatchId = minKeepBatchId, vacuum = vacuum))
 
   /** Inline filtered ANN top-k with PQ-ADC candidate scoring from

@@ -332,7 +332,7 @@ object Dedup {
   /** Commits the signatures of `docs` as batch `id` of the durable
     * minhash index at `idxDir`. */
   private def seedMinhash(docs: DataFrame, idxDir: String, id: Long): Unit =
-    graft.operators.DedupOps.commitMinhashIndexBatch(
+    graft.index.MinhashIndex.commitMinhashIndexBatch(
       minhashSigs(docs), idxDir, id, 5, BANDS, ROWS)
 
   /** Oracle tail of st10/d17/d18: the `pairs` rows touching a new
@@ -638,7 +638,7 @@ object Dedup {
             p
           }
         // The accumulated index is DURABLE (one parquet subdir per
-        // committed batch — DedupOps.incrementalMinhashDedupDurable):
+        // committed batch — MinhashIndex.incrementalMinhashDedupDurable):
         // a restart between microbatches reloads exactly the committed
         // batches instead of silently re-admitting yesterday's
         // duplicates. Batch -1 seeds the dir with the old corpus via a
@@ -653,14 +653,14 @@ object Dedup {
         // family too): link the base index in as generation 0's
         // batch=-1, declare the banding manifest, flip the marker
         val gen0 = java.nio.file.Paths.get(
-          graft.operators.AnnOps.genRoot(idxDirS, 0L), "batches")
+          graft.index.IndexStore.genRoot(idxDirS, 0L), "batches")
         java.nio.file.Files.createDirectories(gen0)
         java.nio.file.Files.createSymbolicLink(
           gen0.resolve("batch=-1"), java.nio.file.Paths.get(basePath))
-        graft.operators.AnnOps.writeIndexManifest(s, idxDirS,
+        graft.index.IndexStore.writeIndexManifest(s, idxDirS,
           "minhash", Map("shingleK" -> 5L, "bands" -> BANDS.toLong,
             "rows" -> ROWS.toLong))
-        graft.operators.AnnOps.commitGen(s, idxDirS, 0L)
+        graft.index.IndexStore.commitGen(s, idxDirS, 0L)
         val newDocs = docsAll.filter(docPct >= 80)
           .select($"doc_id", $"text")
         val newDir = graft.core.StreamStore
@@ -677,7 +677,7 @@ object Dedup {
             // staged → pin) is the batch frame's only consumer besides
             // the isEmpty probe — the extra pin was one whole
             // materialization job per trigger (round-17 job-count cut)
-            acc += graft.operators.DedupOps.incrementalMinhashDedupDurable(
+            acc += graft.index.MinhashIndex.incrementalMinhashDedupDurable(
               batch, "doc_id", "text", idxDirS, bid,
               5, BANDS, ROWS, JACCARD_T)
           }
@@ -720,10 +720,10 @@ object Dedup {
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-d17-").toString
         seedMinhash(oldDocs, idxDir, 0L)
-        graft.operators.AnnOps.deleteFromIndex(
+        graft.index.IndexStore.deleteFromIndex(
           oldDocs.filter($"doc_id" % 10 === 0).select($"doc_id"),
           "doc_id", idxDir, batchId = 0L)
-        graft.operators.DedupOps.incrementalMinhashDedupDurable(
+        graft.index.MinhashIndex.incrementalMinhashDedupDurable(
           docsAll.filter(docPct >= 80), "doc_id", "text", idxDir, 1L,
           5, BANDS, ROWS, JACCARD_T)
       },
@@ -760,9 +760,9 @@ object Dedup {
           .scratchRoot("graft-d18-").toString
         seedMinhash(docsAll.filter(docPct < 50), idxDir, 0L)
         seedMinhash(docsAll.filter(docPct >= 50 && docPct < 80), idxDir, 1L)
-        graft.operators.AnnOps.expireBatches(s, idxDir,
+        graft.index.IndexStore.expireBatches(s, idxDir,
           minKeepBatchId = 1L)
-        graft.operators.DedupOps.incrementalMinhashDedupDurable(
+        graft.index.MinhashIndex.incrementalMinhashDedupDurable(
           docsAll.filter(docPct >= 80), "doc_id", "text", idxDir, 2L,
           5, BANDS, ROWS, JACCARD_T)
       },

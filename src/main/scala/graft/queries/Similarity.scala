@@ -589,7 +589,7 @@ object Similarity {
     * `idxDir`: threshold 0.35, K cells frozen after 2 Lloyd rounds. */
   private def semanticInc(batch: DataFrame, idxDir: String, id: Long,
       probe: Boolean = true): DataFrame =
-    graft.operators.AnnOps.incrementalSemanticDedupDurable(
+    graft.index.SemanticIndex.incrementalSemanticDedupDurable(
       batch, "vec_id", "embedding", idxDir, id,
       threshold = 0.35, cells = K, iters = 2, probe = probe)
 
@@ -1393,7 +1393,7 @@ object Similarity {
         // touching >= 1 new doc, independent of batching — which is
         // what the batch-SQL oracle (train on old, assign all, filter
         // to touching-new) checks. The query IS the
-        // AnnOps.incrementalSemanticDedupDurable facade composed over
+        // SemanticIndex.incrementalSemanticDedupDurable facade composed over
         // three batches; replay/restart idempotence is pinned in
         // PipelineOpsSpec.
         val Seq(oldEmb, newEven, newOdd) =
@@ -1556,7 +1556,7 @@ object Similarity {
           probe = false)
         semanticInc(drifted.filter($"vec_id" % 2 === 1), idxDir, 2L,
           probe = false)
-        graft.operators.AnnOps.semanticIndexDriftAudit(s, idxDir)
+        graft.index.SemanticIndex.semanticIndexDriftAudit(s, idxDir)
       },
       Some(sqlIndexDriftAudit)),
 
@@ -1689,7 +1689,7 @@ object Similarity {
         // force s22 pins — the equivalence-by-shared-oracle gate:
         // compaction is invisible to results or the hash moves.
         ivfPqLifecycle(s, dir, "s24")(oldThenNewByParity) { (_, idxDir) =>
-          graft.operators.AnnOps.compactIndex(s, idxDir)
+          graft.index.IndexStore.compactIndex(s, idxDir)
         }
       },
       Some(sqlFilteredBruteForceTop3)),
@@ -1709,7 +1709,7 @@ object Similarity {
         ivfPqLifecycle(s, dir, "s25") { emb =>
           Seq(emb.filter(vecPct < 80), emb.filter(vecPct >= 80))
         } { (emb, idxDir) =>
-          graft.operators.AnnOps.deleteFromIndex(
+          graft.index.IndexStore.deleteFromIndex(
             emb.filter($"vec_id" >= NQUERIES && $"vec_id" % 10 === 7)
               .select($"vec_id"), "vec_id", idxDir, batchId = 1L)
         }
@@ -1732,7 +1732,7 @@ object Similarity {
           .scratchRoot("graft-d16-").toString
         semanticInc(oldEmb, idxDir, 0L, probe = false)
         val out1 = semanticInc(newEven, idxDir, 1L)
-        graft.operators.AnnOps.compactIndex(s, idxDir)
+        graft.index.IndexStore.compactIndex(s, idxDir)
         out1.unionByName(semanticInc(newOdd, idxDir, 2L))
       },
       Some(sqlIncrementalSemantic)),
@@ -1755,7 +1755,7 @@ object Similarity {
         // query exists to exercise.
         ivfPqStreamLifecycle(s, dir, "st18") { (s2, idxDir, bid) =>
           if (bid == 1L)
-            graft.operators.AnnOps.compactIndex(s2, idxDir)
+            graft.index.IndexStore.compactIndex(s2, idxDir)
         }
       },
       Some(sqlFilteredBruteForceTop3)),
@@ -1808,7 +1808,7 @@ object Similarity {
           fBuild.join()
           l
         }
-        graft.operators.AnnOps.deleteFromIndex(
+        graft.index.IndexStore.deleteFromIndex(
           losers, "vec_id", idxDir, batchId = 1L)
         serveAtCeiling(emb, idxDir)
       },
@@ -1891,7 +1891,7 @@ object Similarity {
         // clustering-independent), so an under-expired straggler row
         // or an over-expired survivor is a hash mismatch.
         ivfPqLifecycle(s, dir, "s27")(retentionWindow) { (_, idxDir) =>
-          graft.operators.AnnOps.expireBatches(s, idxDir,
+          graft.index.IndexStore.expireBatches(s, idxDir,
             minKeepBatchId = 1L)
         }
       },
@@ -1904,15 +1904,15 @@ object Similarity {
       (s, dir) => {
         // the deployment entrypoint: expire + compact + vacuum as ONE
         // lock cycle and ONE generation rewrite
-        // (AnnOps.maintainIndex). The fixture is s27's exactly, and
+        // (IndexStore.maintainIndex). The fixture is s27's exactly, and
         // the oracle IS s27's SQL — the shared-oracle discipline: the
         // composed pass must serve byte-identically to the sequential
         // expireBatches spelling, or this hash mismatches. The vacuum
         // face runs too, so the serve below also proves the grace-
         // waived tree (only the fresh generation on disk) is complete.
         ivfPqLifecycle(s, dir, "s28")(retentionWindow) { (_, idxDir) =>
-          graft.operators.AnnOps.maintainIndex(s, idxDir,
-            graft.operators.AnnOps.IndexMaintenancePolicy(
+          graft.index.IndexStore.maintainIndex(s, idxDir,
+            graft.index.IndexStore.IndexMaintenancePolicy(
               minKeepBatchId = 1L, vacuum = true))
         }
       },
@@ -1938,7 +1938,7 @@ object Similarity {
         // append stream.
         ivfPqStreamLifecycle(s, dir, "st19") { (s2, idxDir, bid) =>
           if (bid == 1L)
-            graft.operators.AnnOps.expireBatches(s2, idxDir,
+            graft.index.IndexStore.expireBatches(s2, idxDir,
               minKeepBatchId = 1L)
         }
       },
@@ -1949,7 +1949,7 @@ object Similarity {
   /** Shared scaffolding of the st17/st18 streaming ANN lifecycle
     * (ONE spelling so the two queries cannot drift — REVIEW 3): build
     * on the 80% md5 bucket, stream the 20% through 3 real
-    * microbatches (one [[graft.operators.AnnOps.appendIvfPqIndex]]
+    * microbatches (one [[graft.index.IvfPqIndex.appendIvfPqIndex]]
     * per non-empty trigger), run `afterBatch(spark, idxDir, bid)`
     * UNCONDITIONALLY after every trigger — outside the isEmpty guard,
     * so st18's mid-stream compaction fires even if a repartition
@@ -1986,7 +1986,7 @@ object Similarity {
           // limit-1 probe — the extra pin was one whole
           // materialization job per trigger for zero reuse
           // (round-17 job-count cut).
-          graft.operators.AnnOps.appendIvfPqIndex(
+          graft.index.IvfPqIndex.appendIvfPqIndex(
             batch, "vec_id", "embedding", "source", idxDir, bid + 1L)
         }
         afterBatch(s, idxDir, bid)
@@ -2007,7 +2007,7 @@ object Similarity {
     val build +: appends = batches(emb)
     buildIvfPq(build, idxDir)
     appends.zipWithIndex.foreach { case (batch, i) =>
-      graft.operators.AnnOps.appendIvfPqIndex(batch, "vec_id",
+      graft.index.IvfPqIndex.appendIvfPqIndex(batch, "vec_id",
         "embedding", "source", idxDir, batchId = i + 1L)
     }
     maintain(emb, idxDir)
@@ -2017,7 +2017,7 @@ object Similarity {
   /** Every lifecycle query's index: K cells and 4 x 4 PQ codes, each
     * trained in 2 Lloyd rounds. */
   private def buildIvfPq(emb: DataFrame, idxDir: String): Unit =
-    graft.operators.AnnOps.buildIvfPqIndex(
+    graft.index.IvfPqIndex.buildIvfPqIndex(
       emb, "vec_id", "embedding", "source", idxDir,
       cells = K, iters = 2, pqM = 4, pqKs = 4, pqIters = 2)
 
@@ -2025,7 +2025,7 @@ object Similarity {
     * construction ceiling (nprobe = cells, full re-rank), then releases
     * the staging: the serve's output is pinned and independent of it. */
   private def serveAtCeiling(emb: DataFrame, idxDir: String): DataFrame = {
-    val out = graft.operators.AnnOps.queryIvfPqIndex(
+    val out = graft.index.IvfPqIndex.queryIvfPqIndex(
       emb.filter(col("vec_id") < NQUERIES), "vec_id", "embedding",
       "source", idxDir, k = 3, nprobe = K,
       rerankDepth = Int.MaxValue)

@@ -534,7 +534,7 @@ class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import ss.implicits._
     val idx = java.nio.file.Files
       .createTempDirectory("graft-prune-gate-").toString
-    graft.operators.AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp",
+    graft.index.IvfPqIndex.buildIvfPqIndex(df, "vid", "emb", "grp",
       idx, cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
       partitions = 4)
     def indexScans(plans: Seq[SparkPlan], tree: String) =
@@ -542,7 +542,7 @@ class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plans = capturePlans(p =>
       indexScans(p, "batches").nonEmpty &&
         indexScans(p, "codes").nonEmpty) {
-      graft.operators.AnnOps.queryIvfPqIndex(
+      graft.index.IvfPqIndex.queryIvfPqIndex(
         df.filter($"vid" < 8), "vid", "emb", "grp", idx, k = 3,
         nprobe = 1, rerankDepth = 6, partitions = 4)
     }
@@ -573,13 +573,13 @@ class PlanInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF("vid", "emb")
     val idx = java.nio.file.Files
       .createTempDirectory("graft-probe-gate-").toString
-    graft.operators.AnnOps.incrementalSemanticDedupDurable(
+    graft.index.SemanticIndex.incrementalSemanticDedupDurable(
       mk(0 until 30), "vid", "emb", idx, 0L, threshold = 0.8,
       cells = 3, iters = 2, probe = false)
     def indexScans(plans: Seq[SparkPlan]) =
       graft.plans.PlanWalk.indexScans(plans, idx, Seq("batches"))
     val plans = capturePlans(p => indexScans(p).nonEmpty) {
-      graft.operators.AnnOps.incrementalSemanticDedupDurable(
+      graft.index.SemanticIndex.incrementalSemanticDedupDurable(
         mk(30 until 40), "vid", "emb", idx, 1L, threshold = 0.8,
         cells = 3, iters = 2)
     }

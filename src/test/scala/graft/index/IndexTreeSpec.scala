@@ -1,4 +1,4 @@
-package graft.operators
+package graft.index
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -11,7 +11,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The index trees are read under their declared schemas, which turn a
-  * missing column into NULLs; `AnnOps.readTree` reads one footer and
+  * missing column into NULLs; `IndexStore.readTree` reads one footer and
   * fails instead. A stored tree that no longer matches its declaration
   * must stop the next append and the next serve at the door, before
   * anything is written.
@@ -52,9 +52,9 @@ class IndexTreeSpec extends AnyFunSuite with BeforeAndAfterAll {
       : Unit = {
     val tmp = s"$idx/.centroids-edit"
     edit(spark.read.parquet(s"$idx/centroids")).write.parquet(tmp)
-    val fs = AnnOps.indexFs(spark, idx)
-    fs.delete(AnnOps.hpath(s"$idx/centroids"), true)
-    assert(fs.rename(AnnOps.hpath(tmp), AnnOps.hpath(s"$idx/centroids")))
+    val fs = IndexStore.indexFs(spark, idx)
+    fs.delete(IndexStore.hpath(s"$idx/centroids"), true)
+    assert(fs.rename(IndexStore.hpath(tmp), IndexStore.hpath(s"$idx/centroids")))
   }
 
   private def assertRefused(what: String)(op: => Unit): Unit = {
@@ -73,17 +73,17 @@ class IndexTreeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val s = spark
       import s.implicits._
       val idx = Files.createTempDirectory("graft-index-tree-").toString
-      AnnOps.buildIvfPqIndex(df.filter($"vid" < 64), "vid", "emb", "grp",
+      IvfPqIndex.buildIvfPqIndex(df.filter($"vid" < 64), "vid", "emb", "grp",
         idx, cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
         partitions = 4)
       rewriteCentroids(idx)(edit)
       val before = committed(idx)
       assertRefused("append") {
-        AnnOps.appendIvfPqIndex(df.filter($"vid" >= 64), "vid", "emb",
+        IvfPqIndex.appendIvfPqIndex(df.filter($"vid" >= 64), "vid", "emb",
           "grp", idx, 1L, partitions = 4)
       }
       assertRefused("serve") {
-        AnnOps.queryIvfPqIndex(df.filter($"vid" < 8), "vid", "emb", "grp",
+        IvfPqIndex.queryIvfPqIndex(df.filter($"vid" < 8), "vid", "emb", "grp",
           idx, k = 3, nprobe = 2, partitions = 4)
       }
       assert(committed(idx) == before)

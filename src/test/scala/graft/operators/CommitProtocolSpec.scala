@@ -6,13 +6,13 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the durable-index commit protocol single: every batch tree
-  * and the manifest are published through `AnnOps.overwriteViaTemp`
-  * (batches through `AnnOps.commitBatch`), whose callbacks write only
+  * and the manifest are published through `IndexStore.overwriteViaTemp`
+  * (batches through `IndexStore.commitBatch`), whose callbacks write only
   * to the temp paths they are handed. A direct parquet write to a
   * `batches/batch=`, `codes/batch=` or `tombstones/batch=` path, or a
   * direct create of `_index.json`, bypasses the temp-then-publish step:
   * a failed replay would then clear what an earlier run committed.
-  * Every index tree is read back through `AnnOps.readTree`, under the
+  * Every index tree is read back through `IndexStore.readTree`, under the
   * schema declared for it.
   */
 class CommitProtocolSpec extends AnyFunSuite {
@@ -53,7 +53,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     }
     val offenders = direct ++ manifest
     assert(offenders.isEmpty,
-      "durable-index writes that bypass AnnOps.commitBatch / " +
+      "durable-index writes that bypass IndexStore.commitBatch / " +
         s"overwriteViaTemp: ${offenders.mkString(", ")}")
   }
 
@@ -65,7 +65,8 @@ class CommitProtocolSpec extends AnyFunSuite {
   test("every parquet read in graft.operators goes through " +
       "AnnOps.readTree, the one declared-schema index-tree reader") {
     val reads = sources
-      .filter(_._1.contains("graft/operators/"))
+      .filter(p => Seq("graft/operators/", "graft/index/")
+        .exists(p._1.contains))
       .flatMap { case (path, src) =>
         ReadSource.findAllMatchIn(src).map(m =>
           (s"$path:${lineOf(src, m.start)}", m.matched))
@@ -73,7 +74,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     val (reader, others) =
       reads.partition(_._2.contains(".schema(tree.schema)"))
     assert(others.isEmpty,
-      "parquet reads outside AnnOps.readTree (each infers its schema " +
+      "parquet reads outside IndexStore.readTree (each infers its schema " +
         s"with a Spark job): ${others.map(_._1).mkString(", ")}")
     assert(reader.size == 1, s"readTree's own read not found once: $reader")
   }

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.AnnFixtures.annRows
 import graft.core.Pins.PinnedDataset
+import graft.index.{IndexStore, IvfPqIndex, MinhashIndex, SemanticIndex}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
@@ -68,7 +69,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.createTempDirectory(s"graft-budget-$tag-").toString
 
   private def build(iters: Int, pqIters: Int): Int = jobsOf {
-    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", tmpDir("build"),
+    IvfPqIndex.buildIvfPqIndex(df, "vid", "emb", "grp", tmpDir("build"),
       cells = 4, iters = iters, pqM = 4, pqKs = 4, pqIters = pqIters,
       partitions = 4)
   }
@@ -140,11 +141,11 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val idx = tmpDir("append")
-    AnnOps.buildIvfPqIndex(df.filter($"vid" < 64), "vid", "emb", "grp",
+    IvfPqIndex.buildIvfPqIndex(df.filter($"vid" < 64), "vid", "emb", "grp",
       idx, cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
       partitions = 4)
     val n = jobsOf {
-      AnnOps.appendIvfPqIndex(df.filter($"vid" >= 64), "vid", "emb", "grp",
+      IvfPqIndex.appendIvfPqIndex(df.filter($"vid" >= 64), "vid", "emb", "grp",
         idx, 1L, partitions = 4)
     }
     assert(n == AppendJobs, s"appendIvfPqIndex launched $n jobs")
@@ -154,10 +155,10 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val idx = tmpDir("query")
-    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", idx, cells = 4,
+    IvfPqIndex.buildIvfPqIndex(df, "vid", "emb", "grp", idx, cells = 4,
       iters = 2, pqM = 4, pqKs = 4, pqIters = 2, partitions = 4)
     val n = jobsOf {
-      val out = AnnOps.queryIvfPqIndex(df.filter($"vid" < 8), "vid", "emb",
+      val out = IvfPqIndex.queryIvfPqIndex(df.filter($"vid" < 8), "vid", "emb",
         "grp", idx, k = 3, nprobe = 2, rerankDepth = 12, partitions = 4)
       DedupOps.releaseLocalCheckpoint(out)
     }
@@ -170,10 +171,10 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val idx = tmpDir("semantic")
     val n = jobsOf {
-      AnnOps.incrementalSemanticDedupDurable(df.filter($"vid" < 64),
+      SemanticIndex.incrementalSemanticDedupDurable(df.filter($"vid" < 64),
         "vid", "emb", idx, 0L, threshold = 0.99, cells = 4, iters = 2,
         partitions = 4, probe = false)
-      val pairs = AnnOps.incrementalSemanticDedupDurable(
+      val pairs = SemanticIndex.incrementalSemanticDedupDurable(
         df.filter($"vid" >= 64), "vid", "emb", idx, 1L, threshold = 0.99,
         cells = 4, iters = 2, partitions = 4)
       DedupOps.releaseLocalCheckpoint(pairs)
@@ -188,12 +189,12 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val idx = tmpDir(tag)
-    AnnOps.buildIvfPqIndex(df.filter($"vid" < 64), "vid", "emb", "grp",
+    IvfPqIndex.buildIvfPqIndex(df.filter($"vid" < 64), "vid", "emb", "grp",
       idx, cells = 4, iters = 2, pqM = 4, pqKs = 4, pqIters = 2,
       partitions = 4)
-    AnnOps.appendIvfPqIndex(df.filter($"vid" >= 64), "vid", "emb", "grp",
+    IvfPqIndex.appendIvfPqIndex(df.filter($"vid" >= 64), "vid", "emb", "grp",
       idx, 1L, partitions = 4)
-    AnnOps.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
+    IndexStore.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
     idx
   }
 
@@ -201,24 +202,24 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val idx = tmpDir("delete")
-    AnnOps.buildIvfPqIndex(df, "vid", "emb", "grp", idx, cells = 4,
+    IvfPqIndex.buildIvfPqIndex(df, "vid", "emb", "grp", idx, cells = 4,
       iters = 2, pqM = 4, pqKs = 4, pqIters = 2, partitions = 4)
     val n = jobsOf {
-      AnnOps.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
+      IndexStore.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
     }
     assert(n == DeleteJobs, s"deleteFromIndex launched $n jobs")
   }
 
   test("compactIndex: pinned job budget over two batches and a delete") {
     val idx = twoBatchIndexWithDeletes("compact")
-    val n = jobsOf(AnnOps.compactIndex(spark, idx, partitions = 4))
+    val n = jobsOf(IndexStore.compactIndex(spark, idx, partitions = 4))
     assert(n == CompactJobs, s"compactIndex launched $n jobs")
   }
 
   test("expireBatches: pinned job budget over two batches and a delete") {
     val idx = twoBatchIndexWithDeletes("expire")
     val n = jobsOf {
-      AnnOps.expireBatches(spark, idx, minKeepBatchId = 1L, partitions = 4)
+      IndexStore.expireBatches(spark, idx, minKeepBatchId = 1L, partitions = 4)
     }
     assert(n == ExpireJobs, s"expireBatches launched $n jobs")
   }
@@ -226,7 +227,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("maintainIndex: pinned job budget over two batches and a delete") {
     val idx = twoBatchIndexWithDeletes("maintain")
     val n = jobsOf {
-      AnnOps.maintainIndex(spark, idx, AnnOps.IndexMaintenancePolicy(
+      IndexStore.maintainIndex(spark, idx, IndexStore.IndexMaintenancePolicy(
         minKeepBatchId = 1L, partitions = 4, vacuum = true))
     }
     assert(n == MaintainJobs, s"maintainIndex launched $n jobs")
@@ -242,7 +243,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sigs = DedupOps.minhashIndex(docs, "doc_id", "text", 3, 4, 2,
       partitions = 4).pin()
     val dir = tmpDir("minhash")
-    val n = jobsOf(DedupOps.commitMinhashIndexBatch(sigs, dir, 0L, 3, 4, 2))
+    val n = jobsOf(MinhashIndex.commitMinhashIndexBatch(sigs, dir, 0L, 3, 4, 2))
     assert(n == MinhashCommitJobs,
       s"commitMinhashIndexBatch launched $n jobs")
   }
@@ -262,12 +263,12 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val dir = tmpDir("minhash-inc")
-    DedupOps.commitMinhashIndexBatch(DedupOps.minhashIndex(
+    MinhashIndex.commitMinhashIndexBatch(DedupOps.minhashIndex(
       minhashDocs($"vid" < 64), "doc_id", "text", 3, 4, 2,
       partitions = 4), dir, 0L, 3, 4, 2)
-    AnnOps.deleteFromIndex(df.filter($"vid" < 8), "vid", dir, 0L)
+    IndexStore.deleteFromIndex(df.filter($"vid" < 8), "vid", dir, 0L)
     val n = jobsOf {
-      val pairs = DedupOps.incrementalMinhashDedupDurable(
+      val pairs = MinhashIndex.incrementalMinhashDedupDurable(
         minhashDocs($"vid" >= 64), "doc_id", "text", dir, 1L,
         shingleK = 3, bands = 4, rows = 2, threshold = 0.5,
         partitions = 4)
@@ -284,12 +285,12 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = tmpDir("drift")
     Seq(df.filter($"vid" < 64), df.filter($"vid" >= 64)).zipWithIndex
       .foreach { case (b, i) =>
-        AnnOps.incrementalSemanticDedupDurable(b, "vid", "emb", idx,
+        SemanticIndex.incrementalSemanticDedupDurable(b, "vid", "emb", idx,
           i.toLong, threshold = 0.99, cells = 4, iters = 2,
           partitions = 4, probe = false)
       }
-    AnnOps.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
-    val n = jobsOf(AnnOps.semanticIndexDriftAudit(spark, idx).collect())
+    IndexStore.deleteFromIndex(df.filter($"vid" < 8), "vid", idx, 0L)
+    val n = jobsOf(SemanticIndex.semanticIndexDriftAudit(spark, idx).collect())
     assert(n == DriftAuditJobs,
       s"semanticIndexDriftAudit launched $n jobs")
   }
@@ -301,7 +302,7 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = tmpDir("s26")
     val n = jobsOf {
       val losers = graft.core.Overlap(s, 1, "s26") { ov =>
-        val fBuild = ov.fork(AnnOps.buildIvfPqIndex(df, "vid", "emb",
+        val fBuild = ov.fork(IvfPqIndex.buildIvfPqIndex(df, "vid", "emb",
           "grp", idx, cells = 4, iters = 2, pqM = 4, pqKs = 4,
           pqIters = 2, partitions = 4))
         val pairs = AnnOps.semanticNearDups(df, "vid", "emb", 0.99,
@@ -311,8 +312,8 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
         fBuild.join()
         l
       }
-      AnnOps.deleteFromIndex(losers, "vid", idx, 1L)
-      val out = AnnOps.queryIvfPqIndex(df.filter($"vid" < 8), "vid", "emb",
+      IndexStore.deleteFromIndex(losers, "vid", idx, 1L)
+      val out = IvfPqIndex.queryIvfPqIndex(df.filter($"vid" < 8), "vid", "emb",
         "grp", idx, k = 3, nprobe = 4, rerankDepth = Int.MaxValue,
         partitions = 4)
       DedupOps.releaseLocalCheckpoint(out)

@@ -85,7 +85,7 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // st10's scale-soft spot until round 7: the accumulated signature
     // index lived in localCheckpoint unions, so a restart silently
     // re-admitted every duplicate of the pre-crash increments. The
-    // durable path (DedupOps.incrementalMinhashDedupDurable) commits one
+    // durable path (MinhashIndex.incrementalMinhashDedupDurable) commits one
     // parquet subdir per batch; this test kills the "process" between
     // microbatches (new drain, fresh in-memory state, same checkpoint +
     // index dir) and demands the same pair set as an uninterrupted run.
@@ -105,7 +105,7 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // old corpus committed as batch -1 (the commit helper bootstraps
     // the manifest + generation pointer)
     val oldDocs = Seq((0L, tA), (1L, tB)).toDF("doc_id", "text")
-    graft.operators.DedupOps.commitMinhashIndexBatch(
+    graft.index.MinhashIndex.commitMinhashIndexBatch(
       graft.operators.DedupOps.minhashIndex(oldDocs, "doc_id", "text",
         5, 2, 8, partitions = 2),
       idxDir, batchId = -1L, 5, 2, 8)
@@ -124,7 +124,7 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pairs = scala.collection.mutable.Set.empty[(Long, Long)]
     def drainDedup(): Unit = drainWithId(docStream, cp) { (b, bid) =>
       if (!b.isEmpty)
-        pairs ++= graft.operators.DedupOps.incrementalMinhashDedupDurable(
+        pairs ++= graft.index.MinhashIndex.incrementalMinhashDedupDurable(
           b.pin(), "doc_id", "text", idxDir, bid,
           5, 2, 8, 0.8, partitions = 2)
           .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -160,16 +160,16 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // replay idempotence: re-running a committed batch id with the same
     // data yields the same pairs and does not double the index
-    val before = graft.operators.DedupOps
+    val before = graft.index.MinhashIndex
       .loadMinhashIndex(spark, idxDir).get.count()
-    val replay = graft.operators.DedupOps.incrementalMinhashDedupDurable(
+    val replay = graft.index.MinhashIndex.incrementalMinhashDedupDurable(
         Seq((12L, tC), (13L, tA)).toDF("doc_id", "text"),
         "doc_id", "text", idxDir, batchId = 2,
         5, 2, 8, 0.8, partitions = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(replay == Set((11L, 12L), (0L, 13L), (10L, 13L)),
       s"replay pairs: $replay")
-    val after = graft.operators.DedupOps
+    val after = graft.index.MinhashIndex
       .loadMinhashIndex(spark, idxDir).get.count()
     assert(before == after, s"replay grew the index: $before -> $after")
   }
