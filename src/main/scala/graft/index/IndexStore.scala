@@ -113,7 +113,7 @@ object IndexStore {
   /** Published through [[overwriteViaTemp]]: a crash mid-write leaves
     * an invisible temp, never a truncated `_index.json` that every
     * reader would fail to parse. */
-  private[graft] def writeIndexManifest(s: SparkSession,
+  private[index] def writeIndexManifest(s: SparkSession,
       indexDir: String, family: String,
       params: Map[String, Long]): Unit = {
     val pj = params.toSeq.sortBy(_._1)
@@ -238,7 +238,7 @@ object IndexStore {
       t.select(col("id").as(tree.idCol)), Seq(tree.idCol), "left_anti"))
   }
 
-  private[graft] def genRoot(indexDir: String, g: Long): String =
+  private[index] def genRoot(indexDir: String, g: Long): String =
     s"$indexDir/gens/gen=$g"
 
   /** The live generation, if any batch has ever committed. Loud on the
@@ -285,7 +285,7 @@ object IndexStore {
     * after (mutators target the next number); readers take
     * max(_commits), so they see either the old or the new generation,
     * both complete — never a half-state. */
-  private[graft] def commitGen(s: SparkSession, indexDir: String,
+  private[index] def commitGen(s: SparkSession, indexDir: String,
       g: Long): Unit = {
     val fs = indexFs(s, indexDir)
     fs.mkdirs(hpath(s"$indexDir/_commits"))

@@ -91,8 +91,7 @@ object MinhashIndex {
     val s = sigs.sparkSession
     val genAtEntry =
       expectedGen.getOrElse(IndexStore.currentGenOpt(s, indexDir))
-    val declared = Map("shingleK" -> shingleK.toLong,
-      "bands" -> bands.toLong, "rows" -> rows.toLong)
+    val declared = banding(shingleK, bands, rows)
     if (IndexStore.indexFs(s, indexDir)
         .exists(IndexStore.hpath(s"$indexDir/_index.json"))) {
       val man = IndexStore.requireFamily(s, indexDir,
@@ -110,6 +109,28 @@ object MinhashIndex {
       sigs.select(col("doc_id"), col("shs"), col("bkeys"))
         .write.parquet(tmp)
     }
+  }
+
+  /** The manifest params a minhash index declares. */
+  private def banding(shingleK: Int, bands: Int, rows: Int) =
+    Map("shingleK" -> shingleK.toLong, "bands" -> bands.toLong,
+      "rows" -> rows.toLong)
+
+  /** Seed a new index at `indexDir` with the (doc_id, shs, bkeys)
+    * signature table at `basePath` as generation 0's batch -1, through
+    * a symbolic link (no data copy: a pay-once base table is shared by
+    * every index seeded from it), declare the banding and flip
+    * generation 0 live. Local paths only. */
+  private[graft] def seedByLink(s: SparkSession, indexDir: String,
+      basePath: String, shingleK: Int, bands: Int, rows: Int): Unit = {
+    val gen0 = java.nio.file.Paths.get(
+      IndexStore.genRoot(indexDir, 0L), "batches")
+    java.nio.file.Files.createDirectories(gen0)
+    java.nio.file.Files.createSymbolicLink(
+      gen0.resolve("batch=-1"), java.nio.file.Paths.get(basePath))
+    IndexStore.writeIndexManifest(s, indexDir, "minhash",
+      banding(shingleK, bands, rows))
+    IndexStore.commitGen(s, indexDir, 0L)
   }
 
   /** Durable incremental MinHash dedup — the restart-safe form of the

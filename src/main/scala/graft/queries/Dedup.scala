@@ -648,19 +648,8 @@ object Dedup {
         val idxDir = graft.core.StreamStore
           .scratchRoot("graft-st10-idx-")
         val idxDirS = idxDir.toString
-        // generation-pointer layout (the shared durable-index
-        // discipline, so tombstones/compaction/expiry apply to this
-        // family too): link the base index in as generation 0's
-        // batch=-1, declare the banding manifest, flip the marker
-        val gen0 = java.nio.file.Paths.get(
-          graft.index.IndexStore.genRoot(idxDirS, 0L), "batches")
-        java.nio.file.Files.createDirectories(gen0)
-        java.nio.file.Files.createSymbolicLink(
-          gen0.resolve("batch=-1"), java.nio.file.Paths.get(basePath))
-        graft.index.IndexStore.writeIndexManifest(s, idxDirS,
-          "minhash", Map("shingleK" -> 5L, "bands" -> BANDS.toLong,
-            "rows" -> ROWS.toLong))
-        graft.index.IndexStore.commitGen(s, idxDirS, 0L)
+        graft.index.MinhashIndex.seedByLink(s, idxDirS, basePath, 5,
+          BANDS, ROWS)
         val newDocs = docsAll.filter(docPct >= 80)
           .select($"doc_id", $"text")
         val newDir = graft.core.StreamStore
