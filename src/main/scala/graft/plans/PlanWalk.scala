@@ -60,8 +60,8 @@ object PlanWalk {
 
   /** Every FileSourceScan over a durable index's stored trees — ONE
     * spelling of the generation-aware path match (the index root plus
-    * a `/batches` or `/codes` segment anywhere below it, so the
-    * gens/gen=<n> nesting matches without pinning a generation),
+    * a `/batches` or `/codes` segment anywhere below it, so every
+    * generation's tree matches without pinning one),
     * shared by the plan gates and both measurement probes (REVIEW:
     * three hand-rolled copies of this predicate had to change together
     * when the layout moved under generations). Pass `trees` to

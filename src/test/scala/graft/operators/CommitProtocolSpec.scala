@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * direct create of `_index.json`, bypasses the temp-then-publish step:
   * a failed replay would then clear what an earlier run committed.
   * Every index tree is read back through `IndexStore.readTree`, under the
-  * schema declared for it.
+  * schema declared for it. The on-disk layout is spelled only in
+  * `graft.index` (src/main/scala/graft/index), whose helpers are
+  * `private[index]`.
   */
 class CommitProtocolSpec extends AnyFunSuite {
 
@@ -77,5 +79,20 @@ class CommitProtocolSpec extends AnyFunSuite {
       "parquet reads outside IndexStore.readTree (each infers its schema " +
         s"with a Spark job): ${others.map(_._1).mkString(", ")}")
     assert(reader.size == 1, s"readTree's own read not found once: $reader")
+  }
+
+  test("the durable-index layout is spelled only in graft.index") {
+    val layout = Seq("_index.json", "_commits", "gens/", ".maintenance-lock",
+      "tombstones/")
+    val outside = sources.filterNot(_._1.contains("graft/index/"))
+    assert(outside.size > 10, s"the scan found too few files: ${outside.size}")
+    val spelled = outside.flatMap { case (path, src) =>
+      src.linesIterator.zipWithIndex.collect {
+        case (l, i) if layout.exists(l.contains) => s"$path:${i + 1}"
+      }
+    }
+    assert(spelled.isEmpty,
+      s"durable-index layout spelled outside graft.index: " +
+        spelled.mkString(", "))
   }
 }
