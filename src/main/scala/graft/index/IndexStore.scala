@@ -37,8 +37,9 @@ object IndexStore {
   // `gens/gen=<g>/<tree>/batch=<b>` (ANN: codes first, then the rows
   // that make the batch visible), then the first-commit flip of
   // generation 0. The minhash and semantic commits and the ANN append
-  // and build go through the door; tombstones and the manifest go
-  // through the primitive. CommitProtocolSpec's source test keeps it so.
+  // and build go through the door; tombstones, the manifest and the
+  // frozen centroids/codebooks go through the primitive.
+  // CommitProtocolSpec's source test keeps it so.
   // Maintenance (maintainImpl) instead builds a whole invisible
   // generation and flips the pointer under the lock.
   //
@@ -446,7 +447,7 @@ object IndexStore {
     * as it was, so a rejected or cancelled replay never changes what
     * an earlier run committed. The only window where a target is
     * absent is a REPLAY's own delete-then-rename. */
-  private def overwriteViaTemp(s: SparkSession, targets: Seq[String])(
+  private[index] def overwriteViaTemp(s: SparkSession, targets: Seq[String])(
       write: Seq[String] => Unit): Unit = {
     val fs = indexFs(s, targets.head)
     val tmps = targets.map { t =>

@@ -146,31 +146,30 @@ object IvfPqIndex {
     // the door's callback — the frozen centroids and codebooks are
     // gen-independent and nothing is visible before the flip; the door
     // publishes codes, then rows, then flips the pointer, so a crash
-    // leaves nothing a reader can see.
+    // leaves nothing a reader can see. Centroids and codebooks publish
+    // through their own temps once all four writes are done.
     writeIndexManifest(s, indexDir, "ivfpq", Map(
       "dim" -> dim.toLong, "cells" -> cells.toLong,
       "pqM" -> pqM.toLong, "pqKs" -> pqKs.toLong,
       "dsub" -> dsub.toLong))
     commitBatch(s, indexDir, "buildIvfPqIndex", 0L, None,
         Seq("codes", "batches")) { case Seq(codesTmp, rowsTmp) =>
-      Overlap(s, 4, "ivfpq-build-write") { wv =>
-        wv.fork {
-          cent.write.mode("overwrite").parquet(s"$indexDir/centroids")
-        }
-        wv.fork {
-          codebookTable(s, means)
-            .write.mode("overwrite").parquet(s"$indexDir/codebooks")
-        }
-        wv.fork {
-          members.select(col("id"),
-              posexplode(col("codes")).as(Seq("m", "code")), col("cell"))
-            .select(col("id"), col("code"), col("m"), col("cell"))
-            .write.partitionBy("cell").parquet(codesTmp)
-        }
-        wv.fork {
-          members.join(v, Seq("id")).join(keys, Seq("id"))
-            .select(col("id"), col("cell"), col("c"), col("nrm"), col("key"))
-            .write.partitionBy("cell").parquet(rowsTmp)
+      overwriteViaTemp(s, Seq(s"$indexDir/centroids",
+          s"$indexDir/codebooks")) { case Seq(centTmp, booksTmp) =>
+        Overlap(s, 4, "ivfpq-build-write") { wv =>
+          wv.fork(cent.write.parquet(centTmp))
+          wv.fork(codebookTable(s, means).write.parquet(booksTmp))
+          wv.fork {
+            members.select(col("id"),
+                posexplode(col("codes")).as(Seq("m", "code")), col("cell"))
+              .select(col("id"), col("code"), col("m"), col("cell"))
+              .write.partitionBy("cell").parquet(codesTmp)
+          }
+          wv.fork {
+            members.join(v, Seq("id")).join(keys, Seq("id"))
+              .select(col("id"), col("cell"), col("c"), col("nrm"), col("key"))
+              .write.partitionBy("cell").parquet(rowsTmp)
+          }
         }
       }
     }

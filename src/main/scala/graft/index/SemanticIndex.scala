@@ -117,7 +117,7 @@ object SemanticIndex {
     // job-count cut: the limit(1) dim probe and the count were two jobs
     // over the same KB-sized scan); min(size) == the width, centroids
     // are uniform by construction
-    def storedShape(): (Long, Long) = {
+    lazy val storedShape: (Long, Long) = {
       val cs = readTree(s, IndexTree.Centroids, Seq(centPath))
         .agg(count(lit(1)), coalesce(min(size(col("cc"))), lit(0))).head()
       (cs.getLong(0), cs.getInt(1).toLong)
@@ -151,15 +151,18 @@ object SemanticIndex {
             kmeans(v, cells, iters, maxCentroidBytes)
           // the centroid write is an action, so `cent` is fully
           // consumed here — the thunk (freeing the table's shards past
-          // one) is safe to run at the shared release point
-          cent.write.mode("overwrite").parquet(centPath)
+          // one) is safe to run at the shared release point. Published
+          // through a temp: a failed write must leave no centroids/ dir,
+          // or the replay would take the frozen branch on an empty table
+          overwriteViaTemp(s, Seq(centPath)) { case Seq(tmp) =>
+            cent.write.parquet(tmp) }
           (members, kmeansRelease)
         } else {
           // k and dim from the manifest's DECLARED shape (zero jobs,
           // round-17 job-count cut); an index whose manifest is not
           // written yet pays one aggregate over the stored table
           val cent = readTree(s, IndexTree.Centroids, Seq(centPath))
-          val (k, dim) = manOpt.fold(storedShape())(man =>
+          val (k, dim) = manOpt.fold(storedShape)(man =>
             (man.param("cells", indexDir), man.param("dim", indexDir)))
           assignCells(v, cent, k, dim, maxCentroidBytes)
         }
@@ -185,7 +188,7 @@ object SemanticIndex {
       // centroid write and here self-heals on replay): the stored
       // centroid table is the authority for dim and cell count
       if (manOpt.isEmpty) {
-        val (k, dim) = storedShape()
+        val (k, dim) = storedShape
         writeIndexManifest(s, indexDir, "semantic",
           Map("dim" -> dim, "cells" -> k))
       }

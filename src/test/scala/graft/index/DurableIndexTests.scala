@@ -1294,6 +1294,66 @@ trait DurableIndexTests extends OpsSpecBase {
       "a helper thread outlived the failed batch")
   }
 
+  test("incrementalSemanticDedupDurable: a first batch whose centroid " +
+      "write is cancelled leaves no centroids, and its replay trains " +
+      "afresh to a clean run's pairs and manifest") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val seed = (0 until 20).map(i =>
+      (i.toLong, Array.tabulate(8)(j => if (j == i % 2) 10f else 0f)))
+      .toDF("vid", "emb")
+    def run(idx: String) = {
+      val out = SemanticIndex.incrementalSemanticDedupDurable(seed, "vid",
+        "emb", idx, 0L, threshold = 0.9, cells = 2, iters = 1)
+      try out.collect().map(_.toString).toSet
+      finally DedupOps.releaseLocalCheckpoint(out)
+    }
+    val clean = tmpDir("sem-first-clean")
+    val want = run(clean)
+    assert(want.nonEmpty, "the fixture plants no pairs (vacuous)")
+    // the write jobs of every SQL execution that writes the centroid
+    // table are cancelled; the hold protocol keeps each write task from
+    // finishing before the cancel lands
+    val centExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val cancels = new java.util.concurrent.atomic.AtomicInteger
+    val canceller = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription.contains("centroids") =>
+          centExecs.add(x.executionId)
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .filter(id => centExecs.contains(id.toLong))
+          .foreach { _ =>
+            cancels.incrementAndGet()
+            s.sparkContext.cancelJob(js.jobId)
+          }
+    }
+    val idx = tmpDir("sem-first-cancel")
+    s.conf.set("spark.sql.sources.commitProtocolClass",
+      classOf[HoldUntilKilledCommitProtocol].getName)
+    s.sparkContext.addSparkListener(canceller)
+    try intercept[Exception](run(idx))
+    finally {
+      s.sparkContext.removeSparkListener(canceller)
+      s.conf.unset("spark.sql.sources.commitProtocolClass")
+    }
+    assert(cancels.get > 0, "no centroid write was cancelled (vacuous)")
+    assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$idx/centroids")),
+      "a cancelled centroid write left a centroids dir behind")
+    assert(run(idx) == want, "the replay's pairs differ from a clean run's")
+    assert(IndexStore.readIndexManifest(s, idx) ==
+      IndexStore.readIndexManifest(s, clean),
+      "the replay's manifest differs from a clean run's")
+  }
+
   test("minhash durable index: compactIndex consolidates the batch-" +
       "only layout, applied tombstones drop physically, and a later " +
       "increment probes identically to an uncompacted replica") {

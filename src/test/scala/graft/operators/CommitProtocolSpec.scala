@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the manifest are published through `IndexStore.overwriteViaTemp`
   * (batches through `IndexStore.commitBatch`), whose callbacks write only
   * to the temp paths they are handed. A direct parquet write to a
-  * `batches/batch=`, `codes/batch=` or `tombstones/batch=` path, or a
-  * direct create of `_index.json`, bypasses the temp-then-publish step:
-  * a failed replay would then clear what an earlier run committed.
+  * `batches/batch=`, `codes/batch=` or `tombstones/batch=` path or to
+  * the `centroids` or `codebooks` tree, or a direct create of
+  * `_index.json`, bypasses the temp-then-publish step: a failed replay
+  * would then clear what an earlier run committed.
   * Every index tree is read back through `IndexStore.readTree`, under the
   * schema declared for it. The on-disk layout is spelled only in
   * `graft.index` (src/main/scala/graft/index), whose helpers are
@@ -24,7 +25,16 @@ class CommitProtocolSpec extends AnyFunSuite {
     * sink's line — its target. */
   private val WriteSink = ("""\.write\b(?:\s*\.\s*\w+\s*\(""" +
     """(?:[^()]|\([^()]*\))*\))*\s*\.\s*(?:parquet|save)\s*\(([^\n]*)""").r
-  private val BatchTree = """(?:batches|codes|tombstones)/batch=""".r
+  private val BatchTree =
+    """(?:batches|codes|tombstones)/batch=|/(?:centroids|codebooks)\b""".r
+
+  /** A sink's target; a bare identifier resolves to the right-hand side
+    * of its `val` in the same file (`parquet(centPath)`). */
+  private def target(src: String, arg: String): String =
+    """^\s*(\w+)\s*\)""".r.findFirstMatchIn(arg)
+      .flatMap(id => s"val ${id.group(1)}\\s*=([^\\n]*)".r
+        .findFirstMatchIn(src).map(_.group(1)))
+      .getOrElse(arg)
 
   private def sources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
@@ -44,7 +54,8 @@ class CommitProtocolSpec extends AnyFunSuite {
       WriteSink.findAllMatchIn(src).map(m => (path, src, m)) }
     assert(sinks.size > 10, s"the scan found too few write sinks: ${sinks.size}")
     val direct = sinks.collect {
-      case (path, src, m) if BatchTree.findFirstIn(m.group(1)).nonEmpty =>
+      case (path, src, m)
+          if BatchTree.findFirstIn(target(src, m.group(1))).nonEmpty =>
         s"$path:${lineOf(src, m.start)}"
     }
     val manifest = all.flatMap { case (path, src) =>
