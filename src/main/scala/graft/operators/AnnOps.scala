@@ -1143,103 +1143,6 @@ object AnnOps {
       .filter(col("cosine") >= threshold)
   }
 
-  /** [[cosineNearDupsLsh]] with a hot-bucket guard — and like
-    * [[DedupOps.simhashNearDupsCapped]], NOT the raw star-edge
-    * delegation: the (band, code) keyspace is only
-    * bands × 2^rowsPerBand keys (8192 at defaults), so buckets
-    * saturate from corpus size alone and a saturated bucket's
-    * co-residents share just rowsPerBand sign bits — mostly
-    * non-neighbors. The sound resolution collapses saturated-bucket
-    * members by their FULL signature (all bands' codes — a
-    * 2^(rowsPerBand × bands) = 2²⁵⁶-key space at defaults, so equality
-    * there is corpus-size-independent evidence): full-signature groups
-    * emit (rep = min id → member) edges — 256 agreeing sign bits, the
-    * same near-certain-duplicate class the minhash band guard
-    * delegates on — and only the DISTINCT-signature representatives
-    * enter the pair join, with exact-cosine verification as always.
-    * Returns (a, b, cosine, saturated): cosine null on collapse edges
-    * (delegated, not individually verified), exact elsewhere; each
-    * (a, b) surfaces exactly once — a pair sharing a sub-cap and a
-    * saturated bucket keeps its verified row only (the family-wide
-    * pair-uniqueness contract); output
-    * is for CLUSTER resolution — member-level pairs route through
-    * representatives, so a borderline pair within a collapse group's
-    * (tiny) diameter of the threshold may flip, the documented cost.
-    * With `maxOccupancy` at or above the max bucket occupancy this
-    * returns exactly [[cosineNearDupsLsh]]'s rows (PipelineOpsSpec
-    * pins it). The distinct-signature quadratic bound parallels
-    * [[DedupOps.simhashNearDupsCapped]]'s note; diverse corpora
-    * saturating at N ≫ 2^rowsPerBand × cap should raise rowsPerBand
-    * (the keyspace dial simhash's fixed bytes lack).
-    */
-  def cosineNearDupsLshCapped(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, rowsPerBand: Int = 8, bands: Int = 32,
-      maxOccupancy: Int = 1000, partitions: Int = 0): DataFrame = {
-    val v = scaled(df, idCol, vecCol, partitions)
-    val sig = signLshSignatures(v, rowsPerBand, bands)
-    val satKeys = sig.groupBy(col("band"), col("code"))
-      .agg(count(lit(1)).as("m")).filter(col("m") > maxOccupancy)
-      .select(col("band"), col("code")).pin()
-    // nothing saturates (the common case a well-chosen cap buys): skip
-    // the full-signature aggregation and the collapse machinery — the
-    // simhashNearDupsCapped short-circuit
-    val saturationPresent = satKeys.head(1).nonEmpty
-    val sub = if (saturationPresent)
-      sig.join(broadcast(satKeys), Seq("band", "code"), "left_anti")
-    else sig
-    val av = v.select(col("id").as("a"), col("c").as("ac"),
-      col("nrm").as("anrm"))
-    val bv = v.select(col("id").as("b"), col("c").as("bc"),
-      col("nrm").as("bnrm"))
-    // no broadcast hint on av/bv: a hint never falls back past the
-    // broadcast limit — AQE broadcasts the (exactly-sized, pinned)
-    // staging under the threshold and shuffles on a / b past it (ADVICE)
-    def verify(cand: DataFrame, sat: Boolean): DataFrame =
-      cand.join(av, Seq("a")).join(bv, Seq("b"))
-        .select(col("a"), col("b"),
-          ((dot_i64(col("ac"), col("bc")).cast("double") / lit(1.0e12)) /
-            (col("anrm") * col("bnrm"))).as("cosine"))
-        .filter(col("cosine") >= threshold)
-        .select(col("a"), col("b"), col("cosine"),
-          lit(sat).as("saturated"))
-    val cand = sub.as("x").join(sub.as("y"),
-        col("x.band") === col("y.band") && col("x.code") === col("y.code")
-          && col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
-    if (!saturationPresent) return verify(cand, sat = false)
-    // full signature per id: md5 over the band-ordered code list (one
-    // |corpus|-row aggregate, computed only when a bucket saturates)
-    val full = sig.groupBy(col("id"))
-      .agg(md5(concat_ws(",", sort_array(collect_list(
-        concat_ws(":", lpad(col("band").cast("string"), 4, "0"),
-          col("code")))))).as("fsig"))
-      .pin()
-    val satRows = sig.join(broadcast(satKeys), Seq("band", "code"))
-      .join(full, Seq("id"))
-    val groups = satRows
-      .groupBy(col("band"), col("code"), col("fsig"))
-      .agg(min(col("id")).as("rep"))
-      .pin()
-    val collapse = satRows.join(groups, Seq("band", "code", "fsig"))
-      .filter(col("id") =!= col("rep"))
-      .select(col("rep").as("a"), col("id").as("b"),
-        lit(null).cast("double").as("cosine"), lit(true).as("saturated"))
-      .distinct()
-    val repCand = groups.as("x").join(groups.as("y"),
-        col("x.band") === col("y.band") && col("x.code") === col("y.code")
-          && col("x.rep") < col("y.rep"))
-      .select(col("x.rep").as("a"), col("y.rep").as("b")).distinct()
-    // pinned verified set + anti-joined saturated faces: each (a, b)
-    // surfaces once, as its verified row when one exists — the
-    // family-wide pair-uniqueness contract (ADVICE item)
-    val verified = verify(cand, sat = false).pin()
-    def distinctFromVerified(pairs: DataFrame): DataFrame =
-      pairs.join(verified.select(col("a"), col("b")), Seq("a", "b"),
-        "left_anti")
-    verified.unionByName(distinctFromVerified(collapse))
-      .unionByName(distinctFromVerified(verify(repCand, sat = true)))
-  }
-
   /** Embedding-cosine near-duplicate pairs: all pairs above `threshold`,
     * a < b, via the same blocked grid. Returns (a, b, cosine).
     */
@@ -1655,8 +1558,8 @@ object AnnOps {
     * STRUCTURAL BOUND, stated honestly: after the collapse the pair
     * join is quadratic in the DISTINCT-signature occupancy of
     * saturated cells. A cell saturating with genuinely diverse
-    * vectors needs more cells (the [[semanticNearDupsAuto]] dial —
-    * cells scale with the corpus), not a cap; the cap is for the
+    * vectors needs more cells (cells scale with the corpus), not a
+    * cap; the cap is for the
     * boilerplate mass that no cell count can split. Choose it with
     * [[cellOccupancyCurve]] (the d13 discipline on the cell axis).
     */
@@ -1840,36 +1743,6 @@ object AnnOps {
     DedupOps.releaseLocalCheckpoint(v)
     DedupOps.releaseLocalCheckpoint(staged0)
     pinned
-  }
-
-  /** [[semanticNearDups]] with `cells` derived from the corpus:
-    * cells = max(1, ceil(N / targetCellSize)). This is the facade a
-    * caller should reach for at corpus scale — the fixed-`cells`
-    * overload trusts the caller to keep sum(|cell|^2) bounded, and a
-    * too-small K silently degenerates toward the all-pairs N^2.
-    *
-    * The trade, explicitly: per-cell verify cost is ~targetCellSize^2
-    * pairs (k-means cells are skewed, so the constant hides the skew
-    * factor — AQE's skew-split handles the join side, but a pathological
-    * single-cell corpus is still ~N^2/cells work); recall LOSS grows as
-    * cells shrink the cell diameter past the near-dup radius — true
-    * pairs split across a boundary are never compared. SemDeDup's
-    * published operating point is cells ~ N/1000 (targetCellSize=1000);
-    * smaller targets cut cost quadratically and recall slowly, larger
-    * targets the reverse. One extra count() job over the staged vectors
-    * prices the corpus — negligible next to the Lloyd passes.
-    */
-  def semanticNearDupsAuto(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, targetCellSize: Long = 1000L, iters: Int = 2,
-      partitions: Int = 0,
-      maxCentroidBytes: Long = DefaultMaxCentroidBytes): DataFrame = {
-    require(targetCellSize >= 1, s"targetCellSize=$targetCellSize")
-    val v = withRawNorm(scaled(df, idCol, vecCol, partitions))
-    val n = v.count()
-    val cells = math.max(1L,
-      (n + targetCellSize - 1) / targetCellSize).min(Int.MaxValue).toInt
-    val (members, _, _) = kmeans(v, cells, iters, maxCentroidBytes)
-    pairsWithinCells(v, members, threshold)
   }
 
   /** The empty (a, b, cosine) pair frame — shared by the seed-batch

@@ -192,7 +192,7 @@ object DedupOps {
 
   /** Bucket-occupancy split — the hot-bucket guard shared by every
     * capped banded-dedup spelling ([[minhashNearDupsCapped]],
-    * [[simhashNearDupsCapped]], [[AnnOps.cosineNearDupsLshCapped]]).
+    * [[simhashNearDupsCapped]]).
     *
     * The unguarded band join emits O(m²/2) candidate pairs for a bucket
     * of occupancy m — a SEMANTIC quadratic no AQE skew split can reduce

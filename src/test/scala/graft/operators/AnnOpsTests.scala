@@ -6,40 +6,6 @@ import graft.core.Pins.PinnedDataset
 /** [[AnnOps]]' nearest-neighbour and embedding operators. */
 trait AnnOpsTests extends OpsSpecBase {
 
-  test("capped cosine LSH: saturated sign buckets collapse by full " +
-      "signature, clusters match uncut on the duplicate family") {
-    val s = spark
-    import s.implicits._
-    // 24 near-identical vectors (same full 256-bit signature) + a few
-    // distinct ones; cap 8 saturates the family's (band, code) buckets
-    val rnd = new scala.util.Random(6161)
-    val base = Array(0.8, 0.1, 0.05, 0.3)
-    val fam = (0 until 24).map(i =>
-      (900L + i, base.map(x => (x + 1e-9 * i).toFloat)))
-    val others = Seq(
-      (1L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-      (2L, Array(0.99f, 0.1f, 0.0f, 0.0f)),
-      (3L, Array(0.0f, 1.0f, 0.0f, 0.0f)))
-    val docs = (others ++ fam).toDF("vid", "v")
-    val capped = AnnOps.cosineNearDupsLshCapped(docs, "vid", "v",
-      threshold = 0.9, maxOccupancy = 8, partitions = 4)
-      .pin()
-    val collapse = capped.filter(col("saturated") && col("cosine").isNull)
-      .collect()
-    assert(collapse.nonEmpty, "family must collapse via full signature")
-    assert(collapse.forall(r => r.getLong(0) == 900L && r.getLong(1) > 900L),
-      s"collapse edges must hang off the min-id rep")
-    val famRows = capped.filter(col("a") >= 900L).count()
-    assert(famRows == 23, s"family emitted $famRows rows, wanted 23")
-    def clusters(pairs: org.apache.spark.sql.DataFrame) =
-      DedupOps.connectedComponents(pairs, "a", "b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncut = AnnOps.cosineNearDupsLsh(docs, "vid", "v",
-      threshold = 0.9, partitions = 4)
-    assert(clusters(capped.select("a", "b")) == clusters(uncut),
-      "capped cosine-LSH resolution diverged from uncut on the family")
-  }
-
   test("knnGraph ranks the planted neighbor first") {
     val g = AnnOps.knnGraph(vectors(), "vid", "emb", k = 1, blocks = 2,
         partitions = 2)
@@ -731,59 +697,6 @@ trait AnnOpsTests extends OpsSpecBase {
     assert(lo.getLong(8) < lo.getLong(5),
       "the rep residual must be strictly smaller than the saturated " +
         "quadratic it replaces")
-  }
-
-  test("semanticNearDupsAuto: derives K from N, bounds per-cell pairs " +
-      "on a skewed fixture") {
-    val s = spark
-    import s.implicits._
-    // skewed corpus: 18 vectors clumped around the x axis, 3 around y,
-    // 3 around z — the shape where a caller-picked fixed K degenerates
-    // (too small → all-pairs; too large → empty cells)
-    val rows =
-      (0L until 18L).map(i =>
-        (i, Array(1.0f, 0.001f * i, 0.0f))) ++
-      (18L until 21L).map(i =>
-        (i, Array(0.0f, 1.0f, 0.001f * (i - 18)))) ++
-      (21L until 24L).map(i =>
-        (i, Array(0.001f * (i - 21), 0.0f, 1.0f)))
-    val df = rows.toDF("vid", "emb")
-
-    // targetCellSize=6 over N=24 → 4 cells
-    val got = AnnOps.semanticNearDupsAuto(df, "vid", "emb",
-        threshold = 0.999, targetCellSize = 6, partitions = 2)
-      .collect().map(r => (r.getLong(1), r.getLong(2)) -> r.getDouble(3))
-      .toMap
-
-    // the derived K must be ceil(24/6) = 4: memberships recomputed with
-    // the same staged pipeline at that K are exactly the auto path's
-    val members = AnnOps.kmeansCells(df, "vid", "emb", k = 4,
-        partitions = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(members.keySet == rows.map(_._1).toSet)
-
-    // every reported pair is within-cell and exact-cosine-correct
-    val exact = AnnOps.cosineNearDups(df, "vid", "emb", threshold = 0.999,
-        blocks = 2, partitions = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
-    got.foreach { case ((a, b), c) =>
-      assert(members(a) == members(b), s"cross-cell pair ($a,$b)")
-      assert(exact((a, b)) == c, s"cosine drift on ($a,$b)")
-    }
-    // and it IS the exact result restricted to within-cell pairs — the
-    // documented SemDeDup recall trade, nothing more lost
-    val withinCellExact = exact.keySet.filter { case (a, b) =>
-      members(a) == members(b) }
-    assert(got.keySet == withinCellExact)
-
-    // the candidate space is bounded: sum(|cell|^2) must be well under
-    // N^2 (the skewed clump may not swallow the corpus into one cell)
-    val sizes = members.values.groupBy(identity).map(_._2.size)
-    val candidatePairs = sizes.map(sz => sz.toLong * sz).sum
-    val n = rows.size.toLong
-    assert(candidatePairs < n * n / 2,
-      s"cells degenerated: sizes=$sizes candidate=$candidatePairs")
   }
 
   test("kmeansCells: a null embedding row assigns to the first cell, " +

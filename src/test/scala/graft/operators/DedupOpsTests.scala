@@ -49,22 +49,6 @@ trait DedupOpsTests extends OpsSpecBase {
     assert(shc.forall(!_.getBoolean(3)))
     assert(shc.map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .toSet == sh)
-
-    val s = spark
-    import s.implicits._
-    val vecs = Seq(
-      (1L, Seq(1.0, 0.0, 0.0)), (2L, Seq(0.99, 0.14, 0.0)),
-      (3L, Seq(0.0, 1.0, 0.0)), (4L, Seq(0.0, 0.0, 1.0)))
-      .toDF("vid", "v")
-    val cl = AnnOps.cosineNearDupsLsh(vecs, "vid", "v", threshold = 0.9,
-      partitions = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    val clc = AnnOps.cosineNearDupsLshCapped(vecs, "vid", "v",
-      threshold = 0.9, maxOccupancy = 1000, partitions = 4).collect()
-    assert(clc.forall(!_.getBoolean(3)))
-    assert(clc.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet == cl)
   }
 
   test("capped incremental probe: a boilerplate family ACCUMULATED in " +
