@@ -224,24 +224,10 @@ object PipelineExtra {
         // division/multiply (identical IEEE shape in both engines);
         // per-vector max-error is order-independent, so no decimal
         // quantization of sums is needed.
-        val comp = Tables.load(s, dir, "embeddings")
-          .select($"vec_id", posexplode(
-            transform($"embedding",
-              x => round(x.cast("double") * lit(1000000.0)).cast("long")))
-            .as(Seq("i", "c")))
-        val mx = comp.groupBy($"vec_id").agg(max(abs($"c")).as("mx"))
-        comp.join(mx, Seq("vec_id"))
-          .filter($"mx" > 0)
-          .withColumn("scale", $"mx".cast("double") / lit(127.0))
-          .withColumn("q", round($"c".cast("double") / $"scale").cast("long"))
-          .withColumn("err_units",
-            abs($"c".cast("double") - $"q".cast("double") * $"scale")
-              / lit(1000000.0))
-          .groupBy($"vec_id")
-          .agg(
-            max($"q").as("q_max"),
-            min($"q").as("q_min"),
-            dec(max($"err_units")).cast("double").as("max_abs_err"))
+        graft.operators.PrepOps.quantizeInt8(
+            Tables.load(s, dir, "embeddings"), "vec_id", "embedding")
+          .select($"id".as("vec_id"), $"q_max", $"q_min",
+            dec($"max_abs_err").cast("double").as("max_abs_err"))
       },
       Some("""
         WITH comp AS (
@@ -331,16 +317,7 @@ object PipelineExtra {
         val sc = Tables.load(s, dir, "documents")
           .select($"doc_id", $"n_chars",
             (size(array_distinct(ws)).cast("double") / size(ws)).as("score"))
-        val bounds = graft.operators.PrepOps
-          .exactQuantileBounds(sc, "score", Seq(0.25, 0.5, 0.75))
-          .withColumn("k", lit(1))
-        sc.withColumn("k", lit(1))
-          .join(broadcast(bounds), Seq("k"))
-          .withColumn("bucket",
-            when($"score" <= element_at($"bs", 1), 0)
-              .when($"score" <= element_at($"bs", 2), 1)
-              .when($"score" <= element_at($"bs", 3), 2)
-              .otherwise(3))
+        graft.operators.PrepOps.curriculumBuckets(sc, "score")
           .groupBy($"bucket")
           .agg(
             count(lit(1)).as("n_docs"),
