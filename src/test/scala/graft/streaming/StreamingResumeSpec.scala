@@ -31,7 +31,15 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private val scratchBefore = graft.core.StreamStore.scratchRoots
+
+  // drop the checkpoint and source dirs the queries made under the
+  // scratch base, as Verify.runAll does
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    graft.core.StreamStore.deleteScratchRoots(
+      graft.core.StreamStore.scratchRoots -- scratchBefore)
+  }
 
   private def writeSlice(dir: String, ids: Range): Unit = {
     val s = spark

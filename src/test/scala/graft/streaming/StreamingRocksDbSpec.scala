@@ -29,7 +29,15 @@ class StreamingRocksDbSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private val scratchBefore = graft.core.StreamStore.scratchRoots
+
+  // drop the checkpoint and source dirs the queries made under the
+  // scratch base, as Verify.runAll does
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    graft.core.StreamStore.deleteScratchRoots(
+      graft.core.StreamStore.scratchRoots -- scratchBefore)
+  }
 
   // one canonical row rendering: column order is fixed by the query,
   // row order is not (drains differ in task completion order)
